@@ -23,10 +23,11 @@ object Engine {
   /** Default cap on DISTINCT offending values collected to the driver per
     * rule. A rule matching arbitrary garbage has unbounded distinct
     * offenders, and the driver must not collect them all — the cap bounds
-    * driver state at rules × cap while `nInvalidCells` /
-    * `nDistinctFailing` stay exact (ValidationPass counts pre-cap).
-    * Fixture suites that need the reference's exhaustive listings pass
-    * `Int.MaxValue` explicitly. */
+    * driver state at rules × cap, and executor state at cap values per
+    * rule per partition (ValidationPass's bounded per-rule aggregate),
+    * while `nInvalidCells` / `nDistinctFailing` stay exact (counted
+    * pre-cap). Fixture suites that need the reference's exhaustive
+    * listings pass `Int.MaxValue` explicitly; it runs the same plan. */
   val DefaultMaxOffenders: Int = 10000
 
   final case class TableOutcome(

@@ -62,12 +62,15 @@ object Manifest {
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** JSON string body. Control characters and surrogates go out as
+    * `\uXXXX`, so any Java string — a lone surrogate included — survives
+    * the UTF-8 file and comes back from [[parseLine]] unchanged. */
   private def esc(s: String): String =
     s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c if c < ' ' || Character.isSurrogate(c) => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
 
@@ -78,29 +81,83 @@ object Manifest {
       s""""completed_at_ms":${e.completedAtMs}}"""
   }
 
-  /** Minimal JSONL parser for our own fixed shape (no external deps). */
-  private def parseLine(line: String): Entry = {
-    def str(key: String): String = {
-      val m = ("\"" + key + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(line)
-      m.map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).getOrElse("")
+  /** Parser for our own flat shape (no external deps): one string-aware
+    * pass over the line, so a quote, `],` or `":"` inside a name cannot
+    * end a value early, and every escape [[esc]] writes is undone. A
+    * missing key reads as empty/0/false; a malformed line fails loudly. */
+  private[checkpoint] def parseLine(line: String): Entry = {
+    var i = 0
+    def fail(what: String): Nothing =
+      throw new IllegalArgumentException(s"manifest: $what at column $i of: $line")
+    def peek: Char = {
+      while (i < line.length && line(i).isWhitespace) i += 1
+      if (i < line.length) line(i) else fail("unexpected end")
     }
-    def num(key: String): Long = {
-      ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(line)
-        .map(_.group(1).toLong).getOrElse(0L)
+    def expect(c: Char): Unit = { if (peek != c) fail(s"expected '$c'"); i += 1 }
+    def string(): String = {
+      expect('"')
+      val sb = new java.lang.StringBuilder
+      while (i < line.length && line(i) != '"') {
+        if (line(i) == '\\' && i + 1 < line.length) {
+          i += 1
+          line(i) match {
+            case 'n' => sb.append('\n')
+            case 'r' => sb.append('\r')
+            case 't' => sb.append('\t')
+            case 'u' if i + 4 < line.length =>
+              sb.append(Integer.parseInt(line.substring(i + 1, i + 5), 16).toChar)
+              i += 4
+            case c => sb.append(c) // \" \\ \/
+          }
+        } else sb.append(line(i))
+        i += 1
+      }
+      if (i >= line.length) fail("unterminated string")
+      i += 1
+      sb.toString
     }
-    def bool(key: String): Boolean =
-      ("\"" + key + "\":(true|false)").r.findFirstMatchIn(line)
-        .exists(_.group(1) == "true")
-    def arr(key: String): Seq[String] = {
-      ("\"" + key + "\":\\[(.*?)\\](,|\\})").r.findFirstMatchIn(line)
-        .map(_.group(1)).filter(_.nonEmpty)
-        .map(inner => "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(inner)
-          .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-          .toSeq)
-        .getOrElse(Nil)
+    def list(): Seq[String] = {
+      expect('[')
+      val b = Seq.newBuilder[String]
+      if (peek == ']') i += 1
+      else {
+        b += string()
+        while (peek == ',') { i += 1; b += string() }
+        expect(']')
+      }
+      b.result()
     }
-    Entry(str("partition"), num("rows"), num("violations"), bool("pass"),
-      str("snapshot_id"), arr("files"), num("completed_at_ms"))
+    def value(): Any = peek match {
+      case '"' => string()
+      case '[' => list()
+      case _ =>
+        val start = i
+        while (i < line.length && line(i) != ',' && line(i) != '}') i += 1
+        line.substring(start, i).trim match {
+          case "true"  => true
+          case "false" => false
+          case t => t.toLongOption.getOrElse(fail(s"bad literal '$t'"))
+        }
+    }
+    val fields = scala.collection.mutable.Map.empty[String, Any]
+    expect('{')
+    if (peek == '}') i += 1
+    else {
+      var more = true
+      while (more) {
+        val key = string()
+        expect(':')
+        fields(key) = value()
+        more = peek == ','
+        if (more) i += 1
+      }
+      expect('}')
+    }
+    def str(key: String) = fields.get(key).collect { case s: String => s }.getOrElse("")
+    def num(key: String) = fields.get(key).collect { case l: Long => l }.getOrElse(0L)
+    Entry(str("partition"), num("rows"), num("violations"),
+      fields.get("pass").contains(true), str("snapshot_id"),
+      fields.get("files").collect { case fs: Seq[_] => fs.map(_.toString) }.getOrElse(Nil),
+      num("completed_at_ms"))
   }
 }

@@ -1,80 +1,125 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
-/** Bounded distinct-min-k buffer: the k SMALLEST distinct longs seen so
-  * far, kept sorted ascending in a fixed array. State is O(k) regardless
-  * of group size — the property that makes a capped posting list safe to
-  * build over a stopword whose group holds billions of (word, doc_id)
-  * pairs at corpus scale: every map-side partial carries at most k ids
-  * into the exchange, so shuffle volume per word is O(partitions × k),
-  * never O(postings). `collect_set`-then-`slice` has unbounded state and
-  * OOMs on exactly the groups an inverted index cares about most.
+/** Bounded distinct-min-k buffer: the entries with the k SMALLEST
+  * distinct long keys seen so far, each with a payload. State is O(k)
+  * regardless of group size — the property that makes a capped posting
+  * list safe to build over a stopword whose group holds billions of
+  * (word, doc_id) pairs at corpus scale: every map-side partial carries
+  * at most k entries into the exchange, so shuffle volume per group is
+  * O(partitions × k), never O(group). `collect_set`-then-`slice` has
+  * unbounded state and OOMs on exactly the groups that matter most.
+  *
+  * Entries append unsorted. Once the buffer holds more than k of them a
+  * compaction sorts by key, drops repeated keys and keeps the k
+  * smallest; from then on a key ≥ the k-th smallest is rejected on
+  * arrival. Capacity doubles from a small start and never exceeds 2k, so
+  * no k slots are preallocated: `k = Int.MaxValue` keeps every distinct
+  * key at one O(n log n) sort instead of a quadratic sorted insert.
   *
   * Merge takes the k smallest of the union (associative, commutative,
   * duplicate-eliminating), so partition-local partials combine to the
-  * exact global answer: the k smallest distinct values. */
+  * exact global answer. A repeated key keeps one payload; the result is
+  * independent of merge order when equal keys carry equal payloads. */
 final class MinKBuffer(val k: Int) extends Serializable {
-  val vals: Array[Long] = new Array[Long](k)
-  var size: Int = 0
+  require(k > 0, "min-k buffer: k must be positive")
 
-  /** Insert keeping ascending order and distinctness; drop the largest
-    * when full. Binary search + memmove — k is index-cap sized (≤ a few
-    * hundred), so the copy is L1-resident. */
-  def add(v: Long): Unit = {
-    if (size == k && v >= vals(size - 1)) return
-    val idx = {
-      val i = java.util.Arrays.binarySearch(vals, 0, size, v)
-      if (i >= 0) return // already present: distinct semantics
-      -(i + 1)
+  private var keys = new Array[Long](math.min(k, 16))
+  private var vals = new Array[AnyRef](keys.length)
+  private var n = 0
+  private var compacted = true
+  // set once k distinct keys are held: every kept key is ≤ ceiling
+  private var full = false
+  private var ceiling = Long.MaxValue
+
+  /** False when `key` can no longer be among the k smallest distinct. */
+  def accepts(key: Long): Boolean = !full || key < ceiling
+
+  def add(key: Long, value: Any): Unit = if (accepts(key)) {
+    if (n == keys.length) {
+      if (n > k) compact()
+      if (n == keys.length) grow()
     }
-    val lastKept = if (size == k) size - 1 else size
-    System.arraycopy(vals, idx, vals, idx + 1, lastKept - idx)
-    vals(idx) = v
-    if (size < k) size += 1
+    keys(n) = key
+    vals(n) = value.asInstanceOf[AnyRef]
+    n += 1
+    compacted = false
   }
 
   def merge(other: MinKBuffer): Unit = {
     var i = 0
-    while (i < other.size) { add(other.vals(i)); i += 1 }
+    while (i < other.n) { add(other.keys(i), other.vals(i)); i += 1 }
   }
 
-  def toArray: Array[Long] = java.util.Arrays.copyOfRange(vals, 0, size)
+  /** The kept keys, ascending. */
+  def sortedKeys: Array[Long] = { compact(); java.util.Arrays.copyOf(keys, n) }
+
+  /** The kept payloads, in ascending key order. */
+  def sortedValues: Array[AnyRef] = { compact(); java.util.Arrays.copyOf(vals, n) }
+
+  private def grow(): Unit = {
+    val cap = math.min(keys.length.toLong * 2, Int.MaxValue - 8L).toInt
+    require(cap > keys.length, s"min-k buffer: more than $cap distinct keys in one group")
+    keys = java.util.Arrays.copyOf(keys, cap)
+    vals = java.util.Arrays.copyOf(vals, cap)
+  }
+
+  private def compact(): Unit = if (!compacted) {
+    val order = Array.range(0, n).sortBy(keys(_)) // stable
+    val ks = new Array[Long](keys.length)
+    val vs = new Array[AnyRef](keys.length)
+    var m = 0
+    var j = 0
+    while (j < order.length && m < k) {
+      val i = order(j)
+      if (m == 0 || keys(i) != ks(m - 1)) { ks(m) = keys(i); vs(m) = vals(i); m += 1 }
+      j += 1
+    }
+    keys = ks; vals = vs; n = m
+    compacted = true
+    if (m == k) { full = true; ceiling = ks(m - 1) }
+  }
 }
 
-/** Custom Catalyst aggregate `graft_min_k(col, k)`: the k smallest
-  * DISTINCT values of a long column, returned sorted ascending.
+/** Custom Catalyst aggregate `graft_min_k_by(key, value, k)`: the values
+  * of the rows with the k smallest DISTINCT long keys of the group,
+  * returned as an array in ascending key order. Null keys are skipped.
+  * `graft_min_k(col, k)` is the special case value = key: the k smallest
+  * distinct values of a long column, sorted ascending.
   *
   * Built for [[graft.operators.TextAnalysis.invertedIndex]]'s capped
-  * posting lists, but generally useful wherever "first k members of a
+  * posting lists and [[graft.operators.ValidationPass]]'s first-appearance
+  * offender lists, and generally useful wherever "first k members of a
   * group by key order" must not materialize the group (per-key sample
   * ids, representative doc pickers). Runs inside ObjectHashAggregateExec
   * with map-side partial aggregation, same as [[HistogramAgg]]. */
 case class CollectMinK(
-    child: Expression,
+    key: Expression,
+    value: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[MinKBuffer] {
 
-  require(k > 0, "graft_min_k: k must be positive")
+  require(k > 0, s"$prettyName: k must be positive")
 
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(key, value)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  // value = key is never null: null keys are skipped
+  override def dataType: DataType = ArrayType(value.dataType,
+    containsNull = value.nullable && !value.semanticEquals(key))
 
   override def createAggregationBuffer(): MinKBuffer = new MinKBuffer(k)
 
   override def update(buf: MinKBuffer, input: InternalRow): MinKBuffer = {
-    val v = child.eval(input)
+    val v = key.eval(input)
     if (v != null) {
       val l = v match {
         case l: Long  => l
@@ -83,7 +128,8 @@ case class CollectMinK(
         case b: Byte  => b.toLong
         case x        => x.toString.toLong
       }
-      buf.add(l)
+      // the payload may point into a reused input row: copy what is kept
+      if (buf.accepts(l)) buf.add(l, InternalRow.copyValue(value.eval(input)))
     }
     buf
   }
@@ -92,26 +138,24 @@ case class CollectMinK(
     buf.merge(other); buf
   }
 
-  override def eval(buf: MinKBuffer): Any = ArrayData.toArrayData(buf.toArray)
+  override def eval(buf: MinKBuffer): Any =
+    new GenericArrayData(buf.sortedValues.asInstanceOf[Array[Any]])
 
-  override def serialize(buf: MinKBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.k)
-    out.writeInt(buf.size)
-    var i = 0
-    while (i < buf.size) { out.writeLong(buf.vals(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  @transient private lazy val bufferProjection = UnsafeProjection.create(
+    Array[DataType](ArrayType(LongType, containsNull = false), ArrayType(value.dataType)))
+
+  override def serialize(buf: MinKBuffer): Array[Byte] =
+    bufferProjection(InternalRow(ArrayData.toArrayData(buf.sortedKeys),
+      new GenericArrayData(buf.sortedValues.asInstanceOf[Array[Any]]))).getBytes
 
   override def deserialize(bytes: Array[Byte]): MinKBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new MinKBuffer(in.readInt())
-    val n = in.readInt()
+    val row = new UnsafeRow(2)
+    row.pointTo(bytes, bytes.length)
+    val ks = row.getArray(0).toLongArray()
+    val vs = row.getArray(1).toObjectArray(value.dataType)
+    val buf = new MinKBuffer(k)
     var i = 0
-    while (i < n) { buf.vals(i) = in.readLong(); i += 1 }
-    buf.size = n
+    while (i < ks.length) { buf.add(ks(i), vs(i)); i += 1 }
     buf
   }
 
@@ -120,32 +164,40 @@ case class CollectMinK(
   override def withNewInputAggBufferOffset(newOffset: Int): CollectMinK =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): CollectMinK =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_min_k"
+    copy(key = newChildren(0), value = newChildren(1))
+  override def prettyName: String = CollectMinK.FnName
 }
 
 object CollectMinK {
   val FnName = "graft_min_k"
+  val ByFnName = "graft_min_k_by"
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    val info = new ExpressionInfo(classOf[CollectMinK].getName, FnName)
-    registry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName),
-      info,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, s"$FnName(col, k)")
-        CollectMinK(exprs.head,
-          exprs(1).eval(InternalRow.empty).toString.toInt)
-      })
+    def k(e: Expression): Int = e.eval(InternalRow.empty).toString.toInt
+    Seq(FnName -> 2, ByFnName -> 3).foreach { case (name, arity) =>
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id,
+          new ExpressionInfo(classOf[CollectMinK].getName, name),
+          (exprs: Seq[Expression]) => {
+            require(exprs.length == arity,
+              if (arity == 2) s"$name(col, k)" else s"$name(key, value, k)")
+            CollectMinK(exprs.head, exprs(arity - 2), k(exprs.last))
+          })
+    }
+  }
+
+  private def call(name: String, args: Column*): Column = {
+    try register(SparkSession.active) catch { case _: IllegalStateException => () }
+    call_function(name, args: _*)
   }
 
   /** Column-API entry: `minK($"doc_id", 10)` → sorted array of the 10
     * smallest distinct ids in the group. */
-  def minK(c: Column, k: Int): Column = {
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function(FnName, c, lit(k))
-  }
+  def minK(c: Column, k: Int): Column = call(FnName, c, lit(k))
+
+  /** `minKBy($"first_key", $"value", 10)` → the `value`s of the rows with
+    * the 10 smallest distinct `first_key`s, in ascending key order. */
+  def minKBy(key: Column, value: Column, k: Int): Column = call(ByFnName, key, value, lit(k))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Predicates
+import graft.functions.{CollectMinK, Predicates}
 import graft.model.{Requirement, Rule, RuleType}
 import graft.norm.Normalize.NullSentinel
 
@@ -18,12 +18,18 @@ import graft.norm.Normalize.NullSentinel
   *    to the SAME scan that extracts violations — ONE pass over the data,
   *    no second job, no dense rows×cols mask (the reference's
   *    invalid_cell_mask at validate_core.py:202 is the pandas-ism we drop);
-  *  - violations come out sparse as (row_key, rule_id, value) via
-  *    array-of-struct + `filter` + `explode` — all codegen'd built-ins;
-  *  - the only shuffle is the tiny distinct-offender aggregate
+  *  - clean rows are filtered out first by a pure-boolean OR of the
+  *    rules' invalid predicates; only violating rows pay for the
+  *    array-of-struct + `filter` + `explode` that emits the violations
+  *    sparse as (row_key, rule_id, value). The Observation sits below
+  *    that filter, so it still counts every row;
+  *  - the only data-sized shuffle is the distinct-offender aggregate
   *    groupBy(rule_id, value), whose cardinality is bounded by distinct
   *    offending values, not rows (partial aggregation makes the map side
-  *    emit at most |distinct| rows per partition).
+  *    emit at most |distinct| rows per partition). One per-rule aggregate
+  *    over it yields the exact totals and, through the bounded
+  *    [[graft.functions.CollectMinK]], the first `maxOffendersPerRule`
+  *    values — one SQL execution per table, capped or not.
   *
   * First-appearance ordering of offending values (the reference's
   * order-preserving `unique()`, validate_core.py:244-251) is recovered via
@@ -42,8 +48,8 @@ object ValidationPass {
       rule: Rule,
       nNull: Long,
       allNull: Boolean,
-      /** distinct offending values in first-appearance order (truncated
-        * to maxOffendersPerRule in capped mode) */
+      /** distinct offending values in first-appearance order (the first
+        * maxOffendersPerRule of them) */
       failingValues: Seq[String],
       /** total offending cells (exact even when the list is capped) */
       nInvalidCells: Long,
@@ -98,24 +104,37 @@ object ValidationPass {
       r.required == Requirement.Assigned || r.required == Requirement.Alias)
 
   /** Build the sparse violations projection for the rules whose field
-    * exists in `df`: one array-of-struct per row, nulls filtered, exploded.
-    * Input df must already carry [[RowKey]] (or pass idCol to use a
-    * natural key instead). */
+    * exists in `df`, keyed by `keyCol` (the [[RowKey]] or a natural key).
+    * A cell whose invalid predicate is null is no violation. */
   def violationsFor(df: DataFrame, rules: Seq[Rule], keyCol: String): DataFrame = {
     Predicates.register(df.sparkSession)
     val present = evaluable(rules).filter(r => df.columns.contains(r.field))
     require(present.nonEmpty, "no evaluable rule matches a column")
-    val cells: Seq[Column] = present.map { r =>
-      when(
-        Predicates.invalid(r, col(r.field)),
-        struct(
-          lit(r.ruleId).as("rule_id"),
-          col(r.field).cast("string").as("offending_value")))
+    sparseViolations(df, Seq(col(keyCol)), present.map(r =>
+      (r.ruleId, Predicates.invalid(r, col(r.field)), col(r.field))))
+  }
+
+  /** Sparse extraction shared by [[violationsFor]] and [[seqViolations]]:
+    * each cell is (rule_id, invalid predicate, offending value), and a row
+    * yields one (keep…, rule_id, offending_value) per cell whose predicate
+    * is true. Two-tier evaluation tuned for the violations-are-rare regime:
+    *  1. a pure-boolean OR filter (whole-stage codegen, zero allocation)
+    *    rejects the clean rows — this is the only work they cost;
+    *  2. only surviving rows pay the array-of-structs + interpreted
+    *    `filter` lambda + explode (Filter→Project does not collapse, so
+    *    the predicates re-evaluate just for that remainder).
+    * A null predicate fails both tiers alike. explode drops empty arrays
+    * by itself — never guard with size()>0, CollapseProject would then
+    * evaluate the whole cell array twice. */
+  private def sparseViolations(df: DataFrame, keep: Seq[Column],
+                               cells: Seq[(String, Column, Column)]): DataFrame = {
+    val tagged = cells.map { case (ruleId, invalid, value) =>
+      when(invalid,
+        struct(lit(ruleId).as("rule_id"), value.cast("string").as("offending_value")))
     }
-    df.select(
-        col(keyCol),
-        explode(filter(array(cells: _*), x => x.isNotNull)).as("v"))
-      .select(col(keyCol), col("v.rule_id"), col("v.offending_value"))
+    df.where(cells.map(_._2).reduce(_ || _))
+      .select(keep :+ explode(filter(array(tagged: _*), x => x.isNotNull)).as("v"): _*)
+      .select(keep :+ col("v.rule_id") :+ col("v.offending_value"): _*)
   }
 
   /** Full table evaluation in a single scan.
@@ -167,37 +186,14 @@ object ValidationPass {
     val observed = keyed.observe(obs, statExprs.head, statExprs.tail: _*)
 
     val vio = violationsFor(observed, present, RowKey)
+    val byRule: Map[String, Row] = offenderSummary(vio, RowKey, maxOffendersPerRule)
+      .collect() // one row per rule, ≤ cap values each
+      .map(r => r.getString(0) -> r).toMap
 
-    // --- distinct offenders: tiny shuffle keyed by (rule_id, value) ---
-    val grouped = vio
-      .groupBy(col("rule_id"), col("offending_value"))
-      .agg(count(lit(1)).as("n_cells"), min(col(RowKey)).as("first_key"))
-    // capped mode reads `grouped` twice (ranked values + exact totals);
-    // cache the distinct-offenders frame so the DATA scans once
-    if (maxOffendersPerRule != Int.MaxValue) grouped.persist()
-    val capped =
-      if (maxOffendersPerRule == Int.MaxValue) grouped
-      else cappedOffenders(grouped, maxOffendersPerRule)
-    val offenderRows: Array[Row] = capped.collect() // ≤ rules × cap rows
-    // exact per-rule totals regardless of cap (second agg over the tiny
-    // grouped frame, not over the data)
-    val totalsByRule: Map[String, (Long, Long)] =
-      if (maxOffendersPerRule == Int.MaxValue)
-        offenderRows.groupBy(_.getString(0)).map { case (k, rs) =>
-          k -> (rs.map(_.getLong(2)).sum, rs.length.toLong)
-        }
-      else {
-        val totals = grouped.groupBy(col("rule_id"))
-          .agg(sum(col("n_cells")).as("cells"), count(lit(1)).as("distincts"))
-          .collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        grouped.unpersist()
-        totals
-      }
-
-    // The optimizer can collapse an empty input to a LocalRelation and
-    // drop the CollectMetrics node (e.g. limit(0) fixtures) — fall back
-    // to a direct aggregate in that metadata-sized case.
+    // The optimizer can collapse the plan to a LocalRelation and drop the
+    // CollectMetrics node — an empty input (limit(0) fixtures), or a
+    // violation filter that folds to false (only unconstrained String
+    // rules) — fall back to a direct aggregate in that case.
     val observedStats = obs.get
     val stats: Map[String, Any] =
       if (observedStats.nonEmpty) observedStats.toMap
@@ -207,58 +203,45 @@ object ValidationPass {
       }
     val nRows = stats("n_rows").asInstanceOf[Long]
 
-    val byRule: Map[String, Array[Row]] = offenderRows.groupBy(_.getString(0))
     val columns = present.map { r =>
       val nNull = stats(s"n_null__${r.field}") match {
         case null      => 0L
         case l: Long   => l
         case other     => other.toString.toLong
       }
-      val mine = byRule.getOrElse(r.ruleId, Array.empty[Row]).sortBy(_.getLong(3))
-      val (cells, distincts) = totalsByRule.getOrElse(r.ruleId, (0L, 0L))
+      val mine = byRule.get(r.ruleId)
       ColumnEval(
         rule = r,
         nNull = nNull,
         allNull = nNull == nRows && nRows > 0,
-        failingValues = mine.map(row => Option(row.getString(1)).getOrElse("NA")).toSeq,
-        nInvalidCells = cells,
-        nDistinctFailing = distincts)
+        failingValues = mine.fold(Seq.empty[String])(
+          _.getSeq[String](3).map(v => Option(v).getOrElse("NA"))),
+        nInvalidCells = mine.fold(0L)(_.getLong(1)),
+        nDistinctFailing = mine.fold(0L)(_.getLong(2)))
     }
 
     EvalResult(tableName, nRows, missingRequired, missingOptional,
       totalRequired, totalOptional, columns, vio)
   }
 
-  /** First-appearance top-cap per rule, two-phase so NO unbounded frame
-    * ever flows through a single task (round-2 VERDICT "What's wrong"
-    * #4: a per-rule global window over the distinct-offenders frame puts
-    * ~|rows| distinct values of a garbage column through ONE reducer at
-    * 10^12 rows).
-    *
-    * Phase 1 ranks within (rule_id, salt-of-value) —
-    * `nSalts` parallel partitions per rule, each emitting ≤ cap rows.
-    * Phase 2 re-ranks the survivors within rule_id — a frame bounded by
-    * nSalts × cap rows per rule regardless of input size. The global
-    * top-cap by first_key is contained in the union of per-salt
-    * top-caps, so the result is IDENTICAL to the single-window spelling
-    * (first_key is a total order within a rule: a row contributes at
-    * most one value per rule, so two distinct values can't share their
-    * min row key). `grouped` carries (rule_id, offending_value, n_cells,
-    * first_key). */
-  private[graft] def cappedOffenders(grouped: DataFrame, cap: Int,
-                                     nSalts: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w1 = Window
-      .partitionBy(col("rule_id"), pmod(xxhash64(col("offending_value")), lit(nSalts)))
-      .orderBy(col("first_key"))
-    val w2 = Window.partitionBy(col("rule_id")).orderBy(col("first_key"))
-    grouped
-      .withColumn("__rank", row_number().over(w1))
-      .where(col("__rank") <= cap)
-      .withColumn("__rank", row_number().over(w2))
-      .where(col("__rank") <= cap)
-      .drop("__rank")
-  }
+  /** Per rule over a violations frame (keyCol, rule_id, offending_value):
+    * (rule_id, n_cells, n_distinct, first_values) — the exact cell and
+    * distinct-value totals, plus the first `cap` distinct offending
+    * values in first-appearance order (ascending min key). Both
+    * aggregates combine map-side: (rule_id, value) → (n_cells, first_key)
+    * is the only data-sized shuffle, and the per-rule bounded
+    * [[CollectMinK]] ships at most `cap` values per rule per partition,
+    * so no task ever holds an unbounded frame (round-2 VERDICT "What's
+    * wrong" #4). first_key is a total order within a rule: a row
+    * contributes at most one value per rule, so two distinct values
+    * can't share their min key. */
+  private[graft] def offenderSummary(vio: DataFrame, keyCol: String, cap: Int): DataFrame =
+    vio.groupBy(col("rule_id"), col("offending_value"))
+      .agg(count(lit(1)).as("n_cells"), min(col(keyCol)).as("first_key"))
+      .groupBy(col("rule_id"))
+      .agg(sum(col("n_cells")).as("n_cells"), count(lit(1)).as("n_distinct"),
+        CollectMinK.minKBy(col("first_key"), col("offending_value"), cap)
+          .as("first_values"))
 
   /** Named constraint over the sequence table: validity predicate plus
     * the offending-value rendering for the violations Dataset
@@ -347,30 +330,9 @@ object ValidationPass {
     *        (e.g. the partition bucket, so a single batch job can write
     *        violations partitioned and report per-partition verdicts). */
   def seqViolations(df: DataFrame, constraints: Seq[SeqConstraint],
-                    carryCols: Seq[String]): DataFrame = {
-    val cells = constraints.map { c =>
-      when(!coalesce(c.valid, lit(false)),
-        struct(lit(c.ruleId).as("rule_id"),
-          c.offendingValue.cast("string").as("offending_value")))
-    }
-    // Two-tier evaluation tuned for the violations-are-rare regime:
-    //  1. a pure-boolean OR filter (whole-stage codegen, zero allocation)
-    //    rejects the ~99% clean rows — this is the only work they cost;
-    //  2. only surviving rows pay the array-of-structs + explode
-    //    materialization (Filter→Project does not collapse, so the
-    //    predicates re-evaluate just for that tiny remainder).
-    // explode drops empty arrays by itself — never guard with size()>0,
-    // CollapseProject would then evaluate the whole cell array twice.
-    val anyViolation = constraints
-      .map(c => !coalesce(c.valid, lit(false)))
-      .reduce(_ || _)
-    val carry = carryCols.map(col)
-    df.where(anyViolation)
-      .select(carry :+ col("doc_id") :+
-        explode(filter(array(cells: _*), x => x.isNotNull)).as("v"): _*)
-      .select(carry :+ col("doc_id") :+ col("v.rule_id") :+
-        col("v.offending_value"): _*)
-  }
+                    carryCols: Seq[String]): DataFrame =
+    sparseViolations(df, carryCols.map(col) :+ col("doc_id"), constraints.map(c =>
+      (c.ruleId, !coalesce(c.valid, lit(false)), c.offendingValue)))
 
   /** Conditional CROSS-FIELD constraints — "when P(row) holds, Q(row)
     * must hold" — the validation tier one level above the reference's

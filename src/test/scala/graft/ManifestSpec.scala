@@ -55,4 +55,38 @@ class ManifestSpec extends AnyFunSuite {
     assert(st.isComplete("""part"weird\name"""))
     assert(st.entries("""part"weird\name""").files === Seq("""a"b\c.parquet"""))
   }
+
+  test("property: arbitrary partition, snapshot and file names round-trip exactly") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // JSON-hostile pieces, control chars, non-ASCII, lone and paired
+    // surrogates, and raw chars anywhere in the BMP
+    val piece: Gen[String] = Gen.frequency(
+      3 -> Gen.oneOf("\"", "\\", "],", "\",\"", "\":\"", "[", "]", "{", "}", ",",
+        "\\\"", "\\u0041", "\n", "\r", "\t", "\u0000", "\u001f", "\u007f",
+        "é", "日本", "\ud83d\ude00", "\ud800", "\udfff", " "),
+      2 -> Gen.alphaNumStr.map(_.take(6)),
+      2 -> Gen.choose(Char.MinValue, Char.MaxValue).map(_.toString))
+    val name: Gen[String] = Gen.choose(0, 8).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    val gen = for {
+      parts <- Gen.choose(1, 5).flatMap(Gen.listOfN(_, name))
+      snap <- name
+      files <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, name))
+    } yield (parts.distinct, snap, files)
+    (0 until 60).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong))).foreach {
+      case (parts, snap, files) =>
+        val p = tmp()
+        parts.zipWithIndex.foreach { case (part, i) =>
+          Manifest.markComplete(p, part, rows = i, violations = 1, pass = i % 2 == 0,
+            snapshotId = snap, files = files)
+        }
+        val st = Manifest.load(p)
+        assert(st.entries.keySet === parts.toSet, s"parts=$parts")
+        parts.zipWithIndex.foreach { case (part, i) =>
+          val e = st.entries(part)
+          assert((e.rows, e.violations, e.pass) === ((i.toLong, 1L, i % 2 == 0)))
+          assert(e.snapshotId === snap && e.files === files, s"part=$part files=$files")
+        }
+    }
+  }
 }

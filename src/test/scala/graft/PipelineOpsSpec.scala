@@ -1285,16 +1285,75 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("min-k buffer: cap, distinctness, merge == union's k smallest") {
     import graft.functions.MinKBuffer
+    def add(b: MinKBuffer, ks: Long*): Unit = ks.foreach(x => b.add(x, x))
     val a = new MinKBuffer(3)
-    Seq(9L, 2L, 7L, 2L, 11L, 1L).foreach(a.add) // dup 2 ignored
-    assert(a.toArray === Array(1L, 2L, 7L))
+    add(a, 9L, 2L, 7L, 2L, 11L, 1L) // dup 2 ignored
+    assert(a.sortedKeys === Array(1L, 2L, 7L))
     val b = new MinKBuffer(3)
-    Seq(0L, 7L, 8L).foreach(b.add)
+    add(b, 0L, 7L, 8L)
     a.merge(b) // union {0,1,2,7,8,9,11} → 3 smallest
-    assert(a.toArray === Array(0L, 1L, 2L))
+    assert(a.sortedKeys === Array(0L, 1L, 2L))
     val full = new MinKBuffer(2)
-    Seq(5L, 5L, 5L).foreach(full.add) // all-dup input keeps one
-    assert(full.toArray === Array(5L))
+    add(full, 5L, 5L, 5L) // all-dup input keeps one
+    assert(full.sortedKeys === Array(5L))
+  }
+
+  test("min-k-by: payloads follow keys; repeats collapse; past-cap keys rejected; k = Int.MaxValue keeps all") {
+    import graft.functions.MinKBuffer
+    val b = new MinKBuffer(4)
+    Seq(40L -> "d", 10L -> "a", 30L -> "c", 10L -> "a", 20L -> "b", 50L -> "e", 30L -> "c")
+      .foreach { case (k, v) => b.add(k, v) }
+    assert(b.sortedKeys === Array(10L, 20L, 30L, 40L))
+    assert(b.sortedValues.toSeq === Seq("a", "b", "c", "d"))
+    assert(!b.accepts(40L) && !b.accepts(99L) && b.accepts(39L))
+    // uncapped: nothing preallocated, every distinct key kept in order
+    val all = new MinKBuffer(Int.MaxValue)
+    val keys = (1 to 5000).map(i => (i * 7919L) % 5003L) // a permutation
+    keys.foreach(x => all.add(x, x.toString))
+    keys.take(100).foreach(x => all.add(x, x.toString))
+    assert(all.sortedKeys.toSeq === keys.distinct.sorted)
+    assert(all.sortedValues.toSeq === keys.distinct.sorted.map(_.toString))
+  }
+
+  test("min-k-by aggregate: struct payloads survive serialize/deserialize; SQL spellings agree") {
+    import graft.functions.CollectMinK
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val payload = StructType(Seq(StructField("v", StringType), StructField("n", LongType)))
+    val agg = CollectMinK(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, payload, nullable = true), k = 3)
+    val buf = agg.createAggregationBuffer()
+    Seq(7L -> "g", 2L -> "b", 9L -> null, 4L -> "d", 1L -> "a").foreach { case (k, v) =>
+      val p = if (v == null) null else InternalRow(UTF8String.fromString(v), k * 10)
+      agg.update(buf, InternalRow(k, p))
+    }
+    agg.update(buf, InternalRow(null, InternalRow(UTF8String.fromString("z"), 0L))) // null key skipped
+    val back = agg.deserialize(agg.serialize(buf))
+    def render(b: graft.functions.MinKBuffer) = b.sortedValues.toSeq.map {
+      case r: InternalRow => s"${r.getUTF8String(0)}:${r.getLong(1)}"
+      case other => String.valueOf(other)
+    }
+    assert(back.sortedKeys === Array(1L, 2L, 4L))
+    assert(render(back) === Seq("a:10", "b:20", "d:40"))
+    assert(render(back) === render(buf))
+    // Column and SQL spellings over a multi-partition frame
+    val df = (1 to 40).map(i => (i % 2, (41 - i).toLong, s"v$i")).toDF("g", "key", "val")
+      .repartition(4)
+    val viaColumn = df.groupBy("g")
+      .agg(CollectMinK.minKBy($"key", $"val", 3).as("top"),
+        CollectMinK.minKBy($"key", $"val", Int.MaxValue).as("all"))
+      .orderBy("g").collect()
+    assert(viaColumn.map(_.getSeq[String](1)).toSeq ===
+      Seq(Seq("v40", "v38", "v36"), Seq("v39", "v37", "v35")))
+    assert(viaColumn.map(_.getSeq[String](2).size).toSeq === Seq(20, 20))
+    df.createOrReplaceTempView("min_k_by_t")
+    val viaSql = spark.sql(
+      "SELECT g, graft_min_k_by(key, val, 3) AS top, graft_min_k(key, 2) AS ks " +
+        "FROM min_k_by_t GROUP BY g ORDER BY g").collect()
+    assert(viaSql.map(_.getSeq[String](1)).toSeq === viaColumn.map(_.getSeq[String](1)).toSeq)
+    assert(viaSql.map(_.getSeq[Long](2)).toSeq === Seq(Seq(1L, 3L), Seq(2L, 4L)))
   }
 
   test("inverted index: df/tf/capped postings, hand-computed") {

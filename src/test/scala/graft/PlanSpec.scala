@@ -221,36 +221,33 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"corpus must not sort-merge:\n$p")
   }
 
-  test("capped offender ranking: salted two-phase, no unbounded single-task window") {
+  test("offender cap: one bounded per-rule aggregate, partial before the exchange, no cache") {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val grouped = (1L to 500L)
-      .map(i => (s"R${i % 3}", s"v$i", i % 7 + 1, i))
-      .toDF("rule_id", "offending_value", "n_cells", "first_key")
-    val capped = ValidationPass.cappedOffenders(grouped, 10)
-    // result identical to the single-window spelling
-    val w = Window.partitionBy($"rule_id").orderBy($"first_key")
-    val single = grouped.withColumn("r", row_number().over(w))
-      .where($"r" <= 10).drop("r")
-    assert(capped.collect().map(_.toSeq).toSet === single.collect().map(_.toSeq).toSet)
-    // plan shape (string pin — AQE query stages are leaf nodes, so tree
-    // collect can't see inside): two windows; the bottom-most (evaluated
-    // first) is partitioned by (rule_id, salt) so the unbounded
-    // distinct-offender frame never flows through one task; the second
-    // re-ranks a frame bounded by nSalts × cap rows per rule. Spark's
-    // InferWindowGroupLimit additionally inserts Partial group limits
-    // before each exchange — map tasks emit ≤ cap rows per key.
-    // AQE prints Final + Initial sections after execution — keep the final
-    val p = capped.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val winSpecs = "windowspecdefinition\\(([^)]*) ASC".r
-      .findAllMatchIn(p).map(_.group(1)).toSeq
-    assert(winSpecs.length === 2, s"expected 2 windows:\n$p")
-    // spec lists partition exprs then the order expr: phase 1 has
-    // (rule_id, _w0=salt, first_key), phase 2 (rule_id, first_key)
-    assert(winSpecs.exists(_.contains("_w0")), s"phase 1 must salt-partition:\n$p")
-    assert(p.contains("WindowGroupLimit") && p.contains("Partial"),
-      s"expected partial window group limits:\n$p")
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val vio = (1L to 500L)
+      .map(i => (i, s"R${i % 3}", s"v${i % 97}"))
+      .toDF("k", "rule_id", "offending_value")
+    val capped = ValidationPass.offenderSummary(vio, "k", 10)
+    capped.collect() // finalize AQE stages
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val root = capped.queryExecution.executedPlan
+    // map-side partials of the bounded CollectMinK feed the rule_id
+    // exchange, so each map task ships ≤ cap values per rule — the
+    // distinct-offender frame never flows through one task unbounded
+    val partialMinK = helper.collectWithSubqueries(root) {
+      case e: ShuffleExchangeExec if e.child.exists {
+        case a: ObjectHashAggregateExec => a.aggregateExpressions.exists(ae =>
+          ae.mode == Partial && ae.aggregateFunction.isInstanceOf[graft.functions.CollectMinK])
+        case _ => false
+      } => e
+    }
+    val p = root.toString
+    assert(partialMinK.nonEmpty, s"expected a partial graft_min_k below an exchange:\n$p")
+    assert(!p.contains("Window"), s"no window ranking over offenders:\n$p")
+    assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+      s"no cached distinct-offenders frame:\n$p")
   }
 
   test("sequence packing shuffles only (group, id, cost) — document text never moves") {

@@ -44,28 +44,67 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("salted two-phase offender cap equals the single-window top-cap") {
+  test("bounded per-rule offender aggregate equals the single-window top-cap") {
     import org.apache.spark.sql.expressions.Window
     val gen = for {
       nRules <- Gen.choose(1, 4)
-      n <- Gen.choose(1, 120)
-      cap <- Gen.choose(1, 15)
-      salts <- Gen.oneOf(1, 2, 7, 32)
-    } yield (nRules, n, cap, salts)
-    samples(gen, 12).foreach { case (nRules, n, cap, salts) =>
-      // distinct first_keys within a rule (the production invariant: one
-      // cell per rule per row ⇒ distinct values have distinct min keys)
-      val rows = (0 until n).map { i =>
-        (s"R${i % nRules}", s"v$i", (i % 5 + 1).toLong, i.toLong)
-      }
-      val grouped = rows.toDF("rule_id", "offending_value", "n_cells", "first_key")
-      val two = ValidationPass.cappedOffenders(grouped, cap, salts)
-        .collect().map(_.toSeq).toSet
+      n <- Gen.choose(1, 150)
+      nValues <- Gen.choose(1, 60)
+      cap <- Gen.oneOf(Gen.choose(1, 15), Gen.const(Int.MaxValue))
+      parts <- Gen.oneOf(1, 3, 8)
+    } yield (nRules, n, nValues, cap, parts)
+    samples(gen, 12).foreach { case (nRules, n, nValues, cap, parts) =>
+      // violations frame: row key i yields at most one cell per rule (the
+      // production invariant ⇒ distinct values have distinct min keys);
+      // values repeat across rows, so n_cells > 1 and first_key = min
+      val vio = (0 until n).flatMap { i =>
+        (0 until nRules).filter(r => (i + r) % 3 != 0)
+          .map(r => (i.toLong, s"R$r", s"v${(i * 7 + r) % nValues}"))
+      }.toDF("k", "rule_id", "offending_value").repartition(parts)
+      val got = ValidationPass.offenderSummary(vio, "k", cap).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getSeq[String](3)))
+        .toMap
+      // oracle: the single-window spelling over the distinct-offenders frame
+      val grouped = vio.groupBy(col("rule_id"), col("offending_value"))
+        .agg(count(lit(1)).as("n_cells"), min(col("k")).as("first_key"))
       val w = Window.partitionBy(col("rule_id")).orderBy(col("first_key"))
-      val one = grouped.withColumn("r", row_number().over(w))
-        .where(col("r") <= cap).drop("r")
-        .collect().map(_.toSeq).toSet
-      assert(two === one, s"nRules=$nRules n=$n cap=$cap salts=$salts")
+      val listed = grouped.withColumn("r", row_number().over(w))
+        .where(col("r") <= cap).collect()
+        .groupBy(_.getString(0)).map { case (rule, rs) =>
+          rule -> rs.sortBy(_.getInt(4)).map(_.getString(1)).toSeq }
+      val expected = grouped.groupBy(col("rule_id"))
+        .agg(sum(col("n_cells")), count(lit(1))).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), listed(r.getString(0))))
+        .toMap
+      assert(got === expected, s"nRules=$nRules n=$n nValues=$nValues cap=$cap parts=$parts")
+    }
+  }
+
+  test("min-k-by merge is order-independent: any split and merge order gives the union's k smallest") {
+    import graft.functions.MinKBuffer
+    val gen = for {
+      n <- Gen.choose(0, 200)
+      keys <- Gen.listOfN(n, Gen.choose(-50L, 50L))
+      k <- Gen.oneOf(Gen.choose(1, 20), Gen.const(Int.MaxValue))
+      nParts <- Gen.choose(1, 6)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (keys, k, nParts, seed)
+    samples(gen, 40).foreach { case (keys, k, nParts, seed) =>
+      val rnd = new scala.util.Random(seed)
+      def fold(ks: Seq[Long]): MinKBuffer = {
+        val parts = ks.groupBy(_ => rnd.nextInt(nParts)).values.toSeq
+        val bufs = rnd.shuffle(parts).map { p =>
+          val b = new MinKBuffer(k); p.foreach(x => b.add(x, s"p$x")); b
+        }
+        val out = new MinKBuffer(k)
+        rnd.shuffle(bufs).foreach(out.merge)
+        out
+      }
+      val expected = keys.distinct.sorted.take(k)
+      Seq(keys, rnd.shuffle(keys)).map(fold).foreach { b =>
+        assert(b.sortedKeys.toSeq === expected, s"k=$k parts=$nParts keys=$keys")
+        assert(b.sortedValues.toSeq === expected.map(x => s"p$x"))
+      }
     }
   }
 

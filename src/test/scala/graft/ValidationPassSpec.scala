@@ -124,6 +124,60 @@ class ValidationPassSpec extends SparkSpec {
     assert(c.nInvalidCells === n.toLong)
   }
 
+  test("clean-row filter: violationsFor equals the unfiltered explode on random frames") {
+    import org.apache.spark.sql.functions.{array, col, explode, filter, struct, when}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.functions.Predicates
+    val cdeRules = Seq(
+      Rule("T", "int_c", RuleType.IntegerT, Requirement.Required, fillNull = Seq("unknown")),
+      Rule("T", "float_c", RuleType.FloatT, Requirement.Optional),
+      Rule("T", "enum_c", RuleType.EnumT, Requirement.Required, validation = Seq("a", "b")),
+      Rule("T", "multi_c", RuleType.EnumT, Requirement.Optional,
+        validation = Seq("a", "b", "c"), allowMultiEnum = true),
+      Rule("T", "re_c", RuleType.RegexT, Requirement.Optional, pattern = "S[0-9]+"),
+      Rule("T", "badre_c", RuleType.RegexT, Requirement.Optional, pattern = "(unclosed"),
+      Rule("T", "str_c", RuleType.StringT, Requirement.Optional))
+    val fields = cdeRules.map(_.field)
+    // cells hit try_cast integers ("1e3", "5.0", "x"), multi-enum token
+    // lists, the NA sentinel, and raw nulls, which make predicates null
+    val cell: Gen[String] = Gen.oneOf(null, "NA", "", " ", "1", "5.0", "1e3", "-3",
+      "2.5", "x", "a", "b", "a;b", "a; c", "a;;b", "d;a", "unknown", "S12", "S", "(unclosed")
+    val rowGen = Gen.listOfN(fields.size, cell)
+    (0 until 12).foreach { seed =>
+      val n = 1 + seed * 9
+      val rows = (0 until n).flatMap(i =>
+        rowGen.apply(org.scalacheck.Gen.Parameters.default, Seed(seed * 1000L + i)))
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(r => org.apache.spark.sql.Row(r: _*)), 3),
+        org.apache.spark.sql.types.StructType(fields.map(f =>
+          org.apache.spark.sql.types.StructField(f, org.apache.spark.sql.types.StringType))))
+      val keyed = ValidationPass.withRowKey(df)
+      val got = ValidationPass.violationsFor(keyed, cdeRules, ValidationPass.RowKey).collect()
+      // oracle: the pre-filter spelling, every row through the explode
+      val cells = cdeRules.map(r => when(Predicates.invalid(r, col(r.field)),
+        struct(lit(r.ruleId).as("rule_id"), col(r.field).cast("string").as("offending_value"))))
+      val unfiltered = keyed
+        .select(col(ValidationPass.RowKey), explode(filter(array(cells: _*), x => x.isNotNull)).as("v"))
+        .select(col(ValidationPass.RowKey), col("v.rule_id"), col("v.offending_value"))
+        .collect()
+      assert(got.toSeq === unfiltered.toSeq, s"seed=$seed rows=$rows")
+    }
+  }
+
+  test("only unconstrained String rules: the filter folds to false, stats stay exact") {
+    val strRules = Seq(
+      Rule("T", "a", RuleType.StringT, Requirement.Required),
+      Rule("T", "b", RuleType.StringT, Requirement.Optional))
+    val df = Seq(("x", "NA"), ("NA", ""), ("y", "z"), ("", null)).toDF("a", "b")
+    val r = ValidationPass.evalTable(Normalize.normalizeDf(df), "T", strRules,
+      graft.Engine.DefaultMaxOffenders)
+    assert(r.nRows === 4L)
+    assert(r.columns.map(c => c.rule.field -> c.nNull) === Seq("a" -> 2L, "b" -> 3L))
+    assert(r.columns.forall(c => c.failingValues.isEmpty && c.nInvalidCells == 0L))
+    assert(r.violations.count() === 0L)
+  }
+
   test("all-null required column detected") {
     val df = Seq(("S1", "NA"), ("S2", "")).toDF("sample_id", "condition_id")
     val r = ValidationPass.evalTable(Normalize.normalizeDf(df), "SAMPLE",
