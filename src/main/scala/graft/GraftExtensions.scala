@@ -1,85 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import graft.functions._
+import graft.functions.Registry
 
-/** SparkSessionExtensions hook: registers every graft custom expression
-  * so any session created with
+/** SparkSessionExtensions hook: injects every graft function of
+  * [[graft.functions.Registry]] so any session created with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) can use them from both the
-  * Column API helpers and plain SQL:
-  *
-  *   SELECT graft_minhash_bands(graft_shingles(text, 3), 64, 8) FROM docs
-  *
-  * The per-operator `register(spark)` calls remain for sessions created
-  * without the extension (tests, ad-hoc shells) — both paths are
-  * idempotent.
+  * `.withExtensions(new GraftExtensions)`) can use them from plain SQL.
+  * The Column helpers work on any session: each registers its own
+  * function on the active session when the session lacks it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = Registry.inject(e)
+}
 
-  private def intArg(es: Seq[Expression], i: Int): Int =
-    es(i).eval(InternalRow.empty).toString.toInt
-  private def dblArg(es: Seq[Expression], i: Int): Double =
-    es(i).eval(InternalRow.empty).toString.toDouble
-  private def stringArrayArg(es: Seq[Expression], i: Int): Seq[String] =
-    es(i).eval(InternalRow.empty)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toObjectArray(org.apache.spark.sql.types.StringType)
-      .map(_.toString).toSeq
+object GraftExtensions {
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_], builder: Seq[Expression] => Expression): Unit =
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name),
-        builder))
-
-    inject("graft_cosine", classOf[CosineSimilarity],
-      es => CosineSimilarity(es(0), es(1)))
-    inject("graft_dot", classOf[DotProduct],
-      es => DotProduct(es(0), es(1)))
-    inject("graft_simhash64", classOf[SimHash64],
-      es => SimHash64(es.head))
-    inject("graft_fingerprint", classOf[RollingFingerprint],
-      es => RollingFingerprint(es.head, intArg(es, 1)))
-    inject("graft_shingles", classOf[WordShingles],
-      es => WordShingles(es.head, intArg(es, 1)))
-    inject("graft_minhash", classOf[MinHashSignature],
-      es => MinHashSignature(es.head, intArg(es, 1)))
-    inject("graft_minhash_bands", classOf[MinHashBandKeys],
-      es => MinHashBandKeys(es.head, intArg(es, 1), intArg(es, 2)))
-    inject("graft_histogram", classOf[HistogramAgg],
-      es => HistogramAgg(es.head, dblArg(es, 1), dblArg(es, 2), intArg(es, 3)))
-    inject("graft_text_profile", classOf[TextProfile],
-      es => TextProfile(es.head))
-    inject("graft_hyperplane_bucket", classOf[HyperplaneBucket],
-      es => HyperplaneBucket(es.head, intArg(es, 1), intArg(es, 2), intArg(es, 3)))
-    inject("graft_normalize_text", classOf[NormalizeText],
-      es => NormalizeText(es.head, es(1).eval(InternalRow.empty).toString))
-    inject("graft_compression_ratio", classOf[CompressionRatio],
-      es => CompressionRatio(es.head))
-    inject("graft_word_ids", classOf[WordIds],
-      es => WordIds(es.head, stringArrayArg(es, 1), intArg(es, 2)))
-    inject("graft_canonical_url", classOf[CanonicalUrl],
-      es => CanonicalUrl(es.head))
-    inject("graft_bloom_agg",
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)))
-    inject("graft_might_contain",
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
-    inject("graft_multienum_valid", classOf[MultiEnumTokensValid],
-      es => MultiEnumTokensValid(es.head, stringArrayArg(es, 1)))
-    inject("graft_token_grams", classOf[TokenGramHashes],
-      es => TokenGramHashes(es.head, intArg(es, 1)))
-    inject("graft_token_grams_seq", classOf[TokenGramHashes],
-      es => TokenGramHashes(es.head, intArg(es, 1), distinct = false))
-    inject("graft_vec_stats", classOf[VecStats],
-      es => VecStats(es.head))
+  /** The one session builder: `master`, `shufflePartitions`, the configs
+    * every graft session shares, and [[GraftExtensions]] — installed once
+    * (skipped when `spark.sql.extensions` already names it). Callers add
+    * their app name and any extra config, then `getOrCreate()`. */
+  def sessionBuilder(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // nested-column vectorized parquet reader is OFF by default and
+      // costs ~3x on array<int> scans (BENCH.md)
+      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+    val viaConf = sys.props.get("spark.sql.extensions")
+      .exists(_.split(',').map(_.trim).contains(classOf[GraftExtensions].getName))
+    if (viaConf) b else b.withExtensions(new GraftExtensions)
   }
 }

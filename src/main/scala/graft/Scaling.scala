@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Two-parallelism scaling harness — the sandbox proxy for the north
   * rule's "N and 4N executors with throughput scaling efficiency ≥ 0.8"
@@ -19,15 +18,8 @@ import org.apache.spark.sql.SparkSession
 object Scaling {
 
   def run(master: String, shufflePartitions: Int, rows: Long, parts: Int): Double = {
-    val spark = SparkSession.builder()
-      .master(master)
+    val spark = GraftExtensions.sessionBuilder(master, shufflePartitions)
       .appName(s"graft-scaling-$master")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // nested-column vectorized parquet reader is OFF by default and
-      // costs ~3x on array<int> scans (BENCH.md)
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

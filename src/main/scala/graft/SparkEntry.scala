@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HistogramAgg, Predicates, TextExpressions, VectorExpressions}
+import graft.functions.{HistogramAgg, Predicates, TextExpressions}
 import graft.model.{Requirement, Rule, RuleType}
 import graft.operators._
 import graft.sources.{Bucketing, JsonIngest, SeqTableGen}
@@ -211,7 +211,6 @@ object SparkEntry {
     }),
 
     "q_multienum_check" -> ((s, d) => {
-      Predicates.register(s)
       // synthesize a ';'-joined multi-value cell and validate it with the
       // multi-enum predicate (P11): every trimmed token must be in vocab
       val rule = Rule("documents", "dirty", RuleType.EnumT, Requirement.Required,
@@ -293,7 +292,6 @@ object SparkEntry {
     // ---- drift: histogram sketch + chi-square ----
 
     "q_histogram_quantity" -> ((s, d) => {
-      HistogramAgg.register(s)
       t(s, d, "lineitem")
         .agg(HistogramAgg.histogram(col("l_quantity"), 0.0, 50.0, 25).as("h"))
         .select(posexplode(col("h")).as(Seq("bin_idx", "n")))
@@ -652,7 +650,6 @@ object SparkEntry {
     // pass (k cosines/row), aggregate to k groups; the oracle replays
     // the identical double arithmetic via list_cosine_similarity
     "q_silhouette" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val cents = Array.tabulate(4)(c =>
         (c, Array.tabulate(64)(i => if (i % 4 == c) 1f else 0f)))
       Similarity.simplifiedSilhouette(t(s, d, "embeddings"),
@@ -890,7 +887,6 @@ object SparkEntry {
     // ---- text analysis ----
 
     "q_token_counts" -> ((s, d) => {
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_words"))
         .orderBy("doc_id")
@@ -908,7 +904,6 @@ object SparkEntry {
         "doc_id")),
 
     "q_shingle_count" -> ((s, d) => {
-      graft.functions.ShingleExpression.register(s)
       t(s, d, "documents")
         .select(explode(Dedup.shingles(col("text"), 3)).as("s"))
         .agg(countDistinct(col("s")).as("n_distinct_shingles"))
@@ -919,7 +914,6 @@ object SparkEntry {
       // integer arithmetic, replicated exactly in SQL (stopword-distinct
       // intersection per language, zh by substring containment, ties to
       // the lexicographically greatest language)
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(TextAnalysis.langId(col("text")).as("lang_pred"))
         .groupBy("lang_pred").agg(count(lit(1)).as("n")).orderBy("lang_pred")
@@ -1002,7 +996,6 @@ object SparkEntry {
     // mass as CollectMetrics of ONE pass (the count() below is the only
     // job; no per-stage rescans) — each gate replicated in SQL
     "q_funnel" -> ((s, d) => {
-      TextExpressions.register(s)
       val f = Funnel(t(s, d, "documents"), massCol = Some("n_chars"))
         .stage("len_gate", _.where(col("n_chars") >= 200))
         .stage("word_gate",
@@ -1091,7 +1084,6 @@ object SparkEntry {
     // coverage + duplicated-3-gram char mass, integer-ratio arithmetic
     // from ONE native RepetitionSignals eval — SQL-replicable exactly
     "q_char_repetition" -> ((s, d) => {
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"),
           TextExpressions.repetitionSignals(col("text"), 2, 3).as("__r"))
@@ -1320,7 +1312,6 @@ object SparkEntry {
     // language-ID confusion matrix against the table's lang label —
     // the evaluation half of q_langid_dist (same deterministic scoring)
     "q_lang_confusion" -> ((s, d) => {
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(col("lang"), TextAnalysis.langId(col("text")).as("lang_pred"))
         .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
@@ -1628,7 +1619,6 @@ object SparkEntry {
     // integer label (n_chars >= 500) — reliability diagram + gap per
     // bin; ECE is the n-weighted gap sum over these rows
     "q_calibration" -> ((s, d) => {
-      TextExpressions.register(s)
       val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
         "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
       val scored = t(s, d, "documents")
@@ -1797,7 +1787,6 @@ object SparkEntry {
       // against DuckDB's nfc_normalize on synthesized composed/decomposed
       // suffixes — visually identical strings must hash identically
       // downstream, so normalization precedes dedup/fingerprinting
-      TextExpressions.register(s)
       t(s, d, "documents").select(
           col("doc_id"),
           when(col("doc_id") % 3 === 0, concat(col("text"), lit(" cafe" + "\u0301")))
@@ -1812,7 +1801,6 @@ object SparkEntry {
     // rows-only: deflate byte counts aren't SQL-expressible; the
     // SQL-expressible halves are oracled by q_compression_meta below
     "q_compression_ratio" -> ((s, d) => { // deflate size: rows-only
-      TextExpressions.register(s)
       orderedOnce(
         t(s, d, "documents")
           .select(col("doc_id"),
@@ -1828,7 +1816,6 @@ object SparkEntry {
     // copy) and the input byte mass the ratio denominates over — leaving
     // only the compressed byte count itself rows-only
     "q_compression_meta" -> ((s, d) => {
-      TextExpressions.register(s)
       val docs = t(s, d, "documents")
       val a = docs.select(col("doc_id"),
         round(TextExpressions.compressionRatio(col("text")), 4).as("r1"),
@@ -1848,7 +1835,6 @@ object SparkEntry {
       // profile is projected ONCE then read field-wise (the one-arg
       // repetitionRatio(text) convenience would instantiate the
       // non-codegen profile expression per field reference)
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), TextAnalysis.textProfile(col("text")).as("__tp"))
         .select(col("doc_id"),
@@ -1883,7 +1869,6 @@ object SparkEntry {
       // rounded TextProfile features (sorted-name term order), exactly
       // SQL-replicable; the sigmoid is monotone so threshold-filtering
       // on log-odds ≡ filtering on the calibrated score
-      TextExpressions.register(s)
       val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
         "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
       t(s, d, "documents")
@@ -2059,7 +2044,6 @@ object SparkEntry {
     // rows-only: the Karp–Rabin hash values are seed-specific; the
     // SQL-expressible halves are oracled by q_fingerprint_meta below
     "q_fingerprints" -> ((s, d) => { // hash-specific: rows-only
-      TextExpressions.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), TextExpressions.fingerprint(col("text"), 32).as("fingerprint"))
         .orderBy("doc_id")
@@ -2074,7 +2058,6 @@ object SparkEntry {
     // share their minimizing window, so only the hash values themselves
     // stay rows-only (q_fingerprints).
     "q_fingerprint_meta" -> ((s, d) => {
-      TextExpressions.register(s)
       val docs = t(s, d, "documents")
       val a = docs.select(col("doc_id"), col("text"),
         TextExpressions.fingerprint(col("text"), 32).as("f1"))
@@ -2202,7 +2185,6 @@ object SparkEntry {
     // ---- similarity / ANN ----
 
     "q_ann_topk" -> ((s, d) => {
-      VectorExpressions.register(s)
       val embs = t(s, d, "embeddings")
       val q = embs.orderBy("vec_id").select("embedding").head().getSeq[Float](0).toArray
       Similarity.bruteForceTopK(embs, "vec_id", "embedding", q, 10)
@@ -2381,7 +2363,6 @@ object SparkEntry {
     // the curation budget until they've been SEEN (pure mean-ranking
     // starves them); one sufficient-stats aggregate
     "q_ucb_alloc" -> ((s, d) => {
-      TextExpressions.register(s)
       val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
         "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
       val scored = t(s, d, "documents").select(col("source"),
@@ -2395,7 +2376,6 @@ object SparkEntry {
     // every length budget — the whole selection menu, not one blended
     // trade-off point; O(distinct lengths) window, corpus never sorts
     "q_pareto_front" -> ((s, d) => {
-      TextExpressions.register(s)
       val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
         "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
       val scored = t(s, d, "documents").select(col("doc_id"),
@@ -3406,7 +3386,6 @@ object SparkEntry {
     // engines count identical codepoints; 4-dp round absorbs
     // sum-order ulps)
     "q_char_entropy" -> ((s, d) => {
-      TextExpressions.register(s)
       orderedOnce(
         t(s, d, "documents")
           .select(col("doc_id"),
@@ -3743,7 +3722,6 @@ object SparkEntry {
     // ranks kept exact by doubling, sufficient stats as decimal(38,0),
     // the only ordered windows run over the O(distinct) value frames
     "q_spearman" -> ((s, d) => {
-      TextExpressions.register(s)
       Profile.spearman(
         t(s, d, "documents").select(col("n_chars"),
           TextAnalysis.tokenCount(col("text")).as("n_words")),
@@ -3932,7 +3910,6 @@ object SparkEntry {
     // the token pipeline is invertible up to OOV — composes the
     // q_tokenize / q_detokenize surfaces into one corpus number
     "q_roundtrip_loss" -> ((s, d) => {
-      TextExpressions.register(s)
       val docs = t(s, d, "documents")
       val vocab = TextAnalysis.buildVocab(docs, "text", 20)
       docs.select(
@@ -4017,7 +3994,6 @@ object SparkEntry {
     // ---- score explanation: top-2 weighted-feature contributions of
     // the q_logistic_quality classifier — "why was this doc rejected"
     "q_score_explain" -> ((s, d) => {
-      TextExpressions.register(s)
       val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
         "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
       t(s, d, "documents")

@@ -41,17 +41,10 @@ object Main {
   def main(args: Array[String]): Unit = {
     // spark-submit injects spark.master; default to local[*] otherwise
     // (SPARK_GRAFT_MASTER overrides, e.g. local[8] for the scaling bench)
-    val spark = SparkSession.builder()
-      .config("spark.master", sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
+    val spark = graft.GraftExtensions.sessionBuilder(
+        sys.props.getOrElse("spark.master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")),
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
       .appName("graft-validate")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      // nested-column vectorized parquet reader is OFF by default and
-      // costs ~3x on array<int> scans (BENCH.md)
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -573,7 +566,6 @@ object Main {
   def curate(spark: SparkSession, dir: String): Unit = {
     import graft.operators.{Funnel, LineDedup, Mixing, Packing,
       Profile, Similarity, SnapshotDiff, TextAnalysis}
-    graft.functions.TextExpressions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet").cache()
     val embs = spark.read.parquet(s"$dir/embeddings.parquet")
 

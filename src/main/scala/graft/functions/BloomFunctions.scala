@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ExpressionInfo}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column access to Spark's OWN bloom-filter kernel (the one behind
@@ -13,9 +10,8 @@ import org.apache.spark.sql.functions._
   * per row with zero false NEGATIVES (a "no" is definite, a "yes" has
   * probability ≈ fpp of being wrong). Spark ships both expressions but
   * registers neither for SQL/Column use — this exposes them through the
-  * same self-registering `call_function` pattern as the other graft
-  * expressions, rather than reimplementing a sketch the engine already
-  * codegens.
+  * same [[Registry]] table as the other graft expressions, rather than
+  * reimplementing a sketch the engine already codegens.
   *
   * The intended shape (see [[graft.operators.Dedup.dropSeenDuplicates]]):
   * aggregate the filter on the driver once (bytes ≈ 1.2 GB per 10^9 keys
@@ -29,27 +25,10 @@ object BloomFunctions {
   def optimalNumBits(expectedItems: Long, fpp: Double): Long =
     org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expectedItems, fpp)
 
-  /** Idempotent; Column builders self-register on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_bloom_agg"))) return
-    reg.registerFunction(FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      args => new BloomFilterAggregate(args(0), args(1), args(2)))
-    reg.registerFunction(FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      args => BloomFilterMightContain(args(0), args(1)))
-  }
-
-  private def ensureRegistered(): Unit =
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-
   /** Aggregate a serialized bloom filter over a LongType column. */
-  def bloomAgg(longCol: Column, expectedItems: Long, fpp: Double): Column = {
-    ensureRegistered()
-    call_function("graft_bloom_agg", longCol, lit(expectedItems),
+  def bloomAgg(longCol: Column, expectedItems: Long, fpp: Double): Column =
+    Registry.call("graft_bloom_agg", longCol, lit(expectedItems),
       lit(optimalNumBits(expectedItems, fpp)))
-  }
 
   /** Driver-side build: ONE aggregate job over `df`, returns the filter
     * bytes (or None when `df` is empty — probe nothing, match nothing).
@@ -75,8 +54,6 @@ object BloomFunctions {
   }
 
   /** Per-row probe of inlined filter bytes; false negatives impossible. */
-  def mightContain(bloomBytes: Array[Byte], longCol: Column): Column = {
-    ensureRegistered()
-    call_function("graft_might_contain", lit(bloomBytes), longCol)
-  }
+  def mightContain(bloomBytes: Array[Byte], longCol: Column): Column =
+    Registry.call("graft_might_contain", lit(bloomBytes), longCol)
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Bounded distinct-min-k buffer: the entries with the k SMALLEST
@@ -172,32 +172,11 @@ object CollectMinK {
   val FnName = "graft_min_k"
   val ByFnName = "graft_min_k_by"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def k(e: Expression): Int = e.eval(InternalRow.empty).toString.toInt
-    Seq(FnName -> 2, ByFnName -> 3).foreach { case (name, arity) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!registry.functionExists(id))
-        registry.registerFunction(id,
-          new ExpressionInfo(classOf[CollectMinK].getName, name),
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == arity,
-              if (arity == 2) s"$name(col, k)" else s"$name(key, value, k)")
-            CollectMinK(exprs.head, exprs(arity - 2), k(exprs.last))
-          })
-    }
-  }
-
-  private def call(name: String, args: Column*): Column = {
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function(name, args: _*)
-  }
-
   /** Column-API entry: `minK($"doc_id", 10)` → sorted array of the 10
     * smallest distinct ids in the group. */
-  def minK(c: Column, k: Int): Column = call(FnName, c, lit(k))
+  def minK(c: Column, k: Int): Column = Registry.call(FnName, c, lit(k))
 
   /** `minKBy($"first_key", $"value", 10)` → the `value`s of the rows with
     * the 10 smallest distinct `first_key`s, in ascending key order. */
-  def minKBy(key: Column, value: Column, k: Int): Column = call(ByFnName, key, value, lit(k))
+  def minKBy(key: Column, value: Column, k: Int): Column = Registry.call(ByFnName, key, value, lit(k))
 }

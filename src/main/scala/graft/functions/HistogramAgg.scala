@@ -2,12 +2,11 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Fixed-bin histogram sketch buffer: `underflow | bins(0..n-1) | overflow`.
@@ -106,29 +105,9 @@ case class HistogramAgg(
 object HistogramAgg {
   val FnName = "graft_histogram"
 
-  /** Register in the session's FunctionRegistry so the aggregate is
-    * reachable from the public Column API via `call_function` (the
-    * Spark-4 bridge from Catalyst Expression to Column). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    val info = new ExpressionInfo(classOf[HistogramAgg].getName, FnName)
-    registry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName),
-      info,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, s"$FnName(col, lo, hi, nBins)")
-        def d(e: Expression): Double = e.eval(InternalRow.empty).toString.toDouble
-        def i(e: Expression): Int = e.eval(InternalRow.empty).toString.toInt
-        HistogramAgg(exprs.head, d(exprs(1)), d(exprs(2)), i(exprs(3)))
-      })
-  }
-
   /** Column-API entry: `histogram($"n_tok", 0, 512, 64)`. */
   def histogram(c: Column, lo: Double, hi: Double, nBins: Int): Column = {
     import org.apache.spark.sql.functions.lit
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function(FnName, c, lit(lo), lit(hi), lit(nBins))
+    Registry.call(FnName, c, lit(lo), lit(hi), lit(nBins))
   }
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -205,31 +203,9 @@ object JaroWinkler {
 }
 
 object MatchExpressions {
-  /** Idempotent registration — same contract as TextExpressions. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_jaro_winkler"))) return
-    reg.registerFunction(FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (es: Seq[Expression]) => JaroWinkler(es.head, es(1)))
-    reg.registerFunction(FunctionIdentifier("graft_phrase_counts"),
-      new ExpressionInfo(classOf[PhraseCounts].getName, "graft_phrase_counts"),
-      (es: Seq[Expression]) => PhraseCounts(es.head,
-        es(1).eval(InternalRow.empty).asInstanceOf[ArrayData]
-          .toObjectArray(StringType).map(_.toString).toSeq))
-  }
+  import org.apache.spark.sql.functions.{array, lit}
 
-  private def ensure(): Unit =
-    try register(SparkSession.active)
-    catch { case _: IllegalStateException => () }
-
-  def jaroWinkler(a: Column, b: Column): Column = {
-    ensure(); call_function("graft_jaro_winkler", a, b)
-  }
-  def phraseCounts(text: Column, phrases: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    ensure()
-    call_function("graft_phrase_counts", text,
-      array(phrases.map(lit(_)): _*))
-  }
+  def jaroWinkler(a: Column, b: Column): Column = Registry.call("graft_jaro_winkler", a, b)
+  def phraseCounts(text: Column, phrases: Seq[String]): Column =
+    Registry.call("graft_phrase_counts", text, array(phrases.map(lit(_)): _*))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** k-value MinHash signature over a token/shingle array as ONE native
@@ -72,19 +71,6 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long = 42L)
 }
 
 object MinHashExpression {
-  /** Idempotent; Column builders self-register on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_minhash"))) return
-    reg.registerFunction(FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (es: Seq[Expression]) => MinHashSignature(
-        es.head,
-        es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt))
-  }
-
-  def minhash(tokens: Column, k: Int): Column = {
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function("graft_minhash", tokens, lit(k))
-  }
+  def minhash(tokens: Column, k: Int): Column =
+    Registry.call("graft_minhash", tokens, lit(k))
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -83,26 +81,6 @@ case class MultiEnumTokensValid(child: Expression, vocab: Seq[String])
   */
 object Predicates {
 
-  /** Register the predicate expressions on a session (idempotent).
-    * Rule-compiling entry points ([[graft.operators.ValidationPass]],
-    * SparkEntry queries) call this themselves; standalone users of
-    * [[valid]]/[[invalid]] with a multi-enum rule must call it once, or
-    * create the session with [[graft.GraftExtensions]]. Vocab literals
-    * are extracted at registration-call time (driver-side, per rule). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_multienum_valid"))) return
-    reg.registerFunction(FunctionIdentifier("graft_multienum_valid"),
-      new ExpressionInfo(classOf[MultiEnumTokensValid].getName, "graft_multienum_valid"),
-      (es: Seq[Expression]) => MultiEnumTokensValid(es.head, vocabArg(es, 1)))
-  }
-
-  private def vocabArg(es: Seq[Expression], i: Int): Seq[String] = {
-    val arr = es(i).eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-      .asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map(j => arr.getUTF8String(j).toString)
-  }
-
   /** FillNull ∪ sentinel — `allowed_specials` (validate_core.py:229). */
   private def specials(rule: Rule): Seq[String] =
     (rule.fillNull :+ NullSentinel).distinct
@@ -126,13 +104,11 @@ object Predicates {
     case RuleType.EnumT if rule.allowMultiEnum =>
       // validate_core.py:287-296: cell ∈ FillNull ∨ cell == "NA" ∨
       // (non-empty trimmed ';' tokens all ∈ Validation) — token check is
-      // the native [[MultiEnumTokensValid]] (session must have called
-      // [[register]]; all rule-compiling entry points do)
+      // the native [[MultiEnumTokensValid]]
       val inFill =
         if (rule.fillNull.nonEmpty) c.isin(rule.fillNull: _*) else lit(false)
-      try register(SparkSession.active) catch { case _: IllegalStateException => () }
       inFill || c === NullSentinel ||
-        call_function("graft_multienum_valid", c, typedLit(rule.validation))
+        Registry.call("graft_multienum_valid", c, typedLit(rule.validation))
 
     case RuleType.EnumT =>
       // single Enum: Validation ∪ FillNull only — "NA" is NOT auto-allowed

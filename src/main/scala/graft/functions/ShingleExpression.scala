@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -242,48 +241,17 @@ case class TokenGramHashes(child: Expression, n: Int, distinct: Boolean = true)
 }
 
 object ShingleExpression {
-  /** Idempotent; Column builders self-register on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // keyed on the NEWEST function: an older partial registration must
-    // not short-circuit the additions that came after it
-    if (reg.functionExists(FunctionIdentifier("graft_word_chunks"))) return
-    def intArg(es: Seq[Expression], i: Int): Int =
-      es(i).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt
-    reg.registerFunction(FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (es: Seq[Expression]) => WordShingles(es.head, intArg(es, 1)))
-    reg.registerFunction(FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBandKeys].getName, "graft_minhash_bands"),
-      (es: Seq[Expression]) => MinHashBandKeys(es.head, intArg(es, 1), intArg(es, 2)))
-    reg.registerFunction(FunctionIdentifier("graft_token_grams"),
-      new ExpressionInfo(classOf[TokenGramHashes].getName, "graft_token_grams"),
-      (es: Seq[Expression]) => TokenGramHashes(es.head, intArg(es, 1)))
-    reg.registerFunction(FunctionIdentifier("graft_token_grams_seq"),
-      new ExpressionInfo(classOf[TokenGramHashes].getName, "graft_token_grams_seq"),
-      (es: Seq[Expression]) => TokenGramHashes(es.head, intArg(es, 1), distinct = false))
-    reg.registerFunction(FunctionIdentifier("graft_word_chunks"),
-      new ExpressionInfo(classOf[WordChunks].getName, "graft_word_chunks"),
-      (es: Seq[Expression]) => WordChunks(es.head, intArg(es, 1)))
-  }
-
-  private def ensure(): Unit =
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-
-  def shingles(text: Column, n: Int): Column = {
-    ensure(); call_function("graft_shingles", text, lit(n))
-  }
+  def shingles(text: Column, n: Int): Column =
+    Registry.call("graft_shingles", text, lit(n))
   def minhashBands(tokens: Column, k: Int, bands: Int): Column = {
-    ensure(); call_function("graft_minhash_bands", tokens, lit(k), lit(bands))
+    Registry.call("graft_minhash_bands", tokens, lit(k), lit(bands))
   }
-  def tokenGrams(tokens: Column, n: Int): Column = {
-    ensure(); call_function("graft_token_grams", tokens, lit(n))
-  }
+  def tokenGrams(tokens: Column, n: Int): Column =
+    Registry.call("graft_token_grams", tokens, lit(n))
   /** Window-ordered (non-distinct) gram hashes: index i = window start. */
-  def tokenGramsSeq(tokens: Column, n: Int): Column = {
-    ensure(); call_function("graft_token_grams_seq", tokens, lit(n))
-  }
+  def tokenGramsSeq(tokens: Column, n: Int): Column =
+    Registry.call("graft_token_grams_seq", tokens, lit(n))
   def wordChunks(text: Column, chunkWords: Int): Column = {
-    ensure(); call_function("graft_word_chunks", text, lit(chunkWords))
+    Registry.call("graft_word_chunks", text, lit(chunkWords))
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Hilbert-curve index as a native Catalyst expression — the
@@ -103,23 +102,8 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
 }
 
 object SpatialExpressions {
-  /** Idempotent; Column builders self-register on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_hilbert"))) return
-    def intArg(es: Seq[Expression], i: Int): Int =
-      es(i).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt
-    reg.registerFunction(FunctionIdentifier("graft_hilbert"),
-      new ExpressionInfo(classOf[HilbertIndex].getName, "graft_hilbert"),
-      (es: Seq[Expression]) => HilbertIndex(es(0), es(1), intArg(es, 2)))
-  }
-
-  private def ensure(): Unit =
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-
   /** Hilbert d-index of (x, y) on a 2^bits × 2^bits grid; inputs are
     * masked to range, NULL-safe, output in [0, 4^bits). */
-  def hilbertIndex(x: Column, y: Column, bits: Int): Column = {
-    ensure(); call_function("graft_hilbert", x, y, lit(bits))
-  }
+  def hilbertIndex(x: Column, y: Column, bits: Int): Column =
+    Registry.call("graft_hilbert", x, y, lit(bits))
 }

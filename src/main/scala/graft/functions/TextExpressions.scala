@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -957,163 +956,39 @@ case class RakePhrases(child: Expression, stopwords: Seq[String], maxLen: Int)
 }
 
 object TextExpressions {
-  /** Idempotent registration (quiet re-entry: no "replaced function"
-    * warnings on repeat calls). The Column builders below self-register
-    * against the ACTIVE session, so callers holding only a Column (no
-    * session handle) — e.g. `TextAnalysis.tokenCount` — keep working on
-    * sessions that never called register explicitly. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_text_profile"))) return
-    reg.registerFunction(FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head))
-    reg.registerFunction(FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName, "graft_fingerprint"),
-      (es: Seq[Expression]) => RollingFingerprint(
-        es.head,
-        es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt))
-    reg.registerFunction(FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowedFingerprints].getName, "graft_winnow"),
-      (es: Seq[Expression]) => WinnowedFingerprints(es.head,
-        es(1).eval(InternalRow.empty).toString.toInt,
-        es(2).eval(InternalRow.empty).toString.toInt))
-    reg.registerFunction(FunctionIdentifier("graft_winnow_md5"),
-      new ExpressionInfo(classOf[WinnowedFingerprintsMd5].getName,
-        "graft_winnow_md5"),
-      (es: Seq[Expression]) => WinnowedFingerprintsMd5(es.head,
-        es(1).eval(InternalRow.empty).toString.toInt,
-        es(2).eval(InternalRow.empty).toString.toInt))
-    reg.registerFunction(FunctionIdentifier("graft_text_profile"),
-      new ExpressionInfo(classOf[TextProfile].getName, "graft_text_profile"),
-      (es: Seq[Expression]) => TextProfile(es.head))
-    reg.registerFunction(FunctionIdentifier("graft_normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "graft_normalize_text"),
-      (es: Seq[Expression]) => NormalizeText(es.head,
-        es(1).eval(InternalRow.empty).toString))
-    reg.registerFunction(FunctionIdentifier("graft_compression_ratio"),
-      new ExpressionInfo(classOf[CompressionRatio].getName, "graft_compression_ratio"),
-      (es: Seq[Expression]) => CompressionRatio(es.head))
-    reg.registerFunction(FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_char_entropy"),
-      (es: Seq[Expression]) => CharEntropy(es.head))
-    reg.registerFunction(FunctionIdentifier("graft_repetition_signals"),
-      new ExpressionInfo(classOf[RepetitionSignals].getName,
-        "graft_repetition_signals"),
-      (es: Seq[Expression]) => RepetitionSignals(es.head,
-        es(1).eval(InternalRow.empty).toString.toInt,
-        es(2).eval(InternalRow.empty).toString.toInt))
-    reg.registerFunction(FunctionIdentifier("graft_bpe_apply"),
-      new ExpressionInfo(classOf[BpeApply].getName, "graft_bpe_apply"),
-      (es: Seq[Expression]) => {
-        def strs(e: Expression): Seq[String] = e.eval(InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType).map(_.toString).toSeq
-        BpeApply(es.head, strs(es(1)), strs(es(2)))
-      })
-    reg.registerFunction(FunctionIdentifier("graft_cdc_boundaries"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "graft_cdc_boundaries"),
-      (es: Seq[Expression]) => CdcBoundaries(es.head,
-        es(1).eval(InternalRow.empty).toString.toInt,
-        es(2).eval(InternalRow.empty).toString.toInt,
-        es(3).eval(InternalRow.empty).toString.toLong))
-    reg.registerFunction(FunctionIdentifier("graft_cdc_chunk_hashes"),
-      new ExpressionInfo(classOf[CdcChunkHashes].getName,
-        "graft_cdc_chunk_hashes"),
-      (es: Seq[Expression]) => CdcChunkHashes(es.head,
-        es(1).eval(InternalRow.empty).toString.toInt,
-        es(2).eval(InternalRow.empty).toString.toInt,
-        es(3).eval(InternalRow.empty).toString.toLong))
-    reg.registerFunction(FunctionIdentifier("graft_word_ids"),
-      new ExpressionInfo(classOf[WordIds].getName, "graft_word_ids"),
-      (es: Seq[Expression]) => WordIds(
-        es.head,
-        es(1).eval(InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType).map(_.toString).toSeq,
-        es(2).eval(InternalRow.empty).toString.toInt))
-    reg.registerFunction(FunctionIdentifier("graft_rake_phrases"),
-      new ExpressionInfo(classOf[RakePhrases].getName, "graft_rake_phrases"),
-      (es: Seq[Expression]) => RakePhrases(
-        es.head,
-        es(1).eval(InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toObjectArray(StringType).map(_.toString).toSeq,
-        es(2).eval(InternalRow.empty).toString.toInt))
-  }
+  import org.apache.spark.sql.functions.{array, lit}
 
-  /** Best-effort self-registration on the active session (no-op when no
-    * session is active yet — the Column then needs an explicit
-    * register/GraftExtensions before use, as before). */
-  private def ensure(): Unit =
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
+  /** Registers every graft function on `spark` ([[Registry.register]]). */
+  def register(spark: SparkSession): Unit = Registry.register(spark)
 
-  def simhash64(tokens: Column): Column = {
-    ensure(); call_function("graft_simhash64", tokens)
-  }
-  def fingerprint(text: Column, window: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure(); call_function("graft_fingerprint", text, lit(window))
-  }
-  def textProfile(text: Column): Column = {
-    ensure(); call_function("graft_text_profile", text)
-  }
-  def normalizeText(text: Column, form: String = "NFC"): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure(); call_function("graft_normalize_text", text, lit(form))
-  }
-  def compressionRatio(text: Column): Column = {
-    ensure(); call_function("graft_compression_ratio", text)
-  }
-  def charEntropy(text: Column): Column = {
-    ensure(); call_function("graft_char_entropy", text)
-  }
-  def repetitionSignals(text: Column, topN: Int, dupN: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure(); call_function("graft_repetition_signals", text, lit(topN), lit(dupN))
-  }
-  def bpeApply(word: Column, merges: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    ensure()
-    call_function("graft_bpe_apply", word,
+  def simhash64(tokens: Column): Column = Registry.call("graft_simhash64", tokens)
+  def fingerprint(text: Column, window: Int): Column =
+    Registry.call("graft_fingerprint", text, lit(window))
+  def textProfile(text: Column): Column = Registry.call("graft_text_profile", text)
+  def normalizeText(text: Column, form: String = "NFC"): Column =
+    Registry.call("graft_normalize_text", text, lit(form))
+  def compressionRatio(text: Column): Column =
+    Registry.call("graft_compression_ratio", text)
+  def charEntropy(text: Column): Column = Registry.call("graft_char_entropy", text)
+  def repetitionSignals(text: Column, topN: Int, dupN: Int): Column =
+    Registry.call("graft_repetition_signals", text, lit(topN), lit(dupN))
+  def bpeApply(word: Column, merges: Seq[(String, String)]): Column =
+    Registry.call("graft_bpe_apply", word,
       array(merges.map(m => lit(m._1)): _*),
       array(merges.map(m => lit(m._2)): _*))
-  }
   def cdcBoundaries(text: Column, window: Int, maskBits: Int,
-                    seed: Long = 37L): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure()
-    call_function("graft_cdc_boundaries", text, lit(window), lit(maskBits),
-      lit(seed))
-  }
+                    seed: Long = 37L): Column =
+    Registry.call("graft_cdc_boundaries", text, lit(window), lit(maskBits), lit(seed))
   def cdcChunkHashes(text: Column, window: Int, maskBits: Int,
-                     seed: Long = 37L): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure()
-    call_function("graft_cdc_chunk_hashes", text, lit(window),
-      lit(maskBits), lit(seed))
-  }
-  def winnow(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure()
-    call_function("graft_winnow", text, lit(k), lit(w))
-  }
-  def winnowMd5(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure()
-    call_function("graft_winnow_md5", text, lit(k), lit(w))
-  }
-  def wordIds(text: Column, vocab: Seq[String], unkId: Int = -1): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    ensure()
-    call_function("graft_word_ids", text,
-      array(vocab.map(lit(_)): _*), lit(unkId))
-  }
+                     seed: Long = 37L): Column =
+    Registry.call("graft_cdc_chunk_hashes", text, lit(window), lit(maskBits), lit(seed))
+  def winnow(text: Column, k: Int, w: Int): Column =
+    Registry.call("graft_winnow", text, lit(k), lit(w))
+  def winnowMd5(text: Column, k: Int, w: Int): Column =
+    Registry.call("graft_winnow_md5", text, lit(k), lit(w))
+  def wordIds(text: Column, vocab: Seq[String], unkId: Int = -1): Column =
+    Registry.call("graft_word_ids", text, array(vocab.map(lit(_)): _*), lit(unkId))
   def rakePhrases(text: Column, stopwords: Seq[String],
-                  maxLen: Int = 4): Column = {
-    import org.apache.spark.sql.functions.{array, lit}
-    ensure()
-    call_function("graft_rake_phrases", text,
-      array(stopwords.map(lit(_)): _*), lit(maxLen))
-  }
+                  maxLen: Int = 4): Column =
+    Registry.call("graft_rake_phrases", text, array(stopwords.map(lit(_)): _*), lit(maxLen))
 }

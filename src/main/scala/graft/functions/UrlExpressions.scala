@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,17 +94,6 @@ object CanonicalUrl {
     sb.toString
   }
 
-  /** Idempotent; the Column builder self-registers on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_canonical_url"))) return
-    reg.registerFunction(FunctionIdentifier("graft_canonical_url"),
-      new ExpressionInfo(classOf[CanonicalUrl].getName, "graft_canonical_url"),
-      args => CanonicalUrl(args.head))
-  }
-
-  def canonicalUrl(url: Column): Column = {
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function("graft_canonical_url", url)
-  }
+  def canonicalUrl(url: Column): Column =
+    Registry.call("graft_canonical_url", url)
 }

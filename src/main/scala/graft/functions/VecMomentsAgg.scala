@@ -2,12 +2,11 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Sufficient-statistics buffer for second-order vector moments:
@@ -143,25 +142,9 @@ case class VecMomentsAgg(
 object VecMomentsAgg {
   val FnName = "graft_vec_moments"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    val info = new ExpressionInfo(classOf[VecMomentsAgg].getName, FnName)
-    registry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName),
-      info,
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, s"$FnName(vec, dim)")
-        val d = exprs(1).eval(InternalRow.empty).toString.toInt
-        VecMomentsAgg(exprs.head, d)
-      })
-  }
-
   /** Column-API entry: `vecMoments($"embedding", 64)`. */
   def vecMoments(c: Column, dim: Int): Column = {
     import org.apache.spark.sql.functions.lit
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-    call_function(FnName, c, lit(dim))
+    Registry.call(FnName, c, lit(dim))
   }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for embedding math. A native `Expression`
@@ -431,65 +429,18 @@ case class DiagMahalanobis(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Idempotent; Column builders self-register on the active session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_cosine"))) return
-    def intArg(es: Seq[Expression], i: Int): Int =
-      es(i).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt
-    reg.registerFunction(FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1)))
-    reg.registerFunction(FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (es: Seq[Expression]) => DotProduct(es(0), es(1)))
-    reg.registerFunction(FunctionIdentifier("graft_hyperplane_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucket].getName, "graft_hyperplane_bucket"),
-      (es: Seq[Expression]) => HyperplaneBucket(
-        es.head, intArg(es, 1), intArg(es, 2), intArg(es, 3)))
-    reg.registerFunction(FunctionIdentifier("graft_vec_stats"),
-      new ExpressionInfo(classOf[VecStats].getName, "graft_vec_stats"),
-      (es: Seq[Expression]) => VecStats(es.head))
-    reg.registerFunction(FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      (es: Seq[Expression]) => PqEncode(es(0), es(1)))
-    reg.registerFunction(FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdcScore].getName, "graft_pq_adc"),
-      (es: Seq[Expression]) => PqAdcScore(es(0), es(1)))
-    reg.registerFunction(FunctionIdentifier("graft_diag_mahalanobis"),
-      new ExpressionInfo(classOf[DiagMahalanobis].getName,
-        "graft_diag_mahalanobis"),
-      (es: Seq[Expression]) => DiagMahalanobis(es(0), es(1)))
-  }
+  import org.apache.spark.sql.functions.{lit, typedlit}
 
-  private def ensure(): Unit =
-    try register(SparkSession.active) catch { case _: IllegalStateException => () }
-
-  def cosine(a: Column, b: Column): Column = {
-    ensure(); call_function("graft_cosine", a, b)
-  }
-  def dot(a: Column, b: Column): Column = {
-    ensure(); call_function("graft_dot", a, b)
-  }
-  def hyperplaneBucket(vec: Column, dim: Int, nBits: Int, seed: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensure(); call_function("graft_hyperplane_bucket", vec, lit(dim), lit(nBits), lit(seed))
-  }
-  def vecStats(vec: Column): Column = {
-    ensure(); call_function("graft_vec_stats", vec)
-  }
-  def pqEncode(vec: Column, codebooks: Seq[Seq[Seq[Float]]]): Column = {
-    import org.apache.spark.sql.functions.typedlit
-    ensure(); call_function("graft_pq_encode", vec, typedlit(codebooks))
-  }
-  def pqAdcScore(codes: Column, lut: Seq[Seq[Double]]): Column = {
-    import org.apache.spark.sql.functions.typedlit
-    ensure(); call_function("graft_pq_adc", codes, typedlit(lut))
-  }
+  def cosine(a: Column, b: Column): Column = Registry.call("graft_cosine", a, b)
+  def dot(a: Column, b: Column): Column = Registry.call("graft_dot", a, b)
+  def hyperplaneBucket(vec: Column, dim: Int, nBits: Int, seed: Int): Column =
+    Registry.call("graft_hyperplane_bucket", vec, lit(dim), lit(nBits), lit(seed))
+  def vecStats(vec: Column): Column = Registry.call("graft_vec_stats", vec)
+  def pqEncode(vec: Column, codebooks: Seq[Seq[Seq[Float]]]): Column =
+    Registry.call("graft_pq_encode", vec, typedlit(codebooks))
+  def pqAdcScore(codes: Column, lut: Seq[Seq[Double]]): Column =
+    Registry.call("graft_pq_adc", codes, typedlit(lut))
   def diagMahalanobis(vec: Column, mu: Seq[Double],
-                      weights: Seq[Double]): Column = {
-    import org.apache.spark.sql.functions.typedlit
-    ensure()
-    call_function("graft_diag_mahalanobis", vec, typedlit(Seq(mu, weights)))
-  }
+                      weights: Seq[Double]): Column =
+    Registry.call("graft_diag_mahalanobis", vec, typedlit(Seq(mu, weights)))
 }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextExpressions
-
 /** The full curate keep-gate sequence as ONE reusable composition —
   * main-content extraction → length gate → Gopher quality gate →
   * bad-word gate → domain blocklist → seen-corpus dedup →
@@ -48,7 +46,6 @@ object CurationGates {
                       minChars: Int, expectedSeen: Long,
                       contamN: Int, badWords: Seq[String],
                       maxBadRatio: Double): Seq[(String, DataFrame => DataFrame)] = {
-    TextExpressions.register(docs.sparkSession)
     // ingest: synthesized crawl page (planted nav/footer boilerplate —
     // the q_main_content fixture shape) → readability-class extraction.
     // n_chars passes through so funnel mass tracks input char mass.

@@ -32,9 +32,7 @@ object Dedup {
 
   /** n-gram word shingles as strings ("a b c") — native
     * [[graft.functions.WordShingles]] expression (the HOF spelling is
-    * 100×+ slower interpreted; see its Scaladoc). Callers must register
-    * [[graft.functions.ShingleExpression]] on the session first — every
-    * Dedup operator does so itself. */
+    * 100×+ slower interpreted; see its Scaladoc). */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.ShingleExpression.shingles(text, n)
 
@@ -347,21 +345,6 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
-  /** k MinHash values over word shingles via the native
-    * [[graft.functions.MinHashSignature]] expression (one string hash per
-    * shingle + k affine rehashes — see its Scaladoc for why the
-    * HOF-composition alternative is 100×+ slower under CollapseProject).
-    * Callers must have registered [[graft.functions.MinHashExpression]]. */
-  def minhashSignature(text: Column, k: Int = 64, shingleN: Int = 3): Column =
-    graft.functions.MinHashExpression.minhash(
-      array_distinct(shingles(text, shingleN)), k)
-
-  /** LSH band keys: bands × (hash of r consecutive signature values).
-    * Jaccard-similar docs (s ≈ 1 - (1 - s^r)^b) collide in ≥1 band. */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), b))
-
   /** Candidate near-duplicate pairs via banded MinHash-LSH, verified with
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
     * id_a < id_b, jaccard ≥ threshold.
@@ -385,8 +368,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 8, threshold: Double = 0.8,
       shingleN: Int = 3, maxBucket: Int = 200): DataFrame = {
-    graft.functions.MinHashExpression.register(df.sparkSession)
-    graft.functions.ShingleExpression.register(df.sparkSession)
     val sh = df.select(
       col(idCol).as("id"),
       array_distinct(shingles(col(textCol), shingleN)).as("sh"))
@@ -445,8 +426,6 @@ object Dedup {
       seen: DataFrame, seenId: String, seenText: String,
       k: Int = 64, bands: Int = 8, threshold: Double = 0.8,
       shingleN: Int = 3, maxBucket: Int = 200): DataFrame = {
-    graft.functions.MinHashExpression.register(batch.sparkSession)
-    graft.functions.ShingleExpression.register(batch.sparkSession)
     val bsh = batch.select(col(batchId).as("batch_id"),
       array_distinct(shingles(col(batchText), shingleN)).as("__sh_b"))
     val ssh = seen.select(col(seenId).as("seen_id"),
@@ -592,8 +571,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 8, shingleN: Int = 3,
       maxBucket: Int = 200): DataFrame = {
-    graft.functions.MinHashExpression.register(df.sparkSession)
-    graft.functions.ShingleExpression.register(df.sparkSession)
     df.select(
         col(idCol).as("id"),
         posexplode(graft.functions.ShingleExpression.minhashBands(
@@ -613,7 +590,6 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    graft.functions.ShingleExpression.register(df.sparkSession)
     val sh = df.select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), n)).as("sh"))
     val inv = sh.select(col("id"), col("sh"), explode(col("sh")).as("s"))
@@ -653,7 +629,6 @@ object Dedup {
       corpus: DataFrame, corpusId: String, corpusText: String,
       bench: DataFrame, benchId: String, benchText: String,
       n: Int = 13, minHits: Int = 1, broadcastBench: Boolean = true): DataFrame = {
-    graft.functions.ShingleExpression.register(corpus.sparkSession)
     def sideHashes(df: DataFrame, id: String, text: String, outId: String) =
       df.select(col(id).as(outId),
           explode(array_distinct(shingles(col(text), n))).as("__s"))
@@ -688,7 +663,6 @@ object Dedup {
     * [[exactDuplicates]]. */
   def duplicatedSpanFraction(df: DataFrame, idCol: String, textCol: String,
                              n: Int = 20): DataFrame = {
-    graft.functions.ShingleExpression.register(df.sparkSession)
     val grams = df.select(col(idCol).as("doc_id"),
         explode(array_distinct(shingles(col(textCol), n))).as("__s"))
       .select(col("doc_id"), xxhash64(col("__s")).as("__h"))
@@ -728,7 +702,6 @@ object Dedup {
     * at 10^12 grams — vanishing relative loss, and removal errs safe). */
   def removeDuplicatedSpans(df: DataFrame, idCol: String, tokCol: String,
                             n: Int, minDocs: Long = 2L): DataFrame = {
-    graft.functions.ShingleExpression.register(df.sparkSession)
     val pos = df
       .select(col(idCol),
         graft.functions.ShingleExpression.tokenGramsSeq(col(tokCol), n).as("__g"))
@@ -758,8 +731,6 @@ object Dedup {
     * text yields [""] instead of [], i.e. a fixed signature instead of
     * 0L — both constants, and empty docs are dedup-irrelevant.) */
   def withSimHash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    TextExpressions.register(df.sparkSession)
-    graft.functions.ShingleExpression.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       TextExpressions.simhash64(shingles(col(textCol), 1)).as("simhash"))
   }
@@ -843,8 +814,7 @@ object Dedup {
     * [[graft.functions.HyperplaneBucket]] expression: one pass over the
     * vector for all nBits signs (the HOF spelling re-evaluated an
     * interpreted `aggregate(zip_with(transform(...)))` tree per bit per
-    * table — round-1 VERDICT "What's wrong" #4). Callers must have
-    * registered [[VectorExpressions]]. */
+    * table — round-1 VERDICT "What's wrong" #4). */
   def hyperplaneBucket(vec: Column, dim: Int, nBits: Int = 16, seed: Int = 7): Column =
     VectorExpressions.hyperplaneBucket(vec, dim, nBits, seed)
 
@@ -860,7 +830,6 @@ object Dedup {
   def embeddingNearDuplicates(
       df: DataFrame, idCol: String, vecCol: String, dim: Int,
       threshold: Double = 0.95, nBits: Int = 12, nTables: Int = 2): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val buckets = (0 until nTables).map { t =>
       df.select(col(idCol).as("id"),
@@ -878,18 +847,6 @@ object Dedup {
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         VectorExpressions.cosine(col("v_a"), col("v_b")).as("cosine"))
-      .where(col("cosine") >= threshold)
-  }
-
-  /** Brute-force exact variant (correctness oracle; O(n²) — small inputs
-    * or per-bucket use only). */
-  def embeddingNearDuplicatesExact(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
-    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        VectorExpressions.cosine(col("a.v"), col("b.v")).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 
@@ -1028,7 +985,6 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    graft.functions.ShingleExpression.register(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val sets = df.select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), n)).as("sh"))

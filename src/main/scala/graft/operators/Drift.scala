@@ -43,7 +43,6 @@ object Drift {
 
   /** Build a numeric histogram sketch in one distributed aggregate. */
   def numericHistogram(df: DataFrame, field: String, lo: Double, hi: Double, nBins: Int): HistogramProfile = {
-    HistogramAgg.register(df.sparkSession)
     val row = df.agg(HistogramAgg.histogram(col(field), lo, hi, nBins).as("h")).head()
     HistogramProfile(lo, hi, row.getAs[scala.collection.Seq[Long]]("h").toArray)
   }
@@ -59,7 +58,6 @@ object Drift {
   def ksByGroup(df: DataFrame, groupCol: String, field: String,
                 baseline: HistogramProfile, alpha: Double = 0.01): DataFrame = {
     val spark = df.sparkSession
-    HistogramAgg.register(spark)
     val nBins = baseline.counts.length - 2
     val perGroup = df.groupBy(col(groupCol).cast("string").as("g"))
       .agg(HistogramAgg.histogram(col(field), baseline.lo, baseline.hi, nBins).as("h"))
@@ -97,7 +95,6 @@ object Drift {
   def wasserstein1ByGroup(df: DataFrame, groupCol: String, field: String,
                           baseline: HistogramProfile): DataFrame = {
     val spark = df.sparkSession
-    HistogramAgg.register(spark)
     val nBins = baseline.counts.length - 2
     require(nBins >= 2, "need at least 2 interior bins")
     val w = (baseline.hi - baseline.lo) / nBins

@@ -88,7 +88,6 @@ object Selection {
                 lambda: Double = 0.7): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(lambda >= 0.0 && lambda <= 1.0, "lambda must be in [0, 1]")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     def cos(a: Column, v: Seq[Float]): Column =
       graft.functions.VectorExpressions.cosine(a, typedLit(v))
     val rel = cos(col(vecCol), query.toSeq)

@@ -27,7 +27,6 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int): DataFrame = {
-    VectorExpressions.register(corpus.sparkSession)
     val q = typedLit(query.toSeq)
     corpus.select(col(idCol),
         VectorExpressions.cosine(col(vecCol), q).as("score"))
@@ -41,7 +40,6 @@ object Similarity {
   def topKForQueries(
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int): DataFrame = {
-    VectorExpressions.register(corpus.sparkSession)
     val scored = corpus.join(broadcast(queries))
       .select(col(qIdCol).as("query_id"), col(idCol).as("id"),
         VectorExpressions.cosine(col(vecCol), col(qVecCol)).as("score"))
@@ -64,7 +62,6 @@ object Similarity {
                     labelCol: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
                     qLabelCol: String, k: Int): DataFrame = {
-    VectorExpressions.register(corpus.sparkSession)
     val q = broadcast(queries.select(
       col(qIdCol).as("__qid"), col(qVecCol).as("__qvec"),
       col(qLabelCol).as("__qlabel")))
@@ -104,7 +101,6 @@ object Similarity {
   def buildIvf(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, refineIters: Int = 1): IvfIndex = {
-    VectorExpressions.register(corpus.sparkSession)
     var centroids: Array[(Int, Array[Float])] = corpus
       .orderBy(xxhash64(col(idCol))) // hash order = deterministic shuffle
       .limit(nCentroids)             // TakeOrderedAndProject: top-k per task
@@ -219,7 +215,6 @@ object Similarity {
                    k: Int, nProbe: Int = 4,
                    maxQueries: Int = 100000): DataFrame = {
     val spark = index.assigned.sparkSession
-    VectorExpressions.register(spark)
     // the bounded-query-set contract, enforced: the batch is collected
     // to the driver for probe assignment (k×dim matrix walks) and
     // broadcast to every corpus partition — an unbounded `queries`
@@ -298,7 +293,6 @@ object Similarity {
               iters: Int = 2): PqModel = {
     require(nSub > 0 && nCodes > 0 && nCodes <= 256,
       "need 0 < nCodes <= 256 and nSub > 0")
-    VectorExpressions.register(corpus.sparkSession)
     val head = corpus.select(size(col(vecCol)).as("d")).limit(1).collect()
     require(head.nonEmpty, "empty corpus")
     val dim = head(0).getInt(0)
@@ -375,7 +369,6 @@ object Similarity {
     * re-derives the norm per element. */
   def withL2Normalized(df: DataFrame, vecCol: String,
                        outCol: String): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     df.withColumn("__l2",
         VectorExpressions.vecStats(col(vecCol)).getField("l2_norm"))
       .withColumn(outCol,
@@ -401,7 +394,6 @@ object Similarity {
     * probe reads, IVF bounds how much is read. */
   def pqTopK(encoded: DataFrame, idCol: String, codeCol: String,
              model: PqModel, query: Array[Float], k: Int): DataFrame = {
-    VectorExpressions.register(encoded.sparkSession)
     encoded.select(col(idCol),
         graft.functions.VectorExpressions
           .pqAdcScore(col(codeCol), model.adcLut(query)).as("adc_score"))
@@ -427,7 +419,6 @@ object Similarity {
       s"pqTopKBatch embeds one ADC LUT literal per query: got " +
       s"${queries.size} > maxQueries=$maxQueries — window the batch " +
       "(or raise maxQueries deliberately)")
-    VectorExpressions.register(encoded.sparkSession)
     val scoreStructs = queries.map { case (qid, qv) =>
       struct(lit(qid).as("query_id"),
         graft.functions.VectorExpressions
@@ -616,7 +607,6 @@ object Similarity {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(maxCellSize > 0, "maxCellSize must be positive")
     val spark = index.assigned.sparkSession
-    VectorExpressions.register(spark)
     val dim = index.centroids.headOption.map(_._2.length).getOrElse(0)
     val emptyIds = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],

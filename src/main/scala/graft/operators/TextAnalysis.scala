@@ -33,7 +33,7 @@ object TextAnalysis {
     * `size(filter(split(...)))` spelling was the last interpreted-HOF
     * hot path: interpreted lambdas get no codegen and no CSE, measured
     * ~3× slower than the native profile (round-2 VERDICT "What's wrong"
-    * #1). Callers must register [[TextExpressions]] on the session. */
+    * #1). */
   def tokenCount(text: Column): Column =
     textProfile(text).getField("n_words")
 
@@ -44,33 +44,20 @@ object TextAnalysis {
   def charEntropy(text: Column): Column = TextExpressions.charEntropy(text)
 
   /** One-pass profile struct (n_words, n_bpeish, mean_word_len,
-    * punct/upper/digit/stopword ratios, lang, lang_score). Registers the
-    * expression on the session lazily via [[analyze]]/callers. */
+    * punct/upper/digit/stopword ratios, lang, lang_score). */
   def textProfile(text: Column): Column = TextExpressions.textProfile(text)
-
-  /** BPE-ish token count: maximal alphanumeric runs plus single
-    * non-alphanumeric marks each count as one token (the pre-merge
-    * word-splitting regime of byte-pair tokenizers). */
-  def bpeishTokenCount(text: Column): Column =
-    textProfile(text).getField("n_bpeish")
 
   /** Heuristic language ID: argmax of per-language stopword-hit counts
     * (zh by character containment); "und" when no profile hits. */
   def langId(text: Column): Column =
     textProfile(text).getField("lang")
 
-  /** Quality features + a composite score ∈ [0,1]:
-    * length, word count, mean word length, punctuation ratio, stopword
-    * ratio, uppercase ratio, digit ratio — the standard cheap filters
-    * (Gopher/C4-style) as one struct, computed from a single
-    * [[textProfile]] evaluation. */
-  def qualityFeatures(text: Column): Column =
-    qualityFeaturesFrom(text, textProfile(text))
-
-  /** Build the feature struct from an already-projected profile column —
-    * callers that need several derived columns (see [[analyze]]) project
-    * the profile ONCE and feed the attribute here, so the per-row work is
-    * not repeated per consumer. */
+  /** Quality features — length, word count, mean word length,
+    * punctuation, uppercase, digit and stopword ratios, the standard cheap
+    * filters (Gopher/C4-style) — as one struct built from an
+    * already-projected profile column: callers that need several derived
+    * columns (see [[analyze]]) project the profile ONCE and feed the
+    * attribute here, so the per-row work is not repeated per consumer. */
   def qualityFeaturesFrom(text: Column, tp: Column): Column = struct(
     length(text).cast("double").as("n_chars"),
     tp.getField("n_words").cast("double").as("n_words"),
@@ -93,8 +80,6 @@ object TextAnalysis {
     val stopFloor = when(round(tp.getField("stopword_ratio"), 4) >= 0.05, 1.0).otherwise(0.7)
     round(wordBand * lenBand * punctCap * stopFloor, 4)
   }
-
-  def qualityScore(text: Column): Column = qualityScoreFrom(textProfile(text))
 
   /** Linear log-odds over TextProfile features with driver-supplied
     * weights — the application half of a FineWeb-style trained quality
@@ -121,7 +106,6 @@ object TextAnalysis {
   def uncertaintySample(df: DataFrame, idCol: String, textCol: String,
                         bias: Double, weights: Map[String, Double],
                         k: Int): DataFrame = {
-    TextExpressions.register(df.sparkSession)
     df.select(col(idCol),
         round(logOddsFrom(textProfile(col(textCol)), bias, weights), 6)
           .as("log_odds"))
@@ -236,7 +220,6 @@ object TextAnalysis {
     * expression is referenced more than once (SPARK-36718), so the
     * heavy work runs exactly once per row. */
   def analyze(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    TextExpressions.register(df.sparkSession)
     df.select(col(idCol), col(textCol).as("__text"),
         textProfile(col(textCol)).as("__tp"))
       .select(
@@ -259,7 +242,6 @@ object TextAnalysis {
     * while distinct ≤ its capacity). Returns at most `size` words,
     * driver-held — vocabularies are dimension-table-sized by design. */
   def buildVocab(df: DataFrame, textCol: String, size: Int): Seq[String] = {
-    graft.functions.ShingleExpression.register(df.sparkSession)
     df.select(explode(Dedup.shingles(col(textCol), 1)).as("w"))
       .where(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -341,7 +323,6 @@ object TextAnalysis {
     * parallel (no exchange — the scan partitioning survives). */
   def qualityFilterReport(df: DataFrame, idCol: String, textCol: String,
       t: QualityThresholds = QualityThresholds()): DataFrame = {
-    TextExpressions.register(df.sparkSession)
     val ruleNames = Seq("r_word_count", "r_mean_word_len", "r_punct",
       "r_stopword", "r_digit", "r_upper", "r_repetition", "keep")
     df.select(col(idCol), textProfile(col(textCol)).as("__tp"))
@@ -357,7 +338,6 @@ object TextAnalysis {
     * predicate-only, no exchange, columns prune to textCol + consumers. */
   def applyQualityFilter(df: DataFrame, textCol: String,
       t: QualityThresholds = QualityThresholds()): DataFrame = {
-    TextExpressions.register(df.sparkSession)
     // A raw qualityRules(textProfile(...)) in the WHERE would evaluate
     // the (CodegenFallback) profile once per rule (~10×/row): the
     // optimizer inlines projected aliases into filter predicates and
@@ -646,7 +626,6 @@ object TextAnalysis {
   def rakeKeyphrases(df: DataFrame, textCol: String,
                      stopwords: Seq[String], maxLen: Int = 4,
                      k: Int = 20): DataFrame = {
-    TextExpressions.register(df.sparkSession)
     val phrases = df.select(explode(
       TextExpressions.rakePhrases(col(textCol), stopwords, maxLen))
       .as("phrase"))

@@ -107,7 +107,6 @@ object ValidationPass {
     * exists in `df`, keyed by `keyCol` (the [[RowKey]] or a natural key).
     * A cell whose invalid predicate is null is no violation. */
   def violationsFor(df: DataFrame, rules: Seq[Rule], keyCol: String): DataFrame = {
-    Predicates.register(df.sparkSession)
     val present = evaluable(rules).filter(r => df.columns.contains(r.field))
     require(present.nonEmpty, "no evaluable rule matches a column")
     sparseViolations(df, Seq(col(keyCol)), present.map(r =>
@@ -156,7 +155,6 @@ object ValidationPass {
     *        cell (summed pre-cap), only the listed values truncate. */
   def evalTable(dfNormalized: DataFrame, tableName: String, rules: Seq[Rule],
                 maxOffendersPerRule: Int): EvalResult = {
-    Predicates.register(dfNormalized.sparkSession)
     val evalRules = evaluable(rules)
     val inputCols = dfNormalized.columns.toSet
 

@@ -184,14 +184,4 @@ object Report {
 
     (errors, warnings)
   }
-
-  /** validate_table_core equivalent (validate_core.py:488-531). */
-  def validateTableCore(
-      result: EvalResult,
-      tableName: String,
-      report: ReportCollector = new ReportCollector,
-      includeDetails: Boolean = true): (ReportCollector, Int, Int) = {
-    val (e, w) = compose(result, tableName, report, includeDetails)
-    (report, e, w)
-  }
 }

@@ -149,10 +149,6 @@ object CsvIngest {
       case scala.util.control.NonFatal(_) => RowCounts(-1L, -1L)
     }
 
-  /** Reference-shaped single count (delimiter_handler.py:276-316). */
-  def rowCount(spark: SparkSession, path: String, delim: Char): Long =
-    rowCounts(spark, path, delim).effective
-
   /** Encoding-fallback ladder (processed_data_loader.py:121-171): try
     * UTF-8, cp1252, latin-1; accept the first rung whose STRICT decode of
     * the raw bytes succeeds; latin-1 maps every byte so the walk always

@@ -117,11 +117,4 @@ object RuleTable {
       s"The CDE spreadsheet has NULL values in required columns. $fieldsRepr. " +
         s"Examples: $details."))
   }
-
-  /** Quick rule-level completeness (legacy helper): parsed rules with a
-    * blank table/field — a subset of [[validateCompleteness]], kept for
-    * callers holding `Seq[Rule]` rather than the raw frame. */
-  def completenessErrors(rules: Seq[Rule]): Seq[String] =
-    rules.filter(r => r.table.isEmpty || r.field.isEmpty).take(10)
-      .map(r => s"incomplete rule row: table='${r.table}' field='${r.field}'")
 }

@@ -469,7 +469,6 @@ class CurationSpec extends SparkSpec {
   // ---------- Gopher char-level repetition signals ----------
 
   def repSignals(text: String, topN: Int, dupN: Int): (Double, Double) = {
-    graft.functions.TextExpressions.register(spark)
     val r = Seq(Tuple1(text)).toDF("text")
       .select(graft.functions.TextExpressions
         .repetitionSignals($"text", topN, dupN).as("r"))

@@ -14,8 +14,6 @@ import graft.operators.{Dedup, TextAnalysis}
 class DifferentialSpec extends SparkSpec {
   import spark.implicits._
 
-  TextExpressions.register(spark)
-  graft.functions.ShingleExpression.register(spark)
 
   /** Real docs + adversarial corpus: empty, whitespace-only, unicode,
     * digits/punct runs, mixed scripts, stopword-dense per language. */
@@ -137,7 +135,7 @@ class DifferentialSpec extends SparkSpec {
   }
 
   test("native multi-enum predicate matches the forall/filter HOF spelling") {
-    graft.functions.Predicates.register(spark)
+    graft.functions.Registry.register(spark)
     val vocab = Seq("a", "bb", "c c") // incl. a vocab entry with an inner space
     val cells = Seq(
       "a", "a;bb", " a ; bb ", "a;;bb", ";a;", "a;x", "x", "", ";", " ; ",
@@ -153,8 +151,6 @@ class DifferentialSpec extends SparkSpec {
   }
 
   test("hyperplane bucket: deterministic, seed-sensitive, sign-symmetric") {
-    import graft.functions.VectorExpressions
-    VectorExpressions.register(spark)
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(50).cache()
     val b1 = embs.select(col("vec_id"),

@@ -381,7 +381,6 @@ class DiscoverySpec extends SparkSpec {
   // --------------------------------------------- score explanation
 
   test("scoreExplanation: ranked contributions, ±0 canonical, ties on name") {
-    graft.functions.TextExpressions.register(spark)
     val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
       "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
     val df = Seq("the the aa", "xy").toDF("text")

@@ -23,7 +23,6 @@ class OutlierKeyphraseSpec extends AnyFunSuite {
       (2L, "a b c d e over f"), // 5-word run discarded at maxLen 4
       (3L, null: String)
     ).toDF("id", "text")
-    TextExpressions.register(spark)
     val rows = df.select(col("id"),
         TextExpressions.rakePhrases(col("text"), Seq("over"), 4).as("p"))
       .orderBy("id").collect()

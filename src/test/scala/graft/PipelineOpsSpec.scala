@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextExpressions, VectorExpressions}
+import graft.functions.TextExpressions
 import graft.operators.{Dedup, Mixing, Multimodal, Profile, Sessionize, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators over the driver-generated documents /
@@ -921,7 +921,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("language id: stopword-dominant synthetic docs classify correctly") {
-    TextExpressions.register(spark)
     val labeled = Seq(
       ("the cat and the dog of it is that", "en"),
       ("el la de que y en los se del las", "es"),
@@ -986,7 +985,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("unicode normalization: NFC composes, NFKC folds compat chars, idempotent") {
-    TextExpressions.register(spark)
     def norm(t: String, form: String): String =
       Seq(t).toDF("t").select(TextExpressions.normalizeText($"t", form)).head().getString(0)
     assert(norm("café", "NFC") === "café")
@@ -1001,7 +999,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("compression ratio: repetitive text compresses far below shuffled text") {
-    TextExpressions.register(spark)
     val repetitive = "spam spam spam spam " * 50
     val varied = (1 to 200).map(i => s"w${i * 7919 % 1000}").mkString(" ")
     def ratio(t: String): Double =
@@ -1033,7 +1030,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("logistic quality: sigmoid of log-odds, matches driver computation") {
-    TextExpressions.register(spark)
     val w = Map("mean_word_len" -> 0.5, "n_words" -> 0.02,
       "punct_ratio" -> -8.0, "stopword_ratio" -> 4.0)
     val rows = docs.limit(50).select(
@@ -1089,7 +1085,6 @@ class PipelineOpsSpec extends SparkSpec {
       .select("doc_id", "fingerprint").collect().toSeq
     assert(f1.toSet === f2.toSet)
     // identical texts share fingerprints
-    TextExpressions.register(spark)
     val same = Seq("hello world foo bar baz quux alpha beta gamma delta epsilon zeta",
       "hello world foo bar baz quux alpha beta gamma delta epsilon zeta").toDF("t")
       .select(TextExpressions.fingerprint($"t", 32).as("f")).collect()
@@ -1618,7 +1613,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("cdc: chunks partition the text exactly, in both boundary modes") {
     import graft.operators.CdcChunking
-    TextExpressions.register(spark)
     val withLen = docs.where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id", length($"text").as("n"))
     for (maskBits <- Seq(0, 4)) { // md5 oracle mode / rolling scale mode
@@ -1653,7 +1647,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("cdc native chunker equals the HOF/SQL-mirror spelling, both modes") {
     import graft.operators.CdcChunking
-    TextExpressions.register(spark)
     // texts >= window chars only: below that the HOF spelling's
     // sequence(window, len) descends (undefined walk) while native and
     // the DuckDB oracle agree on one whole-text chunk
@@ -1673,7 +1666,6 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("cdc rolling mode: prefix insertion preserves downstream chunk hashes") {
     import graft.operators.CdcChunking
-    TextExpressions.register(spark)
     // the shift-robustness contract on the SCALE mode (the md5 mode has
     // the full SQL oracle q_cdc_shift_recall): prepend a header to every
     // 29th doc, chunk both, and the shifted copy must share >= 50% of the
@@ -1717,7 +1709,6 @@ class PipelineOpsSpec extends SparkSpec {
   // ---------- BPE apply ----------
 
   test("bpeApply: rank order, leftmost-first non-overlap, exact on runs") {
-    TextExpressions.register(spark)
     val words = Seq("abcabc", "aaa", "aaaa", "b", "").toDF("w")
     val out = words.select(TextExpressions.bpeApply($"w",
         Seq(("a", "b"), ("ab", "c"), ("a", "a"))).as("t"))
@@ -1730,7 +1721,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bpe encode: list-merge and stacked-replace spellings agree on the corpus") {
-    TextExpressions.register(spark)
     val merges = TextAnalysis.bpeTrain(docs, "text", nMerges = 4)
       .orderBy("merge_idx").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1751,7 +1741,6 @@ class PipelineOpsSpec extends SparkSpec {
   // ---------- tokenizer health: OOV, fertility, ensemble ----------
 
   test("oovStats: hand-computed coverage, zero-word doc keeps null rate") {
-    TextExpressions.register(spark)
     val corpus = Seq(
       (1L, "the cat sat"),   // vocab {the, cat}: 1 OOV of 3
       (2L, "THE the"),       // case-folded: 0 OOV of 2
@@ -1772,7 +1761,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bpeFertility: hand-computed tokens-per-word by group") {
-    TextExpressions.register(spark)
     // merge (a,b): "ab ab" → 2 words → 2 tokens; "abc" → ab+c → 2 tokens
     val corpus = Seq(
       ("s1", "ab ab"),  // 2 words, 2 subwords → fertility 1.0
@@ -2561,7 +2549,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("charEntropy: closed-form values, codepoints not UTF-16 units") {
-    TextExpressions.register(spark)
     val df = Seq(
       (1L, "aaaa"),   // one symbol → 0 bits
       (2L, "ab"),     // two equiprobable → 1 bit

@@ -394,7 +394,6 @@ class PlanSpec extends SparkSpec {
   test("per-group drift histogram aggregates partially before the shuffle") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     // capture the grouped-agg plan (ksByGroup collects; rebuild its frame)
-    graft.functions.HistogramAgg.register(spark)
     val grouped = li.groupBy(col("l_returnflag"))
       .agg(graft.functions.HistogramAgg.histogram(col("l_quantity"), 0, 55, 64).as("h"))
     val p = grouped.queryExecution.executedPlan.toString
@@ -481,7 +480,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("multi-enum + regex predicates stay UDF-free") {
-    Predicates.register(spark)
     val multi = Rule("t", "c", RuleType.EnumT, Requirement.Required,
       validation = Seq("a", "b"), allowMultiEnum = true)
     val regex = Rule("t", "c", RuleType.RegexT, Requirement.Required, pattern = "a+")
@@ -881,7 +879,6 @@ class PlanSpec extends SparkSpec {
 
   test("simplifiedSilhouette: embeddings never enter an exchange") {
     import graft.operators.Similarity
-    graft.functions.VectorExpressions.register(spark)
     val embs = spark.read.parquet(s"$sf/embeddings.parquet")
     val cents = Array.tabulate(4)(c =>
       (c, Array.tabulate(64)(i => if (i % 4 == c) 1f else 0f)))

@@ -12,7 +12,6 @@ class PredicatesSpec extends SparkSpec {
   import spark.implicits._
 
   private def evalRule(rule: Rule, values: Seq[String]): Seq[Boolean] = {
-    Predicates.register(spark)
     val df = values.toDF("v")
     df.select(Predicates.valid(rule, col("v")).as("ok"))
       .collect().map(_.getBoolean(0)).toSeq

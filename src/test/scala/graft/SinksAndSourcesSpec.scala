@@ -3,14 +3,17 @@ package graft
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.functions.Registry
 import graft.model.{Requirement, Rule, RuleType}
 import graft.report.ReportCollector
 import graft.sources.{CsvIngest, RuleTable, Sinks, ValidCategories}
 
 /** Sinks (S8/S9/S10) + ValidCategories status machinery (S7/P14) +
-  * encoding fallback (S1) + SQL access via GraftExtensions. */
+  * encoding fallback (S1) + the graft function table via GraftExtensions,
+  * Column helpers and SQL argument checks. */
 class SinksAndSourcesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -229,19 +232,75 @@ class SinksAndSourcesSpec extends SparkSpec {
     assert(AppSchema.ensureOtherOptions(got) === got)
   }
 
-  test("custom expressions callable from plain SQL via GraftExtensions") {
-    // simulate the extension wiring on the existing session
-    new GraftExtensions().apply _
-    graft.functions.ShingleExpression.register(spark)
-    graft.functions.VectorExpressions.register(spark)
-    val r = spark.sql(
-      "SELECT graft_shingles('a b c d', 3) AS sh, " +
-      "graft_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS cos, " +
-      "graft_token_grams(array(1, 2, 3, 4), 3) AS tg")
+  /** Runs `f` with `s` as the active and default session, then puts the
+    * shared test session back in both roles. */
+  private def withSession[T](s: SparkSession)(f: => T): T =
+    try { SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s); f }
+    finally { SparkSession.setActiveSession(spark); SparkSession.setDefaultSession(spark) }
+
+  /** charEntropy, winnow and diagMahalanobis through their Column
+    * helpers, on whichever session is active. */
+  private def helperRow(s: SparkSession): (Double, Seq[Long], Double) = {
+    import graft.functions.{TextExpressions, VectorExpressions}
+    val r = s.range(1).select(
+      TextExpressions.charEntropy(lit("abab")),
+      TextExpressions.winnow(lit("the quick brown fox jumps over the lazy dog"), 3, 2),
+      VectorExpressions.diagMahalanobis(array(lit(1.0), lit(2.0)), Seq(0.0, 0.0), Seq(1.0, 2.0)))
       .head()
-    assert(r.getSeq[String](0) === Seq("a b c", "b c d"))
-    assert(math.abs(r.getDouble(1) - 1.0) < 1e-9)
-    assert(r.getSeq[Long](2).length === 2)
+    (r.getDouble(0), r.getSeq[Long](1), r.getDouble(2))
+  }
+
+  test("custom expressions callable from plain SQL via GraftExtensions") {
+    // every table function resolves in an extension session, from SQL and
+    // through the Column helpers
+    val expected = helperRow(spark)
+    assert(expected._1 === 1.0 && expected._2.nonEmpty && expected._3 === 9.0)
+    val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    withSession(ext) {
+      val missing = Registry.all.map(_.name).filterNot(ext.catalog.functionExists)
+      assert(missing.isEmpty, s"not injected: $missing")
+      val r = ext.sql(
+        "SELECT graft_char_entropy('abab') AS h, " +
+        "graft_jaro_winkler('martha', 'marhta') AS jw, " +
+        "graft_winnow('the quick brown fox jumps over the lazy dog', 3, 2) AS w").head()
+      assert(r.getDouble(0) === 1.0)
+      assert(math.abs(r.getDouble(1) - 0.9611111) < 1e-6)
+      assert(r.getSeq[Long](2) === expected._2)
+      assert(helperRow(ext) === expected)
+    }
+    assert(SparkSession.active eq spark)
+  }
+
+  test("bare session: Column helpers register just their own functions") {
+    val expected = helperRow(spark)
+    val bare = SparkSession.builder().create()
+    withSession(bare) {
+      assert(!bare.catalog.functionExists("graft_char_entropy"))
+      assert(helperRow(bare) === expected)
+      assert(Seq("graft_char_entropy", "graft_winnow", "graft_diag_mahalanobis")
+        .forall(bare.catalog.functionExists))
+      assert(!bare.catalog.functionExists("graft_cosine"))
+      Registry.register(bare)
+      assert(Registry.all.map(_.name).forall(bare.catalog.functionExists))
+    }
+  }
+
+  test("graft SQL functions reject a wrong argument count or a column in a constant slot") {
+    def err(q: String): String = {
+      val e = intercept[Exception](spark.sql(q).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    }
+    assert(err("SELECT graft_shingles('a b c')")
+      .contains("graft_shingles(text, n): expects 2 arguments, got 1"))
+    assert(err("SELECT graft_shingles(t, n) FROM VALUES ('a b c', 2) AS v(t, n)")
+      .contains("graft_shingles(text, n): argument 2 (n) must be a constant"))
+    assert(err("SELECT graft_histogram(x, 0.0D) FROM VALUES (1.0D) AS v(x)")
+      .contains("graft_histogram(col, lo, hi, nBins): expects 4 arguments, got 2"))
+    assert(err("SELECT graft_multienum_valid('a', NULL)")
+      .contains("graft_multienum_valid(cell, vocab): argument 2 (vocab) must not be NULL"))
+    // the same calls with valid arguments still plan and run
+    assert(spark.sql("SELECT graft_shingles('a b c', 2)").head().getSeq[String](0) ===
+      Seq("a b", "b c"))
   }
 
   test("WARC file splitter + header parse: records, payloads, degraded headers") {

@@ -217,7 +217,6 @@ class StreamingSpec extends SparkSpec {
         concat(lit("<html><body><p>"), $"text",
           lit("</p><script>x()</script></body></html>")).as("html"))
     docs.repartition(2).write.mode("overwrite").parquet(dir)
-    TextExpressions.register(spark)
 
     def curate(df: org.apache.spark.sql.DataFrame) = df
       .select($"doc_id", TextAnalysis.htmlToText($"html").as("text"))
