@@ -65,7 +65,7 @@ object Manifest {
   /** JSON string body. Control characters and surrogates go out as
     * `\uXXXX`, so any Java string — a lone surrogate included — survives
     * the UTF-8 file and comes back from [[parseLine]] unchanged. */
-  private def esc(s: String): String =
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

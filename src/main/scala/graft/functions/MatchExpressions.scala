@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,27 +31,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Jaro–Winkler rewards shared prefixes — the convention for
   *    person/entity names in the linkage literature.
   *
-  * Both are per-row compute loops — native Expressions per the repo's
+  * Both are per-row compute loops — [[Kernel]]s per the repo's
   * doctrine (no UDF, no HOF lambdas in hot paths); they sit in
   * projections so the scan pipelines.
   *
   * Reference scope: crn-meta-validate has exact enum membership only
   * (validate_table.py); engine extensions for web-corpus curation.
   */
-case class PhraseCounts(child: Expression, phrases: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+case class PhraseCounts(phrases: Seq[String]) extends Kernel {
   require(phrases.nonEmpty, "graft_phrase_counts: phrase list is empty")
   require(phrases.forall(_.nonEmpty),
     "graft_phrase_counts: empty phrase matches everywhere — reject it loudly")
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_phrase_counts requires string, got ${other.simpleString}")
-  }
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   // Aho–Corasick as a dense byte-DFA: goto resolved through fail links
   // at BUILD time, so the per-byte step is exactly one array read.
@@ -98,7 +88,7 @@ case class PhraseCounts(child: Expression, phrases: Seq[String])
     (next.take(nNodes), out.take(nNodes).map(_.toArray))
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val (delta, outputs) = automaton
     val bytes = input.asInstanceOf[UTF8String].getBytes
     val counts = new Array[Long](phrases.length)
@@ -115,10 +105,6 @@ case class PhraseCounts(child: Expression, phrases: Seq[String])
     }
     new GenericArrayData(counts)
   }
-
-  override protected def withNewChildInternal(c: Expression): PhraseCounts =
-    copy(child = c)
-  override def prettyName: String = "graft_phrase_counts"
 }
 
 /** Jaro–Winkler similarity over the UTF-8 BYTES of both sides —
@@ -126,32 +112,16 @@ case class PhraseCounts(child: Expression, phrases: Seq[String])
   * implementation computes, making the cross-engine oracle a true
   * differential of two implementations (same IEEE operation order:
   * (m/|a| + m/|b| + (m−t)/m)/3, then j + ℓ·0.1·(1−j)). */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+case object JaroWinkler extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text, Kernel.Text)
+  def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_jaro_winkler requires (string, string), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
+  override def eval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[UTF8String].getBytes
     val b = r.asInstanceOf[UTF8String].getBytes
-    JaroWinkler.similarity(a, b)
+    similarity(a, b)
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinkler =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_jaro_winkler"
-}
-
-object JaroWinkler {
   /** Classic Jaro with the Winkler prefix boost; DuckDB-congruent
     * (empty ⇒ 0.0; identical ⇒ 1.0 — note ""=="" is 0.0, matching
     * DuckDB's empty rule, not the "equal strings" shortcut). */

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** k-value MinHash signature over a token/shingle array as ONE native
-  * Catalyst expression.
+/** k-value MinHash signature over a token/shingle array as ONE
+  * [[Kernel]] evaluation.
   *
   * Why not higher-order functions: `transform(sequence(0,k-1), j ->
   * array_min(transform(shingles, s -> xxhash64(s, j))))` is semantically
@@ -20,20 +19,10 @@ import org.apache.spark.sql.types._
   * (h_j = a_j·h + b_j over 2^64, the standard 2-universal family) is the
   * textbook MinHash evaluation.
   */
-case class MinHashSignature(child: Expression, k: Int, seed: Long = 42L)
-    extends UnaryExpression with CodegenFallback {
+case class MinHashSignature(k: Int, seed: Long = 42L) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_minhash requires array<string>, got ${other.simpleString}")
-    }
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   // deterministic affine coefficients (odd multipliers)
   @transient private lazy val coefA: Array[Long] = {
@@ -45,7 +34,7 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long = 42L)
     Array.fill(k)(rnd.nextLong())
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
@@ -64,10 +53,6 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long = 42L)
     }
     ArrayData.toArrayData(mins)
   }
-
-  override protected def withNewChildInternal(c: Expression): MinHashSignature =
-    copy(child = c)
-  override def prettyName: String = "graft_minhash"
 }
 
 object MinHashExpression {

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,20 +14,9 @@ import graft.norm.Normalize.NullSentinel
   * `forall(filter(transform(split(...))))` HOF chain — interpreted
   * lambda frames per token per row on the validation hot path, the same
   * cost class [[TextProfile]] removed from the text operators. */
-case class MultiEnumTokensValid(child: Expression, vocab: Seq[String])
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_multienum_valid requires string, got ${other.simpleString}")
-    }
+case class MultiEnumTokensValid(vocab: Seq[String]) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = BooleanType
 
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
@@ -37,7 +24,7 @@ case class MultiEnumTokensValid(child: Expression, vocab: Seq[String])
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     var any = false
     var ok = true
@@ -60,10 +47,6 @@ case class MultiEnumTokensValid(child: Expression, vocab: Seq[String])
     handle(s.length)
     any && ok
   }
-
-  override protected def withNewChildInternal(c: Expression): MultiEnumTokensValid =
-    copy(child = c)
-  override def prettyName: String = "graft_multienum_valid"
 }
 
 /** Compiles a [[graft.model.Rule]] into a Catalyst validity predicate

@@ -2,17 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression,
+  ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
 
 /** The one table of graft SQL functions: each entry holds a function's
-  * SQL signature, its expression class, and how the expression is built
-  * from the call's arguments, e.g. for plain SQL
+  * SQL signature and how its expression is built from the call's
+  * arguments, e.g. for plain SQL
   *
   *   SELECT graft_minhash_bands(graft_shingles(text, 3), 64, 8) FROM docs
+  *
+  * Most entries are [[Kernel]]s: the row builds the kernel from the
+  * call's constants (`MinHashBandKeys(64, 8)`) and wraps it, with the
+  * data arguments as children, in the one [[KernelExpression]]. The
+  * rest (cosine, dot, Hilbert, Bloom and the aggregates) name their own
+  * expression class.
   *
   * Everything that installs a graft function reads this table:
   *  - [[graft.GraftExtensions]] injects every entry ([[inject]]);
@@ -51,6 +58,12 @@ object Registry {
     def string(i: Int): String = value(i).toString
     def strings(i: Int): Seq[String] =
       value(i).asInstanceOf[ArrayData].toObjectArray(StringType).map(_.toString).toSeq
+    /** A constant of type `t` (array nullability aside), as a literal. */
+    def literal(i: Int, t: DataType): Literal = {
+      val v = value(i)
+      if (!Kernel.accepts(t, es(i).dataType)) fail(i, s"must be a ${t.simpleString} constant")
+      Literal(v, es(i).dataType)
+    }
 
     private def fail(i: Int, what: String): Nothing =
       throw new IllegalArgumentException(
@@ -77,59 +90,46 @@ object Registry {
     // vectors
     Fn("graft_cosine(a, b)", classOf[CosineSimilarity], a => CosineSimilarity(a(0), a(1))),
     Fn("graft_dot(a, b)", classOf[DotProduct], a => DotProduct(a(0), a(1))),
-    Fn("graft_hyperplane_bucket(vec, dim, nBits, seed)", classOf[HyperplaneBucket],
-      a => HyperplaneBucket(a(0), a.int(1), a.int(2), a.int(3))),
-    Fn("graft_vec_stats(vec)", classOf[VecStats], a => VecStats(a(0))),
-    Fn("graft_pq_encode(vec, codebooks)", classOf[PqEncode], a => PqEncode(a(0), a.const(1))),
-    Fn("graft_pq_adc(codes, lut)", classOf[PqAdcScore], a => PqAdcScore(a(0), a.const(1))),
-    Fn("graft_diag_mahalanobis(vec, params)", classOf[DiagMahalanobis],
-      a => DiagMahalanobis(a(0), a.const(1))),
+    kernel("graft_hyperplane_bucket(vec, dim, nBits, seed)")(
+      a => HyperplaneBucket(a.int(1), a.int(2), a.int(3))()),
+    kernel("graft_vec_stats(vec)")(_ => VecStats()()),
+    kernel("graft_pq_encode(vec, codebooks)")(
+      a => PqEncode(a.literal(1, ArrayType(ArrayType(ArrayType(FloatType)))))()),
+    kernel("graft_pq_adc(codes, lut)")(
+      a => PqAdcScore(a.literal(1, ArrayType(ArrayType(DoubleType))))),
+    kernel("graft_diag_mahalanobis(vec, params)")(
+      a => DiagMahalanobis(a.literal(1, ArrayType(ArrayType(DoubleType))))()),
     Fn("graft_vec_moments(vec, dim)", classOf[VecMomentsAgg], a => VecMomentsAgg(a(0), a.int(1))),
-    Fn("graft_hilbert(x, y, bits)", classOf[HilbertIndex],
-      a => HilbertIndex(a(0), a(1), a.int(2))),
+    Fn("graft_hilbert(x, y, bits)", classOf[HilbertIndex], a => HilbertIndex(a(0), a(1), a.int(2))),
     // text
-    Fn("graft_simhash64(tokens)", classOf[SimHash64], a => SimHash64(a(0))),
-    Fn("graft_fingerprint(text, window)", classOf[RollingFingerprint],
-      a => RollingFingerprint(a(0), a.int(1))),
-    Fn("graft_winnow(text, k, w)", classOf[WinnowedFingerprints],
-      a => WinnowedFingerprints(a(0), a.int(1), a.int(2))),
-    Fn("graft_winnow_md5(text, k, w)", classOf[WinnowedFingerprintsMd5],
-      a => WinnowedFingerprintsMd5(a(0), a.int(1), a.int(2))),
-    Fn("graft_text_profile(text)", classOf[TextProfile], a => TextProfile(a(0))),
-    Fn("graft_normalize_text(text, form)", classOf[NormalizeText],
-      a => NormalizeText(a(0), a.string(1))),
-    Fn("graft_compression_ratio(text)", classOf[CompressionRatio], a => CompressionRatio(a(0))),
-    Fn("graft_char_entropy(text)", classOf[CharEntropy], a => CharEntropy(a(0))),
-    Fn("graft_repetition_signals(text, topN, dupN)", classOf[RepetitionSignals],
-      a => RepetitionSignals(a(0), a.int(1), a.int(2))),
-    Fn("graft_bpe_apply(word, lefts, rights)", classOf[BpeApply],
-      a => BpeApply(a(0), a.strings(1), a.strings(2))),
-    Fn("graft_cdc_boundaries(text, window, maskBits, seed)", classOf[CdcBoundaries],
-      a => CdcBoundaries(a(0), a.int(1), a.int(2), a.long(3))),
-    Fn("graft_cdc_chunk_hashes(text, window, maskBits, seed)", classOf[CdcChunkHashes],
-      a => CdcChunkHashes(a(0), a.int(1), a.int(2), a.long(3))),
-    Fn("graft_word_ids(text, vocab, unkId)", classOf[WordIds],
-      a => WordIds(a(0), a.strings(1), a.int(2))),
-    Fn("graft_rake_phrases(text, stopwords, maxLen)", classOf[RakePhrases],
-      a => RakePhrases(a(0), a.strings(1), a.int(2))),
-    Fn("graft_jaro_winkler(a, b)", classOf[JaroWinkler], a => JaroWinkler(a(0), a(1))),
-    Fn("graft_phrase_counts(text, phrases)", classOf[PhraseCounts],
-      a => PhraseCounts(a(0), a.strings(1))),
-    Fn("graft_canonical_url(url)", classOf[CanonicalUrl], a => CanonicalUrl(a(0))),
-    Fn("graft_multienum_valid(cell, vocab)", classOf[MultiEnumTokensValid],
-      a => MultiEnumTokensValid(a(0), a.strings(1))),
+    kernel("graft_simhash64(tokens)")(_ => SimHash64),
+    kernel("graft_fingerprint(text, window)")(a => RollingFingerprint(a.int(1))),
+    kernel("graft_winnow(text, k, w)")(a => WinnowedFingerprints(a.int(1), a.int(2))),
+    kernel("graft_winnow_md5(text, k, w)")(a => WinnowedFingerprintsMd5(a.int(1), a.int(2))),
+    kernel("graft_text_profile(text)")(_ => TextProfile),
+    kernel("graft_normalize_text(text, form)")(a => NormalizeText(a.string(1))),
+    kernel("graft_compression_ratio(text)")(_ => CompressionRatio),
+    kernel("graft_char_entropy(text)")(_ => CharEntropy),
+    kernel("graft_repetition_signals(text, topN, dupN)")(
+      a => RepetitionSignals(a.int(1), a.int(2))),
+    kernel("graft_bpe_apply(word, lefts, rights)")(a => BpeApply(a.strings(1), a.strings(2))),
+    kernel("graft_cdc_boundaries(text, window, maskBits, seed)")(
+      a => CdcBoundaries(a.int(1), a.int(2), a.long(3))),
+    kernel("graft_cdc_chunk_hashes(text, window, maskBits, seed)")(
+      a => CdcChunkHashes(a.int(1), a.int(2), a.long(3))),
+    kernel("graft_word_ids(text, vocab, unkId)")(a => WordIds(a.strings(1), a.int(2))),
+    kernel("graft_rake_phrases(text, stopwords, maxLen)")(a => RakePhrases(a.strings(1), a.int(2))),
+    kernel("graft_jaro_winkler(a, b)")(_ => JaroWinkler),
+    kernel("graft_phrase_counts(text, phrases)")(a => PhraseCounts(a.strings(1))),
+    kernel("graft_canonical_url(url)")(_ => CanonicalUrl),
+    kernel("graft_multienum_valid(cell, vocab)")(a => MultiEnumTokensValid(a.strings(1))),
     // shingles, grams and sketches
-    Fn("graft_shingles(text, n)", classOf[WordShingles], a => WordShingles(a(0), a.int(1))),
-    Fn("graft_word_chunks(text, chunkWords)", classOf[WordChunks],
-      a => WordChunks(a(0), a.int(1))),
-    Fn("graft_token_grams(tokens, n)", classOf[TokenGramHashes],
-      a => TokenGramHashes(a(0), a.int(1))),
-    Fn("graft_token_grams_seq(tokens, n)", classOf[TokenGramHashes],
-      a => TokenGramHashes(a(0), a.int(1), distinct = false)),
-    Fn("graft_minhash(tokens, k)", classOf[MinHashSignature],
-      a => MinHashSignature(a(0), a.int(1))),
-    Fn("graft_minhash_bands(tokens, k, bands)", classOf[MinHashBandKeys],
-      a => MinHashBandKeys(a(0), a.int(1), a.int(2))),
+    kernel("graft_shingles(text, n)")(a => WordShingles(a.int(1))),
+    kernel("graft_word_chunks(text, chunkWords)")(a => WordChunks(a.int(1))),
+    kernel("graft_token_grams(tokens, n)")(a => TokenGramHashes(a.int(1))()),
+    kernel("graft_token_grams_seq(tokens, n)")(a => TokenGramHashes(a.int(1), distinct = false)()),
+    kernel("graft_minhash(tokens, k)")(a => MinHashSignature(a.int(1))),
+    kernel("graft_minhash_bands(tokens, k, bands)")(a => MinHashBandKeys(a.int(1), a.int(2))),
     Fn("graft_bloom_agg(col, expectedItems, numBits)", classOf[BloomFilterAggregate],
       a => new BloomFilterAggregate(a(0), a.const(1), a.const(2))),
     Fn("graft_might_contain(bloom, value)", classOf[BloomFilterMightContain],
@@ -140,6 +140,15 @@ object Registry {
     Fn("graft_min_k(col, k)", classOf[CollectMinK], a => CollectMinK(a(0), a(0), a.int(1))),
     Fn("graft_min_k_by(key, value, k)", classOf[CollectMinK],
       a => CollectMinK(a(0), a(1), a.int(2))))
+
+  /** A [[Kernel]] entry: `build` makes the kernel from the call's
+    * constants, and its leading data arguments (one per
+    * `kernel.inputTypes`) become the [[KernelExpression]]'s children. */
+  private def kernel(signature: String)(build: Args => Kernel): Fn =
+    Fn(signature, classOf[KernelExpression], a => {
+      val k = build(a)
+      KernelExpression(signature.takeWhile(_ != '('), k, k.inputTypes.indices.map(a(_)))
+    })
 
   private val byName: Map[String, Fn] = all.map(f => f.name -> f).toMap
 

@@ -1,31 +1,30 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Word n-gram shingles as ONE native expression: lowercase → whitespace
-  * split → n-gram join, in a single pass over the string.
+/** Shingle, gram and sketch kernels: each is a [[Kernel]], its per-row
+  * loop plus argument and result types, that [[Registry]] wraps in the
+  * one [[KernelExpression]] with the call's constants in its constructor.
   *
-  * The HOF spelling (`transform(sequence(0, size(ws)-n), i →
-  * concat_ws(' ', ws[i], ws[i+1], ws[i+2]))`) re-evaluates the whole
+  * [[WordShingles]]: word n-grams in ONE pass over the string (lowercase
+  * → whitespace split → n-gram join). The HOF spelling
+  * (`transform(sequence(0, size(ws)-n), i → concat_ws(' ', ws[i],
+  * ws[i+1], ws[i+2]))`) re-evaluates the whole
   * `ws = filter(split(lower(trim(text))))` subtree at every element_at
   * site of every lambda element — interpreted HOFs have no common-
   * subexpression elimination, so shingling 5 000 docs cost ~100 s where
-  * this expression costs < 1 s. Semantics identical (incl. the
+  * this kernel costs < 1 s. Semantics identical (incl. the
   * fewer-than-n-words fallback to one joined shingle).
   */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression with CodegenFallback {
+case class WordShingles(n: Int) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     // Locale.ROOT: word identity must not depend on the JVM default
     // locale (matches WordIds and the SQL lower() the oracles use)
     val words = input.asInstanceOf[UTF8String].toString
@@ -46,9 +45,6 @@ case class WordShingles(child: Expression, n: Int)
       }
     ArrayData.toArrayData(shingles)
   }
-
-  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
-  override def prettyName: String = "graft_shingles"
 }
 
 /** Fixed-width word chunks in ONE native pass: lowercase → whitespace
@@ -59,14 +55,12 @@ case class WordShingles(child: Expression, n: Int)
   * re-evaluates the whole word-split subtree once per CHUNK per
   * reference — the no-CSE-in-interpreted-lambdas cost this file's
   * header documents. Empty/blank text ⇒ empty array. */
-case class WordChunks(child: Expression, chunkWords: Int)
-    extends UnaryExpression with CodegenFallback {
+case class WordChunks(chunkWords: Int) extends Kernel {
   require(chunkWords >= 1, "chunkWords must be >= 1")
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val words = input.asInstanceOf[UTF8String].toString
       .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
     if (words.isEmpty) return ArrayData.toArrayData(Array.empty[UTF8String])
@@ -84,19 +78,14 @@ case class WordChunks(child: Expression, chunkWords: Int)
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): WordChunks = copy(child = c)
-  override def prettyName: String = "graft_word_chunks"
 }
 
 /** MinHash-LSH band keys straight from the token array: signature minima
   * and banded hashes in one evaluation — nothing for CollapseProject to
   * duplicate downstream. Output: array of `bands` longs. */
-case class MinHashBandKeys(child: Expression, k: Int, bands: Int, seed: Long = 42L)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
+case class MinHashBandKeys(k: Int, bands: Int, seed: Long = 42L) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   @transient private lazy val coefA: Array[Long] = {
     val rnd = new java.util.SplittableRandom(seed)
@@ -107,7 +96,7 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int, seed: Long = 4
     Array.fill(k)(rnd.nextLong())
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val nEl = arr.numElements()
     val mins = Array.fill(k)(Long.MaxValue)
@@ -137,9 +126,6 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int, seed: Long = 4
     }
     ArrayData.toArrayData(keys)
   }
-
-  override protected def withNewChildInternal(c: Expression): MinHashBandKeys = copy(child = c)
-  override def prettyName: String = "graft_minhash_bands"
 }
 
 /** Distinct hashes of every n-token window of a token array, in ONE
@@ -162,21 +148,12 @@ case class MinHashBandKeys(child: Expression, k: Int, bands: Int, seed: Long = 4
   * 64-bit collisions (≈2.7e4 expected colliding PAIRS at 10^12 grams —
   * negligible false-contamination, and decontamination errs safe:
   * a collision flags a clean doc, never unflags a leaked one). */
-case class TokenGramHashes(child: Expression, n: Int, distinct: Boolean = true)
-    extends UnaryExpression with CodegenFallback {
+case class TokenGramHashes(n: Int, distinct: Boolean = true)(tokens: DataType = NullType)
+    extends Kernel {
   require(n >= 1, s"gram size must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType | LongType | StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<int|bigint|string>, got ${other.simpleString}")
-    }
+  def inputTypes: Seq[Seq[DataType]] =
+    Seq(Seq(ArrayType(IntegerType), ArrayType(LongType), ArrayType(StringType)))
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   private def fmix64(x0: Long): Long = {
     var x = x0 + 0x9E3779B97F4A7C15L
@@ -189,8 +166,10 @@ case class TokenGramHashes(child: Expression, n: Int, distinct: Boolean = true)
   // north-star tokens payload; int64 widens it; string covers word-level
   // decontamination (no tokenizer) — word identity via xxhash64 of the
   // UTF-8 bytes, so equal words hash equal across rows and frames
+  override def bind(types: Seq[DataType]): Kernel = TokenGramHashes(n, distinct)(types.head)
+
   @transient private lazy val tokAt: (ArrayData, Int) => Long =
-    child.dataType match {
+    tokens match {
       case ArrayType(IntegerType, _) => (a, i) => a.getInt(i).toLong
       case ArrayType(LongType, _)    => (a, i) => a.getLong(i)
       case ArrayType(StringType, _)  => (a, i) =>
@@ -200,7 +179,7 @@ case class TokenGramHashes(child: Expression, n: Int, distinct: Boolean = true)
       case other => throw new IllegalStateException(s"unreachable: $other")
     }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val len = arr.numElements()
     val nWin = len - n + 1
@@ -234,24 +213,18 @@ case class TokenGramHashes(child: Expression, n: Int, distinct: Boolean = true)
     }
     ArrayData.toArrayData(java.util.Arrays.copyOf(hs, out))
   }
-
-  override protected def withNewChildInternal(c: Expression): TokenGramHashes = copy(child = c)
-  override def prettyName: String =
-    if (distinct) "graft_token_grams" else "graft_token_grams_seq"
 }
 
 object ShingleExpression {
   def shingles(text: Column, n: Int): Column =
     Registry.call("graft_shingles", text, lit(n))
-  def minhashBands(tokens: Column, k: Int, bands: Int): Column = {
+  def minhashBands(tokens: Column, k: Int, bands: Int): Column =
     Registry.call("graft_minhash_bands", tokens, lit(k), lit(bands))
-  }
   def tokenGrams(tokens: Column, n: Int): Column =
     Registry.call("graft_token_grams", tokens, lit(n))
   /** Window-ordered (non-distinct) gram hashes: index i = window start. */
   def tokenGramsSeq(tokens: Column, n: Int): Column =
     Registry.call("graft_token_grams_seq", tokens, lit(n))
-  def wordChunks(text: Column, chunkWords: Int): Column = {
+  def wordChunks(text: Column, chunkWords: Int): Column =
     Registry.call("graft_word_chunks", text, lit(chunkWords))
-  }
 }

@@ -2,38 +2,30 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for document fingerprinting:
+/** Text kernels: fingerprints, chunking, tokenization and quality
+  * signals. Each is a [[Kernel]] — the function's per-row loop plus its
+  * argument and result types — that [[Registry]] wraps in the one
+  * [[KernelExpression]]; the kernel's constructor holds the call's
+  * constants. Per-row compute-bound loops like these beat HOF chains
+  * even interpreted, and they sit in a projection, not an aggregate, so
+  * the scan around them still pipelines.
   *
   *  - [[SimHash64]] — 64-bit SimHash over a token array (near-dup
-  *    signature; Hamming-close signatures ⇒ similar documents).
+  *    signature; Hamming-close signatures ⇒ similar documents); token
+  *    hashing reuses Spark's XxHash64 kernel.
   *  - [[RollingFingerprint]] — Karp–Rabin rolling hash winnowed to the
   *    minimum window hash (robust content fingerprint).
-  *
-  * Both are per-row compute-bound loops, so an interpreted Expression
-  * (CodegenFallback) already beats HOF chains; token hashing reuses
-  * Spark's XxHash64 kernel. They sit in a projection, not an aggregate,
-  * so the scan around them still pipelines.
   */
-case class SimHash64(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+case object SimHash64 extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
+  def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_simhash64 requires array<string>, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val tokens = input.asInstanceOf[ArrayData]
     val counts = new Array[Int](64)
     var t = 0
@@ -55,20 +47,16 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
     while (b < 64) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-  override def prettyName: String = "graft_simhash64"
 }
 
 /** min-of-window Karp–Rabin fingerprint over the raw text (window in
   * characters) — the winnowing idea (Schleimer et al., SIGMOD'03) reduced
   * to the single global minimum for a compact per-doc fingerprint. */
-case class RollingFingerprint(child: Expression, window: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+case class RollingFingerprint(window: Int) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     if (s.length < window) return XxHash64Function.hash(
       UTF8String.fromString(s), StringType, 7L)
@@ -87,10 +75,6 @@ case class RollingFingerprint(child: Expression, window: Int)
     }
     minH
   }
-
-  override protected def withNewChildInternal(c: Expression): RollingFingerprint =
-    copy(child = c)
-  override def prettyName: String = "graft_fingerprint"
 }
 
 /** FULL winnowing fingerprint set (Schleimer et al., SIGMOD'03): the
@@ -106,13 +90,12 @@ case class RollingFingerprint(child: Expression, window: Int)
   * Documents shorter than k yield the whole-text hash as a singleton.
   * Per-row compute-bound loop ⇒ interpreted Expression in a
   * projection (same rationale as [[RollingFingerprint]]). */
-case class WinnowedFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+case class WinnowedFingerprints(k: Int, w: Int) extends Kernel {
   require(k >= 2 && w >= 1, "need k >= 2, w >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     val m = s.length - k + 1
     if (m < 1) {
@@ -156,10 +139,6 @@ case class WinnowedFingerprints(child: Expression, k: Int, w: Int)
     while (it.hasNext) { arr(i) = it.next(); i += 1 }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
   }
-
-  override protected def withNewChildInternal(c: Expression): WinnowedFingerprints =
-    copy(child = c)
-  override def prettyName: String = "graft_winnow"
 }
 
 /** The md5 ORACLE spelling of [[WinnowedFingerprints]] as one in-row
@@ -179,12 +158,10 @@ case class WinnowedFingerprints(child: Expression, k: Int, w: Int)
   * UTF-8 byte-slice hashing over code-point boundaries — identical
   * bytes to md5(substr(...)) for any input. Documents shorter than k
   * yield the whole-text md5 prefix as a singleton. */
-case class WinnowedFingerprintsMd5(child: Expression, k: Int, w: Int)
-    extends UnaryExpression with CodegenFallback {
+case class WinnowedFingerprintsMd5(k: Int, w: Int) extends Kernel {
   require(k >= 2 && w >= 1, "need k >= 2, w >= 1")
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   @transient private lazy val md5 =
     new ThreadLocal[java.security.MessageDigest] {
@@ -214,7 +191,7 @@ case class WinnowedFingerprintsMd5(child: Expression, k: Int, w: Int)
     UTF8String.fromBytes(cs)
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val u = input.asInstanceOf[UTF8String]
     val bytes = u.getBytes
     // code-point start offsets (Spark substr counts code points)
@@ -268,10 +245,6 @@ case class WinnowedFingerprintsMd5(child: Expression, k: Int, w: Int)
     while (it.hasNext) { arr(i) = hex16(it.next()); i += 1 }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
   }
-
-  override protected def withNewChildInternal(c: Expression): WinnowedFingerprintsMd5 =
-    copy(child = c)
-  override def prettyName: String = "graft_winnow_md5"
 }
 
 /** Content-defined-chunking cut positions (the LBFS/rsync boundary
@@ -287,15 +260,13 @@ case class WinnowedFingerprintsMd5(child: Expression, k: Int, w: Int)
   * re-hashes every window from scratch: O(len×window)). Per-row
   * compute-bound loop ⇒ interpreted Expression in a projection, same
   * rationale as [[RollingFingerprint]]. */
-case class CdcBoundaries(child: Expression, window: Int, maskBits: Int,
-                         seed: Long)
-    extends UnaryExpression with CodegenFallback {
+case class CdcBoundaries(window: Int, maskBits: Int, seed: Long) extends Kernel {
   require(window > 0, "window must be positive")
   require(maskBits > 0 && maskBits < 63, "maskBits must be in [1, 62]")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     val mask = (1L << maskBits) - 1
     // the seed enters the boundary PREDICATE, never the rolling state: a
@@ -323,10 +294,6 @@ case class CdcBoundaries(child: Expression, window: Int, maskBits: Int,
     }
     ArrayData.toArrayData(out.toArray)
   }
-
-  override protected def withNewChildInternal(c: Expression): CdcBoundaries =
-    copy(child = c)
-  override def prettyName: String = "graft_cdc_boundaries"
 }
 
 /** One-pass CDC chunker: boundaries AND per-chunk (md5-hex hash, char
@@ -346,17 +313,15 @@ case class CdcBoundaries(child: Expression, window: Int, maskBits: Int,
   * O(chunks × len × window) PER ROW: measured 172 s for the sf0.1
   * 5k-doc corpus vs well under a second here. One MessageDigest
   * instance serves all windows and chunk hashes of a row. */
-case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int,
-                          seed: Long)
-    extends UnaryExpression with CodegenFallback {
+case class CdcChunkHashes(window: Int, maskBits: Int, seed: Long) extends Kernel {
   require(window > 0, "window must be positive")
   require(maskBits >= 0 && maskBits < 63,
     "maskBits must be 0 (md5 oracle mode) or in [1, 62] (rolling mode)")
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StructType(Seq(
     StructField("chunk_hash", StringType, nullable = false),
     StructField("chunk_len", IntegerType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = true
 
   private def hex(b: Array[Byte]): String = {
     val sb = new java.lang.StringBuilder(b.length * 2)
@@ -369,7 +334,7 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int,
     sb.toString
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     val len = s.length
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -412,10 +377,6 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int,
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): CdcChunkHashes =
-    copy(child = c)
-  override def prettyName: String = "graft_cdc_chunk_hashes"
 }
 
 /** Apply trained BPE merges to ONE word: split to chars, then for each
@@ -430,15 +391,13 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int,
   * test). Merges ride the plan as broadcast-literal arrays: per-row
   * work is O(len × nMerges), no shuffle, no UDF. Returns the subword
   * token array. */
-case class BpeApply(child: Expression, lefts: Seq[String],
-                    rights: Seq[String])
-    extends UnaryExpression with CodegenFallback {
+case class BpeApply(lefts: Seq[String], rights: Seq[String]) extends Kernel {
   require(lefts.length == rights.length,
     "lefts/rights must be parallel merge arrays")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val w = input.asInstanceOf[UTF8String].toString
     var toks = w.map(_.toString).toBuffer
     var m = 0
@@ -456,10 +415,6 @@ case class BpeApply(child: Expression, lefts: Seq[String],
     }
     ArrayData.toArrayData(toks.toArray.map(UTF8String.fromString))
   }
-
-  override protected def withNewChildInternal(c: Expression): BpeApply =
-    copy(child = c)
-  override def prettyName: String = "graft_bpe_apply"
 }
 
 /** One-pass text profile for language ID + quality scoring: word stats,
@@ -475,22 +430,45 @@ case class BpeApply(child: Expression, lefts: Seq[String],
   * [[WordShingles]]. Semantics are identical to the Column spelling it
   * replaces (see field-by-field notes in the eval body).
   */
-case class TextProfile(child: Expression) extends UnaryExpression with CodegenFallback {
-  import TextProfile._
+case object TextProfile extends Kernel {
+  /** Tiny per-language stopword profiles (the cheap first-pass heuristic;
+    * ambiguous docs get re-scored by a heavier model downstream). */
+  val StopwordProfiles: Map[String, Seq[String]] = Map(
+    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "was", "for"),
+    "es" -> Seq("el", "la", "de", "que", "y", "en", "los", "se", "del", "las"),
+    "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "mit", "für", "auf"),
+    "fr" -> Seq("le", "la", "les", "de", "des", "et", "est", "dans", "que", "une"),
+    "zh" -> Seq("的", "了", "是", "在", "我", "有", "他", "这", "中", "大"))
 
-  override def dataType: DataType = Schema
-  override def nullable: Boolean = true
+  private[functions] val Langs: Array[String] =
+    StopwordProfiles.keys.toArray.sorted
+  private[functions] val StopArrays: Array[Array[String]] =
+    Langs.map(l => StopwordProfiles(l).toArray)
+  private[functions] val ZhChars: Array[String] = StopwordProfiles("zh").toArray
+  private[functions] val EnStopSet: java.util.HashSet[String] = {
+    val s = new java.util.HashSet[String]()
+    StopwordProfiles("en").foreach(s.add)
+    s
+  }
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_text_profile requires string, got ${other.simpleString}")
-    }
+  val Schema: StructType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("n_bpeish", IntegerType, nullable = false),
+    StructField("mean_word_len", DoubleType, nullable = false),
+    StructField("punct_ratio", DoubleType, nullable = false),
+    StructField("upper_ratio", DoubleType, nullable = false),
+    StructField("digit_ratio", DoubleType, nullable = false),
+    StructField("stopword_ratio", DoubleType, nullable = false),
+    StructField("lang", StringType, nullable = false),
+    StructField("lang_score", IntegerType, nullable = false),
+    // distinct whitespace-words: with n_words this gives the Gopher-style
+    // repetition signal (1 - distinct/total) from the SAME single pass
+    StructField("n_distinct_words", IntegerType, nullable = false)))
 
-  override def nullSafeEval(input: Any): Any = {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = Schema
+
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     val nCp = math.max(s.codePointCount(0, s.length), 1).toDouble
 
@@ -566,9 +544,6 @@ case class TextProfile(child: Expression) extends UnaryExpression with CodegenFa
       math.max(bestScore, 0),
       distinct.size)
   }
-
-  override protected def withNewChildInternal(c: Expression): TextProfile = copy(child = c)
-  override def prettyName: String = "graft_text_profile"
 }
 
 /** Unicode normalization (NFC/NFD/NFKC/NFKD via java.text.Normalizer) —
@@ -578,36 +553,20 @@ case class TextProfile(child: Expression) extends UnaryExpression with CodegenFa
   * Spark ships no built-in for this; a native expression keeps it off
   * the UDF path. Validated cross-engine: DuckDB's nfc_normalize agrees
   * (both implement the Unicode standard forms). */
-case class NormalizeText(child: Expression, form: String)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
+case class NormalizeText(form: String) extends Kernel {
+  require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form.toUpperCase(java.util.Locale.ROOT)),
+    s"unknown normalization form '$form' (NFC/NFD/NFKC/NFKD)")
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = StringType
 
   @transient private lazy val normForm =
     java.text.Normalizer.Form.valueOf(form.toUpperCase(java.util.Locale.ROOT))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if Seq("NFC", "NFD", "NFKC", "NFKD")
-          .contains(form.toUpperCase(java.util.Locale.ROOT)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"unknown normalization form '$form' (NFC/NFD/NFKC/NFKD)")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_normalize_text requires string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     if (java.text.Normalizer.isNormalized(s, normForm)) input // common case: no copy
     else UTF8String.fromString(java.text.Normalizer.normalize(s, normForm))
   }
-
-  override protected def withNewChildInternal(c: Expression): NormalizeText =
-    copy(child = c)
-  override def prettyName: String = "graft_normalize_text"
 }
 
 /** Deflate compression ratio (compressed/raw bytes, level 6) — the
@@ -616,22 +575,19 @@ case class NormalizeText(child: Expression, form: String)
   * Per-thread Deflater reuse (reset between rows) keeps the native
   * zlib context allocation off the per-row path. Not SQL-expressible —
   * covered by unit tests and a rows-only query. */
-case class CompressionRatio(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  import CompressionRatio._
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+case object CompressionRatio extends Kernel {
+  private val LocalDeflater = new ThreadLocal[java.util.zip.Deflater] {
+    override def initialValue(): java.util.zip.Deflater =
+      new java.util.zip.Deflater(6, /* nowrap = */ true)
+  }
+  private val LocalBuf = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](8192)
+  }
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_compression_ratio requires string, got ${other.simpleString}")
-    }
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = DoubleType
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
     if (bytes.isEmpty) return 1.0
     val d = LocalDeflater.get()
@@ -643,56 +599,6 @@ case class CompressionRatio(child: Expression)
     while (!d.finished()) total += d.deflate(buf)
     total.toDouble / bytes.length
   }
-
-  override protected def withNewChildInternal(c: Expression): CompressionRatio =
-    copy(child = c)
-  override def prettyName: String = "graft_compression_ratio"
-}
-
-object CompressionRatio {
-  private val LocalDeflater = new ThreadLocal[java.util.zip.Deflater] {
-    override def initialValue(): java.util.zip.Deflater =
-      new java.util.zip.Deflater(6, /* nowrap = */ true)
-  }
-  private val LocalBuf = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](8192)
-  }
-}
-
-object TextProfile {
-  /** Tiny per-language stopword profiles (the cheap first-pass heuristic;
-    * ambiguous docs get re-scored by a heavier model downstream). */
-  val StopwordProfiles: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "was", "for"),
-    "es" -> Seq("el", "la", "de", "que", "y", "en", "los", "se", "del", "las"),
-    "de" -> Seq("der", "die", "und", "das", "ist", "von", "den", "mit", "für", "auf"),
-    "fr" -> Seq("le", "la", "les", "de", "des", "et", "est", "dans", "que", "une"),
-    "zh" -> Seq("的", "了", "是", "在", "我", "有", "他", "这", "中", "大"))
-
-  private[functions] val Langs: Array[String] =
-    StopwordProfiles.keys.toArray.sorted
-  private[functions] val StopArrays: Array[Array[String]] =
-    Langs.map(l => StopwordProfiles(l).toArray)
-  private[functions] val ZhChars: Array[String] = StopwordProfiles("zh").toArray
-  private[functions] val EnStopSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    StopwordProfiles("en").foreach(s.add)
-    s
-  }
-
-  val Schema: StructType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("n_bpeish", IntegerType, nullable = false),
-    StructField("mean_word_len", DoubleType, nullable = false),
-    StructField("punct_ratio", DoubleType, nullable = false),
-    StructField("upper_ratio", DoubleType, nullable = false),
-    StructField("digit_ratio", DoubleType, nullable = false),
-    StructField("stopword_ratio", DoubleType, nullable = false),
-    StructField("lang", StringType, nullable = false),
-    StructField("lang_score", IntegerType, nullable = false),
-    // distinct whitespace-words: with n_words this gives the Gopher-style
-    // repetition signal (1 - distinct/total) from the SAME single pass
-    StructField("n_distinct_words", IntegerType, nullable = false)))
 }
 
 /** Whitespace-word → vocabulary-id tokenizer: one pass over the string,
@@ -708,11 +614,9 @@ object TextProfile {
   * plan (once per task binary, like a broadcast var) — fine for
   * word-vocab sizes (50k words ≈ 0.5 MB); a multi-GB BPE merge table
   * would instead warrant an executor-side broadcast handle. */
-case class WordIds(child: Expression, vocab: Seq[String], unkId: Int)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
+case class WordIds(vocab: Seq[String], unkId: Int) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   @transient private lazy val ids: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](vocab.size * 2)
@@ -720,7 +624,7 @@ case class WordIds(child: Expression, vocab: Seq[String], unkId: Int)
     m
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     // Locale.ROOT: tokenization must not depend on the JVM's default
     // locale (tr_TR dotless-ı would silently de-sync vocab and oracle)
     val words = input.asInstanceOf[UTF8String].toString
@@ -734,9 +638,6 @@ case class WordIds(child: Expression, vocab: Seq[String], unkId: Int)
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): WordIds = copy(child = c)
-  override def prettyName: String = "graft_word_ids"
 }
 
 /** Gopher-style character-level repetition signals (Rae et al. 2021,
@@ -759,23 +660,12 @@ case class WordIds(child: Expression, vocab: Seq[String], unkId: Int)
   * PHRASES over a diverse vocabulary). Native expression for the same
   * reason as [[WordShingles]] — a per-row HashMap loop has no HOF
   * spelling that isn't interpreted. */
-case class RepetitionSignals(child: Expression, topN: Int, dupN: Int)
-    extends UnaryExpression with CodegenFallback {
+case class RepetitionSignals(topN: Int, dupN: Int) extends Kernel {
   require(topN >= 1 && dupN >= 1, "n-gram sizes must be >= 1")
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = RepetitionSignals.Schema
 
-  override def dataType: DataType = RepetitionSignals.Schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_repetition_signals requires string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     // same tokenization as TextProfile: filter(split(lower(trim), \s+))
     val words = s.toLowerCase(java.util.Locale.ROOT).trim
@@ -821,10 +711,6 @@ case class RepetitionSignals(child: Expression, topN: Int, dupN: Int)
     if (denom == 0L) InternalRow(0.0, 0.0)
     else InternalRow(top.toDouble / denom, dup.toDouble / denom)
   }
-
-  override protected def withNewChildInternal(c: Expression): RepetitionSignals =
-    copy(child = c)
-  override def prettyName: String = "graft_repetition_signals"
 }
 
 object RepetitionSignals {
@@ -847,21 +733,11 @@ object RepetitionSignals {
   * oracle rows, so bit-stability matters). Computed as
   * log2(n) − Σ c·log2(c) / n, the count-weighted form a SQL
   * `entropy()` aggregate replays. Empty string → 0.0; null → null. */
-case class CharEntropy(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+case object CharEntropy extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_char_entropy requires string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     if (s.isEmpty) return 0.0
     val counts = new java.util.HashMap[Integer, Array[Long]]()
@@ -889,10 +765,6 @@ case class CharEntropy(child: Expression)
     }
     math.log(n.toDouble) / ln2 - acc / n.toDouble
   }
-
-  override protected def withNewChildInternal(c: Expression): CharEntropy =
-    copy(child = c)
-  override def prettyName: String = "graft_char_entropy"
 }
 
 /** RAKE candidate phrases (Rose et al. 2010, "Automatic keyword
@@ -909,21 +781,10 @@ case class CharEntropy(child: Expression)
   * spelling of this gaps-and-islands fold is a per-document window
   * over EXPLODED tokens — a token-granularity shuffle of the whole
   * corpus — when it is really one in-row loop. */
-case class RakePhrases(child: Expression, stopwords: Seq[String], maxLen: Int)
-    extends UnaryExpression with CodegenFallback {
+case class RakePhrases(stopwords: Seq[String], maxLen: Int) extends Kernel {
   require(maxLen >= 1, "maxLen must be >= 1")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_rake_phrases requires string, got ${other.simpleString}")
-    }
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   @transient private lazy val stops: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](stopwords.size * 2)
@@ -931,7 +792,7 @@ case class RakePhrases(child: Expression, stopwords: Seq[String], maxLen: Int)
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val words = input.asInstanceOf[UTF8String].toString
       .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
@@ -949,10 +810,6 @@ case class RakePhrases(child: Expression, stopwords: Seq[String], maxLen: Int)
     flush()
     ArrayData.toArrayData(out.toArray)
   }
-
-  override protected def withNewChildInternal(c: Expression): RakePhrases =
-    copy(child = c)
-  override def prettyName: String = "graft_rake_phrases"
 }
 
 object TextExpressions {

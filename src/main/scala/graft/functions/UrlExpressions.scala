@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,33 +25,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - unparsable / non-hierarchical input (no host) → null, a
   *     flaggable row, mirroring the codec-reject convention.
   *
-  * Per-row single-pass string work → native Expression (interpreted
+  * Per-row single-pass string work → a [[Kernel]] (interpreted
   * HOF chains are the one plan shape this repo bans from hot paths).
   */
-case class CanonicalUrl(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
+case object CanonicalUrl extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
+  def dataType: DataType = StringType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_canonical_url requires string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val out = CanonicalUrl.canonicalize(input.asInstanceOf[UTF8String].toString)
+  override def eval(input: Any): Any = {
+    val out = canonicalize(input.asInstanceOf[UTF8String].toString)
     if (out == null) null else UTF8String.fromString(out)
   }
-
-  override protected def withNewChildInternal(c: Expression): CanonicalUrl =
-    copy(child = c)
-}
-
-object CanonicalUrl {
 
   private val DroppedParams = Set("fbclid", "gclid", "msclkid")
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -119,26 +119,12 @@ case class DotProduct(left: Expression, right: Expression)
   * — nBits × nTables interpreted-HOF trees per row, the no-CSE
   * anti-pattern measured at 100×+ on [[WordShingles]] (VERDICT.md round 1,
   * "What's wrong" #4). */
-case class HyperplaneBucket(child: Expression, dim: Int, nBits: Int, seed: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_hyperplane_bucket requires array<float|double>, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
+case class HyperplaneBucket(dim: Int, nBits: Int, seed: Int)(elemIsFloat: Boolean = false)
+    extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Vector)
+  def dataType: DataType = LongType
+  override def bind(types: Seq[DataType]): Kernel =
+    HyperplaneBucket(dim, nBits, seed)(Kernel.isFloatArray(types.head))
 
   /** sign(i, d) table, one xxhash64 per cell, built once per task. */
   @transient private lazy val signs: Array[Double] = {
@@ -157,7 +143,7 @@ case class HyperplaneBucket(child: Expression, dim: Int, nBits: Int, seed: Int)
     t
   }
 
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = math.min(arr.numElements(), dim)
     val isF = elemIsFloat
@@ -174,10 +160,6 @@ case class HyperplaneBucket(child: Expression, dim: Int, nBits: Int, seed: Int)
     while (i < nBits) { if (dots(i) >= 0) bucket |= (1L << i); i += 1 }
     bucket
   }
-
-  override protected def withNewChildInternal(c: Expression): HyperplaneBucket =
-    copy(child = c)
-  override def prettyName: String = "graft_hyperplane_bucket"
 }
 
 /** One-pass embedding health stats: struct(dim, n_nonfinite, all_zero,
@@ -188,32 +170,16 @@ case class HyperplaneBucket(child: Expression, dim: Int, nBits: Int, seed: Int)
   * `aggregate(vec, …)`, `size`) with no CSE between them — the measured
   * 100×+ anti-pattern (BENCH.md optimization log). Null elements count
   * as non-finite: a vector with holes is as unusable as one with NaNs. */
-case class VecStats(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = StructType(Seq(
+case class VecStats()(elemIsFloat: Boolean = false) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Vector)
+  def dataType: DataType = StructType(Seq(
     StructField("dim", IntegerType, nullable = false),
     StructField("n_nonfinite", IntegerType, nullable = false),
     StructField("all_zero", BooleanType, nullable = false),
     StructField("l2_norm", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
+  override def bind(types: Seq[DataType]): Kernel = VecStats()(Kernel.isFloatArray(types.head))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_vec_stats requires array<float|double>, got ${other.simpleString}")
-    }
-
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val isF = elemIsFloat
@@ -234,48 +200,27 @@ case class VecStats(child: Expression)
     org.apache.spark.sql.catalyst.InternalRow(
       n, nonfinite, allZero, math.sqrt(sumSq))
   }
-
-  override protected def withNewChildInternal(c: Expression): VecStats = copy(child = c)
-  override def prettyName: String = "graft_vec_stats"
 }
 
 /** Product-quantization encoder (Jégou et al., "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011): split the vector into
   * nSub contiguous subspaces and store, per subspace, the index of the
   * L2-nearest codeword — one byte per subspace (codebooks ≤ 256
-  * entries), i.e. dim×4 bytes of float32 become nSub bytes. `right` is
-  * the codebook tensor as a FOLDABLE nested-array literal
+  * entries), i.e. dim×4 bytes of float32 become nSub bytes. `codebooks`
+  * is the codebook tensor as a nested-array literal
   * (sub → code → subvector), decoded once per executor into flat float
   * arrays. Ties in the argmin break to the LOWEST code index —
   * deterministic, so identical vectors always encode to identical
   * codes (the invariant the planted-recall oracle keys on). Codes are
   * stored offset by -128 so all 256 fit a signed byte. */
-case class PqEncode(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType, right.foldable) match {
-      case (ArrayType(FloatType, _) | ArrayType(DoubleType, _),
-            ArrayType(ArrayType(ArrayType(FloatType, _), _), _), true) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r, f) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_pq_encode requires (array<float|double>, foldable " +
-          s"array<array<array<float>>>), got (${l.simpleString}, " +
-          s"${r.simpleString}, foldable=$f)")
-    }
-
-  private def elemIsFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
+case class PqEncode(codebooks: Literal)(elemIsFloat: Boolean = false) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Vector)
+  def dataType: DataType = BinaryType
+  override def bind(types: Seq[DataType]): Kernel =
+    PqEncode(codebooks)(Kernel.isFloatArray(types.head))
 
   @transient private lazy val cb: Array[Array[Array[Float]]] = {
-    val subs = right.eval(null).asInstanceOf[ArrayData]
+    val subs = codebooks.eval(null).asInstanceOf[ArrayData]
     Array.tabulate(subs.numElements()) { s =>
       val codes = subs.getArray(s)
       Array.tabulate(codes.numElements()) { c =>
@@ -284,7 +229,7 @@ case class PqEncode(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(input: Any, unused: Any): Any = {
+  override def eval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val nSub = cb.length
     if (nSub == 0) return null
@@ -313,101 +258,62 @@ case class PqEncode(left: Expression, right: Expression)
     }
     out
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqEncode =
-    copy(left = l, right = r)
-  override def prettyName: String = "graft_pq_encode"
 }
 
 /** Asymmetric-distance (ADC) scorer for PQ codes: the query is NOT
   * quantized — the driver precomputes lut(sub)(code) = dot(q_sub,
   * codeword) and the per-row score is nSub table lookups + adds,
   * approximating dot(query, vector) with only quantization error on
-  * the DATABASE side (the A in ADC). `right` is the foldable LUT
-  * literal. On L2-normalized inputs the score approximates cosine. */
-case class PqAdcScore(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  * the DATABASE side (the A in ADC). `lut` is the LUT literal. On
+  * L2-normalized inputs the score approximates cosine. */
+case class PqAdcScore(lut: Literal) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Seq(BinaryType))
+  def dataType: DataType = DoubleType
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType, right.foldable) match {
-      case (BinaryType, ArrayType(ArrayType(DoubleType, _), _), true) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r, f) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_pq_adc requires (binary, foldable array<array<double>>), " +
-          s"got (${l.simpleString}, ${r.simpleString}, foldable=$f)")
-    }
-
-  @transient private lazy val lut: Array[Array[Double]] = {
-    val subs = right.eval(null).asInstanceOf[ArrayData]
+  @transient private lazy val table: Array[Array[Double]] = {
+    val subs = lut.eval(null).asInstanceOf[ArrayData]
     Array.tabulate(subs.numElements())(s => subs.getArray(s).toDoubleArray())
   }
 
-  override def nullSafeEval(input: Any, unused: Any): Any = {
+  override def eval(input: Any): Any = {
     val codes = input.asInstanceOf[Array[Byte]]
-    if (codes.length != lut.length) return null
+    if (codes.length != table.length) return null
     var score = 0.0; var s = 0
     while (s < codes.length) {
       val idx = codes(s) + 128
-      val t = lut(s)
+      val t = table(s)
       if (idx < 0 || idx >= t.length) return null
       score += t(idx); s += 1
     }
     score
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAdcScore =
-    copy(left = l, right = r)
-  override def prettyName: String = "graft_pq_adc"
 }
 
 /** Diagonal-covariance Mahalanobis distance²: Σᵢ (xᵢ−μᵢ)²·wᵢ with
   * w = 1/σᵢ² — the multivariate outlier score over embedding columns
   * (per-dim z-scores summed in quadrature), the statistical companion
-  * to [[VecStats]]' structural checks. `right` is a FOLDABLE
+  * to [[VecStats]]' structural checks. `params` is a literal
   * [μ, w] pair of double arrays (trained on one [[VecMomentsAgg]]
   * pass, broadcast as a literal — no join touches the corpus).
   * Accumulates in dimension order so the result is bit-stable; null /
   * wrong-length vectors → null (dim defects are [[VecStats]]' job).
   * One interpreted loop per row — the measured-faster shape vs HOF
   * chains (BENCH.md optimization log). */
-case class DiagMahalanobis(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType, right.foldable) match {
-      case (ArrayType(FloatType, _) | ArrayType(DoubleType, _),
-            ArrayType(ArrayType(DoubleType, _), _), true) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r, f) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_diag_mahalanobis requires (array<float|double>, foldable " +
-          s"array<array<double>> [mu, weights]), got (${l.simpleString}, " +
-          s"${r.simpleString}, foldable=$f)")
-    }
-
-  private def elemIsFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
+case class DiagMahalanobis(params: Literal)(elemIsFloat: Boolean = false) extends Kernel {
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Vector)
+  def dataType: DataType = DoubleType
+  override def bind(types: Seq[DataType]): Kernel =
+    DiagMahalanobis(params)(Kernel.isFloatArray(types.head))
 
   @transient private lazy val (mu, wt): (Array[Double], Array[Double]) = {
-    val p = right.eval(null).asInstanceOf[ArrayData]
+    val p = params.eval(null).asInstanceOf[ArrayData]
     require(p.numElements() == 2,
       "params must be [mu, weights] — exactly two arrays")
     (p.getArray(0).toDoubleArray(), p.getArray(1).toDoubleArray())
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val v = l.asInstanceOf[ArrayData]
+  override def eval(input: Any): Any = {
+    val v = input.asInstanceOf[ArrayData]
     val d = mu.length
     if (v.numElements() != d || wt.length != d) return null
     val isF = elemIsFloat
@@ -422,10 +328,6 @@ case class DiagMahalanobis(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DiagMahalanobis =
-    copy(left = l, right = r)
-  override def prettyName: String = "graft_diag_mahalanobis"
 }
 
 object VectorExpressions {

@@ -1220,26 +1220,19 @@ object Drift {
 
   /** In-place quicksort of three parallel arrays by the key column —
     * java.lang.Double.compare order, exactly the Ordering a boxed
-    * tuple sortBy applies (NaN last, -0.0 < 0.0). */
-  private def sortHistByKey(keys: Array[Double], a: Array[Long],
-                            b: Array[Long]): Unit = {
+    * tuple sortBy applies (NaN last, -0.0 < 0.0). It recurses into the
+    * smaller side of each partition and loops on the larger one, so the
+    * stack depth stays below log2(n) on any input. */
+  private[graft] def sortHistByKey(keys: Array[Double], a: Array[Long],
+                                   b: Array[Long]): Unit = {
     def swap(i: Int, j: Int): Unit = {
       val k = keys(i); keys(i) = keys(j); keys(j) = k
       val x = a(i); a(i) = a(j); a(j) = x
       val y = b(i); b(i) = b(j); b(j) = y
     }
-    def sort(lo: Int, hi: Int): Unit =
-      if (hi - lo < 16) {
-        var i = lo + 1
-        while (i <= hi) {
-          var j = i
-          while (j > lo &&
-              java.lang.Double.compare(keys(j - 1), keys(j)) > 0) {
-            swap(j - 1, j); j -= 1
-          }
-          i += 1
-        }
-      } else {
+    def sort(from: Int, to: Int): Unit = {
+      var lo = from; var hi = to
+      while (hi - lo >= 16) {
         // median-of-three pivot, Hoare partition
         val mid = (lo + hi) >>> 1
         if (java.lang.Double.compare(keys(mid), keys(lo)) < 0) swap(mid, lo)
@@ -1252,9 +1245,18 @@ object Drift {
           while (java.lang.Double.compare(keys(j), pivot) > 0) j -= 1
           if (i <= j) { swap(i, j); i += 1; j -= 1 }
         }
-        if (lo < j) sort(lo, j)
-        if (i < hi) sort(i, hi)
+        if (j - lo < hi - i) { sort(lo, j); lo = i } else { sort(i, hi); hi = j }
       }
+      var i = lo + 1
+      while (i <= hi) {
+        var j = i
+        while (j > lo &&
+            java.lang.Double.compare(keys(j - 1), keys(j)) > 0) {
+          swap(j - 1, j); j -= 1
+        }
+        i += 1
+      }
+    }
     if (keys.length > 1) sort(0, keys.length - 1)
   }
 

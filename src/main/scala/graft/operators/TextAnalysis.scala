@@ -1602,9 +1602,10 @@ object TextAnalysis {
     * greek — deterministic, SQL-replicable), and flags docs whose
     * dominant-script share of tracked letters falls below `minPurity`.
     *
-    * Pure codegen'd projection (regexp_count per range — the
-    * [[encodingQc]] pattern; the ranges are RE2-compatible so the
-    * oracle runs the IDENTICAL character classes), zero shuffle. */
+    * Codegen'd projection (regexp_count per range — the [[encodingQc]]
+    * pattern; the ranges are RE2-compatible so the oracle runs the
+    * IDENTICAL character classes), then ONE shuffle: repartition + orderBy
+    * by id, so the range sort does not evaluate the regexes twice. */
   def scriptMix(df: DataFrame, idCol: String, textCol: String,
                 minPurity: Double = 0.8): DataFrame = {
     require(minPurity > 0 && minPurity <= 1, "minPurity in (0, 1]")

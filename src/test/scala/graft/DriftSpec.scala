@@ -299,4 +299,31 @@ class DriftSpec extends AnyFunSuite {
         "x", "y").head()
     }
   }
+
+  test("sortHistByKey: sorted, reversed, organ-pipe and median-of-three-killer inputs") {
+    val n = 1 << 16
+    val k = n / 2
+    // Musser's median-of-three killer (Introspective Sorting, 1997)
+    val killer = new Array[Double](n)
+    for (i <- 1 to k) {
+      if (i % 2 == 1) { killer(i - 1) = i; killer(i) = k + i }
+      killer(k + i - 1) = 2 * i
+    }
+    val inputs = Seq(
+      "sorted" -> Array.tabulate(n)(_.toDouble),
+      "reversed" -> Array.tabulate(n)(i => (n - i).toDouble),
+      "organ-pipe" -> Array.tabulate(n)(i => math.min(i, n - 1 - i).toDouble),
+      "median-of-three killer" -> killer)
+    for ((name, keys0) <- inputs) {
+      val keys = keys0.clone()
+      // both count arrays carry the original index, so alignment is checkable
+      val a = Array.tabulate(n)(_.toLong)
+      val b = Array.tabulate(n)(i => -i.toLong)
+      Drift.sortHistByKey(keys, a, b)
+      val expected = keys0.clone()
+      java.util.Arrays.sort(expected)
+      assert(java.util.Arrays.equals(keys, expected), name)
+      assert((0 until n).forall(i => keys0(a(i).toInt) == keys(i) && b(i) == -a(i)), name)
+    }
+  }
 }

@@ -89,4 +89,14 @@ class ManifestSpec extends AnyFunSuite {
         }
     }
   }
+
+  test("esc: CLI JSON lines stay valid for quotes, backslashes and control characters") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (v <- Seq("""C:\snap""", "say \"hi\"", "tab\tnew\nline\u0001bell", "/tmp/graft/seq")) {
+      val line = s"""{"mode":"drift-check","path":"${Manifest.esc(v)}"}"""
+      assert(json.readTree(line).get("path").asText() === v, line)
+    }
+    // ordinary values print byte-identical: the partition lines keep {"partition":"7",...}
+    assert(Manifest.esc("7") === "7" && Manifest.esc("/tmp/graft/seq") === "/tmp/graft/seq")
+  }
 }

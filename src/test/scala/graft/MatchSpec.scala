@@ -83,12 +83,11 @@ class MatchSpec extends SparkSpec {
   }
 
   test("phraseCounts rejects empty phrases loudly") {
-    val child = org.apache.spark.sql.catalyst.expressions.Literal("x")
     intercept[IllegalArgumentException] {
-      graft.functions.PhraseCounts(child, Seq.empty)
+      graft.functions.PhraseCounts(Seq.empty)
     }
     intercept[IllegalArgumentException] {
-      graft.functions.PhraseCounts(child, Seq("a", ""))
+      graft.functions.PhraseCounts(Seq("a", ""))
     }
   }
 
