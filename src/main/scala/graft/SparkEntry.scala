@@ -31,6 +31,9 @@ object SparkEntry {
   private def orderedOnce(df: DataFrame, keys: String*): DataFrame =
     df.repartition(col(keys.head)).orderBy(keys.map(col): _*)
 
+  /** The five sequence constraints every sequence-table query checks. */
+  private def seqSuite = ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources)
+
   /** Oracle-visible tokenized-sequence table derived deterministically
     * from `documents.doc_id` by pure integer arithmetic, so DuckDB can
     * rebuild the byte-identical table from the same parquet and the
@@ -100,8 +103,7 @@ object SparkEntry {
     val base = Drift.categoricalFreq(docs.where(col("doc_id") % 2 === 0), "source")
     val obs = Drift.categoricalFreq(docs, "source")
     import s.implicits._
-    Seq(BigDecimal(stat(obs, base))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    Seq(round6(stat(obs, base)))
       .toDF(alias)
   }
 
@@ -128,8 +130,7 @@ object SparkEntry {
     * rows > 0 on sf0.001). */
   def entry(spark: SparkSession): DataFrame = {
     val df = SeqTableGen.generate(spark, 50000)
-    ValidationPass.seqViolations(
-        df, ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources))
+    ValidationPass.seqViolations(df, seqSuite)
       .groupBy("rule_id").agg(count(lit(1)).as("n_violations"))
       .orderBy("rule_id")
   }
@@ -2494,9 +2495,7 @@ object SparkEntry {
         .withColumn("part",
           substring(col("doc_id"), 5, 12).cast("long") % 7)
       ValidationPass.ruleLocality(
-        ValidationPass.seqViolations(base,
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources),
-          carryCols = Seq("part")), "part")
+        ValidationPass.seqViolations(base, seqSuite, carryCols = Seq("part")), "part")
     }),
 
     // context-window budgeting: token mass lost past K=8 per source —
@@ -2716,8 +2715,7 @@ object SparkEntry {
     // per-rule violation counts over the oracle-visible derived table —
     // the real ValidationPass.seqViolations path, hash-verified vs DuckDB
     "q_seq_validate" -> ((s, d) =>
-      ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
+      ValidationPass.seqViolations(seqFromDocs(s, d), seqSuite)
         .groupBy("rule_id").agg(count(lit(1)).as("n_violations"))
         .orderBy("rule_id")),
 
@@ -2725,8 +2723,7 @@ object SparkEntry {
     // the north-star "violations Dataset byte-identical" contract
     "q_seq_violations" -> ((s, d) =>
       orderedOnce(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)),
+        ValidationPass.seqViolations(seqFromDocs(s, d), seqSuite),
         "doc_id", "rule_id", "offending_value")),
 
     // substring-level dedup APPLY: tokens covered by a 3-gram occurring
@@ -3038,8 +3035,7 @@ object SparkEntry {
     // rows pass through byte-identical (checksummed below), dirty rows
     // grouped by their violated-rule combination
     "q_quarantine_clean" -> ((s, d) => {
-      val (clean, _) = ValidationPass.splitValid(seqFromDocs(s, d),
-        ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
+      val (clean, _) = ValidationPass.splitValid(seqFromDocs(s, d), seqSuite)
       clean.agg(count(lit(1)).as("n_clean"),
         sum(col("n_tok")).as("sum_ntok"),
         sum(size(col("tokens"))).as("sum_size"),
@@ -3047,8 +3043,7 @@ object SparkEntry {
     }),
 
     "q_quarantine_dirty" -> ((s, d) => {
-      val (_, dirty) = ValidationPass.splitValid(seqFromDocs(s, d),
-        ValidationPass.seqConstraints(50000, SeqTableGen.Sources))
+      val (_, dirty) = ValidationPass.splitValid(seqFromDocs(s, d), seqSuite)
       dirty.groupBy(array_join(col("violated_rules"), ",").as("rules"))
         .agg(count(lit(1)).as("n_rows"))
         .orderBy("rules")
@@ -3632,8 +3627,7 @@ object SparkEntry {
     // by nRules² per doc, over the flagship seq-constraint violations
     "q_rule_cooccur" -> ((s, d) =>
       ValidationPass.ruleCooccurrence(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)))),
+        ValidationPass.seqViolations(seqFromDocs(s, d), seqSuite))),
 
     // ---- Unicode script-mix profile: planted Cyrillic/CJK-dominant
     // docs and latin+Greek mixed docs by doc_id arithmetic — the
@@ -3648,9 +3642,9 @@ object SparkEntry {
           concat(substring(col("text"), 1, 30),
             lit(" αβγδεζηθικλμνξοπρστυφχψω αβγδεζηθικλμνξο")))
         .otherwise(col("text"))
-      TextAnalysis.scriptMix(
+      orderedOnce(TextAnalysis.scriptMix(
         t(s, d, "documents").select(col("doc_id"), txt.as("text")),
-        "doc_id", "text")
+        "doc_id", "text"), "doc_id")
     }),
 
     // ---- Heaps'-law vocab-growth fit (the q_zipf_fit companion):
@@ -3978,8 +3972,7 @@ object SparkEntry {
     // min/max exemplars — O(1) state per rule, never a collect_list
     "q_rule_examples" -> ((s, d) =>
       ValidationPass.ruleSummary(
-        ValidationPass.seqViolations(seqFromDocs(s, d),
-          ValidationPass.seqConstraints(50000, SeqTableGen.Sources)))),
+        ValidationPass.seqViolations(seqFromDocs(s, d), seqSuite))),
 
     // ---- rare-category tail: planted one-doc 'exotic' source — where
     // typos and schema drift hide in a 10¹²-row table
@@ -4167,10 +4160,7 @@ object SparkEntry {
       val shifted = li.withColumn("l_quantity", col("l_quantity") + lit(5.0))
       val v = Drift.check(shifted, "l_quantity", base, "l_returnflag", baseFreq)
       import s.implicits._
-      // HALF_UP to match SQL round() semantics exactly
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      Seq((r6(v.ksStatistic), r6(v.ksCritical), v.ksDrifted, r6(v.chiSquare)))
+      Seq((round6(v.ksStatistic), round6(v.ksCritical), v.ksDrifted, round6(v.chiSquare)))
         .toDF("ks_stat", "ks_critical", "ks_drifted", "chi_square")
     }))
 

@@ -1,9 +1,10 @@
 package graft.checkpoint
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardOpenOption.{CREATE, READ, WRITE}
 
 /** Checkpointed partition manifest for resumable validation runs
   * (north-star requirement: "resumes from a checkpointed manifest of
@@ -13,11 +14,14 @@ import scala.jdk.CollectionConverters._
   * Format: one JSON object per line (append-only JSONL) —
   * `{"partition":"3","rows":N,"violations":M,"pass":true,
   *   "snapshot_id":"...","files":[...],"completed_at_ms":T}`.
-  * Writes are atomic (temp file + ATOMIC_MOVE of the whole manifest) so
-  * a crash mid-write never records a partition whose violations were not
-  * fully emitted (SURVEY.md §7.4 hard part 5) — the violations parquet is
-  * written (and committed by Spark's output committer) BEFORE the
-  * manifest line is added.
+  * A commit appends its one line, so P commits write O(P) bytes; a
+  * re-marked partition appends again, and the last line per partition
+  * wins. The violations parquet is written (and committed by Spark's
+  * output committer) BEFORE the manifest line is appended, so a crash
+  * never records a partition whose violations were not fully emitted
+  * (SURVEY.md §7.4 hard part 5). A crash mid-append leaves a torn tail —
+  * a last line without its `\n`: that commit never finished, so
+  * [[load]] ignores it and the next [[markComplete]] truncates it away.
   *
   * Resume = anti-filter: partitions present in the manifest are skipped;
   * everything else reprocesses. Idempotent because each partition's
@@ -35,31 +39,37 @@ object Manifest {
 
   def empty: State = State(Map.empty)
 
+  /** Every complete line, the last one per partition winning; a torn
+    * tail is left out and a malformed complete line fails loudly. */
   def load(path: String): State = {
     val p = Paths.get(path)
     if (!Files.exists(p)) return empty
-    val entries = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.trim.nonEmpty)
-      .map(parseLine)
-      .map(e => e.partition -> e)
-      .toMap
-    State(entries)
+    val bytes = Files.readAllBytes(p)
+    val committed = new String(bytes, 0, bytes.lastIndexOf('\n'.toByte) + 1, StandardCharsets.UTF_8)
+    State(committed.split('\n').iterator.filter(_.trim.nonEmpty).map(parseLine)
+      .map(e => e.partition -> e).toMap)
   }
 
-  /** Append one completed partition, atomically rewriting the manifest. */
+  /** Append one completed partition's line in a single write, after
+    * truncating a torn tail left by an unfinished commit. */
   def markComplete(
       path: String, partition: String, rows: Long, violations: Long, pass: Boolean,
       snapshotId: String = "", files: Seq[String] = Nil): Unit = synchronized {
-    val now = System.currentTimeMillis()
-    val entry = Entry(partition, rows, violations, pass, snapshotId, files, now)
-    val existing = load(path).entries + (partition -> entry)
+    val line = render(Entry(partition, rows, violations, pass, snapshotId, files,
+      System.currentTimeMillis())) + "\n"
     val p = Paths.get(path)
     Option(p.getParent).foreach(Files.createDirectories(_))
-    val tmp: Path = Files.createTempFile(
-      Option(p.getParent).getOrElse(Paths.get(".")), ".manifest", ".tmp")
-    val body = existing.values.toSeq.sortBy(_.partition).map(render).mkString("", "\n", "\n")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val ch = FileChannel.open(p, CREATE, READ, WRITE)
+    try {
+      // the committed prefix ends at the last '\n': read back from the
+      // end, so only a torn tail is ever read
+      val last = ByteBuffer.allocate(1)
+      var end = ch.size()
+      while (end > 0 && { last.clear(); ch.read(last, end - 1); last.get(0) != '\n' }) end -= 1
+      ch.truncate(end)
+      val buf = ByteBuffer.wrap(line.getBytes(StandardCharsets.UTF_8))
+      while (buf.hasRemaining) ch.write(buf, end + buf.position())
+    } finally ch.close()
   }
 
   /** JSON string body. Control characters and surrogates go out as

@@ -1,8 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.checkpoint.Manifest
 import graft.checkpoint.Manifest.esc
 import graft.model.Violation
 import graft.operators.{Drift, Uniqueness, ValidationPass}
@@ -90,7 +91,6 @@ object Main {
         // so the micro-batch run keeps bit-identical survivors to the
         // batch run (parity verified inline and pinned by StreamingSpec)
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-        import org.apache.spark.sql.functions._
         val docs = spark.read.parquet(s"$dir/documents.parquet")
           .select("doc_id", "source", "text", "n_chars")
         val seen = docs.where(col("doc_id") < 100)
@@ -116,31 +116,7 @@ object Main {
           s""""in":${docs.count()},"kept":$kept,"batch_kept":$batchKept,""" +
           s""""parity":${kept == batchKept}}""")
       case "stream-validate" :: path :: out :: Nil =>
-        // validate-as-data-lands: the stateless constraint projection
-        // runs on a file stream (each new parquet file = a micro-batch;
-        // production swaps in the Kafka/Iceberg source, same plan), and
-        // the streaming checkpoint gives exactly-once resume — the
-        // streaming complement of the manifest-checkpointed batch modes.
-        // Uniqueness is cross-row state and stays with the batch pass
-        // (or streaming.firstSeenOnly where per-key state is acceptable).
-        val schema = spark.read.parquet(path).schema
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 4).parquet(path)
-        val vio = ValidationPass.seqViolations(stream,
-          ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources))
-        val q = vio.writeStream.format("parquet")
-          .option("path", s"$out/violations_stream")
-          .option("checkpointLocation", s"$out/_stream_checkpoint")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // explicit schema: a fully-clean run leaves _spark_metadata but
-        // zero data files, and schema INFERENCE on that throws — the
-        // violations schema is known from the streaming frame itself
-        val n = spark.read.schema(vio.schema)
-          .parquet(s"$out/violations_stream").count()
-        println(s"""{"mode":"stream-validate","path":"${esc(path)}","violations":$n}""")
+        streamValidate(spark, path, out)
       case "drift-baseline" :: path :: out :: rest =>
         // profile n_tok + source of a stored table once; later runs
         // drift-check snapshots against the STORED baseline. The
@@ -185,11 +161,6 @@ object Main {
           s""""ks_drifted":${v.ksDrifted},"chi_square":${d6(v.chiSquare)},""" +
           s""""chi_drifted":${v.chiDrifted}}""")
       case "health" :: rest =>
-        // feed-health observability over an event stream: the composed
-        // round-5 battery — growth accounting (new/retained/resurrected/
-        // churned), recency-decayed volume per type, Markov
-        // stationarity, weekday rhythm, lead-lag, rolling distinct —
-        // one JSON line per signal, driver-parseable
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
         health(spark, dir)
       case other =>
@@ -313,36 +284,73 @@ object Main {
       s""""rolling_7d":${rd.getLong(3)}}""")
   }
 
-  /** Full check suite over a stored partitioned table. */
-  def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
-    import graft.checkpoint.Manifest
-    val df = spark.read.parquet(path)
+  /** Validate-as-data-lands: [[checkSuite]] on a file stream (each new
+    * parquet file = a micro-batch; production swaps in the Kafka/Iceberg
+    * source, same plan), with the streaming checkpoint giving
+    * exactly-once resume — the streaming complement of the
+    * manifest-checkpointed batch modes. Uniqueness is cross-row state and
+    * stays with the batch pass (or streaming.firstSeenOnly where per-key
+    * state is acceptable). */
+  def streamValidate(spark: SparkSession, path: String, out: String): Unit = {
+    val stream = spark.readStream.schema(spark.read.parquet(path).schema)
+      .option("maxFilesPerTrigger", 4).parquet(path)
+    val vio = ValidationPass.seqViolations(stream, checkSuite)
+    val q = vio.writeStream.format("parquet")
+      .option("path", s"$out/violations_stream")
+      .option("checkpointLocation", s"$out/_stream_checkpoint")
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    // explicit schema: a fully-clean run leaves _spark_metadata but
+    // zero data files, and schema INFERENCE on that throws — the
+    // violations schema is known from the streaming frame itself
+    val n = spark.read.schema(vio.schema)
+      .parquet(s"$out/violations_stream").count()
+    println(s"""{"mode":"stream-validate","path":"${esc(path)}","violations":$n}""")
+  }
+
+  /** Resume step of both validate modes: the table's partitions (`all`
+    * for an unpartitioned table) that the manifest does not hold yet,
+    * after the `{"mode":…}` header line. */
+  private def pending(df: DataFrame, mode: String, manifest: Option[String]): Seq[String] = {
     val partitions: Seq[String] =
       if (df.columns.contains("part_bucket"))
         df.select("part_bucket").distinct().collect().map(_.get(0).toString).sorted.toSeq
       else Seq("all")
     val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
     val todo = partitions.filterNot(mf.isComplete)
-    println(s"""{"mode":"validate","partitions":${partitions.size},"todo":${todo.size}}""")
-    todo.foreach { p =>
+    println(s"""{"mode":"$mode","partitions":${partitions.size},"todo":${todo.size}}""")
+    todo
+  }
+
+  /** Commit step of both validate modes, run once the partition's
+    * violations are written: the manifest records partition `p` with its
+    * lineage (the concrete files its verdict was read from; the Iceberg
+    * snapshot-id slot carries the scan timestamp for the parquet
+    * stand-in), then its verdict line prints. */
+  private def commit(manifest: Option[String], scanned: DataFrame, p: String,
+                     nRows: Long, nViol: Long, snapshotId: String): Unit = {
+    manifest.foreach { mfPath =>
+      // inputFiles reports the whole relation, not the pruned scan —
+      // restrict lineage to this partition's directory
+      val files = scanned.inputFiles.toSeq.filter(f => p == "all" || f.contains(s"part_bucket=$p/"))
+      Manifest.markComplete(mfPath, p, nRows, nViol, nViol == 0,
+        snapshotId = snapshotId, files = files.sorted)
+    }
+    println(s"""{"partition":"${esc(p)}","rows":$nRows,"violations":$nViol,"pass":${nViol == 0}}""")
+  }
+
+  /** Full check suite over a stored partitioned table, one
+    * [[runChecks]] job per pending partition. */
+  def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
+    val df = spark.read.parquet(path)
+    pending(df, "validate", manifest).foreach { p =>
       val slice = if (p == "all") df else df.where(col("part_bucket") === p.toInt)
       // same directory layout as validate-batch (part_bucket=N), so one
       // out dir can be shared across modes without ambiguity
-      val (verdict, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
-      manifest.foreach { mfPath =>
-        // lineage: the concrete files this partition's verdict was read
-        // from (Iceberg snapshot-id slot carries the scan timestamp for
-        // the parquet stand-in)
-        // inputFiles reports the whole relation, not the pruned scan —
-        // restrict lineage to this partition's directory
-        val partFiles =
-          if (p == "all") slice.inputFiles.toSeq
-          else slice.inputFiles.toSeq.filter(_.contains(s"part_bucket=$p/"))
-        Manifest.markComplete(mfPath, p, nRows, nViol, verdict,
-          snapshotId = s"scan-${System.currentTimeMillis()}",
-          files = partFiles.sorted)
-      }
-      println(s"""{"partition":"${esc(p)}","rows":$nRows,"violations":$nViol,"pass":$verdict}""")
+      val (_, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
+      commit(manifest, slice, p, nRows, nViol, s"scan-${System.currentTimeMillis()}")
     }
   }
 
@@ -360,34 +368,22 @@ object Main {
     * nothing, and the rerun redoes all still-pending partitions.
     * Completed partitions from EITHER mode are skipped by both. */
   def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
-    import graft.checkpoint.Manifest
     val df = spark.read.parquet(path)
     require(df.columns.contains("part_bucket"),
       "validate-batch needs a part_bucket-partitioned table (gen mode writes one)")
-    val partitions = df.select("part_bucket").distinct()
-      .collect().map(_.get(0).toString).sorted.toSeq
-    val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
-    val todo = partitions.filterNot(mf.isComplete)
-    println(s"""{"mode":"validate-batch","partitions":${partitions.size},"todo":${todo.size}}""")
+    val todo = pending(df, "validate-batch", manifest)
     if (todo.isEmpty) return
     val slice = df.where(col("part_bucket").isin(todo.map(_.toInt): _*))
-    val vio = ValidationPass.seqViolations(slice, checkSuite, carryCols = Seq("part_bucket"))
     // global uniqueness in one shuffle (the bucketing co-locates equal
-    // keys, so per-bucket == global; computed over the whole slice here)
-    val dups = Uniqueness.duplicatesSimple(slice, "doc_id")
-    val uniq = slice.join(dups, Seq("doc_id"))
-      .select(col("part_bucket"), col("doc_id"),
-        lit("R_UNIQUE_DOCID").as("rule_id"),
-        concat(lit("n_occurrences="), col("n_occurrences").cast("string"))
-          .as("offending_value"))
-    // persist the (small, violations-only) frame once: the write and the
+    // keys, so per-bucket == global; computed over the whole slice here).
+    // Persist the (small, violations-only) frame once: the write and the
     // per-partition counts both read the cached copy, so the corpus scans
     // ONCE and the counts come from THIS run's rows — never from the sink.
     // (Re-reading $out/violations was wrong: a pending partition with
     // zero violations writes no directory, so stale files from an earlier
     // run into the same out dir would be counted and the partition
     // wrongly failed — ADVICE round 2.)
-    val all = vio.unionByName(uniq)
+    val all = suiteViolations(slice, Seq("part_bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // dynamic overwrite replaces only partitions PRESENT in this run's
     // output — a pending partition whose violations are now ZERO writes
@@ -416,38 +412,32 @@ object Main {
     all.unpersist()
     val snapshot = s"scan-${System.currentTimeMillis()}"
     todo.foreach { p =>
-      val nRows = rowsByPart.getOrElse(p, 0L)
-      val nViol = violByPart.getOrElse(p, 0L)
-      manifest.foreach { mfPath =>
-        val partFiles = slice.inputFiles.toSeq.filter(_.contains(s"part_bucket=$p/"))
-        Manifest.markComplete(mfPath, p, nRows, nViol, nViol == 0,
-          snapshotId = snapshot, files = partFiles.sorted)
-      }
-      println(s"""{"partition":"${esc(p)}","rows":$nRows,"violations":$nViol,"pass":${nViol == 0}}""")
+      commit(manifest, slice, p, rowsByPart.getOrElse(p, 0L), violByPart.getOrElse(p, 0L), snapshot)
     }
   }
 
-  /** The five constraint checks + referential fused into ONE scan, plus
-    * the uniqueness aggregate (the only check that must shuffle);
-    * returns (pass, nViolations, nRows).
-    *
-    * The referential allowlist here is driver-sized (a literal Seq), so
-    * the check compiles into the same fused predicate pass as the other
-    * constraints — a broadcast hash join against a 3-row dimension would
-    * buy nothing and cost a THIRD full scan of the corpus.
-    * [[Referential.violations]] remains the path for allowlists that
-    * live in a real dimension table. */
+  /** The stored-table suite's violations, (carryCols…, doc_id, rule_id,
+    * offending_value): [[checkSuite]] fused into ONE scan — its
+    * referential allowlist is a literal, so a broadcast join against a
+    * 3-row dimension would buy nothing and cost a third full scan
+    * ([[Referential.violations]] serves allowlists that live in a real
+    * dimension table) — plus the uniqueness aggregate, the only check
+    * that must shuffle. `rows`, if given, counts the check scan's rows. */
+  private def suiteViolations(df: DataFrame, carryCols: Seq[String],
+                              rows: Option[Observation] = None): DataFrame =
+    ValidationPass.seqViolations(rows.fold(df)(df.observe(_, count(lit(1)).as("n"))),
+        checkSuite, carryCols)
+      .unionByName(Uniqueness.violations(df, "doc_id", carryCols = carryCols))
+
+  /** [[suiteViolations]] of one partition, written to `violOut`;
+    * returns (pass, nViolations, nRows). */
   def runChecks(spark: SparkSession, df: DataFrame, violOut: String): (Boolean, Long, Long) = {
     // both counts ride the write job via CollectMetrics — no second read
     // of the violations parquet (round-1 VERDICT "What's wrong" #6) and
     // no separate count job over the input
-    val rowsObs = org.apache.spark.sql.Observation()
-    val counted = df.observe(rowsObs, count(lit(1)).as("n"))
-    val vio = ValidationPass.seqViolations(counted, checkSuite)
-    val uniq = Uniqueness.violations(df, "doc_id")
-    val all = vio.unionByName(uniq)
-    val obs = org.apache.spark.sql.Observation()
-    all.observe(obs, count(lit(1)).as("n"))
+    val rowsObs = Observation()
+    val obs = Observation()
+    suiteViolations(df, Nil, Some(rowsObs)).observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(violOut)
     val nViol = obs.get("n").asInstanceOf[Long]
     val nRows = rowsObs.get("n").asInstanceOf[Long]
@@ -512,17 +502,15 @@ object Main {
     // window materialization — the post-validation steps a token-native
     // trainer pipeline runs, end-to-end on one generated table
     val seq = SeqTableGen.generate(spark, 50000).cache()
-    val constraints = graft.operators.ValidationPass
-      .seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources)
-    val (clean0, dirty) = graft.operators.ValidationPass
-      .splitValid(seq, constraints)
+    val (clean0, dirty) = ValidationPass.splitValid(seq,
+      ValidationPass.seqConstraints(SeqTableGen.Vocab, SeqTableGen.Sources))
     // duplicate doc_ids pass every per-row constraint but are ambiguous
     // keys for the id-joined steps below (offsets, decontamination
     // grouping) — the uniqueness stage excludes them, exactly like the
     // validated-output contract (SeqEngineSpec token-equality test)
     // no broadcast hint: the dup-id set is unbounded in principle (the
     // repo's own no-forced-broadcast rule) — AQE broadcasts when small
-    val dupIds = Uniqueness.duplicatesSimple(clean0, "doc_id").select("doc_id")
+    val dupIds = Uniqueness.violations(clean0, "doc_id").select("doc_id")
     val clean = clean0.join(dupIds, Seq("doc_id"), "left_anti")
     val benchTok = seq
       .where(pmod(xxhash64(col("doc_id")), lit(100L)) === 0)

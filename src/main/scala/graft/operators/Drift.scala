@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HistogramAgg
+import graft.round6
 
 /** Distribution-drift detection of `n_tok` and `source` frequencies
   * against a stored baseline profile (north-star requirement; no
@@ -69,8 +70,8 @@ object Drift {
       val stat = ksStatistic(p, baseline)
       val crit = ksCritical(p.total, baseline.total, alpha)
       (Option(r.getString(0)).getOrElse("<null>"), p.total,
-        BigDecimal(stat).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(crit).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        round6(stat),
+        round6(crit),
         stat > crit)
     }.toSeq.toDF(groupCol, "n", "ks_stat", "ks_critical", "ks_drifted")
   }
@@ -119,8 +120,7 @@ object Drift {
         j += 1
       }
       (Option(r.getString(0)).getOrElse("<null>"), gm.sum,
-        BigDecimal(acc * w).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
+        round6(acc * w))
     }.toDF(groupCol, "n", "w1")
   }
 
@@ -154,8 +154,6 @@ object Drift {
       .collect()
       .map(r => (r.getDate(0), r.getLong(1)))
       .sortBy(_._1.getTime)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import spark.implicits._
     if (daily.isEmpty)
       return Seq.empty[(Option[java.sql.Date], Option[Long], Option[Double],
@@ -166,19 +164,19 @@ object Drift {
     var trend = if (ys.length >= 2) ys(1) - ys(0) else 0.0
     val rows = daily.zipWithIndex.map { case ((day, y), i) =>
       if (i == 0)
-        (Option(day), Option(y), Option(r6(level)), Option(r6(trend)),
-          Option(r6(ys(0))))
+        (Option(day), Option(y), Option(round6(level)), Option(round6(trend)),
+          Option(round6(ys(0))))
       else {
         val fitted = level + trend
         val lNew = alpha * ys(i) + (1 - alpha) * (level + trend)
         trend = beta * (lNew - level) + (1 - beta) * trend
         level = lNew
-        (Option(day), Option(y), Option(r6(level)), Option(r6(trend)),
-          Option(r6(fitted)))
+        (Option(day), Option(y), Option(round6(level)), Option(round6(trend)),
+          Option(round6(fitted)))
       }
     }
     val horizon = (Option.empty[java.sql.Date], Option.empty[Long],
-      Option.empty[Double], Option.empty[Double], Option(r6(level + trend)))
+      Option.empty[Double], Option.empty[Double], Option(round6(level + trend)))
     (rows :+ horizon).toSeq.toDF("day", "y", "level", "trend", "fitted")
   }
 
@@ -632,8 +630,6 @@ object Drift {
     val no = observed.total.toDouble.max(1.0)
     val nb = baseline.total.toDouble.max(1.0)
     val keys = (observed.freq.keySet ++ baseline.freq.keySet).toSeq.sorted
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val terms = keys.map { k =>
       val po = math.max(observed.freq.getOrElse(k, 0L) / no, eps)
       val pb = math.max(baseline.freq.getOrElse(k, 0L) / nb, eps)
@@ -641,8 +637,8 @@ object Drift {
     }
     val total = terms.map(_._4).sum
     terms.map { case (k, po, pb, t) =>
-      (k, r6(po), r6(pb), r6(t),
-        if (total > 0.0) Some(r6(t / total)) else None)
+      (k, round6(po), round6(pb), round6(t),
+        if (total > 0.0) Some(round6(t / total)) else None)
     }.sortBy { case (k, _, _, t, _) => (-t, k) }
       .toDF("category", "p_obs", "p_base", "psi_term", "share")
   }
@@ -1540,8 +1536,8 @@ object Drift {
         val dfw = se2 * se2 /
           ((va / na) * (va / na) / (na - 1) + (vb / nb) * (vb / nb) / (nb - 1))
         (g, na, nb,
-          Some(BigDecimal(t).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble),
-          Some(BigDecimal(dfw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+          Some(round6(t)),
+          Some(round6(dfw)))
       }
     }.toDF(groupCol, "n_a", "n_b", "t_stat", "welch_df")
   }
@@ -1578,9 +1574,7 @@ object Drift {
         else {
           val d = (ma - mb) / math.sqrt(sp2)
           val gHedges = d * (1.0 - 3.0 / (4.0 * (na + nb) - 9.0))
-          def r6(x: Double): Double =
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          (g, na, nb, Some(r6(d)), Some(r6(gHedges)))
+          (g, na, nb, Some(round6(d)), Some(round6(gHedges)))
         }
       }
     }.toDF(groupCol, "n_a", "n_b", "cohens_d", "hedges_g")
@@ -1633,10 +1627,9 @@ object Drift {
       (nTot + 1.0 - tieTerm / (nTot.toDouble * (nTot - 1)))
     val z =
       if (sigma2 <= 0.0) None
-      else Some(BigDecimal((u - mu) / math.sqrt(sigma2))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      else Some(round6((u - mu) / math.sqrt(sigma2)))
     Seq((nA, nB,
-      Some(BigDecimal(u).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble),
+      Some(round6(u)),
       z)).toDF("n_a", "n_b", "u_stat", "z_stat")
   }
 
@@ -1687,8 +1680,7 @@ object Drift {
     val ssw = stats.map { case (_, ng, sg, ssg) => ssg - sg * sg / ng }.sum
     val f =
       if (ssw <= 0.0) None
-      else Some(BigDecimal((ssb / (k - 1)) / (ssw / (n - k)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      else Some(round6((ssb / (k - 1)) / (ssw / (n - k))))
     Seq((n, k, f, k - 1, n - k)).toDF("n", "k", "f_stat", "df1", "df2")
   }
 
@@ -1727,8 +1719,6 @@ object Drift {
     val sigma =
       if (t < 2) 0.0
       else math.sqrt((xs.map(x => x * x).sum - xs.sum * xs.sum / t) / (t - 1))
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = daily.zipWithIndex.map { case ((day, x), i0) =>
       val ti = i0 + 1
       var acc = z0 * math.pow(1.0 - lambda, ti.toDouble)
@@ -1740,7 +1730,7 @@ object Drift {
       val band = l * sigma *
         math.sqrt(lambda / (2.0 - lambda) *
           (1.0 - math.pow(1.0 - lambda, 2.0 * ti)))
-      (day, x, r6(acc), r6(z0 - band), r6(z0 + band),
+      (day, x, round6(acc), round6(z0 - band), round6(z0 + band),
         acc < z0 - band || acc > z0 + band)
     }
     rows.toSeq.toDF("day", "x", "ewma", "lcl", "ucl", "out_of_control")
@@ -1803,15 +1793,13 @@ object Drift {
     val deNum = (for {
       (c1, n1) <- margins; (c2, n2) <- margins if c1 != c2
     } yield n1 * n2).sum
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val (dObs, dExp, alpha) =
       if (n < 2 || deNum == 0.0)
-        (if (n > 0) Some(r6(doNum / n)) else None, None, None)
+        (if (n > 0) Some(round6(doNum / n)) else None, None, None)
       else {
         val dO = doNum / n
         val dE = deNum / (n * (n - 1.0))
-        (Some(r6(dO)), Some(r6(dE)), Some(r6(1.0 - dO / dE)))
+        (Some(round6(dO)), Some(round6(dE)), Some(round6(1.0 - dO / dE)))
       }
     import spark.implicits._
     Seq((nItemsTotal, nItemsUsed, math.round(n), dObs, dExp, alpha))

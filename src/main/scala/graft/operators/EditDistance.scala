@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.round6
+
 /** Edit-distance near-duplicate detection over SHORT keys (titles,
   * canonical URLs, product names, column headers) — the typo-tolerant
   * sibling of the hash families in [[Dedup]]: MinHash/SimHash see a
@@ -123,12 +125,10 @@ object EditDistance {
     val total = n * (n - 1) / 2
     import spark.implicits._
     Seq((n, total, nCand,
-        if (total > 0) BigDecimal(1.0 - nCand.toDouble / total)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if (total > 0) round6(1.0 - nCand.toDouble / total)
         else 0.0,
         nTrue, nFound,
-        if (nTrue > 0) BigDecimal(nFound.toDouble / nTrue)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if (nTrue > 0) round6(nFound.toDouble / nTrue)
         else 1.0))
       .toDF("n_items", "n_pairs_total", "n_candidates", "reduction_ratio",
         "n_true", "n_found", "completeness")

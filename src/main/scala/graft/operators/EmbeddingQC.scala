@@ -43,7 +43,9 @@ object EmbeddingQC {
 
   /** Sparse violations (idCol, rule_id, offending_value). `normBounds`
     * checks the 4-dp-rounded L2 norm so the rule is exactly reproducible
-    * (same convention as the TextProfile-derived scores). */
+    * (same convention as the TextProfile-derived scores). A NULL verdict
+    * is no violation here, unlike [[ValidationPass.SeqConstraint]]: a NULL
+    * vector is R_EMB_NULL's alone, not one hit per rule. */
   def violations(df: DataFrame, idCol: String, vecCol: String, expectedDim: Int,
                  normBounds: Option[(Double, Double)] = None): DataFrame = {
     val vs = VectorExpressions.vecStats(col(vecCol))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VecMomentsAgg
+import graft.round6
 
 /** Second-order statistics and PCA over an embedding column — the
   * linear-algebra tier of the vector pipeline: exact covariance /
@@ -64,12 +65,10 @@ object EmbeddingStats {
   def covarianceDf(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
     val spark = df.sparkSession
     val m = moments(df, vecCol, dim)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = for {
       i <- 0 until dim
       j <- i until dim
-    } yield Row(i + 1, j + 1, r6(m.cov(i)(j)))
+    } yield Row(i + 1, j + 1, round6(m.cov(i)(j)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq, 1),
       StructType(Seq(
@@ -236,8 +235,6 @@ object EmbeddingStats {
         sum(col("__x").cast("double") * col("__x")).as("__ss"),
         count(lit(1)).as("__c"))
       .collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     if (rows.isEmpty)
@@ -269,8 +266,8 @@ object EmbeddingStats {
         val d = ma(k) - mb(k); d2 += d * d; k += 1
       }
       val denom = ta + tb
-      (labels(i), labels(j), na, nb, r6(d2),
-        if (denom > 0.0) Option(r6(d2 / denom)) else None)
+      (labels(i), labels(j), na, nb, round6(d2),
+        if (denom > 0.0) Option(round6(d2 / denom)) else None)
     }).toDF("label_a", "label_b", "n_a", "n_b", "dist2", "fisher")
   }
 
@@ -327,11 +324,9 @@ object EmbeddingStats {
       }
       dot / (math.sqrt(na) * math.sqrt(nb) + 1e-30)
     }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     byGroup.toSeq.sortBy(_._1).map { case (g, rs) =>
       val (c, n) = centroid(rs.toArray)
-      (g, n, r6(cos(c, global)))
+      (g, n, round6(cos(c, global)))
     }.toDF(groupCol, "n_vecs", "cos_to_global")
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.round6
+
 /** Dataset mixing for training-data assembly: deterministic per-source
   * downsampling to target weights (the "mix web at 0.6, code at 0.25,
   * books at 0.15" step every LLM data pipeline runs before tokenizing).
@@ -800,8 +802,7 @@ object Mixing {
     cells.keys.toSeq.sorted
       .map { case k @ (r, c) =>
         (r, c, cells(k),
-          BigDecimal(raked(k)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble)
+          round6(raked(k)))
       }
       .toDF(rowCol, colCol, "n_rows", "weight")
   }
@@ -887,10 +888,8 @@ object Mixing {
         val want = base + (if (bonus.contains(st)) 1L else 0L)
         val alloc = math.min(want, n)
         (st, n,
-          BigDecimal(sg).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble,
-          BigDecimal(w).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble,
+          round6(sg),
+          round6(w),
           alloc, want > n)
       }.toSeq
       .toDF("stratum", "n_rows", "sigma", "weight", "alloc", "capped")
@@ -1082,13 +1081,11 @@ object Mixing {
     val st = ranked.agg(count(lit(1)).as("n"),
       sum(d * d).as("sum_d2")).head()
     val n = st.getLong(0); val d2 = st.getLong(1)
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     val rho =
       if (n < 2) None
-      else Option(r6(1.0 - 6.0 * d2.toDouble / (n.toDouble *
+      else Option(round6(1.0 - 6.0 * d2.toDouble / (n.toDouble *
         (n.toDouble * n.toDouble - 1.0))))
     Seq((n, d2, rho)).toDF("n", "sum_d2", "rho")
   }
@@ -1137,13 +1134,11 @@ object Mixing {
       val a = share(b, refGroup, nA); val bb = share(b, targetGroup, nB)
       if (a > 0.0 && bb > 0.0) Some(bb / a) else None
     }.minOption.getOrElse(0.0)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     allBins.sorted.map { b =>
       val a = share(b, refGroup, nA); val bb = share(b, targetGroup, nB)
       val unmatchable = a > 0.0 && bb == 0.0
       val keep = if (bb == 0.0) 0.0 else math.min(1.0, a / bb * sStar)
-      (b, r6(a), r6(bb), r6(keep),
+      (b, round6(a), round6(bb), round6(keep),
         math.round(keep * rows.getOrElse((b, targetGroup), 0L)),
         unmatchable)
     }.toDF("bin", "ref_share", "target_share", "keep_fraction",

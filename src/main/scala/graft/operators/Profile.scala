@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.round6
+
 /** Single fused-aggregate column profiler — the north-star per-column
   * stats pass (BASELINE.json): count / null-rate / min / max / distinct
   * via HyperLogLog++ (`approx_count_distinct`) / quantiles via
@@ -434,13 +436,11 @@ object Profile {
       val d = (px(x) / n) * (py(y) / n)
       if (pxy > 0.0 && d > 0.0) pxy * math.log(pxy / d) else 0.0
     }.sum
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((joint.values.sum, r6(mi), r6(hx), r6(hy),
-      if (hx > 0.0) Option(r6(mi / hx)) else None,
-      if (hy > 0.0) Option(r6(mi / hy)) else None))
+    Seq((joint.values.sum, round6(mi), round6(hx), round6(hy),
+      if (hx > 0.0) Option(round6(mi / hx)) else None,
+      if (hy > 0.0) Option(round6(mi / hy)) else None))
       .toDF("n", "mi", "h_x", "h_y", "u_x_given_y", "u_y_given_x")
   }
 
@@ -471,11 +471,9 @@ object Profile {
       .head()
     val (nA, nB, m) = (row.getLong(0), row.getLong(1), row.getLong(2))
     val est = (nA + 1.0) * (nB + 1.0) / (m + 1.0) - 1.0
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = dfA.sparkSession
     import spark.implicits._
-    Seq((nA, nB, m, r6(est), r6(if (est > 0.0) nA / est else 1.0)))
+    Seq((nA, nB, m, round6(est), round6(if (est > 0.0) nA / est else 1.0)))
       .toDF("n_a", "n_b", "n_overlap", "est_population", "coverage_a")
   }
 
@@ -1598,8 +1596,7 @@ object Profile {
       var s = 0.0
       var i = 0
       while (i < k) { s += math.log(top(i) / xTail); i += 1 }
-      val alpha: Option[Double] = if (s > 0) Some(BigDecimal(k / s)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) else None
+      val alpha: Option[Double] = if (s > 0) Some(round6(k / s)) else None
       Seq((k.toLong, top.length.toLong, Option(xTail), alpha))
         .toDF("k", "n_used", "x_tail", "hill_alpha")
     }
@@ -1812,10 +1809,8 @@ object Profile {
         .toDF("k", "kth_hash", "est_distinct", "exact_distinct", "rel_error")
     val kth = bottom.last
     val est = (k - 1).toDouble * m.toDouble / kth.toDouble
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    Seq((k, Some(kth), r6(est), exact,
-      r6(math.abs(est - exact.toDouble) / exact.toDouble)))
+    Seq((k, Some(kth), round6(est), exact,
+      round6(math.abs(est - exact.toDouble) / exact.toDouble)))
       .toDF("k", "kth_hash", "est_distinct", "exact_distinct", "rel_error")
   }
 
@@ -1847,8 +1842,6 @@ object Profile {
         sum(x * x).as(s"__sxx$p"), sum(y * y).as(s"__syy$p"))
     }
     val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import spark.implicits._
     pairs.zipWithIndex.map { case ((a, b), p) =>
       val n = row.getAs[Long](s"__n$p")
@@ -1861,7 +1854,7 @@ object Profile {
           val vx = n * sxx - sx * sx
           val vy = n * syy - sy * sy
           if (vx <= 0.0 || vy <= 0.0) None
-          else Some(r6((n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy))))
+          else Some(round6((n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy))))
         }
       (a, b, n, corr)
     }.toSeq.toDF("col_a", "col_b", "n", "pearson_r")
@@ -2150,13 +2143,11 @@ object Profile {
         val v = if (i + 1 < means.length)
           means(i) * (1 - frac) + means(i + 1) * frac
         else means(i)
-        Some(BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
+        Some(round6(v))
       }
     val avg =
       if (means.isEmpty) None
-      else Some(BigDecimal(means.sum / means.length)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      else Some(round6(means.sum / means.length))
     import spark.implicits._
     Seq((means.length, avg, pct(lo), pct(hi)))
       .toDF("n_boot", "mean_of_means", "ci_lo", "ci_hi")

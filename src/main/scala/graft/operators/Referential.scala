@@ -20,7 +20,9 @@ object Referential {
     fact.join(broadcast(allow), Seq(factCol), "left_anti")
   }
 
-  /** Violation rows (idCol as doc_id, rule_id, offending_value). */
+  /** Violation rows (idCol as doc_id, rule_id, offending_value) against a
+    * dimension-table allowlist: a join, so no [[ValidationPass.SeqConstraint]]
+    * (a literal allowlist is one — cli.Main's R_REF_SOURCE). */
   def violations(
       fact: DataFrame, idCol: String, factCol: String,
       dim: DataFrame, dimCol: String,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.round6
+
 /** Quality-ranked corpus selection under a global token budget: walk
   * the documents from best to worst score and keep them until the
   * budget fills — "take the best N tokens", the standard final cut of a
@@ -115,11 +117,9 @@ object Selection {
         step += 1
       }
     }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
-    picked.toSeq.map { case (s, id, sc) => (s, id, r6(sc)) }
+    picked.toSeq.map { case (s, id, sc) => (s, id, round6(sc)) }
       .toDF("step", idCol, "score")
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.round6
+
 /** Gap-based sessionization: group each key's events into sessions
   * where consecutive events are less than `gap` apart, and aggregate
   * per session. The standard shape behind "user activity sessions",
@@ -201,12 +203,10 @@ object Sessionize {
       val p = c / n
       if (p > 0.0) -p * math.log(p) else 0.0
     }.sum
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((joint.values.sum, r6(hCond), r6(hMarg),
-      if (hMarg > 0.0) Option(r6(1.0 - hCond / hMarg)) else None))
+    Seq((joint.values.sum, round6(hCond), round6(hMarg),
+      if (hMarg > 0.0) Option(round6(1.0 - hCond / hMarg)) else None))
       .toDF("n_transitions", "h_conditional", "h_marginal",
         "predictability")
   }
@@ -329,13 +329,11 @@ object Sessionize {
       }.toMap
     }
     val nObs = obs.values.sum.toDouble.max(1.0)
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     types.map { t =>
       val o = obs(t) / nObs
-      (t, r6(o), r6(x(t)), r6(math.abs(o - x(t))))
+      (t, round6(o), round6(x(t)), round6(math.abs(o - x(t))))
     }.toDF("event_type", "observed_share", "stationary_share", "delta")
   }
 
@@ -358,8 +356,6 @@ object Sessionize {
         col(typeCol).isin(typeA, typeB))
       .groupBy(to_date(col(tsCol)).as("__d"), col(typeCol).as("__t"))
       .agg(count(lit(1)).as("__n")).collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     if (daily.isEmpty)
@@ -387,7 +383,7 @@ object Sessionize {
       val vy = n * syy - sy * sy
       val corr =
         if (vx <= 0.0 || vy <= 0.0) None
-        else Option(r6((n * sxy - sx * sy) / math.sqrt(vx * vy)))
+        else Option(round6((n * sxy - sx * sy) / math.sqrt(vx * vy)))
       (lag, idx.length.toLong, corr)
     }
     rows.toDF("lag", "n_days", "corr")
@@ -408,8 +404,6 @@ object Sessionize {
     val daily = df.where(col(tsCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__n")).collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     if (daily.isEmpty)
@@ -434,7 +428,7 @@ object Sessionize {
     }
     val ssBetween = groups.map { case (_, gn, gs, _) =>
       gs * gs / gn }.sum - s * s / n
-    val eta = if (ssTotal <= 0.0) None else Option(r6(ssBetween / ssTotal))
+    val eta = if (ssTotal <= 0.0) None else Option(round6(ssBetween / ssTotal))
     val peak = groups.maxBy(g => (g._4, -g._1))._1
     val trough = groups.minBy(g => (g._4, g._1))._1
     Seq((series.length.toLong, eta, Option(peak), Option(trough)))
@@ -506,8 +500,6 @@ object Sessionize {
       .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
         .as("__g"), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__n")).collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     if (daily.isEmpty)
@@ -528,7 +520,7 @@ object Sessionize {
         if (m == 0) 0.0
         else if (m % 2 == 1) slopes(m / 2)
         else (slopes(m / 2 - 1) + slopes(m / 2)) / 2.0
-      (g, ys.length.toLong, r6(sen))
+      (g, ys.length.toLong, round6(sen))
     }.toDF(groupCol, "n_days", "sen_slope")
   }
 
@@ -549,8 +541,6 @@ object Sessionize {
       .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
         .as("__g"), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__n")).collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     if (daily.isEmpty)
@@ -567,8 +557,8 @@ object Sessionize {
       val mean = s / n
       val disp =
         if (n < 2 || mean <= 0.0) None
-        else Option(r6(((ss - s * s / n) / (n - 1)) / mean))
-      (g, ys.length.toLong, r6(mean), disp,
+        else Option(round6(((ss - s * s / n) / (n - 1)) / mean))
+      (g, ys.length.toLong, round6(mean), disp,
         disp.exists(_ > threshold))
     }.toDF(groupCol, "n_days", "mean_daily", "dispersion", "flag")
   }

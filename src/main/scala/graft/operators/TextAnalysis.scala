@@ -1602,10 +1602,11 @@ object TextAnalysis {
     * greek — deterministic, SQL-replicable), and flags docs whose
     * dominant-script share of tracked letters falls below `minPurity`.
     *
-    * Codegen'd projection (regexp_count per range — the [[encodingQc]]
-    * pattern; the ranges are RE2-compatible so the oracle runs the
-    * IDENTICAL character classes), then ONE shuffle: repartition + orderBy
-    * by id, so the range sort does not evaluate the regexes twice. */
+    * One codegen'd projection (regexp_count per range — the
+    * [[encodingQc]] pattern; the ranges are RE2-compatible so the oracle
+    * runs the IDENTICAL character classes), zero shuffles and no order:
+    * a caller that sorts should put a shuffle boundary before the range
+    * sort, or the sort's sampling pass evaluates the regexes twice. */
   def scriptMix(df: DataFrame, idCol: String, textCol: String,
                 minPurity: Double = 0.8): DataFrame = {
     require(minPurity > 0 && minPurity <= 1, "minPurity in (0, 1]")
@@ -1634,11 +1635,6 @@ object TextAnalysis {
             col("n_script_chars").cast("double"), 6)))
       .withColumn("mixed",
         col("n_script_chars") > 0 && col("purity") < minPurity)
-      // shuffle boundary before the sort: range partitioning samples
-      // its child first, and without it the 4-regex projection above
-      // evaluates twice per action (the SparkEntry orderedOnce note)
-      .repartition(col(idCol))
-      .orderBy(col(idCol))
   }
 
   /** Heaps'-law vocabulary-growth fit — the [[zipfFit]] companion on

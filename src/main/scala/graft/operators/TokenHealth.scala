@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.round6
+
 /** Structural health checks for token-ID payloads — the validation
   * tier that looks INSIDE the `tokens` array after the schema/range
   * constraints (ValidationPass) have passed: BOS/EOS framing, vocab
@@ -186,10 +188,8 @@ object TokenHealth {
     val ch = hist(cur)
     val ks = Drift.ksStatistic(ch, bh)
     val crit = Drift.ksCritical(ch.total, bh.total, alpha)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import spark.implicits._
-    Seq((bh.total, ch.total, r6(ks), r6(crit), ks > crit))
+    Seq((bh.total, ch.total, round6(ks), round6(crit), ks > crit))
       .toDF("n_base", "n_cur", "ks_stat", "ks_critical", "ks_drifted")
   }
 
@@ -288,8 +288,6 @@ object TokenHealth {
       .groupBy(col("__p.x").as("__x"), col("__p.y").as("__y"))
       .agg(count(lit(1)).as("__n"))
       .collect()
-    def r6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val spark = df.sparkSession
     import spark.implicits._
     val joint = pairs.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
@@ -307,8 +305,8 @@ object TokenHealth {
       val p = c / n
       if (p > 0.0) -p * math.log(p) else 0.0
     }.sum
-    Seq((joint.values.sum, r6(hCond), r6(hMarg),
-      if (hMarg > 0.0) Option(r6(1.0 - hCond / hMarg)) else None))
+    Seq((joint.values.sum, round6(hCond), round6(hMarg),
+      if (hMarg > 0.0) Option(round6(1.0 - hCond / hMarg)) else None))
       .toDF("n_pairs", "h_conditional", "h_marginal", "predictability")
   }
 }

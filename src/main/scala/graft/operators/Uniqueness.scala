@@ -58,17 +58,18 @@ object Uniqueness {
     (nRows, nDistinct, nDistinct < (nRows * (1.0 - 3 * rsd)).toLong)
   }
 
-  /** Violation rows (doc_id, rule_id) for duplicated keys — joins the
-    * duplicate-key set back. No broadcast hint: the duplicate set is
+  /** Violation rows (carryCols…, doc_id, rule_id, offending_value) for
+    * duplicated keys, shaped like [[ValidationPass.seqViolations]] with the
+    * same `carryCols` so the two union by name into one check suite.
+    * Joins the duplicate-key set back. No broadcast hint: the duplicate set is
     * unbounded (a fully-duplicated corpus has O(distinct keys) entries),
     * and a forced broadcast turns that slow case into a driver OOM —
     * AQE already broadcasts the side when its runtime size qualifies
     * (round-1 VERDICT "What's wrong" #5). */
-  def violations(df: DataFrame, keyCol: String, ruleId: String = "R_UNIQUE_DOCID"): DataFrame = {
-    val dups = duplicatesSimple(df, keyCol)
-    df.join(dups, Seq(keyCol))
-      .select(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
+  def violations(df: DataFrame, keyCol: String, ruleId: String = "R_UNIQUE_DOCID",
+                 carryCols: Seq[String] = Nil): DataFrame =
+    df.join(duplicatesSimple(df, keyCol), Seq(keyCol))
+      .select(carryCols.map(col) ++ Seq(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
         concat(lit("n_occurrences="), col("n_occurrences").cast("string"))
-          .as("offending_value"))
-  }
+          .as("offending_value")): _*)
 }

@@ -105,7 +105,9 @@ object ValidationPass {
 
   /** Build the sparse violations projection for the rules whose field
     * exists in `df`, keyed by `keyCol` (the [[RowKey]] or a natural key).
-    * A cell whose invalid predicate is null is no violation. */
+    * A cell whose invalid predicate is null is no violation: CDE
+    * missingness is the `NA` sentinel's (counted as n_null), not the
+    * [[SeqConstraint]] null rule's. */
   def violationsFor(df: DataFrame, rules: Seq[Rule], keyCol: String): DataFrame = {
     val present = evaluable(rules).filter(r => df.columns.contains(r.field))
     require(present.nonEmpty, "no evaluable rule matches a column")
@@ -113,10 +115,14 @@ object ValidationPass {
       (r.ruleId, Predicates.invalid(r, col(r.field)), col(r.field))))
   }
 
-  /** Sparse extraction shared by [[violationsFor]] and [[seqViolations]]:
-    * each cell is (rule_id, invalid predicate, offending value), and a row
-    * yields one (keep…, rule_id, offending_value) per cell whose predicate
-    * is true. Two-tier evaluation tuned for the violations-are-rare regime:
+  /** The one sparse extraction, shared by [[violationsFor]],
+    * [[seqViolations]], [[crossFieldViolations]] and the streaming
+    * `violationCounts`: each cell is (rule_id, invalid predicate,
+    * offending value), and a row yields one (keep…, rule_id,
+    * offending_value) per cell whose predicate is true. Callers choose the
+    * null rule when they build the predicate ([[SeqConstraint.cell]] makes
+    * a NULL verdict a violation). Two-tier evaluation tuned for the
+    * violations-are-rare regime:
     *  1. a pure-boolean OR filter (whole-stage codegen, zero allocation)
     *    rejects the clean rows — this is the only work they cost;
     *  2. only surviving rows pay the array-of-structs + interpreted
@@ -125,8 +131,8 @@ object ValidationPass {
     * A null predicate fails both tiers alike. explode drops empty arrays
     * by itself — never guard with size()>0, CollapseProject would then
     * evaluate the whole cell array twice. */
-  private def sparseViolations(df: DataFrame, keep: Seq[Column],
-                               cells: Seq[(String, Column, Column)]): DataFrame = {
+  private[graft] def sparseViolations(df: DataFrame, keep: Seq[Column],
+                                      cells: Seq[(String, Column, Column)]): DataFrame = {
     val tagged = cells.map { case (ruleId, invalid, value) =>
       when(invalid,
         struct(lit(ruleId).as("rule_id"), value.cast("string").as("offending_value")))
@@ -142,19 +148,15 @@ object ValidationPass {
     *                     (call [[graft.norm.Normalize.normalizeDf]] first —
     *                     same contract as the reference,
     *                     validate_core.py:152-155)
-    */
-  def evalTable(dfNormalized: DataFrame, tableName: String, rules: Seq[Rule]): EvalResult =
-    evalTable(dfNormalized, tableName, rules, maxOffendersPerRule = Int.MaxValue)
-
-  /** @param maxOffendersPerRule cap on DISTINCT offending values collected
+    * @param maxOffendersPerRule cap on DISTINCT offending values collected
     *        per rule, keeping first-appearance order (rank by min row
-    *        key). Exact fixtures use the uncapped overload; at 10^12-row
+    *        key). Exact fixtures leave it uncapped; at 10^12-row
     *        scale a rule matching arbitrary garbage has unbounded distinct
     *        offenders and the driver must not collect them all. The cap is
     *        visible: `ColumnEval.nInvalidCells` still counts EVERY bad
     *        cell (summed pre-cap), only the listed values truncate. */
   def evalTable(dfNormalized: DataFrame, tableName: String, rules: Seq[Rule],
-                maxOffendersPerRule: Int): EvalResult = {
+                maxOffendersPerRule: Int = Int.MaxValue): EvalResult = {
     val evalRules = evaluable(rules)
     val inputCols = dfNormalized.columns.toSet
 
@@ -241,10 +243,16 @@ object ValidationPass {
         CollectMinK.minKBy(col("first_key"), col("offending_value"), cap)
           .as("first_values"))
 
-  /** Named constraint over the sequence table: validity predicate plus
-    * the offending-value rendering for the violations Dataset
-    * (doc_id, rule_id, offending_value — BASELINE.json shape). */
-  final case class SeqConstraint(ruleId: String, valid: Column, offendingValue: Column)
+  /** The engine's one named-check type (batch, stored-table and
+    * streaming): validity predicate plus the offending-value rendering for
+    * the violations Dataset (doc_id, rule_id, offending_value —
+    * BASELINE.json shape). Null rule: a NULL verdict is a violation. */
+  final case class SeqConstraint(ruleId: String, valid: Column, offendingValue: Column) {
+    /** True where the row fails: `valid` is false or NULL. */
+    def violated: Column = !coalesce(valid, lit(false))
+    /** This check as a [[sparseViolations]] cell. */
+    private[graft] def cell: (String, Column, Column) = (ruleId, violated, offendingValue)
+  }
 
   /** Convenience predicate bundle for the tokenized-sequence table: the
     * five north-star constraints (BASELINE.json) as named Catalyst
@@ -318,19 +326,14 @@ object ValidationPass {
     }
   }
 
-  /** Sparse violations for arbitrary named predicates (sequence-table
-    * flavor of [[violationsFor]]); value column records the offending
-    * doc_id's source/n_tok context compactly. */
-  def seqViolations(df: DataFrame, constraints: Seq[SeqConstraint]): DataFrame =
-    seqViolations(df, constraints, carryCols = Nil)
-
-  /** @param carryCols extra input columns passed through to the output
+  /** Sparse (carryCols…, doc_id, rule_id, offending_value) violations of
+    * named checks (sequence-table flavor of [[violationsFor]]).
+    * @param carryCols extra input columns passed through to the output
     *        (e.g. the partition bucket, so a single batch job can write
     *        violations partitioned and report per-partition verdicts). */
   def seqViolations(df: DataFrame, constraints: Seq[SeqConstraint],
-                    carryCols: Seq[String]): DataFrame =
-    sparseViolations(df, carryCols.map(col) :+ col("doc_id"), constraints.map(c =>
-      (c.ruleId, !coalesce(c.valid, lit(false)), c.offendingValue)))
+                    carryCols: Seq[String] = Nil): DataFrame =
+    sparseViolations(df, carryCols.map(col) :+ col("doc_id"), constraints.map(_.cell))
 
   /** Conditional CROSS-FIELD constraints — "when P(row) holds, Q(row)
     * must hold" — the validation tier one level above the reference's
@@ -343,24 +346,15 @@ object ValidationPass {
     * answer to a required guarantee is a violation, matching the
     * engine's non-null-predicate convention).
     *
-    * Same one-pass sparse-extraction shape as [[seqViolations]]: every
-    * rule compiles to a when()-tagged struct cell, one
-    * filter(array)+explode per row emits only the fired rules — zero
+    * Runs through [[sparseViolations]], like [[seqViolations]]: zero
     * shuffles, whole-stage codegen, no rules×rows mask. Returns
     * (idCol, rule_id) rows. */
   def crossFieldViolations(df: DataFrame, idCol: String,
       rules: Seq[(String, Column, Column)]): DataFrame = {
     require(rules.nonEmpty, "crossFieldViolations: no rules given")
-    val cells = rules.map { case (ruleId, ant, cons) =>
-      when(coalesce(ant, lit(false)) && !coalesce(cons, lit(false)),
-        lit(ruleId))
-    }
-    val anyHit = rules.map { case (_, ant, cons) =>
-      coalesce(ant, lit(false)) && !coalesce(cons, lit(false))
-    }.reduce(_ || _)
-    df.where(anyHit)
-      .select(col(idCol),
-        explode(filter(array(cells: _*), x => x.isNotNull)).as("rule_id"))
+    sparseViolations(df, Seq(col(idCol)), rules.map { case (ruleId, ant, cons) =>
+      (ruleId, coalesce(ant, lit(false)) && !coalesce(cons, lit(false)), lit(null))
+    }).select(col(idCol), col("rule_id"))
   }
 
   /** Row-level quarantine split: (clean, dirty). Clean rows pass through
@@ -378,11 +372,8 @@ object ValidationPass {
     * over the same constraints. */
   def splitValid(df: DataFrame, constraints: Seq[SeqConstraint])
       : (DataFrame, DataFrame) = {
-    val anyViolation = constraints
-      .map(c => !coalesce(c.valid, lit(false)))
-      .reduce(_ || _)
-    val ruleTags = constraints.map(c =>
-      when(!coalesce(c.valid, lit(false)), lit(c.ruleId)))
+    val anyViolation = constraints.map(_.violated).reduce(_ || _)
+    val ruleTags = constraints.map(c => when(c.violated, lit(c.ruleId)))
     val clean = df.where(!anyViolation)
     val dirty = df.where(anyViolation)
       .withColumn("violated_rules",

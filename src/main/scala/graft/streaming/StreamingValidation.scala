@@ -5,13 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.operators.ValidationPass
+import graft.operators.ValidationPass.SeqConstraint
+
 /** Structured-Streaming flavor of the validation engine: continuous QC of
   * an arriving sequence/event stream (the reference is batch-only —
   * SURVEY.md §1.2 — so this is a north-star extension, not parity).
+  * Checks are the batch engine's [[SeqConstraint]]s, with its null rule:
+  * a NULL verdict is a violation.
   *
   *  - [[violationCounts]]: watermark + tumbling-window counts per rule —
   *    the streaming analogue of the per-table verdict, incremental state
-  *    bounded by (windows × rules);
+  *    bounded by (windows × rules), extracted by the batch engine's
+  *    sparse pass;
   *  - [[runningSourceStats]]: per-source running violation counters via
   *    `mapGroupsWithState` (custom state machine, the
   *    KeyValueGroupedDataset path).
@@ -33,30 +39,25 @@ object StreamingValidation {
   def readEventStream(spark: SparkSession, path: String): DataFrame =
     spark.readStream.schema(EventSchema).option("maxFilesPerTrigger", 1).parquet(path)
 
-  /** Named validity predicates over the event stream. */
-  def eventConstraints(validTypes: Seq[String]): Seq[(String, Column)] = Seq(
-    "E_ENUM_TYPE"   -> col("event_type").isin(validTypes: _*),
-    "E_NONNEG_VALUE" -> (col("value") >= 0),
-    "E_NONNULL_USER" -> col("user_id").isNotNull)
+  /** Named checks over the event stream. */
+  def eventConstraints(validTypes: Seq[String]): Seq[SeqConstraint] = Seq(
+    SeqConstraint("E_ENUM_TYPE", col("event_type").isin(validTypes: _*), col("event_type")),
+    SeqConstraint("E_NONNEG_VALUE", col("value") >= 0, col("value")),
+    SeqConstraint("E_NONNULL_USER", col("user_id").isNotNull, col("user_id")))
 
   /** Tumbling-window violation counts per rule with a watermark: late
     * data beyond `lateness` is dropped and state is evicted — bounded
     * memory regardless of stream length. */
   def violationCounts(
       events: DataFrame,
-      constraints: Seq[(String, Column)],
+      constraints: Seq[SeqConstraint],
       windowLen: String = "1 hour",
-      lateness: String = "10 minutes"): DataFrame = {
-    val cells = constraints.map { case (ruleId, valid) =>
-      when(!coalesce(valid, lit(false)), lit(ruleId))
-    }
-    events
-      .withWatermark("ts", lateness)
-      .select(col("ts"), explode(filter(array(cells: _*), _.isNotNull)).as("rule_id"))
+      lateness: String = "10 minutes"): DataFrame =
+    ValidationPass.sparseViolations(events.withWatermark("ts", lateness), Seq(col("ts")),
+        constraints.map(_.cell))
       .groupBy(window(col("ts"), windowLen), col("rule_id"))
       .agg(count(lit(1)).as("n_violations"))
       .select(col("window.start").as("window_start"), col("rule_id"), col("n_violations"))
-  }
 
   final case class SourceStats(source: String, nEvents: Long, nViolations: Long)
   // NOT private: encoder codegen needs public accessors on the case class
@@ -65,11 +66,10 @@ object StreamingValidation {
   /** Running per-source totals via mapGroupsWithState — arbitrary
     * stateful aggregation with explicit state type. */
   def runningSourceStats(
-      events: DataFrame, constraints: Seq[(String, Column)]): DataFrame = {
+      events: DataFrame, constraints: Seq[SeqConstraint]): DataFrame = {
     import events.sparkSession.implicits._
-    val allValid = constraints.map(_._2).reduce(_ && _)
     val keyed = events
-      .select(col("event_type").as("source"), (!coalesce(allValid, lit(false))).as("bad"))
+      .select(col("event_type").as("source"), constraints.map(_.violated).reduce(_ || _).as("bad"))
       .as[Keyed]
     keyed.groupByKey(_.source)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {

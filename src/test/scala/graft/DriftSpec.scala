@@ -250,6 +250,27 @@ class DriftSpec extends AnyFunSuite {
       .count() === 0L)
   }
 
+  test("qqQuantilesSplit: the buffered-percentile fallback is bit-identical to the two-frame spelling") {
+    val spark = SparkSpec.session
+    import org.apache.spark.sql.functions.col
+    // 2^20 + 2 distinct values overflow the one-scan histogram budget
+    // (2^20), so the split takes its buffered `percentile` branch; each
+    // side alone holds 2^19 + 1 values, so the two-frame oracle stays on
+    // its histogram path. v is a permutation of 0 until 2^20 + 2
+    // (7919 is prime to 2^20 + 2 = 2·3·174763), so the sides interleave
+    val n = (1L << 20) + 2
+    val df = spark.range(n).selectExpr("id AS k", s"CAST(id * 7919 % $n AS DOUBLE) AS v")
+    val condA = col("k") % 2 === 0
+    val condB = col("k") % 2 =!= 0
+    val ps = Seq(0.0, 0.001, 0.25, 1.0 / 3, 0.5, 0.9, 0.999, 1.0)
+    val two = Drift.qqQuantiles(df.where(condA), df.where(condB), "v", ps)
+      .collect().toSeq
+    val one = Drift.qqQuantilesSplit(df, condA, condB, "v", ps)
+      .collect().toSeq
+    assert(two.length === ps.length)
+    assert(one === two)
+  }
+
   test("rankBiasedOverlap: identity, disjoint, and head-weighted cases") {
     val spark = SparkSpec.session
     import spark.implicits._

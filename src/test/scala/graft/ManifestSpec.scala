@@ -43,6 +43,52 @@ class ManifestSpec extends AnyFunSuite {
     assert(todo === Seq("3", "4", "5"))
   }
 
+  test("append-only: after N commits the file is the N rendered lines in commit order") {
+    import java.nio.file.{Files, Paths}
+    val p = tmp()
+    val parts = Seq("2", "0", "1", "0", "7")
+    var before = ""
+    parts.zipWithIndex.foreach { case (part, i) =>
+      Manifest.markComplete(p, part, rows = 10L + i, violations = i, pass = i == 0,
+        snapshotId = s"snap-$i", files = Seq(s"part_bucket=$part/f$i.parquet"))
+      val now = Files.readString(Paths.get(p))
+      // each commit appends exactly one complete line and rewrites nothing
+      assert(now.startsWith(before) && now.endsWith("\n"))
+      assert(now.substring(before.length).count(_ == '\n') === 1)
+      before = now
+    }
+    val lines = before.split('\n').toSeq
+    assert(lines.length === parts.length)
+    lines.zip(parts).zipWithIndex.foreach { case ((line, part), i) =>
+      assert(line.startsWith(s"""{"partition":"$part","rows":${10 + i},"violations":$i,""" +
+        s""""pass":${i == 0},"snapshot_id":"snap-$i","files":["part_bucket=$part/f$i.parquet"],"""), line)
+    }
+    // the re-marked partition reads back as its LAST line
+    val st = Manifest.load(p)
+    assert(st.entries.keySet === Set("0", "1", "2", "7"))
+    assert(st.entries("0").snapshotId === "snap-3" && st.entries("0").violations === 3L)
+  }
+
+  test("torn tail: load ignores an unfinished last line and the next commit repairs it") {
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val p = tmp()
+    Manifest.markComplete(p, "0", 5, 0, pass = true)
+    Manifest.markComplete(p, "1", 5, 1, pass = false)
+    val committed = Files.readString(Paths.get(p))
+    // a crash mid-append: the line for partition 2 never got its newline
+    Files.writeString(Paths.get(p), """{"partition":"2","rows":5,"viol""",
+      StandardOpenOption.APPEND)
+    assert(Manifest.load(p).entries.keySet === Set("0", "1"))
+    Manifest.markComplete(p, "3", 5, 0, pass = true)
+    val repaired = Files.readString(Paths.get(p))
+    assert(repaired.startsWith(committed) && !repaired.contains("\"partition\":\"2\""))
+    assert(repaired.substring(committed.length).startsWith("{\"partition\":\"3\""))
+    assert(Manifest.load(p).entries.keySet === Set("0", "1", "3"))
+    // a malformed COMPLETE line is damage, not a torn commit: it fails loudly
+    Files.writeString(Paths.get(p), "not json\n", StandardOpenOption.APPEND)
+    intercept[IllegalArgumentException](Manifest.load(p))
+  }
+
   test("missing manifest file loads as empty (fresh run)") {
     assert(Manifest.load("/nonexistent/manifest.jsonl").entries.isEmpty)
   }

@@ -2776,7 +2776,7 @@ class PipelineOpsSpec extends SparkSpec {
       (4L, "123 !!!"),       // no tracked letters at all
       (5L, "abc αβγ")        // 3-3 tie → priority order picks latin
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.scriptMix(df, "doc_id", "text")
+    val got = TextAnalysis.scriptMix(df, "doc_id", "text").orderBy("doc_id")
       .as[(Long, Long, Long, Long, Long, Long, String, Option[Double], Boolean)]
       .collect().toSeq
     assert(got === Seq(

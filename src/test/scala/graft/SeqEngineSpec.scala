@@ -197,4 +197,19 @@ class SeqEngineSpec extends SparkSpec {
         s"re-run verdict differs for partition $p")
     }
   }
+
+  test("stream-validate checks the same suite as validate, uniqueness aside") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sv").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 5000), s"$dir/seq", 2)
+    graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/batch", None)
+    graft.cli.Main.streamValidate(spark, s"$dir/seq", s"$dir/stream")
+    // uniqueness is cross-row state and stays with the batch modes
+    def perRule(path: String): Map[String, Long] = spark.read.parquet(path)
+      .where(col("rule_id") =!= "R_UNIQUE_DOCID")
+      .groupBy("rule_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = perRule(s"$dir/batch/violations")
+    assert(batch.contains("R_REF_SOURCE") && batch.size === 6, batch)
+    assert(perRule(s"$dir/stream/violations_stream") === batch)
+  }
 }
