@@ -1,6 +1,10 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.Manifest
@@ -312,79 +316,133 @@ object Main {
 
   /** Resume step of both validate modes: the table's partitions (`all`
     * for an unpartitioned table) that the manifest does not hold yet,
-    * after the `{"mode":…}` header line. */
-  private def pending(df: DataFrame, mode: String, manifest: Option[String]): Seq[String] = {
-    val partitions: Seq[String] =
+    * each with its files, after the `{"mode":…}` header line. The
+    * partitions are read from the relation's file listing
+    * (`inputFiles`, which the file index already holds from the read),
+    * grouped once by their `part_bucket=<v>/` directory: no Spark job.
+    * So a directory that holds only 0-row files is a partition too, and
+    * gets a 0-row passing verdict. */
+  private def pending(df: DataFrame, mode: String,
+                      manifest: Option[String]): Seq[(String, Seq[String])] = {
+    val files = df.inputFiles.toSeq
+    val partitions =
       if (df.columns.contains("part_bucket"))
-        df.select("part_bucket").distinct().collect().map(_.get(0).toString).sorted.toSeq
-      else Seq("all")
+        files.groupBy(partitionOf).toSeq.map { case (p, fs) => p -> fs.sorted }.sortBy(_._1)
+      else Seq("all" -> files.sorted)
     val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
-    val todo = partitions.filterNot(mf.isComplete)
+    val todo = partitions.filterNot { case (p, _) => mf.isComplete(p) }
     println(s"""{"mode":"$mode","partitions":${partitions.size},"todo":${todo.size}}""")
     todo
   }
 
+  private val PartBucketDir = "part_bucket=([^/]*)/".r
+
+  /** The `part_bucket` value of one table file, from its innermost
+    * `part_bucket=<v>/` directory. Fails loudly, naming the directory,
+    * on a value that is not an integer: `__HIVE_DEFAULT_PARTITION__` is
+    * a NULL bucket, which no partition filter or verdict can name. */
+  private def partitionOf(file: String): String = {
+    val v = PartBucketDir.findAllMatchIn(file).map(_.group(1)).toSeq.lastOption
+    require(v.isDefined, s"table file outside any part_bucket=<v>/ directory: $file")
+    require(v.get.toIntOption.isDefined,
+      s"part_bucket=${v.get}/ is not an integer partition directory: $file")
+    v.get.toInt.toString
+  }
+
   /** Commit step of both validate modes, run once the partition's
     * violations are written: the manifest records partition `p` with its
-    * lineage (the concrete files its verdict was read from; the Iceberg
-    * snapshot-id slot carries the scan timestamp for the parquet
-    * stand-in), then its verdict line prints. */
-  private def commit(manifest: Option[String], scanned: DataFrame, p: String,
+    * lineage, `files` (its group of [[pending]]'s listing: the concrete
+    * files its verdict was read from; the Iceberg snapshot-id slot
+    * carries the scan timestamp for the parquet stand-in), then its
+    * verdict line prints. */
+  private def commit(manifest: Option[String], p: String, files: Seq[String],
                      nRows: Long, nViol: Long, snapshotId: String): Unit = {
     manifest.foreach { mfPath =>
-      // inputFiles reports the whole relation, not the pruned scan —
-      // restrict lineage to this partition's directory
-      val files = scanned.inputFiles.toSeq.filter(f => p == "all" || f.contains(s"part_bucket=$p/"))
       Manifest.markComplete(mfPath, p, nRows, nViol, nViol == 0,
-        snapshotId = snapshotId, files = files.sorted)
+        snapshotId = snapshotId, files = files)
     }
     println(s"""{"partition":"${esc(p)}","rows":$nRows,"violations":$nViol,"pass":${nViol == 0}}""")
   }
 
+  /** Partitions [[validatePath]] checks at once. Two overlap one
+    * partition's driver work (planning, job launch, commit) with the
+    * other's execution. Four put the slowest verdicts behind 4-way driver
+    * contention: on a 4-core host their p90 rose by about 45%, for a
+    * throughput gain within run-to-run spread. */
+  private val InFlight = 2
+
   /** Full check suite over a stored partitioned table, one
-    * [[runChecks]] job per pending partition. */
+    * [[runChecks]] job per pending partition, [[InFlight]] partitions
+    * in flight. A fixed pool, made per call, runs the checks. The
+    * calling thread commits each partition and prints its verdict as its
+    * write finishes, in completion order, and only then starts the next
+    * partition: the manifest keeps one writer, the lines go to the
+    * caller's `Console.out`, and a crash leaves at most [[InFlight]]
+    * partitions written but not committed, which the resume redoes. If
+    * one partition's checks throw, no further partition starts, the one
+    * still running finishes its write uncommitted, and the exception
+    * reaches the caller. */
   def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
     val df = spark.read.parquet(path)
-    pending(df, "validate", manifest).foreach { p =>
-      val slice = if (p == "all") df else df.where(col("part_bucket") === p.toInt)
-      // same directory layout as validate-batch (part_bucket=N), so one
-      // out dir can be shared across modes without ambiguity
-      val (_, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
-      commit(manifest, slice, p, nRows, nViol, s"scan-${System.currentTimeMillis()}")
+    val todo = pending(df, "validate", manifest).toVector
+    val pool = Executors.newFixedThreadPool(InFlight)
+    // each task checks one partition and hands back its commit
+    val done = new ExecutorCompletionService[() => Unit](pool)
+    def start(i: Int): Unit = if (i < todo.size) {
+      val (p, files) = todo(i)
+      done.submit { () =>
+        val slice = if (p == "all") df else df.where(col("part_bucket") === p.toInt)
+        // same directory layout as validate-batch (part_bucket=N), so one
+        // out dir can be shared across modes without ambiguity
+        val (_, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
+        val snapshotId = s"scan-${System.currentTimeMillis()}"
+        () => commit(manifest, p, files, nRows, nViol, snapshotId)
+      }
+    }
+    try {
+      (0 until InFlight).foreach(start)
+      todo.indices.foreach { i =>
+        try done.take().get().apply() catch { case e: ExecutionException => throw e.getCause }
+        start(i + InFlight)
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
   }
 
   /** Batch flavor of [[validatePath]]: ONE Spark job computes every
     * pending partition's violations and verdicts, with the violations
     * written `partitionBy(part_bucket)` and the manifest marked per
-    * partition afterwards.
+    * partition afterwards. The rows and violations per partition are
+    * counted on that job, by two [[BucketCounts]] Observations: over
+    * the rows the checks scan, and over the violations written. So the
+    * counts come from THIS run's rows, never from the sink: a pending
+    * partition with zero violations writes no directory, and stale files
+    * from an earlier run into the same out dir would be counted and the
+    * partition wrongly failed (ADVICE round 2).
     *
     * Trade vs the per-partition loop: the loop gives fine-grained resume
     * (each partition commits independently) but runs one driver-
     * scheduled job per partition — at 10^4+ partitions the driver loop,
     * not the cluster, is the bottleneck. Batch mode scales to any
-    * partition count (verdicts are a groupBy(part_bucket) aggregate) at
-    * the cost of coarser resume: a crash before the write commits marks
-    * nothing, and the rerun redoes all still-pending partitions.
-    * Completed partitions from EITHER mode are skipped by both. */
+    * partition count at the cost of coarser resume: a crash before the
+    * write commits marks nothing, and the rerun redoes all still-pending
+    * partitions. Completed partitions from EITHER mode are skipped by
+    * both. */
   def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
     val df = spark.read.parquet(path)
     require(df.columns.contains("part_bucket"),
       "validate-batch needs a part_bucket-partitioned table (gen mode writes one)")
     val todo = pending(df, "validate-batch", manifest)
     if (todo.isEmpty) return
-    val slice = df.where(col("part_bucket").isin(todo.map(_.toInt): _*))
+    val slice = df.where(col("part_bucket").isin(todo.map(_._1.toInt): _*))
+    val (rowsObs, violObs) = (Observation(), Observation())
     // global uniqueness in one shuffle (the bucketing co-locates equal
-    // keys, so per-bucket == global; computed over the whole slice here).
-    // Persist the (small, violations-only) frame once: the write and the
-    // per-partition counts both read the cached copy, so the corpus scans
-    // ONCE and the counts come from THIS run's rows — never from the sink.
-    // (Re-reading $out/violations was wrong: a pending partition with
-    // zero violations writes no directory, so stale files from an earlier
-    // run into the same out dir would be counted and the partition
-    // wrongly failed — ADVICE round 2.)
-    val all = suiteViolations(slice, Seq("part_bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // keys, so per-bucket == global; computed over the whole slice here)
+    val all = suiteViolations(slice, Seq("part_bucket"),
+      Some(rowsObs -> countPerBucket(col("part_bucket")).as("n")))
     // dynamic overwrite replaces only partitions PRESENT in this run's
     // output — a pending partition whose violations are now ZERO writes
     // nothing and would keep stale files from an earlier run, so the
@@ -392,29 +450,44 @@ object Main {
     // agree with the manifest verdict, not just the counts)
     val sinkRoot = new org.apache.hadoop.fs.Path(s"$out/violations")
     val fs = sinkRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    todo.foreach { p =>
+    todo.foreach { case (p, _) =>
       fs.delete(new org.apache.hadoop.fs.Path(sinkRoot, s"part_bucket=$p"), true)
     }
     // dynamic overwrite: only the buckets in this run are replaced
     // (writer-scoped option — do not mutate session config)
-    all.write.mode("overwrite")
+    all.observe(violObs, countPerBucket(col("part_bucket")).as("n")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("part_bucket")
       .parquet(s"$out/violations")
-
-    // per-partition verdicts: two tiny aggregates (shuffle rows =
-    // O(partitions)), then the manifest commits each partition
-    val rowsByPart = slice.groupBy("part_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val violByPart = all
-      .groupBy("part_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    all.unpersist()
+    def byBucket(obs: Observation): collection.Map[Int, Long] =
+      obs.get("n").asInstanceOf[collection.Map[Int, Long]]
+    val (rowsByPart, violByPart) = (byBucket(rowsObs), byBucket(violObs))
     val snapshot = s"scan-${System.currentTimeMillis()}"
-    todo.foreach { p =>
-      commit(manifest, slice, p, rowsByPart.getOrElse(p, 0L), violByPart.getOrElse(p, 0L), snapshot)
+    todo.foreach { case (p, files) =>
+      commit(manifest, p, files, rowsByPart.getOrElse(p.toInt, 0L), violByPart.getOrElse(p.toInt, 0L),
+        snapshot)
     }
   }
+
+  /** Exact row count per `part_bucket` value, as an aggregate for an
+    * Observation: each task counts into a map of the buckets it sees, so
+    * what reaches the driver grows with those buckets, not with the
+    * range of their values. */
+  private object BucketCounts extends Aggregator[Int, mutable.HashMap[Int, Long], Map[Int, Long]] {
+    def zero: mutable.HashMap[Int, Long] = mutable.HashMap.empty
+    def reduce(n: mutable.HashMap[Int, Long], bucket: Int): mutable.HashMap[Int, Long] = {
+      n(bucket) = n.getOrElse(bucket, 0L) + 1
+      n
+    }
+    def merge(a: mutable.HashMap[Int, Long], b: mutable.HashMap[Int, Long]): mutable.HashMap[Int, Long] = {
+      b.foreach { case (k, v) => a(k) = a.getOrElse(k, 0L) + v }
+      a
+    }
+    def finish(n: mutable.HashMap[Int, Long]): Map[Int, Long] = n.toMap
+    def bufferEncoder: Encoder[mutable.HashMap[Int, Long]] = Encoders.javaSerialization
+    def outputEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
+  }
+  private val countPerBucket = udaf(BucketCounts, Encoders.scalaInt)
 
   /** The stored-table suite's violations, (carryCols…, doc_id, rule_id,
     * offending_value): [[checkSuite]] fused into ONE scan — its
@@ -422,10 +495,11 @@ object Main {
     * 3-row dimension would buy nothing and cost a third full scan
     * ([[Referential.violations]] serves allowlists that live in a real
     * dimension table) — plus the uniqueness aggregate, the only check
-    * that must shuffle. `rows`, if given, counts the check scan's rows. */
+    * that must shuffle. `rows`, if given, is an Observation and its
+    * metric over the check scan's rows. */
   private def suiteViolations(df: DataFrame, carryCols: Seq[String],
-                              rows: Option[Observation] = None): DataFrame =
-    ValidationPass.seqViolations(rows.fold(df)(df.observe(_, count(lit(1)).as("n"))),
+                              rows: Option[(Observation, Column)] = None): DataFrame =
+    ValidationPass.seqViolations(rows.fold(df) { case (obs, metric) => df.observe(obs, metric) },
         checkSuite, carryCols)
       .unionByName(Uniqueness.violations(df, "doc_id", carryCols = carryCols))
 
@@ -437,7 +511,8 @@ object Main {
     // no separate count job over the input
     val rowsObs = Observation()
     val obs = Observation()
-    suiteViolations(df, Nil, Some(rowsObs)).observe(obs, count(lit(1)).as("n"))
+    suiteViolations(df, Nil, Some(rowsObs -> count(lit(1)).as("n")))
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(violOut)
     val nViol = obs.get("n").asInstanceOf[Long]
     val nRows = rowsObs.get("n").asInstanceOf[Long]

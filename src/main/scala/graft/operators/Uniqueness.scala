@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** doc_id-uniqueness enforcement via a salted two-level hash aggregate
@@ -60,15 +61,28 @@ object Uniqueness {
 
   /** Violation rows (carryCols…, doc_id, rule_id, offending_value) for
     * duplicated keys, shaped like [[ValidationPass.seqViolations]] with the
-    * same `carryCols` so the two union by name into one check suite.
-    * Joins the duplicate-key set back. No broadcast hint: the duplicate set is
-    * unbounded (a fully-duplicated corpus has O(distinct keys) entries),
-    * and a forced broadcast turns that slow case into a driver OOM —
-    * AQE already broadcasts the side when its runtime size qualifies
-    * (round-1 VERDICT "What's wrong" #5). */
+    * same `carryCols` so the two union by name into one check suite: one
+    * row per occurrence of a key that occurs more than once, with
+    * `offending_value = "n_occurrences=N"`. A NULL key never violates.
+    *
+    * One narrow exchange and no join: the rows with a key are projected
+    * to (carryCols…, key), and `count(1) over (partition by key)` counts
+    * each key's occurrences, so the shuffle moves those columns, never
+    * whole rows.
+    *
+    * The object's scale notes are [[duplicates]]'s and do not hold here:
+    * this exchange moves one narrow row per occurrence, O(rows) and not
+    * O(distinct keys), and every occurrence of a key lands in one window
+    * task, which AQE cannot split. On a fully duplicated table (4M rows,
+    * one doc_id, `local[4]`) it took 7.6 s against 7.2 s for the join to
+    * [[duplicatesSimple]] it replaced, medians of 4 runs; a hot key too
+    * large for one task is unmeasured. */
   def violations(df: DataFrame, keyCol: String, ruleId: String = "R_UNIQUE_DOCID",
                  carryCols: Seq[String] = Nil): DataFrame =
-    df.join(duplicatesSimple(df, keyCol), Seq(keyCol))
+    df.where(col(keyCol).isNotNull)
+      .select((carryCols :+ keyCol).map(col): _*)
+      .withColumn("n_occurrences", count(lit(1)).over(Window.partitionBy(col(keyCol))))
+      .where(col("n_occurrences") > 1)
       .select(carryCols.map(col) ++ Seq(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
         concat(lit("n_occurrences="), col("n_occurrences").cast("string"))
           .as("offending_value")): _*)

@@ -129,6 +129,17 @@ class PlanSpec extends SparkSpec {
       s"forced broadcast hint on an unbounded frame:\n$lp")
   }
 
+  test("uniqueness violations: one exchange, keyed on doc_id, no join") {
+    val df = SeqTableGen.generate(spark, 1000)
+    val v = Uniqueness.violations(df, "doc_id")
+    val p = plan(v)
+    assert("Exchange".r.findAllIn(p).size === 1, s"expected exactly one exchange:\n$p")
+    assert(p.contains("Exchange hashpartitioning(doc_id"), s"exchange must key on doc_id:\n$p")
+    assert(!p.contains("Join"), s"uniqueness must not join back to the rows:\n$p")
+    val lp = v.queryExecution.logical.toString
+    assert(!lp.toLowerCase.contains("broadcast"), s"broadcast hint:\n$lp")
+  }
+
   test("analyze() evaluates TextProfile exactly once per row") {
     import graft.operators.TextAnalysis
     val docs = spark.read.parquet(s"$sf/documents.parquet")

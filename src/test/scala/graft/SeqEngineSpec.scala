@@ -212,4 +212,171 @@ class SeqEngineSpec extends SparkSpec {
     assert(batch.contains("R_REF_SOURCE") && batch.size === 6, batch)
     assert(perRule(s"$dir/stream/violations_stream") === batch)
   }
+
+  /** The verdict lines `body` prints, in print order. */
+  private def verdictLines(body: => Unit): Seq[String] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(body)
+    buf.toString("UTF-8").split('\n').filter(_.startsWith("{\"partition\"")).toSeq
+  }
+
+  private def perBucketRule(path: String): Map[(String, String), Long] =
+    spark.read.parquet(path).groupBy("part_bucket", "rule_id").count().collect()
+      .map(r => (r.get(0).toString, r.getString(1)) -> r.getLong(2)).toMap
+
+  test("validate with 2 partitions in flight: each commits and prints exactly once, exact counts") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_inflight").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 20000), s"$dir/seq", 10)
+    val lines = verdictLines(
+      graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out", Some(s"$dir/m.jsonl")))
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/outb", Some(s"$dir/mb.jsonl"))
+    val parts = (0 until 10).map(_.toString).toSet
+    // the manifest is append-only: a second commit would be a second line
+    assert(Files.readAllLines(Paths.get(s"$dir/m.jsonl")).size === 10)
+    val m = Manifest.load(s"$dir/m.jsonl").entries
+    val mb = Manifest.load(s"$dir/mb.jsonl").entries
+    assert(m.keySet === parts && mb.keySet === parts)
+    val rows = spark.read.parquet(s"$dir/seq").groupBy("part_bucket").count().collect()
+      .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val sink = perBucketRule(s"$dir/out/violations")
+    assert(sink === perBucketRule(s"$dir/outb/violations"))
+    assert(lines.size === 10)
+    parts.foreach { p =>
+      val v = sink.collect { case ((`p`, _), n) => n }.sum
+      assert(m(p).rows === rows(p) && m(p).violations === v && m(p).pass === (v == 0), p)
+      assert((m(p).rows, m(p).violations, m(p).pass, m(p).files) ===
+        (mb(p).rows, mb(p).violations, mb(p).pass, mb(p).files), p)
+      assert(m(p).files.nonEmpty && m(p).files.forall(_.contains(s"part_bucket=$p/")), p)
+      assert(lines.count(_ == s"""{"partition":"$p","rows":${rows(p)},"violations":$v,"pass":${v == 0}}""") === 1,
+        lines)
+    }
+    assert(m.values.exists(!_.pass), "the seeded violations must fail some partition")
+  }
+
+  test("validate in flight: a failing partition's exception reaches the caller, uncommitted") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_inflight_fail").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 8000), s"$dir/seq", 8)
+    // partition 3 holds a file that is not parquet: its checks throw
+    Files.writeString(Paths.get(s"$dir/seq/part_bucket=3/zz-not-parquet.parquet"), "not parquet")
+    val mf = s"$dir/m.jsonl"
+    val e = intercept[Exception](
+      graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out", Some(mf)))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    val m = Manifest.load(mf).entries
+    assert(!m.contains("3"), m.keySet)
+    // whatever did commit before the failure is exact
+    val rows = spark.read.parquet(s"$dir/seq").where(col("part_bucket") =!= 3)
+      .groupBy("part_bucket").count().collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    m.values.foreach(en => assert(en.rows === rows(en.partition), en))
+  }
+
+  test("a partition directory of 0-row files gets a 0-row passing verdict in both modes") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_empty_part").toString
+    val table = SeqTableGen.generate(spark, 4000)
+    SeqTableGen.writePartitioned(table, s"$dir/seq", 2)
+    // an empty write leaves one 0-row file holding the schema
+    table.limit(0).write.parquet(s"$dir/empty")
+    val empty = Files.list(Paths.get(s"$dir/empty")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(empty.length === 1)
+    Files.createDirectories(Paths.get(s"$dir/seq/part_bucket=7"))
+    Files.copy(empty.head, Paths.get(s"$dir/seq/part_bucket=7/part-empty.parquet"))
+    val modes = Seq[(String, (String, String) => Unit)](
+      "validate" -> ((out, mf) => graft.cli.Main.validatePath(spark, s"$dir/seq", out, Some(mf))),
+      "validate-batch" -> ((out, mf) => graft.cli.Main.validateBatch(spark, s"$dir/seq", out, Some(mf))))
+    modes.foreach { case (mode, run) =>
+      val mf = s"$dir/$mode.jsonl"
+      val lines = verdictLines(run(s"$dir/out-$mode", mf))
+      assert(lines.contains("""{"partition":"7","rows":0,"violations":0,"pass":true}"""), s"$mode: $lines")
+      val m = Manifest.load(mf).entries
+      assert(m.keySet === Set("0", "1", "7"), mode)
+      assert(m("7").files.size === 1 && m("7").files.head.endsWith("part_bucket=7/part-empty.parquet"),
+        s"$mode: ${m("7").files}")
+      assert(m("0").rows + m("1").rows === 4000, mode)
+    }
+  }
+
+  test("validate-batch over sparse bucket values 0, 1 and 9000: same verdicts as validate") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_sparse_buckets").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 6000), s"$dir/seq", 3)
+    Files.move(Paths.get(s"$dir/seq/part_bucket=2"), Paths.get(s"$dir/seq/part_bucket=9000"))
+    graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out1", Some(s"$dir/m1.jsonl"))
+    val lines = verdictLines(
+      graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out2", Some(s"$dir/m2.jsonl")))
+    val m1 = Manifest.load(s"$dir/m1.jsonl").entries
+    val m2 = Manifest.load(s"$dir/m2.jsonl").entries
+    assert(m2.keySet === Set("0", "1", "9000") && m1.keySet === m2.keySet)
+    m1.keySet.foreach { p =>
+      assert((m1(p).rows, m1(p).violations, m1(p).files) === (m2(p).rows, m2(p).violations, m2(p).files), p)
+    }
+    assert(m2.values.map(_.rows).sum === 6000)
+    assert(lines.size === 3)
+    assert(perBucketRule(s"$dir/out1/violations") === perBucketRule(s"$dir/out2/violations"))
+  }
+
+  test("validate-batch counts each bucket's rows and violations exactly, 49 buckets") {
+    import graft.checkpoint.Manifest
+    val dir = java.nio.file.Files.createTempDirectory("graft_vb49").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 9800), s"$dir/seq", 49)
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out", Some(s"$dir/m.jsonl"))
+    val m = Manifest.load(s"$dir/m.jsonl").entries
+    // a histogram of unit bins over 0..49 with edges on the integers
+    // would count buckets 1, 2, 4, 8, 16, 27 and 32 in the bin below
+    def perBucket(path: String): Map[String, Long] =
+      spark.read.parquet(path).groupBy("part_bucket").count().collect()
+        .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val rows = perBucket(s"$dir/seq")
+    val viol = perBucket(s"$dir/out/violations")
+    assert(m.keySet === (0 until 49).map(_.toString).toSet)
+    m.values.foreach { e =>
+      val v = viol.getOrElse(e.partition, 0L)
+      assert((e.rows, e.violations, e.pass) === ((rows(e.partition), v, v == 0)), e.partition)
+    }
+  }
+
+  test("a part_bucket directory that is not an integer fails loudly, naming the directory") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_null_part").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 2000), s"$dir/seq", 2)
+    // a NULL bucket, as partitionBy writes it
+    val nullDir = Paths.get(s"$dir/seq/part_bucket=__HIVE_DEFAULT_PARTITION__")
+    Files.createDirectories(nullDir)
+    val src = Files.list(Paths.get(s"$dir/seq/part_bucket=0")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.getFileName.toString.endsWith(".parquet")).head
+    Files.copy(src, nullDir.resolve("part-null.parquet"))
+    Seq[String => Unit](
+      out => graft.cli.Main.validatePath(spark, s"$dir/seq", out, None),
+      out => graft.cli.Main.validateBatch(spark, s"$dir/seq", out, None)).foreach { run =>
+      val e = intercept[IllegalArgumentException](run(s"$dir/out"))
+      assert(e.getMessage.contains("part_bucket=__HIVE_DEFAULT_PARTITION__/"), e.getMessage)
+    }
+  }
+
+  test("uniqueness violations equal the join to the duplicate set they replace, as a multiset") {
+    def oldForm(d: org.apache.spark.sql.DataFrame) =
+      d.join(Uniqueness.duplicatesSimple(d, "doc_id"), "doc_id")
+        .select(col("part_bucket"), col("doc_id"), lit("R_UNIQUE_DOCID").as("rule_id"),
+          concat(lit("n_occurrences="), col("n_occurrences").cast("string")).as("offending_value"))
+    def multiset(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val small = Seq[(String, Int)](("a", 0), ("a", 1), ("a", 1), ("b", 0), ("c", 1), ("c", 1),
+      (null, 0), (null, 1), (null, 1)).toDF("doc_id", "part_bucket")
+    val seq = df.withColumn("part_bucket", pmod(xxhash64(col("doc_id")), lit(4)))
+    Seq(small, seq).foreach { d =>
+      val got = Uniqueness.violations(d, "doc_id", carryCols = Seq("part_bucket"))
+      assert(got.columns.toSeq === Seq("part_bucket", "doc_id", "rule_id", "offending_value"))
+      assert(multiset(got) === multiset(oldForm(d)))
+    }
+    // a: 3 occurrences, c: 2; b is unique and NULL keys never violate
+    assert(Uniqueness.violations(small, "doc_id").count() === 5)
+    assert(Uniqueness.violations(seq, "doc_id").count() > 0)
+  }
 }
