@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.JsonLine
 import graft.checkpoint.Manifest
-import graft.checkpoint.Manifest.esc
 import graft.model.Violation
 import graft.operators.{Drift, Uniqueness, ValidationPass}
 import graft.report.{Report, ReportCollector}
@@ -42,13 +42,10 @@ import graft.sources.SeqTableGen
   *            distinct), one JSON line per signal
   *
   * Usage: spark-submit --class graft.cli.Main <jar> <mode> ...
-  * Every string in a JSON line goes through `esc`, the manifest's escaper.
+  * Every JSON line is rendered by [[graft.JsonLine]], the manifest's
+  * format too.
   */
 object Main {
-  // Locale.ROOT: f"" formats with the JVM default locale, and a
-  // comma-decimal locale would emit invalid JSON
-  private def d6(x: Double) = String.format(java.util.Locale.ROOT, "%.6f", Double.box(x))
-
   /** The stored-table suite: the five sequence constraints plus the
     * referential allowlist on `source`. */
   private def checkSuite: Seq[ValidationPass.SeqConstraint] =
@@ -71,7 +68,7 @@ object Main {
       case "gen" :: path :: n :: rest =>
         val buckets = rest.headOption.map(_.toInt).getOrElse(16)
         SeqTableGen.writePartitioned(SeqTableGen.generate(spark, n.toLong), path, buckets)
-        println(s"""{"mode":"gen","path":"${esc(path)}","rows":$n,"buckets":$buckets}""")
+        println(JsonLine("mode" -> "gen", "path" -> path, "rows" -> n.toLong, "buckets" -> buckets))
       case "validate" :: path :: out :: rest =>
         validatePath(spark, path, out, rest.headOption)
       case "validate-batch" :: path :: out :: rest =>
@@ -116,9 +113,8 @@ object Main {
           gates(stream).select("doc_id"), "stream_curate_out")
         val kept = spark.table("stream_curate_out").count()
         val batchKept = gates(docs).count()
-        println(s"""{"mode":"stream-curate","dir":"${esc(dir)}",""" +
-          s""""in":${docs.count()},"kept":$kept,"batch_kept":$batchKept,""" +
-          s""""parity":${kept == batchKept}}""")
+        println(JsonLine("mode" -> "stream-curate", "dir" -> dir, "in" -> docs.count(),
+          "kept" -> kept, "batch_kept" -> batchKept, "parity" -> (kept == batchKept)))
       case "stream-validate" :: path :: out :: Nil =>
         streamValidate(spark, path, out)
       case "drift-baseline" :: path :: out :: rest =>
@@ -147,8 +143,8 @@ object Main {
         Drift.saveHistogram(spark, out,
           Drift.numericHistogram(df, "n_tok", lo, hi, 64))
         Drift.saveFreq(spark, out, Drift.categoricalFreq(df, "source"))
-        println(s"""{"mode":"drift-baseline","path":"${esc(path)}","out":"${esc(out)}",""" +
-          s""""lo":$lo,"hi":$hi}""")
+        println(JsonLine("mode" -> "drift-baseline", "path" -> path, "out" -> out,
+          "lo" -> JsonLine.Num(lo.toString), "hi" -> JsonLine.Num(hi.toString)))
       case "drift-check" :: path :: baseline :: Nil =>
         val df = spark.read.parquet(path)
         // an empty snapshot would give ks_critical = Infinity (invalid
@@ -160,10 +156,9 @@ object Main {
         val v = Drift.check(df,
           "n_tok", Drift.loadHistogram(spark, baseline),
           "source", Drift.loadFreq(spark, baseline))
-        println(s"""{"mode":"drift-check","path":"${esc(path)}",""" +
-          s""""ks":${d6(v.ksStatistic)},"ks_critical":${d6(v.ksCritical)},""" +
-          s""""ks_drifted":${v.ksDrifted},"chi_square":${d6(v.chiSquare)},""" +
-          s""""chi_drifted":${v.chiDrifted}}""")
+        println(JsonLine("mode" -> "drift-check", "path" -> path, "ks" -> v.ksStatistic,
+          "ks_critical" -> v.ksCritical, "ks_drifted" -> v.ksDrifted,
+          "chi_square" -> v.chiSquare, "chi_drifted" -> v.chiDrifted))
       case "health" :: rest =>
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
         health(spark, dir)
@@ -193,22 +188,18 @@ object Main {
     }
     StorageAudit.encodingAudit(docs, "doc_id", Seq("lang", "source"))
       .collect().foreach { r =>
-        println(s"""{"signal":"encoding","column":"${esc(r.getString(0))}",""" +
-          s""""n_rows":${r.getLong(1)},"n_distinct":${r.getLong(2)},""" +
-          s""""n_runs":${r.getLong(3)},""" +
-          s""""avg_run_len":${if (r.isNullAt(4)) "null" else d6(r.getDouble(4))},""" +
-          s""""recommend":"${esc(r.getString(6))}"}""")
+        println(JsonLine("signal" -> "encoding", "column" -> r.get(0), "n_rows" -> r.get(1),
+          "n_distinct" -> r.get(2), "n_runs" -> r.get(3), "avg_run_len" -> r.get(4),
+          "recommend" -> r.get(6)))
       }
     val so = StorageAudit.sortednessAudit(docs, "doc_id", "n_chars")
       .collect()(0)
-    println(s"""{"signal":"sortedness","column":"n_chars",""" +
-      s""""n_pairs":${so.getLong(0)},""" +
-      s""""sorted_fraction":${if (so.isNullAt(3)) "null" else d6(so.getDouble(3))}}""")
+    println(JsonLine("signal" -> "sortedness", "column" -> "n_chars", "n_pairs" -> so.get(0),
+      "sorted_fraction" -> so.get(3)))
     val fs = StorageAudit.fileSkew(spark, path).collect()(0)
-    println(s"""{"signal":"files","n_files":${fs.getLong(0)},""" +
-      s""""n_rows":${fs.getLong(1)},"rows_min":${fs.getLong(2)},""" +
-      s""""rows_max":${fs.getLong(3)},"skew":${d6(fs.getDouble(5))},""" +
-      s""""n_small_files":${fs.getLong(6)}}""")
+    println(JsonLine("signal" -> "files", "n_files" -> fs.get(0), "n_rows" -> fs.get(1),
+      "rows_min" -> fs.get(2), "rows_max" -> fs.get(3), "skew" -> fs.get(5),
+      "n_small_files" -> fs.get(6)))
     // which rewrite buys what: row-skip of the selective 2-D box
     // (n_chars in [100,150] x bucket2 in [0,31]) per layout per dim
     val base = docs.select(col("doc_id"), col("n_chars"),
@@ -222,9 +213,8 @@ object Main {
                  lo: Long, hi: Long): Unit = {
       val s = Bucketing.zoneMapSkipStats(spark, p, dimCol, lo, hi)
         .collect()(0)
-      println(s"""{"signal":"skipping","layout":"${esc(layout)}",""" +
-        s""""dim":"${esc(dimCol)}","n_files":${s.getLong(0)},""" +
-        s""""row_skip_fraction":${if (s.isNullAt(5)) "null" else d6(s.getDouble(5))}}""")
+      println(JsonLine("signal" -> "skipping", "layout" -> layout, "dim" -> dimCol,
+        "n_files" -> s.get(0), "row_skip_fraction" -> s.get(5)))
     }
     // as-stored: usually a single unclustered file -> ~0 skipping
     skipLine("as-stored", path, "n_chars", 100L, 150L)
@@ -254,38 +244,31 @@ object Main {
     }
     val ga = Sessionize.growthAccounting(ev, "user_id", "ts")
       .orderBy(desc("day")).limit(1).collect()(0)
-    println(s"""{"signal":"growth","day":"${ga.getDate(0)}",""" +
-      s""""active":${ga.getLong(1)},"new":${ga.getLong(2)},""" +
-      s""""retained":${ga.getLong(3)},"resurrected":${ga.getLong(4)},""" +
-      s""""churned":${if (ga.isNullAt(5)) "null" else ga.getLong(5)}}""")
+    println(JsonLine("signal" -> "growth", "day" -> String.valueOf(ga.getDate(0)),
+      "active" -> ga.get(1), "new" -> ga.get(2), "retained" -> ga.get(3),
+      "resurrected" -> ga.get(4), "churned" -> ga.get(5)))
     Drift.decayedVolume(ev, "ts", "event_type").collect().foreach { r =>
-      println(s"""{"signal":"decayed_volume","type":"${esc(r.getString(0))}",""" +
-        s""""n":${r.getLong(1)},"mass":${d6(r.getDouble(2))},""" +
-        s""""freshness":${d6(r.getDouble(3))}}""")
+      println(JsonLine("signal" -> "decayed_volume", "type" -> r.get(0), "n" -> r.get(1),
+        "mass" -> r.get(2), "freshness" -> r.get(3)))
     }
     Sessionize.stationaryMix(ev, "user_id", "ts", "event_type",
         "event_id").collect().foreach { r =>
-      println(s"""{"signal":"stationarity","type":"${esc(r.getString(0))}",""" +
-        s""""observed":${d6(r.getDouble(1))},""" +
-        s""""stationary":${d6(r.getDouble(2))},""" +
-        s""""delta":${d6(r.getDouble(3))}}""")
+      println(JsonLine("signal" -> "stationarity", "type" -> r.get(0), "observed" -> r.get(1),
+        "stationary" -> r.get(2), "delta" -> r.get(3)))
     }
     val we = Sessionize.weekdayEffect(ev, "ts").collect()(0)
-    println(s"""{"signal":"weekday","n_days":${we.getLong(0)},""" +
-      s""""eta_squared":${if (we.isNullAt(1)) "null" else d6(we.getDouble(1))},""" +
-      s""""peak_dow":${we.getInt(2)},"trough_dow":${we.getInt(3)}}""")
+    println(JsonLine("signal" -> "weekday", "n_days" -> we.get(0), "eta_squared" -> we.get(1),
+      "peak_dow" -> we.get(2), "trough_dow" -> we.get(3)))
     val ll = Sessionize.leadLagCorr(ev, "ts", "event_type", "click",
         "purchase").collect()
       .filter(!_.isNullAt(2)).maxByOption(_.getDouble(2))
     ll.foreach { r =>
-      println(s"""{"signal":"lead_lag","best_lag":${r.getInt(0)},""" +
-        s""""corr":${d6(r.getDouble(2))}}""")
+      println(JsonLine("signal" -> "lead_lag", "best_lag" -> r.get(0), "corr" -> r.get(2)))
     }
     val rd = Profile.rollingDistinct(ev, "ts", "user_id")
       .orderBy(desc("day")).limit(1).collect()(0)
-    println(s"""{"signal":"rolling_distinct","day":"${rd.getDate(0)}",""" +
-      s""""day_distinct":${rd.getLong(2)},""" +
-      s""""rolling_7d":${rd.getLong(3)}}""")
+    println(JsonLine("signal" -> "rolling_distinct", "day" -> String.valueOf(rd.getDate(0)),
+      "day_distinct" -> rd.get(2), "rolling_7d" -> rd.get(3)))
   }
 
   /** Validate-as-data-lands: [[checkSuite]] on a file stream (each new
@@ -311,7 +294,7 @@ object Main {
     // violations schema is known from the streaming frame itself
     val n = spark.read.schema(vio.schema)
       .parquet(s"$out/violations_stream").count()
-    println(s"""{"mode":"stream-validate","path":"${esc(path)}","violations":$n}""")
+    println(JsonLine("mode" -> "stream-validate", "path" -> path, "violations" -> n))
   }
 
   /** Resume step of both validate modes: the table's partitions (`all`
@@ -331,7 +314,7 @@ object Main {
       else Seq("all" -> files.sorted)
     val mf = manifest.map(Manifest.load).getOrElse(Manifest.empty)
     val todo = partitions.filterNot { case (p, _) => mf.isComplete(p) }
-    println(s"""{"mode":"$mode","partitions":${partitions.size},"todo":${todo.size}}""")
+    println(JsonLine("mode" -> mode, "partitions" -> partitions.size, "todo" -> todo.size))
     todo
   }
 
@@ -361,7 +344,7 @@ object Main {
       Manifest.markComplete(mfPath, p, nRows, nViol, nViol == 0,
         snapshotId = snapshotId, files = files)
     }
-    println(s"""{"partition":"${esc(p)}","rows":$nRows,"violations":$nViol,"pass":${nViol == 0}}""")
+    println(JsonLine("partition" -> p, "rows" -> nRows, "violations" -> nViol, "pass" -> (nViol == 0)))
   }
 
   /** Partitions [[validatePath]] checks at once. Two overlap one
@@ -529,16 +512,17 @@ object Main {
     val near = Dedup.minhashNearDuplicates(docs, "doc_id", "text",
       k = 32, bands = 8, threshold = 0.7).count()
     val sim = Dedup.simhashNearDuplicates(docs, "doc_id", "text", maxHamming = 3).count()
-    println(s"""{"op":"dedup","exact_groups":$exact,"minhash_pairs":$near,"simhash_pairs":$sim}""")
+    println(JsonLine("op" -> "dedup", "exact_groups" -> exact, "minhash_pairs" -> near,
+      "simhash_pairs" -> sim))
     val q = embs.orderBy("vec_id").select("embedding").head().getSeq[Float](0).toArray
     val top = Similarity.bruteForceTopK(embs, "vec_id", "embedding", q, 5)
-      .collect().map(r => s"${r.getLong(0)}:${f"${r.getDouble(1)}%.3f"}").mkString(",")
-    println(s"""{"op":"ann_topk","top5":"${esc(top)}"}""")
+      .collect().map(r => s"${r.getLong(0)}:${JsonLine.fixed(r.getDouble(1), 3).text}").mkString(",")
+    println(JsonLine("op" -> "ann_topk", "top5" -> top))
     val ta = TextAnalysis.analyze(docs, "doc_id", "text")
     val langAgg = ta.groupBy("lang_pred").count().orderBy(desc("count"))
       .collect().map(r => s"${r.getString(0)}:${r.getLong(1)}").mkString(",")
     val avgQ = ta.agg(avg("quality_score")).head().getDouble(0)
-    println(s"""{"op":"text","langs":"${esc(langAgg)}","avg_quality":${f"$avgQ%.4f"}}""")
+    println(JsonLine("op" -> "text", "langs" -> langAgg, "avg_quality" -> JsonLine.fixed(avgQ, 4)))
 
     // benchmark decontamination + deterministic mixing + PII sweep —
     // the assembly steps between validation and tokenization
@@ -553,7 +537,8 @@ object Main {
     val pii = docs.agg(
       sum(TextAnalysis.piiCounts(col("text")).getField("n_emails")).as("e"))
       .head().getLong(0)
-    println(s"""{"op":"assemble","contaminated_docs":$contaminated,"mixed_kept":$mixed,"emails_found":$pii}""")
+    println(JsonLine("op" -> "assemble", "contaminated_docs" -> contaminated, "mixed_kept" -> mixed,
+      "emails_found" -> pii))
 
     // ingest-time steps: canonical-URL collapse (case/tracking-param
     // spellings hash equal), incremental dedup of the batch against an
@@ -570,7 +555,8 @@ object Main {
         fresh, "source", "doc_id", "n_chars", budget = 1000)
       .select("source", "shard", "pack_id").distinct().count()
     fresh.unpersist()
-    println(s"""{"op":"ingest","canonical_urls":$canon,"fresh_docs":$freshCnt,"packs":$packs}""")
+    println(JsonLine("op" -> "ingest", "canonical_urls" -> canon, "fresh_docs" -> freshCnt,
+      "packs" -> packs))
 
     // token-payload assembly: quarantine split → benchmark
     // decontamination → train/val/test assignment → concat-and-chunk
@@ -612,8 +598,8 @@ object Main {
       trainSized, "doc_id", "tokens", "sz", windowLen = 2048L,
       offsets = Some(offs)).count()
     graft.operators.Packing.releaseOffsets(offs)
-    println(s"""{"op":"tokens","clean":$cleanCnt,"quarantined":${dirty.count()},""" +
-      s""""contaminated":$contam,"placed_docs":$placed,"train_windows":$windows}""")
+    println(JsonLine("op" -> "tokens", "clean" -> cleanCnt, "quarantined" -> dirty.count(),
+      "contaminated" -> contam, "placed_docs" -> placed, "train_windows" -> windows))
     decon.unpersist(); seq.unpersist()
   }
 
@@ -642,9 +628,8 @@ object Main {
         TextAnalysis.QualityThresholds(minStopwordRatio = 0.0)))
     val kept = f.df.cache()
     val keptCnt = kept.count() // the funnel's single action
-    val funnelStr = f.report().map { case (s, n, m) =>
-      s""""${esc(s)}":[$n,${m.getOrElse(-1L)}]""" }.mkString(",")
-    println(s"""{"op":"ingest_funnel",$funnelStr}""")
+    println(JsonLine(("op" -> "ingest_funnel") +:
+      f.report().map { case (s, n, m) => s -> Seq(n, m.getOrElse(-1L)) }: _*))
 
     // repetition scrub + keyword/importance signals. Guards: a strict
     // gate can keep 0-1 docs — sum() is then NULL and k would be 0
@@ -659,24 +644,22 @@ object Main {
       k = math.max(1, keptCnt.toInt / 2)).count()
     val wSample = Mixing.weightedSample(kept, "doc_id", "n_chars", k = 50)
       .count()
-    println(s"""{"op":"signals","intradoc_dropped_units":$dropped,""" +
-      s""""tfidf_docs":$terms,"dsir_selected":$dsirKept,""" +
-      s""""weighted_sample":$wSample}""")
+    println(JsonLine("op" -> "signals", "intradoc_dropped_units" -> dropped, "tfidf_docs" -> terms,
+      "dsir_selected" -> dsirKept, "weighted_sample" -> wSample))
 
     // embeddings: semantic dedup on a planted-duplicate corpus
     val doubled = embs.select("vec_id", "embedding").unionByName(
       embs.select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
     val semKept = Similarity.semDedup(doubled, "vec_id", "embedding",
       nCentroids = 8, threshold = 0.999).count()
-    println(s"""{"op":"semdedup","in":${2 * embs.count()},"kept":$semKept}""")
+    println(JsonLine("op" -> "semdedup", "in" -> 2 * embs.count(), "kept" -> semKept))
 
     // refresh bookkeeping + packaging: snapshot diff, z-scored length,
     // difficulty buckets, token-balanced shards
     val oldSnap = docs.where(col("doc_id") % 3 =!= 0).select("doc_id", "text")
     val newSnap = docs.where(col("doc_id") % 5 =!= 0).select("doc_id", "text")
-    val diffStr = SnapshotDiff.summary(oldSnap, newSnap, "doc_id", Seq("text"))
-      .collect().map(r => s""""${esc(r.getString(0))}":${r.getLong(1)}""")
-      .sorted.mkString(",")
+    val diff = SnapshotDiff.summary(oldSnap, newSnap, "doc_id", Seq("text"))
+      .collect().map(r => r.getString(0) -> r.get(1)).sortBy(_._1).toSeq
     val zOut = Profile.groupZScores(docs, "n_chars", "source")
       .agg(max(abs(col("z")))).head().getDouble(0)
     val buckets = Mixing.quantileBuckets(docs, "n_chars", nBuckets = 4)
@@ -691,19 +674,17 @@ object Main {
         offsets = Some(shardOffs)), "n_chars")
     val maxShard = shards.agg(max(col("total_cost"))).head().getLong(0)
     Packing.releaseOffsets(shardOffs)
-    println(s"""{"op":"package",$diffStr,"max_abs_z":${f"$zOut%.3f"},""" +
-      s""""difficulty_buckets":$buckets,"shards":8,"max_shard_cost":$maxShard}""")
+    println(JsonLine(Seq("op" -> "package") ++ diff ++ Seq("max_abs_z" -> JsonLine.fixed(zOut, 3),
+      "difficulty_buckets" -> buckets, "shards" -> 8, "max_shard_cost" -> maxShard): _*))
 
     // split hygiene close-out: content-group-hashed train/val/test over
     // the curated survivors (exact duplicates CANNOT span splits by
     // construction), with the leakage audit run anyway — the belt AND
     // the suspenders, logged per split
     val split = Mixing.groupAwareSplit(kept.select("doc_id", "text"), "text")
-    val leakStr = graft.operators.Dedup.splitLeakage(split, "text", "split")
-      .collect().map(r =>
-        s""""${esc(r.getString(0))}":[${r.getLong(1)},${r.getLong(3)}]""")
-      .sorted.mkString(",")
-    println(s"""{"op":"splits",$leakStr}""")
+    val leaks = graft.operators.Dedup.splitLeakage(split, "text", "split")
+      .collect().map(r => r.getString(0) -> Seq(r.get(1), r.get(3))).sortBy(_._1)
+    println(JsonLine(("op" -> "splits") +: leaks.toSeq: _*))
     kept.unpersist(); docs.unpersist()
   }
 

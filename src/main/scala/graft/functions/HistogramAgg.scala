@@ -19,7 +19,7 @@ final class HistogramBuffer(val nBins: Int) extends Serializable {
     val idx =
       if (v < lo) 0
       else if (v >= hi) nBins + 1
-      else 1 + math.min(nBins - 1, (((v - lo) / (hi - lo)) * nBins).toInt)
+      else 1 + math.min(nBins - 1, ((v - lo) * nBins / (hi - lo)).toInt)
     counts(idx) += 1
   }
   def merge(other: HistogramBuffer): Unit = {

@@ -32,6 +32,18 @@ object Kernel {
 
   def isFloatArray(t: DataType): Boolean = accepts(ArrayType(FloatType), t)
 
+  private val Blanks = java.util.regex.Pattern.compile("\\s+")
+
+  /** The text kernels' words: `s` lowercased under `Locale.ROOT` (word
+    * identity must not depend on the JVM default locale: tr_TR's
+    * dotless ı would de-sync vocabularies and oracles), trimmed, split
+    * on `\s+`, empty words dropped. Equal to
+    * `s.toLowerCase(Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)`,
+    * but the pattern is compiled once, where `String.split` compiles a
+    * multi-character regex on every call. */
+  def words(s: String): Array[String] =
+    Blanks.split(s.toLowerCase(java.util.Locale.ROOT).trim).filter(_.nonEmpty)
+
   /** `got` is `want`, array nullability aside. */
   def accepts(want: DataType, got: DataType): Boolean = (want, got) match {
     case (ArrayType(w, _), ArrayType(g, _)) => accepts(w, g)

@@ -25,10 +25,7 @@ case class WordShingles(n: Int) extends Kernel {
   def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def eval(input: Any): Any = {
-    // Locale.ROOT: word identity must not depend on the JVM default
-    // locale (matches WordIds and the SQL lower() the oracles use)
-    val words = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(input.asInstanceOf[UTF8String].toString)
     val shingles: Array[UTF8String] =
       if (words.length < n) Array(UTF8String.fromString(words.mkString(" ")))
       else {
@@ -61,8 +58,7 @@ case class WordChunks(chunkWords: Int) extends Kernel {
   def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def eval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(input.asInstanceOf[UTF8String].toString)
     if (words.isEmpty) return ArrayData.toArrayData(Array.empty[UTF8String])
     val nChunks = (words.length + chunkWords - 1) / chunkWords
     val out = new Array[UTF8String](nChunks)

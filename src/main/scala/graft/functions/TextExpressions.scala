@@ -493,8 +493,7 @@ case object TextProfile extends Kernel {
     }
 
     // words = filter(split(lower(trim(text)), "\s+"), _ != "")
-    val words = s.toLowerCase(java.util.Locale.ROOT).trim
-      .split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(s)
     val nWords = words.length
     var sumLen = 0L
     var enHits = 0
@@ -625,10 +624,7 @@ case class WordIds(vocab: Seq[String], unkId: Int) extends Kernel {
   }
 
   override def eval(input: Any): Any = {
-    // Locale.ROOT: tokenization must not depend on the JVM's default
-    // locale (tr_TR dotless-ı would silently de-sync vocab and oracle)
-    val words = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(input.asInstanceOf[UTF8String].toString)
     val out = new Array[Int](words.length)
     var i = 0
     while (i < words.length) {
@@ -666,10 +662,7 @@ case class RepetitionSignals(topN: Int, dupN: Int) extends Kernel {
   def dataType: DataType = RepetitionSignals.Schema
 
   override def eval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    // same tokenization as TextProfile: filter(split(lower(trim), \s+))
-    val words = s.toLowerCase(java.util.Locale.ROOT).trim
-      .split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(input.asInstanceOf[UTF8String].toString)
     val n = words.length
     val lens = new Array[Long](n)
     var denom = 0L
@@ -793,8 +786,7 @@ case class RakePhrases(stopwords: Seq[String], maxLen: Int) extends Kernel {
   }
 
   override def eval(input: Any): Any = {
-    val words = input.asInstanceOf[UTF8String].toString
-      .toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty)
+    val words = Kernel.words(input.asInstanceOf[UTF8String].toString)
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     val cur = scala.collection.mutable.ArrayBuffer.empty[String]
     def flush(): Unit = {

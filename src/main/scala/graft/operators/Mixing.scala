@@ -817,7 +817,7 @@ object Mixing {
     val spark = df.sparkSession
     val rows = df.groupBy(col(groupCol).cast("string").as("__g"))
       .agg(count(lit(1)).as("n")).collect()
-    val nullTag = " null" // sorts before any printable group name
+    val nullTag = "\u0000null" // sorts before any printable group name
     val counts = rows.map { r =>
       (if (r.isNullAt(0)) nullTag else r.getString(0)) -> r.getLong(1)
     }.toMap

@@ -1017,30 +1017,14 @@ object Profile {
     v ^ Long.MinValue
   }
 
-  /** Exact median of a long column via [[kthSmallestLong]] — ≤ 16
-    * counting passes, O(1) driver memory, no global sort: odd n takes
-    * the middle order statistic, even n the mean of the two middles
-    * (the SQL `median` rule, so DuckDB replays it bit-exactly).
-    * Returns (n, median); n = 0 ⇒ NULL median. */
+  /** Exact median of a long column, the (n, median) of
+    * [[exactOrderStatsLong]] — ≤ 16 counting passes, O(1) driver memory,
+    * no global sort: odd n takes the middle order statistic, even n the
+    * mean of the two middles (the SQL `median` rule, so DuckDB replays
+    * it bit-exactly). n = 0 ⇒ NULL median. */
   def exactMedianLong(df: DataFrame, colName: String): (Long, Option[Double]) = {
-    // ONE (count, min, max) aggregate shared by both selects — the
-    // byte-skip bounds are paid for once, not per order statistic
-    val c = col(colName).cast("long")
-    val s = df.agg(count(c).as("n"), min(c).as("mn"), max(c).as("mx"))
-      .head()
-    val n = s.getLong(0)
-    if (n == 0) return (0L, None)
-    val bounds = Some((s.getLong(1), s.getLong(2)))
-    val med = if (n % 2 == 1)
-      kthSmallestLong(df, colName, (n + 1) / 2, bounds).toDouble
-    else {
-      // one multi-k call: the bounded-span histogram (or a shared
-      // bounds aggregate on wide domains) answers both middles
-      val Seq(lo, hi) =
-        kthSmallestLongs(df, colName, Seq(n / 2, n / 2 + 1), bounds)
-      (lo + hi) / 2.0
-    }
-    (n, Some(med))
+    val (n, med, _, _) = exactOrderStatsLong(df, colName)
+    (n, med)
   }
 
   /** (n, median, min, max) of a long column in the fewest passes the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{CollectMinK, Predicates}
 import graft.model.{Requirement, Rule, RuleType}
+import graft.norm.Normalize
 import graft.norm.Normalize.NullSentinel
 
 /** The semantic core: one fused Catalyst pass per table replacing the
@@ -259,7 +260,7 @@ object ValidationPass {
     * predicates over (doc_id, tokens, n_tok, source). */
   def seqConstraints(vocabSize: Int, sourceAllow: Seq[String]): Seq[SeqConstraint] = Seq(
     SeqConstraint("R_NONNULL_DOCID",
-      col("doc_id").isNotNull && !col("doc_id").rlike("^\\s*$"),
+      !Normalize.missingMask(col("doc_id")),
       coalesce(col("doc_id"), lit("<null>"))),
     SeqConstraint("R_REGEX_DOCID",
       col("doc_id").rlike("^(?:doc_[0-9]{12})$"),
@@ -313,7 +314,7 @@ object ValidationPass {
       val req =
         if (r.isRequired)
           Seq(SeqConstraint(s"R_REQUIRED_$up",
-            col(r.field).isNotNull && !c.rlike("^\\s*$"),
+            !Normalize.missingMask(c),
             coalesce(c, lit("<null>"))))
         else Nil
       val typed = r.dataType match {

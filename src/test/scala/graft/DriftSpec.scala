@@ -110,6 +110,18 @@ class DriftSpec extends AnyFunSuite {
     assert(mk(Seq(10.0)).counts(5) === 1) // hi is exclusive → overflow bin
   }
 
+  test("histogram unit bins: every integer of the range lands in its own bin") {
+    import graft.functions.HistogramBuffer
+    // widths 49 and 22 are not powers of two: 1.0 / 49 * 49 rounds to
+    // 0.9999999999999999, so dividing before scaling put 1, 2, 4, 8, 16,
+    // 27 and 32 (and 15 over 22) one bin low
+    for (n <- Seq(49, 22, 64, 7)) {
+      val b = new HistogramBuffer(n)
+      (0 until n).foreach(v => b.add(v.toDouble, 0.0, n.toDouble))
+      assert(b.counts.toSeq === (0L +: Seq.fill(n)(1L) :+ 0L), s"nBins=$n")
+    }
+  }
+
   test("ECDF from histogram is monotone and ends at 1") {
     val h = Drift.HistogramProfile(0, 10, Array(1L, 2L, 3L, 0L, 4L, 1L))
     val e = h.ecdf

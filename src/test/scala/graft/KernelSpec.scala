@@ -93,4 +93,12 @@ class KernelSpec extends SparkSpec {
     assert(err(Registry.call("graft_pq_adc", lit(Array[Byte](0)), typedLit(Seq(1.0)))).contains(
       "graft_pq_adc(codes, lut): argument 2 (lut) must be a array<array<double>> constant"))
   }
+
+  test("Kernel.words: the split(\\s+) tokenization it replaces, word for word") {
+    val texts = Seq("", " ", "a", "  Hello\tWORLD \n x ", "İstanbul I ı", "a\u000Bb\u00A0c\u2003d",
+      "\n\nlead and trail\r\n", "ß ﬁ Σσς", "x  y\t\tz")
+    for (t <- texts)
+      assert(graft.functions.Kernel.words(t).toSeq ===
+        t.toLowerCase(java.util.Locale.ROOT).trim.split("\\s+").filter(_.nonEmpty).toSeq, t)
+  }
 }

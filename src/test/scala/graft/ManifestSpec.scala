@@ -136,13 +136,70 @@ class ManifestSpec extends AnyFunSuite {
     }
   }
 
+  test("one rendered manifest line, pinned byte for byte") {
+    import java.nio.file.{Files, Paths}
+    val p = tmp()
+    Manifest.markComplete(p, "3", rows = 1000, violations = 7, pass = false,
+      snapshotId = "snap-42", files = Seq("f1.parquet", "a\"b\\c\n.parquet"))
+    val line = Files.readString(Paths.get(p))
+    val stamp = line.substring(line.lastIndexOf(':') + 1, line.length - 2)
+    assert(stamp.nonEmpty && stamp.forall(_.isDigit), line)
+    assert(line === """{"partition":"3","rows":1000,"violations":7,"pass":false,""" +
+      """"snapshot_id":"snap-42","files":["f1.parquet","a\"b\\c\n.parquet"],""" +
+      s""""completed_at_ms":$stamp}""" + "\n")
+  }
+
+  test("a manifest written by the earlier renderer loads to the same entries") {
+    import java.nio.file.{Files, Paths}
+    val p = tmp()
+    // two lines as the hand-built renderer wrote them (the second one
+    // re-marks partition 0), then a torn tail
+    Files.writeString(Paths.get(p),
+      """{"partition":"0","rows":10,"violations":1,"pass":false,"snapshot_id":"scan-1",""" +
+      """"files":["part_bucket=0/a.parquet"],"completed_at_ms":1700000000000}""" + "\n" +
+      """{"partition":"w\"e\\ird\n""" + "\\u0001\\ud800" + """","rows":3,"violations":0,"pass":true,""" +
+      """"snapshot_id":"","files":[],"completed_at_ms":1700000000001}""" + "\n" +
+      """{"partition":"0","rows":10,"violations":0,"pass":true,"snapshot_id":"scan-2",""" +
+      """"files":["part_bucket=0/a.parquet","part_bucket=0/b.parquet"],"completed_at_ms":1700000000002}""" +
+      "\n" + """{"partition":"1","ro""")
+    assert(Manifest.load(p).entries === Map(
+      "0" -> Manifest.Entry("0", 10, 0, pass = true, "scan-2",
+        Seq("part_bucket=0/a.parquet", "part_bucket=0/b.parquet"), 1700000000002L),
+      "w\"e\\ird\n\u0001\ud800" -> Manifest.Entry("w\"e\\ird\n\u0001\ud800", 3, 0, pass = true, "",
+        Nil, 1700000000001L)))
+  }
+
+  test("a complete line with a wrong-typed field or trailing junk fails loudly") {
+    import java.nio.file.{Files, Paths}
+    for (bad <- Seq(
+        """{"partition":"0","rows":"3","violations":0,"pass":true}""",
+        """{"partition":"0","rows":1.5}""",
+        """{"partition":0,"rows":3}""",
+        """{"partition":"0","pass":"true"}""",
+        """{"partition":"0","files":["a",1]}""",
+        """{"partition":"0","files":"a"}""",
+        """{"partition":"0","rows":3} {"partition":"1"}""",
+        """{"partition":"0","rows":3}x""")) {
+      val p = tmp()
+      Manifest.markComplete(p, "9", 1, 0, pass = true)
+      Files.writeString(Paths.get(p), bad + "\n", java.nio.file.StandardOpenOption.APPEND)
+      intercept[IllegalArgumentException](Manifest.load(p))
+    }
+    // a missing key still reads as empty/0/false, and an unknown one,
+    // nested or not, is ignored
+    val p = tmp()
+    Files.writeString(Paths.get(p),
+      """{"partition":"5","lineage":[{"path":"a","size":1,"mtime":2}],"metrics":{"gc_ms":3}}""" + "\n")
+    assert(Manifest.load(p).entries === Map("5" -> Manifest.Entry("5", 0, 0, pass = false, "", Nil, 0)))
+  }
+
   test("esc: CLI JSON lines stay valid for quotes, backslashes and control characters") {
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     for (v <- Seq("""C:\snap""", "say \"hi\"", "tab\tnew\nline\u0001bell", "/tmp/graft/seq")) {
-      val line = s"""{"mode":"drift-check","path":"${Manifest.esc(v)}"}"""
+      val line = s"""{"mode":"drift-check","path":"${JsonLine.esc(v)}"}"""
       assert(json.readTree(line).get("path").asText() === v, line)
     }
     // ordinary values print byte-identical: the partition lines keep {"partition":"7",...}
-    assert(Manifest.esc("7") === "7" && Manifest.esc("/tmp/graft/seq") === "/tmp/graft/seq")
+    assert(JsonLine.esc("7") === "7" && JsonLine.esc("/tmp/graft/seq") === "/tmp/graft/seq")
   }
 }
