@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.JsonLine
 import graft.checkpoint.Manifest
 import graft.model.Violation
-import graft.operators.{Drift, Uniqueness, ValidationPass}
+import graft.operators.{Dedup, Drift, Uniqueness, ValidationPass}
 import graft.report.{Report, ReportCollector}
 import graft.sources.SeqTableGen
 
@@ -96,8 +96,7 @@ object Main {
           .select("doc_id", "source", "text", "n_chars")
         val seen = docs.where(col("doc_id") < 100)
         val bench = docs.where(col("doc_id") % 97 === 0)
-          .select(filter(split(lower(trim(col("text"))), "\\s+"),
-            w => w =!= "").as("tokens"))
+          .select(Dedup.words(col("text")).as("tokens"))
         def gates(df: org.apache.spark.sql.DataFrame) =
           graft.operators.CurationGates(df, seen,
             blockedHosts = Seq("h3.example.com"), bench = Some(bench),
@@ -437,8 +436,10 @@ object Main {
       fs.delete(new org.apache.hadoop.fs.Path(sinkRoot, s"part_bucket=$p"), true)
     }
     // dynamic overwrite: only the buckets in this run are replaced
-    // (writer-scoped option — do not mutate session config)
-    all.observe(violObs, countPerBucket(col("part_bucket")).as("n")).write.mode("overwrite")
+    // (writer-scoped option — do not mutate session config); one write
+    // task per bucket, so one sink file per bucket, not one per task
+    all.observe(violObs, countPerBucket(col("part_bucket")).as("n"))
+      .repartition(col("part_bucket")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("part_bucket")
       .parquet(s"$out/violations")
@@ -505,7 +506,7 @@ object Main {
   /** Training-data pipeline pass over a testdata dir: dedup, similarity,
     * text analysis over documents/embeddings. */
   def pipeline(spark: SparkSession, dir: String): Unit = {
-    import graft.operators.{Dedup, Similarity, TextAnalysis}
+    import graft.operators.{Similarity, TextAnalysis}
     val docs = spark.read.parquet(s"$dir/documents.parquet").cache()
     val embs = spark.read.parquet(s"$dir/embeddings.parquet").cache()
     val exact = Dedup.exactDuplicates(docs, "doc_id", "text").count()
@@ -528,7 +529,7 @@ object Main {
     // the assembly steps between validation and tokenization
     val bench = docs.where(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("bid"), col("text"))
-    val contaminated = graft.operators.Dedup.ngramContamination(
+    val contaminated = Dedup.ngramContamination(
       docs, "doc_id", "text", bench, "bid", "text", n = 5, minHits = 2)
       .where(col("corpus_id") =!= col("bench_id")) // bench ⊂ corpus here:
       .select("corpus_id").distinct().count()      // drop self-matches

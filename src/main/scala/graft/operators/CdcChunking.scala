@@ -38,9 +38,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: chunking is a stateless projection (zero exchanges —
   * PlanSpec pin); pair discovery shuffles only narrow
-  * (chunk_hash, id) rows with the [[Dedup.minhashNearDuplicates]]
-  * hot-bucket cap (a boilerplate chunk shared by m documents would
-  * otherwise fan out m(m−1)/2 pairs); full text never moves.
+  * (chunk_hash, id) rows through the [[CappedBuckets]] hot-bucket cap;
+  * full text never moves.
   */
 object CdcChunking {
 
@@ -115,45 +114,40 @@ object CdcChunking {
     * denominator, so a short doc fully embedded in a longer mirror
     * still scores 1.0.
     *
-    * Distributed shape: distinct (chunk_hash, id) rows group per hash
-    * with the standard hot-bucket cap (`maxBucket`, observable via
-    * [[hotChunks]] — no silent caps), pairs fan out inside capped
-    * buckets only, then ONE count aggregate per pair. Shuffles carry
-    * hashes and ids; text and chunk bodies never move. */
+    * Distributed shape: distinct (chunk_hash, id) rows meet in a
+    * [[CappedBuckets]] join (a hash above `maxBucket` yields no pairs
+    * and is listed by [[hotChunks]]), then ONE count aggregate per
+    * pair. Shuffles carry hashes and ids; text and chunk bodies never
+    * move. */
   def overlapPairs(chunked: DataFrame, idCol: String,
                    minOverlap: Double, maxBucket: Int = 200): DataFrame = {
-    val perDoc = chunked.select(col(idCol), col("chunk_hash")).distinct()
-    val sizes = perDoc.groupBy(col(idCol))
+    val buckets = chunkBuckets(chunked, idCol, maxBucket)
+    val sizes = buckets.members.groupBy(col("m.id").as("id"))
       .agg(count(lit(1)).as("__n"))
-    val buckets = perDoc.groupBy(col("chunk_hash"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-      .where(size(col("__ids")) > 1 && size(col("__ids")) <= maxBucket)
-    val pairs = buckets.select(
-        explode(transform(sequence(lit(0), size(col("__ids")) - 2), i =>
-          struct(element_at(col("__ids"), i + 1).as("id_a"),
-            slice(col("__ids"), i + 2, size(col("__ids")) - i - 1)
-              .as("rest")))).as("__p"))
-      .select(col("__p.id_a").as("id_a"),
-        explode(col("__p.rest")).as("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
+    val pairs = buckets.pairs
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
     pairs
-      .join(sizes.select(col(idCol).as("id_a"), col("__n").as("__na")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("__n").as("__nb")), "id_b")
+      .join(sizes.select(col("id").as("id_a"), col("__n").as("__na")), "id_a")
+      .join(sizes.select(col("id").as("id_b"), col("__n").as("__nb")), "id_b")
       .select(col("id_a"), col("id_b"), col("n_shared"),
         round(col("n_shared").cast("double") /
           least(col("__na"), col("__nb")), 6).as("overlap"))
       .where(col("overlap") >= minOverlap)
   }
 
-  /** Chunk hashes skipped by [[overlapPairs]]'s `maxBucket` cap —
-    * observability companion ("no silent caps"): a hash here is
-    * boilerplate shared by more documents than the cap admits. */
+  /** Chunk-hash buckets: a member (chunk_hash, m = (id)) per distinct (id, chunk_hash). */
+  private def chunkBuckets(chunked: DataFrame, idCol: String, maxBucket: Int): CappedBuckets =
+    CappedBuckets(
+      chunked.select(col(idCol), col("chunk_hash")).distinct()
+        .select(col("chunk_hash"), struct(col(idCol).as("id")).as("m")),
+      Seq("chunk_hash"), maxBucket)
+
+  /** (chunk_hash, n_docs), most shared first: the chunk hashes that
+    * [[overlapPairs]]'s `maxBucket` cap dropped — boilerplate shared by
+    * more documents than the cap admits. */
   def hotChunks(chunked: DataFrame, idCol: String,
                 maxBucket: Int = 200): DataFrame =
-    chunked.select(col(idCol), col("chunk_hash")).distinct()
-      .groupBy(col("chunk_hash"))
-      .agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") > maxBucket)
+    chunkBuckets(chunked, idCol, maxBucket).overflow
       .orderBy(desc("n_docs"), col("chunk_hash"))
 }

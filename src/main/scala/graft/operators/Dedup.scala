@@ -345,56 +345,54 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
+  /** (id, sh): each document's distinct word-shingle set. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("id"), array_distinct(shingles(col(textCol), n)).as("sh"))
+
+  /** MinHash-LSH buckets: a member (band_idx, band_hash, m = (id)) per band of each set. */
+  private def bandBuckets(sh: DataFrame, k: Int, bands: Int, maxBucket: Int): CappedBuckets =
+    CappedBuckets(
+      sh.select(posexplode(graft.functions.ShingleExpression.minhashBands(
+          col("sh"), k, bands)).as(Seq("band_idx", "band_hash")), struct(col("id")).as("m")),
+      Seq("band_idx", "band_hash"), maxBucket)
+
+  /** (a, b, jaccard ≥ threshold) over the candidate pairs `cand`, the
+    * shingle sets of `shA` and `shB` joined only after the pair dedup. */
+  private def jaccardVerified(cand: DataFrame, a: String, b: String,
+                              shA: DataFrame, shB: DataFrame,
+                              threshold: Double): DataFrame =
+    cand.join(shA.select(col("id").as(a), col("sh").as("__sh_a")), Seq(a))
+      .join(shB.select(col("id").as(b), col("sh").as("__sh_b")), Seq(b))
+      .select(col(a), col(b),
+        (size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
+          size(array_union(col("__sh_a"), col("__sh_b")))).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+
   /** Candidate near-duplicate pairs via banded MinHash-LSH, verified with
     * exact shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
     * id_a < id_b, jaccard ≥ threshold.
     *
     * Scale discipline (each matters at 10^9 docs):
-    *  1. the banded self-join moves ONLY (band_idx, band_hash, id)
-    *     triples — the heavy shingle arrays never enter the shuffle;
+    *  1. the banded self-join is a [[CappedBuckets]] join: it moves ONLY
+    *     (band_idx, band_hash, id) rows, and a band bucket above
+    *     `maxBucket` yields no pairs but is listed by
+    *     [[minhashOverflowBuckets]] (callers can route those documents
+    *     to [[exactDuplicates]], which handles identical text in one
+    *     hash-agg pass);
     *  2. pair dedup happens on the narrow (id_a, id_b) BEFORE the
     *     shingle sets are re-attached for verification;
-    *  3. `maxBucket` drops degenerate buckets (boilerplate/spam clusters
-    *     where every member collides with every other): a bucket of m
-    *     docs contributes m(m-1)/2 candidates, so one 10^5-doc bucket is
-    *     5×10^9 pairs — capping is the standard recall-for-survival
-    *     trade; dropped buckets are counted, not silently ignored
-    *     (callers can route them to [[exactDuplicates]], which handles
-    *     identical text in one hash-agg pass).
-    *  4. r = k/bands controls the collision curve P(candidate) = 1-(1-j^r)^b;
+    *  3. r = k/bands controls the collision curve P(candidate) = 1-(1-j^r)^b;
     *     r=8 makes j=0.5 impostors collide with P≈0.3%/band.
     */
   def minhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 8, threshold: Double = 0.8,
       shingleN: Int = 3, maxBucket: Int = 200): DataFrame = {
-    val sh = df.select(
-      col(idCol).as("id"),
-      array_distinct(shingles(col(textCol), shingleN)).as("sh"))
-    val banded = sh.select(
-        col("id"),
-        posexplode(graft.functions.ShingleExpression.minhashBands(
-          col("sh"), k, bands))
-          .as(Seq("band_idx", "band_hash")))
-    // group per bucket; cap bucket size; emit candidate pairs inside the
-    // bucket via self-product of the collected id list (narrow rows)
-    val buckets = banded
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-    val cand = buckets
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .where(col("id_a") < col("id_b"))
+    val sh = shingleSets(df, idCol, textCol, shingleN)
+    val cand = bandBuckets(sh, k, bands, maxBucket).pairs
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // re-attach shingle sets only for surviving candidates
-    val verified = cand
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-    verified.where(col("jaccard") >= threshold)
+    jaccardVerified(cand, "id_a", "id_b", sh, sh, threshold)
   }
 
   /** Incremental (cross-snapshot) NEAR-dup: flag `batch` rows whose text
@@ -407,10 +405,10 @@ object Dedup {
     *  1. both sides project to narrow (band_idx, band_hash, id) triples
     *     via the native MinHash band expression — text and shingle sets
     *     never enter the banded exchange;
-    *  2. the SEEN side pre-aggregates ids per bucket with the same
-    *     `maxBucket` cap as [[minhashNearDuplicates]] (a boilerplate
-    *     bucket of m seen docs would otherwise contribute m candidates
-    *     per colliding batch row); the batch side stays exploded, so the
+    *  2. the SEEN side groups its ids per bucket with the capped
+    *     grouping of [[minhashNearDuplicates]] (a boilerplate bucket of
+    *     m seen docs would otherwise contribute m candidates per
+    *     colliding batch row); the batch side stays exploded, so the
     *     join is batch-triples × capped-seen-buckets, never a pairwise
     *     corpus product;
     *  3. candidates dedup on the narrow (batch_id, seen_id) BEFORE the
@@ -426,29 +424,14 @@ object Dedup {
       seen: DataFrame, seenId: String, seenText: String,
       k: Int = 64, bands: Int = 8, threshold: Double = 0.8,
       shingleN: Int = 3, maxBucket: Int = 200): DataFrame = {
-    val bsh = batch.select(col(batchId).as("batch_id"),
-      array_distinct(shingles(col(batchText), shingleN)).as("__sh_b"))
-    val ssh = seen.select(col(seenId).as("seen_id"),
-      array_distinct(shingles(col(seenText), shingleN)).as("__sh_s"))
-    def banded(sh: DataFrame, id: String, shCol: String) = sh.select(
-      col(id),
-      posexplode(graft.functions.ShingleExpression.minhashBands(
-        col(shCol), k, bands)).as(Seq("band_idx", "band_hash")))
-    val sBuckets = banded(ssh, "seen_id", "__sh_s")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(collect_list(col("seen_id")).as("__seen_ids"))
-      .where(size(col("__seen_ids")) <= maxBucket)
-    val cand = banded(bsh, "batch_id", "__sh_b")
-      .join(sBuckets, Seq("band_idx", "band_hash"))
-      .select(col("batch_id"), explode(col("__seen_ids")).as("seen_id"))
+    val bsh = shingleSets(batch, batchId, batchText, shingleN)
+    val ssh = shingleSets(seen, seenId, seenText, shingleN)
+    val seenBuckets = bandBuckets(ssh, k, bands, maxBucket)
+    val cand = bandBuckets(bsh, k, bands, maxBucket).members
+      .join(seenBuckets.capped, seenBuckets.keys)
+      .select(col("m.id").as("batch_id"), explode(col("ms.id")).as("seen_id"))
       .dropDuplicates("batch_id", "seen_id")
-    cand
-      .join(bsh, Seq("batch_id"))
-      .join(ssh, Seq("seen_id"))
-      .select(col("batch_id"), col("seen_id"),
-        (size(array_intersect(col("__sh_b"), col("__sh_s"))).cast("double") /
-          size(array_union(col("__sh_b"), col("__sh_s")))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    jaccardVerified(cand, "batch_id", "seen_id", bsh, ssh, threshold)
   }
 
   /** Apply step for [[minhashSeenDuplicates]]: keep only batch rows with
@@ -565,21 +548,13 @@ object Dedup {
     ClusterResult(labels, converged, iter)
   }
 
-  /** Buckets skipped by the `maxBucket` cap (observability companion to
-    * [[minhashNearDuplicates]] — "no silent caps"). */
+  /** (band_idx, band_hash, n_docs): the band buckets that
+    * [[minhashNearDuplicates]]'s `maxBucket` cap dropped. */
   def minhashOverflowBuckets(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 8, shingleN: Int = 3,
-      maxBucket: Int = 200): DataFrame = {
-    df.select(
-        col(idCol).as("id"),
-        posexplode(graft.functions.ShingleExpression.minhashBands(
-          array_distinct(shingles(col(textCol), shingleN)), k, bands))
-          .as(Seq("band_idx", "band_hash")))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") > maxBucket)
-  }
+      maxBucket: Int = 200): DataFrame =
+    bandBuckets(shingleSets(df, idCol, textCol, shingleN), k, bands, maxBucket).overflow
 
   // ---------- n-gram Jaccard (exact, no LSH) ----------
 
@@ -740,11 +715,9 @@ object Dedup {
     * must agree exactly on ≥1 chunk (pigeonhole) — bucket join, then
     * exact Hamming verify via bit_count(xor).
     *
-    * Buckets are capped like the MinHash path: a hot 16-bit chunk value
-    * (short/boilerplate docs collapse onto few signatures) contributes
-    * m(m-1)/2 candidates, so an uncapped self-join is quadratic in the
-    * hottest bucket. Dropped buckets are countable via
-    * [[simhashOverflowBuckets]] — no silent caps. */
+    * The chunk buckets are a [[CappedBuckets]] join, as on the MinHash
+    * path: short/boilerplate docs collapse onto a few hot 16-bit chunk
+    * values, and [[simhashOverflowBuckets]] lists the capped ones. */
   def simhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
       maxBucket: Int = 200): DataFrame =
@@ -757,48 +730,38 @@ object Dedup {
     * pigeonhole-sound for maxHamming ≤ 3, then exact bit_count verify.
     * Input frame carries (idCol, sigCol) ONLY — signatures are computed
     * upstream where the payload lives, so this join never sees text or
-    * media bytes. Buckets capped like the MinHash path (quadratic in the
-    * hottest bucket otherwise); count the skipped ones with
-    * [[hammingOverflowBuckets]] — no silent caps. */
+    * media bytes. The chunk buckets are capped like the MinHash path;
+    * [[hammingOverflowBuckets]] lists the capped ones. */
   def hammingNearDuplicates(
       sig: DataFrame, idCol: String, sigCol: String, maxHamming: Int = 3,
       maxBucket: Int = 200): DataFrame = {
     require(maxHamming <= 3,
       s"4x16-bit banding is exhaustive only for maxHamming <= 3, got $maxHamming")
-    val chunks = sigChunks(sig, idCol, sigCol)
-    val buckets = chunks
-      .groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(collect_list(struct(col("id"), col("sig"))).as("ms"))
-      .where(size(col("ms")) > 1 && size(col("ms")) <= maxBucket)
-    val cand = buckets
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .where(col("a.id") < col("b.id"))
+    sigBuckets(sig, idCol, sigCol, maxBucket).pairs
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.sig").as("h_a"), col("b.sig").as("h_b"))
       .dropDuplicates("id_a", "id_b")
-    cand.select(col("id_a"), col("id_b"),
+      .select(col("id_a"), col("id_b"),
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
 
-  /** (id, sig, chunk_idx, chunk_val) banding projection. */
-  private def sigChunks(sig: DataFrame, idCol: String, sigCol: String): DataFrame =
-    sig.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .select(col("id"), col("sig"),
-        posexplode(array((0 until 4).map(i =>
-          shiftright(col("sig"), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
-          .as(Seq("chunk_idx", "chunk_val")))
+  /** 4 × 16-bit chunk buckets: a member (chunk_idx, chunk_val, m = (id, sig)) per chunk. */
+  private def sigBuckets(sig: DataFrame, idCol: String, sigCol: String,
+                         maxBucket: Int): CappedBuckets =
+    CappedBuckets(
+      sig.select(posexplode(array((0 until 4).map(i =>
+          shiftright(col(sigCol), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
+          .as(Seq("chunk_idx", "chunk_val")),
+        struct(col(idCol).as("id"), col(sigCol).as("sig")).as("m")),
+      Seq("chunk_idx", "chunk_val"), maxBucket)
 
-  /** Buckets skipped by a signature `maxBucket` cap (observability
-    * companion — same contract as [[minhashOverflowBuckets]]). */
+  /** (chunk_idx, chunk_val, n_docs): the chunk buckets that
+    * [[hammingNearDuplicates]]'s `maxBucket` cap dropped. */
   def hammingOverflowBuckets(
       sig: DataFrame, idCol: String, sigCol: String,
       maxBucket: Int = 200): DataFrame =
-    sigChunks(sig, idCol, sigCol)
-      .groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") > maxBucket)
+    sigBuckets(sig, idCol, sigCol, maxBucket).overflow
 
   /** Buckets skipped by the simhash `maxBucket` cap. */
   def simhashOverflowBuckets(

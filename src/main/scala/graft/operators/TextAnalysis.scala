@@ -1490,8 +1490,7 @@ object TextAnalysis {
     * zero-shuffle projection. */
   def readability(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val text = col(textCol)
-    val nWords = size(filter(
-      split(lower(trim(text)), "\\s+"), x => x =!= "")).cast("long")
+    val nWords = size(Dedup.words(text)).cast("long")
     val nSentences = greatest(
       regexp_count(text, lit("[.!?]+")), lit(1)).cast("long")
     val nSyllables = regexp_count(lower(text), lit("[aeiouy]+")).cast("long")

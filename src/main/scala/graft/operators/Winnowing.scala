@@ -94,33 +94,23 @@ object Winnowing {
     df.select(col(idCol),
       explode(TextExpressions.winnow(col(textCol), k, w)).as("fp"))
 
-  /** Shared-fingerprint counts for candidate pairs via the inverted
-    * index: join the (id, fp) sides on fp, count distinct shared
-    * fingerprints per (a, b) pair. Exchanges carry only (fp, id)
-    * tuples; with winnowing density ~2/(w+1) the index is a small
-    * fraction of the gram stream. A boilerplate fingerprint shared by
-    * thousands of docs fans out quadratically — `maxBucket` caps each
-    * fingerprint's bucket (dropped buckets surface via
-    * [[overflowFingerprints]], the no-silent-caps convention). */
+  /** (a, b, n_shared): shared-fingerprint counts for candidate pairs,
+    * a < b. The (fp, id) rows meet in a [[CappedBuckets]] join (a
+    * fingerprint above `maxBucket` yields no pairs and is listed by
+    * [[overflowFingerprints]]); each (id, fp) row counts, so a pair
+    * whose docs repeat a fingerprint counts it once per row pair.
+    * Exchanges carry only (fp, id) tuples; with winnowing density
+    * ~2/(w+1) the index is a small fraction of the gram stream. */
   def sharedPairs(fps: DataFrame, idCol: String, fpCol: String = "fp",
-                  maxBucket: Int = 1000): DataFrame = {
-    val capped = fps
-      .withColumn("__n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(fpCol))))
-      .where(col("__n") <= maxBucket)
-      .drop("__n")
-    val a = capped.select(col(fpCol).as("__f"), col(idCol).as("a"))
-    val b = capped.select(col(fpCol).as("__f"), col(idCol).as("b"))
-    a.join(b, "__f")
-      .where(col("a") < col("b"))
-      .groupBy("a", "b")
+                  maxBucket: Int = 1000): DataFrame =
+    CappedBuckets(fps.select(col(fpCol), struct(col(idCol).as("id")).as("m")),
+        Seq(fpCol), maxBucket).pairs
+      .groupBy(col("a.id").as("a"), col("b.id").as("b"))
       .agg(count(lit(1)).as("n_shared"))
-  }
 
-  /** Fingerprints whose bucket exceeded `maxBucket` in [[sharedPairs]]
-    * — the observable side of the cap. */
+  /** (fp, n_docs): the fingerprints that [[sharedPairs]]'s `maxBucket`
+    * cap dropped. */
   def overflowFingerprints(fps: DataFrame, fpCol: String = "fp",
                            maxBucket: Int = 1000): DataFrame =
-    fps.groupBy(col(fpCol)).agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") > maxBucket)
+    CappedBuckets(fps, Seq(fpCol), maxBucket).overflow
 }

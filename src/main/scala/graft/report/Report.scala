@@ -7,8 +7,10 @@ import graft.operators.ValidationPass.EvalResult
 /** Ordered (msg_type, msg) collector replicating the reference's
   * ReportCollector (/root/reference/utils/validate_core.py:79-140),
   * including the serialization quirk: `success` and `warning` entries are
-  * DROPPED from the saved log (get_log at validate_core.py:118-133 only
-  * renders markdown/error/header/subheader/divider). */
+  * DROPPED from the saved log, which renders only markdown, error,
+  * header and divider entries, as get_log at validate_core.py:118-133
+  * does. (The reference's subheader kind has no producer in the
+  * compose step, so it is left out.) */
 final class ReportCollector {
   val entries: ListBuffer[(String, String)] = ListBuffer.empty
 
@@ -17,7 +19,6 @@ final class ReportCollector {
   def addError(msg: String): Unit = entries += (("error", msg))
   def addWarning(msg: String): Unit = entries += (("warning", msg))
   def addHeader(msg: String): Unit = entries += (("header", msg))
-  def addSubheader(msg: String): Unit = entries += (("subheader", msg))
   def addDivider(): Unit = entries += (("divider", null))
 
   /** Plain-text log — byte-identical to the reference's get_log. */
@@ -27,7 +28,6 @@ final class ReportCollector {
       case ("markdown", m)  => sb.append(m).append('\n')
       case ("error", m)     => sb.append(m).append('\n')
       case ("header", m)    => sb.append("# ").append(m).append('\n')
-      case ("subheader", m) => sb.append("## ").append(m).append('\n')
       case ("divider", _)   => sb.append("-" * 60).append('\n')
       case _                => () // success / warning: dropped from the file
     }

@@ -322,6 +322,34 @@ class SeqEngineSpec extends SparkSpec {
     assert(perBucketRule(s"$dir/out1/violations") === perBucketRule(s"$dir/out2/violations"))
   }
 
+  test("validate-batch leaves one sink file per bucket, whichever tasks found its violations") {
+    import java.nio.file.{Files, Path, Paths}
+    import graft.checkpoint.Manifest
+    // each bucket's check violations come from its scan task and its
+    // uniqueness violations from the exchange's tasks
+    val dir = Files.createTempDirectory("graft_vb_files").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 20000), s"$dir/seq", 4)
+    graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out1", Some(s"$dir/m1.jsonl"))
+    graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out2", Some(s"$dir/m2.jsonl"))
+    def ls(p: Path): Seq[Path] = {
+      val s = Files.list(p)
+      try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close()
+    }
+    val buckets = ls(Paths.get(s"$dir/out2/violations"))
+      .filter(_.getFileName.toString.startsWith("part_bucket="))
+    assert(buckets.size === 4)
+    buckets.foreach { b =>
+      assert(ls(b).count(_.getFileName.toString.endsWith(".parquet")) === 1, b)
+    }
+    val m1 = Manifest.load(s"$dir/m1.jsonl").entries
+    val m2 = Manifest.load(s"$dir/m2.jsonl").entries
+    assert(m1.keySet === m2.keySet)
+    m1.keySet.foreach { p =>
+      assert((m1(p).rows, m1(p).violations, m1(p).pass) === (m2(p).rows, m2(p).violations, m2(p).pass), p)
+    }
+    assert(perBucketRule(s"$dir/out1/violations") === perBucketRule(s"$dir/out2/violations"))
+  }
+
   test("validate-batch counts each bucket's rows and violations exactly, 49 buckets") {
     import graft.checkpoint.Manifest
     val dir = java.nio.file.Files.createTempDirectory("graft_vb49").toString
