@@ -278,7 +278,7 @@ object Main {
     * stays with the batch pass (or streaming.firstSeenOnly where per-key
     * state is acceptable). */
   def streamValidate(spark: SparkSession, path: String, out: String): Unit = {
-    val stream = spark.readStream.schema(spark.read.parquet(path).schema)
+    val stream = spark.readStream.schema(openTable(spark, path).schema)
       .option("maxFilesPerTrigger", 4).parquet(path)
     val vio = ValidationPass.seqViolations(stream, checkSuite)
     val q = vio.writeStream.format("parquet")
@@ -294,6 +294,39 @@ object Main {
     val n = spark.read.schema(vio.schema)
       .parquet(s"$out/violations_stream").count()
     println(JsonLine("mode" -> "stream-validate", "path" -> path, "violations" -> n))
+  }
+
+  /** The stored table at `path`, opened without a Spark job.
+    * `spark.read.parquet` infers the schema in a job that reads one
+    * footer, its first data file's in path order; here the same footer
+    * is read directly, and `part_bucket` is still found from the
+    * directories. Data files are those the scan reads: no name on the
+    * way down starts with `.`, or with `_` unless it holds `=`. Fails,
+    * naming the path, when the table has no data file. */
+  private[graft] def openTable(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    // listStatus, not listFiles: the local file system's listFiles reads
+    // each file's owner and permissions by starting a process per file
+    def dataFiles(dir: Path): Iterator[FileStatus] = fs.listStatus(dir).iterator
+      .filterNot { f =>
+        val name = f.getPath.getName
+        name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+      }
+      .flatMap(f => if (f.isDirectory) dataFiles(f.getPath) else Iterator(f))
+    val first = dataFiles(new Path(path)).minByOption(_.getPath.toString)
+    require(first.isDefined, s"no parquet data file under $path")
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first.get, conf), ParquetMetadataConverter.NO_FILTER)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.get.getPath, footer),
+      new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Resume step of both validate modes: the table's partitions (`all`
@@ -366,7 +399,7 @@ object Main {
     * reaches the caller. */
   def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
     import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-    val df = spark.read.parquet(path)
+    val df = openTable(spark, path)
     val todo = pending(df, "validate", manifest).toVector
     val pool = Executors.newFixedThreadPool(InFlight)
     // each task checks one partition and hands back its commit
@@ -414,7 +447,7 @@ object Main {
     * partitions. Completed partitions from EITHER mode are skipped by
     * both. */
   def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
-    val df = spark.read.parquet(path)
+    val df = openTable(spark, path)
     require(df.columns.contains("part_bucket"),
       "validate-batch needs a part_bucket-partitioned table (gen mode writes one)")
     val todo = pending(df, "validate-batch", manifest)

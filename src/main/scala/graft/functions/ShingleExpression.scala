@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
@@ -21,6 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fewer-than-n-words fallback to one joined shingle).
   */
 case class WordShingles(n: Int) extends Kernel {
+  require(n >= 1, "n must be >= 1")
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
   def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -76,10 +78,16 @@ case class WordChunks(chunkWords: Int) extends Kernel {
   }
 }
 
-/** MinHash-LSH band keys straight from the token array: signature minima
-  * and banded hashes in one evaluation — nothing for CollapseProject to
-  * duplicate downstream. Output: array of `bands` longs. */
-case class MinHashBandKeys(k: Int, bands: Int, seed: Long = 42L) extends Kernel {
+/** k-value MinHash signature over a token/shingle array: one xxhash64
+  * per token, then k affine rehashes h_j = a_j·h + b_j over 2^64 (the
+  * 2-universal family, odd a_j drawn from `seed`, b_j from `seed + 1`),
+  * each signature value the signed minimum over the tokens. The HOF
+  * spelling `transform(sequence(0, k-1), j -> array_min(transform(
+  * shingles, s -> xxhash64(s, j))))` hashes every shingle k times and
+  * is an interpreted lambda that CollapseProject substitutes into every
+  * consumer (band keys): measured 150 s for 5 000 docs, under 1 s here. */
+case class MinHashSignature(k: Int, seed: Long = 42L) extends Kernel {
+  require(k >= 1, "k must be >= 1")
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
   def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -92,15 +100,14 @@ case class MinHashBandKeys(k: Int, bands: Int, seed: Long = 42L) extends Kernel 
     Array.fill(k)(rnd.nextLong())
   }
 
-  override def eval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val nEl = arr.numElements()
+  /** The signature of the token array `tokens`; null tokens are skipped. */
+  def minima(tokens: ArrayData): Array[Long] = {
     val mins = Array.fill(k)(Long.MaxValue)
+    val n = tokens.numElements()
     var i = 0
-    while (i < nEl) {
-      if (!arr.isNullAt(i)) {
-        val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-          .hash(arr.getUTF8String(i), StringType, seed)
+    while (i < n) {
+      if (!tokens.isNullAt(i)) {
+        val h = XxHash64Function.hash(tokens.getUTF8String(i), StringType, seed)
         var j = 0
         while (j < k) {
           val hj = coefA(j) * h + coefB(j)
@@ -110,6 +117,25 @@ case class MinHashBandKeys(k: Int, bands: Int, seed: Long = 42L) extends Kernel 
       }
       i += 1
     }
+    mins
+  }
+
+  override def eval(input: Any): Any = ArrayData.toArrayData(minima(input.asInstanceOf[ArrayData]))
+}
+
+/** MinHash-LSH band keys straight from the token array: the
+  * [[MinHashSignature]] folded into `bands` keys of k / bands values
+  * each, in one evaluation — nothing for CollapseProject to duplicate
+  * downstream. Output: array of `bands` longs. */
+case class MinHashBandKeys(k: Int, bands: Int, seed: Long = 42L) extends Kernel {
+  require(k >= 1 && bands >= 1 && k % bands == 0, "need k >= 1 and bands >= 1 dividing k")
+  def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  @transient private lazy val signature = MinHashSignature(k, seed)
+
+  override def eval(input: Any): Any = {
+    val mins = signature.minima(input.asInstanceOf[ArrayData])
     val r = k / bands
     val keys = new Array[Long](bands)
     var b = 0

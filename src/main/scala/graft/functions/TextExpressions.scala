@@ -13,13 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[KernelExpression]]; the kernel's constructor holds the call's
   * constants. Per-row compute-bound loops like these beat HOF chains
   * even interpreted, and they sit in a projection, not an aggregate, so
-  * the scan around them still pipelines.
+  * the scan around them still pipelines. The fingerprint kernels take
+  * their character unit, gram hash, winnow and cut rules from
+  * [[Fingerprint]], which states them.
   *
-  *  - [[SimHash64]] — 64-bit SimHash over a token array (near-dup
-  *    signature; Hamming-close signatures ⇒ similar documents); token
-  *    hashing reuses Spark's XxHash64 kernel.
-  *  - [[RollingFingerprint]] — Karp–Rabin rolling hash winnowed to the
-  *    minimum window hash (robust content fingerprint).
+  * [[SimHash64]]: 64-bit SimHash over a token array (near-dup signature;
+  * Hamming-close signatures ⇒ similar documents); token hashing reuses
+  * Spark's XxHash64 kernel.
   */
 case object SimHash64 extends Kernel {
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Strings)
@@ -49,217 +49,85 @@ case object SimHash64 extends Kernel {
   }
 }
 
-/** min-of-window Karp–Rabin fingerprint over the raw text (window in
-  * characters) — the winnowing idea (Schleimer et al., SIGMOD'03) reduced
-  * to the single global minimum for a compact per-doc fingerprint. */
+/** One fingerprint per text: the least gram hash, unsigned, over grams
+  * of `window` characters — the winnowing idea reduced to the single
+  * global minimum. */
 case class RollingFingerprint(window: Int) extends Kernel {
+  require(window >= 1, "window must be >= 1")
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
   def dataType: DataType = LongType
 
   override def eval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (s.length < window) return XxHash64Function.hash(
-      UTF8String.fromString(s), StringType, 7L)
-    val B = 1000003L
-    var pow = 1L
-    var i = 0
-    while (i < window - 1) { pow *= B; i += 1 }
-    var h = 0L
-    i = 0
-    while (i < window) { h = h * B + s.charAt(i); i += 1 }
-    var minH = h
-    while (i < s.length) {
-      h = (h - s.charAt(i - window) * pow) * B + s.charAt(i)
-      if (java.lang.Long.compareUnsigned(h, minH) < 0) minH = h
+    val text = input.asInstanceOf[UTF8String]
+    val bytes = text.getBytes
+    val hs = Fingerprint.grams(bytes, Fingerprint.starts(bytes), window)
+    if (hs.isEmpty) return Fingerprint.shortText(text)
+    var min = hs(0)
+    var i = 1
+    while (i < hs.length) {
+      if (java.lang.Long.compareUnsigned(hs(i), min) < 0) min = hs(i)
       i += 1
     }
-    minH
+    min
   }
 }
 
-/** FULL winnowing fingerprint set (Schleimer et al., SIGMOD'03): the
-  * rightmost minimum of each `w`-hash window over the `k`-gram
-  * Karp–Rabin hash stream, deduplicated and sorted. Unlike
-  * [[RollingFingerprint]]'s single global min, this is the MOSS local
-  * fingerprinting scheme with the detection guarantee: any shared
-  * substring of length ≥ w + k − 1 contributes at least one shared
-  * fingerprint — deterministic recall, where MinHash is probabilistic.
-  * O(len) via a monotonic deque (amortized one push/pop per gram); the
-  * md5 window spelling (the SQL-replicable oracle mode in
-  * [[graft.operators.Winnowing]]) re-hashes every gram from scratch.
-  * Documents shorter than k yield the whole-text hash as a singleton.
-  * Per-row compute-bound loop ⇒ interpreted Expression in a
-  * projection (same rationale as [[RollingFingerprint]]). */
+/** The full winnowing fingerprint set over grams of `k` characters,
+  * windows of `w` grams, as ascending signed longs. The md5 window
+  * spelling in [[graft.operators.Winnowing]] is its SQL-replicable
+  * oracle mode. */
 case class WinnowedFingerprints(k: Int, w: Int) extends Kernel {
   require(k >= 2 && w >= 1, "need k >= 2, w >= 1")
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
   def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def eval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val m = s.length - k + 1
-    if (m < 1) {
-      return org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        Array(XxHash64Function.hash(UTF8String.fromString(s), StringType, 7L)))
-    }
-    val B = 1000003L
-    var pow = 1L
-    var i = 0
-    while (i < k - 1) { pow *= B; i += 1 }
-    // gram hashes, rolling
-    val hs = new Array[Long](m)
-    var h = 0L
-    i = 0
-    while (i < k) { h = h * B + s.charAt(i); i += 1 }
-    hs(0) = h
-    while (i < s.length) {
-      h = (h - s.charAt(i - k) * pow) * B + s.charAt(i)
-      hs(i - k + 1) = h
-      i += 1
-    }
-    // monotonic deque of indices, values strictly increasing front→back
-    // (equal values popped ⇒ rightmost tie survives, matching the
-    // min-by-(hash asc, pos desc) oracle spelling)
-    val deque = new Array[Int](m)
-    var lo = 0; var hi = 0 // [lo, hi) holds candidate indices
-    val firstRecord = math.min(w, m) - 1 // 0-based window-end position
-    val out = new java.util.TreeSet[java.lang.Long]()
-    var p = 0
-    while (p < m) {
-      while (hi > lo &&
-        java.lang.Long.compareUnsigned(hs(deque(hi - 1)), hs(p)) >= 0) hi -= 1
-      deque(hi) = p; hi += 1
-      if (deque(lo) <= p - w) lo += 1
-      if (p >= firstRecord) out.add(hs(deque(lo)))
-      p += 1
-    }
-    val arr = new Array[Long](out.size())
-    val it = out.iterator()
-    i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
+    val text = input.asInstanceOf[UTF8String]
+    val bytes = text.getBytes
+    val hs = Fingerprint.grams(bytes, Fingerprint.starts(bytes), k)
+    ArrayData.toArrayData(
+      if (hs.isEmpty) Array(Fingerprint.shortText(text)) else Fingerprint.winnow(hs, w))
   }
 }
 
-/** The md5 ORACLE spelling of [[WinnowedFingerprints]] as one in-row
-  * pass: gram hash = the first 16 hex chars of md5(substr(text, i, k))
-  * — bit-identical to the DataFrame/DuckDB window spelling in
-  * [[graft.operators.Winnowing]] — selected by the same rightmost-
-  * minimum monotonic deque, deduplicated in-row. Exists because the
-  * exploded DataFrame spelling shuffles the whole (id, pos, hash) gram
-  * stream through an exchange + per-doc sort window + distinct, which
-  * at corpus scale moves ~len rows per document for a selection that
-  * is a pure per-row function; this expression keeps text out of every
-  * exchange and leaves only the O(2·len/w) selected fingerprints to
-  * move. Lexicographic order on the fixed-width lowercase hex equals
-  * unsigned numeric order of the md5's first 8 bytes, so the deque
-  * compares longs and hex-encodes only the survivors. Substring
-  * semantics are code-point based (Spark `substr`), implemented as
-  * UTF-8 byte-slice hashing over code-point boundaries — identical
-  * bytes to md5(substr(...)) for any input. Documents shorter than k
-  * yield the whole-text md5 prefix as a singleton. */
+/** The md5 oracle spelling of [[WinnowedFingerprints]] as one in-row
+  * pass: a gram's hash is the md5 prefix of its bytes — the first 16
+  * hex characters of md5(substr(text, i, k)), bit-identical to the
+  * DataFrame/DuckDB window spelling in [[graft.operators.Winnowing]] —
+  * and the survivors print as that hex, in unsigned order. The exploded
+  * DataFrame spelling moves the whole (id, pos, hash) gram stream
+  * through an exchange, a per-document sort window and a distinct; here
+  * text stays out of every exchange and only the selected fingerprints
+  * move. A text shorter than k yields its whole-text md5 prefix. */
 case class WinnowedFingerprintsMd5(k: Int, w: Int) extends Kernel {
   require(k >= 2 && w >= 1, "need k >= 2, w >= 1")
   def inputTypes: Seq[Seq[DataType]] = Seq(Kernel.Text)
   def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  @transient private lazy val md5 =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  private def hashPrefix(bytes: Array[Byte], from: Int, until: Int): Long = {
-    val d = md5.get()
-    d.reset()
-    d.update(bytes, from, until - from)
-    val out = d.digest()
-    var h = 0L
-    var i = 0
-    while (i < 8) { h = (h << 8) | (out(i) & 0xFFL); i += 1 }
-    h
-  }
-
-  private def hex16(h: Long): UTF8String = {
-    val cs = new Array[Byte](16)
-    var i = 0
-    while (i < 16) {
-      val nib = ((h >>> ((15 - i) << 2)) & 0xFL).toInt
-      cs(i) = (if (nib < 10) '0' + nib else 'a' + nib - 10).toByte
-      i += 1
-    }
-    UTF8String.fromBytes(cs)
-  }
-
   override def eval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
-    val bytes = u.getBytes
-    // code-point start offsets (Spark substr counts code points)
-    var nChars = 0
-    var b = 0
-    while (b < bytes.length) {
-      if ((bytes(b) & 0xC0) != 0x80) nChars += 1
-      b += 1
-    }
-    val offsets = new Array[Int](nChars + 1)
-    var ci = 0
-    b = 0
-    while (b < bytes.length) {
-      if ((bytes(b) & 0xC0) != 0x80) { offsets(ci) = b; ci += 1 }
-      b += 1
-    }
-    offsets(nChars) = bytes.length
-    val m = nChars - k + 1
+    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val at = Fingerprint.starts(bytes)
+    val m = at.length - k
     if (m < 1) {
-      return org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        Array[AnyRef](hex16(hashPrefix(bytes, 0, bytes.length))))
+      return ArrayData.toArrayData(
+        Array[AnyRef](Fingerprint.hex16(Fingerprint.md5Prefix(bytes, 0, bytes.length))))
     }
     val hs = new Array[Long](m)
     var i = 0
-    while (i < m) {
-      hs(i) = hashPrefix(bytes, offsets(i), offsets(i + k))
-      i += 1
-    }
-    // rightmost-minimum monotonic deque — identical selection rule to
-    // [[WinnowedFingerprints]] (equal values popped ⇒ rightmost tie)
-    val deque = new Array[Int](m)
-    var lo = 0; var hi = 0
-    val firstRecord = math.min(w, m) - 1
-    val out = new java.util.TreeSet[java.lang.Long](
-      new java.util.Comparator[java.lang.Long] {
-        override def compare(a: java.lang.Long, b: java.lang.Long): Int =
-          java.lang.Long.compareUnsigned(a, b)
-      })
-    var p = 0
-    while (p < m) {
-      while (hi > lo &&
-        java.lang.Long.compareUnsigned(hs(deque(hi - 1)), hs(p)) >= 0) hi -= 1
-      deque(hi) = p; hi += 1
-      if (deque(lo) <= p - w) lo += 1
-      if (p >= firstRecord) out.add(hs(deque(lo)))
-      p += 1
-    }
-    val arr = new Array[AnyRef](out.size())
-    val it = out.iterator()
+    while (i < m) { hs(i) = Fingerprint.md5Prefix(bytes, at(i), at(i + k)); i += 1 }
+    val fps = Fingerprint.winnow(hs, w)
+    // unsigned order: the signed order with its negative head moved last
+    var neg = 0
+    while (neg < fps.length && fps(neg) < 0) neg += 1
+    val out = new Array[AnyRef](fps.length)
     i = 0
-    while (it.hasNext) { arr(i) = hex16(it.next()); i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(arr)
+    while (i < fps.length) { out(i) = Fingerprint.hex16(fps((i + neg) % fps.length)); i += 1 }
+    ArrayData.toArrayData(out)
   }
 }
 
-/** Content-defined-chunking cut positions (the LBFS/rsync boundary
-  * rule, Muthitacharoen et al. SOSP 2001): ONE O(len) Karp–Rabin pass;
-  * position i (1-based, i ≥ window) is a boundary when the rolling hash
-  * of chars (i-window, i] matches the seed's low `maskBits` bits —
-  * expected chunk length ≈ 2^maskBits chars. The hash state is a pure
-  * function of the window's CONTENT (the seed shifts only the target
-  * pattern): a seed folded into the polynomial would scale as B^i with
-  * absolute position and break shift-resynchronization. Returns the ascending
-  * array<int> of boundaries in (0, len] for
-  * [[graft.operators.CdcChunking]]'s scale mode (the md5 oracle mode
-  * re-hashes every window from scratch: O(len×window)). Per-row
-  * compute-bound loop ⇒ interpreted Expression in a projection, same
-  * rationale as [[RollingFingerprint]]. */
+/** The CDC cut positions of the text, ascending in (0, len], for
+  * [[graft.operators.CdcChunking]]'s rolling mode: one O(len) pass. */
 case class CdcBoundaries(window: Int, maskBits: Int, seed: Long) extends Kernel {
   require(window > 0, "window must be positive")
   require(maskBits > 0 && maskBits < 63, "maskBits must be in [1, 62]")
@@ -267,52 +135,26 @@ case class CdcBoundaries(window: Int, maskBits: Int, seed: Long) extends Kernel 
   def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   override def eval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val mask = (1L << maskBits) - 1
-    // the seed enters the boundary PREDICATE, never the rolling state: a
-    // seed term inside h would ride along as seed*B^i — a function of
-    // ABSOLUTE position that breaks the shift-resynchronization contract
-    // (boundaries of a prefix-shifted copy would never realign)
-    val target = seed & mask
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    if (s.length >= window) {
-      val B = 1000003L
-      var pow = 1L
-      var i = 0
-      while (i < window - 1) { pow *= B; i += 1 }
-      var h = 0L
-      i = 0
-      while (i < window) { h = h * B + s.charAt(i); i += 1 }
-      // i is now the count of chars consumed = the 1-based position of
-      // the window's last char
-      if ((h & mask) == target) out += i
-      while (i < s.length) {
-        h = (h - s.charAt(i - window) * pow) * B + s.charAt(i)
-        i += 1
-        if ((h & mask) == target) out += i
-      }
-    }
-    ArrayData.toArrayData(out.toArray)
+    val bytes = input.asInstanceOf[UTF8String].getBytes
+    ArrayData.toArrayData(
+      Fingerprint.cuts(bytes, Fingerprint.starts(bytes), window, maskBits, seed))
   }
 }
 
-/** One-pass CDC chunker: boundaries AND per-chunk (md5-hex hash, char
-  * length) in a single native eval — the whole chunking step as one
-  * expression. `maskBits == 0` selects the md5-boundary ORACLE mode
-  * (boundary at i ⇔ md5 of the `window` chars ending at i starts with
-  * hex '0' — byte-identical to DuckDB's md5, so the q_cdc oracles
-  * replay it); `maskBits > 0` selects the Karp–Rabin rolling SCALE
-  * mode with [[CdcBoundaries]]'s exact loop (seed in the predicate,
-  * never the polynomial). Chunk hashes are md5 of the chunk's UTF-8
-  * bytes, lowercase hex — exactly Spark's `md5()`.
+/** One-pass CDC chunker: the cuts AND each chunk's (md5 hex, length in
+  * characters) in one eval. `maskBits == 0` selects the md5 oracle mode:
+  * position i ends a chunk when the md5 of the `window` characters
+  * ending there starts with hex '0', byte-identical to DuckDB's md5, so
+  * the q_cdc oracles replay it. `maskBits > 0` selects the rolling mode,
+  * [[CdcBoundaries]]' cuts. Chunk hashes are exactly Spark's `md5()` of
+  * the chunk.
   *
   * Why one expression instead of boundaries + a `transform` split: the
   * interpreted-HOF spelling re-inlines the whole cuts tree into every
   * `element_at` reference of the split lambda (no CSE in interpreted
   * lambdas — the BENCH.md root cause), which made the md5 mode
   * O(chunks × len × window) PER ROW: measured 172 s for the sf0.1
-  * 5k-doc corpus vs well under a second here. One MessageDigest
-  * instance serves all windows and chunk hashes of a row. */
+  * 5k-doc corpus vs well under a second here. */
 case class CdcChunkHashes(window: Int, maskBits: Int, seed: Long) extends Kernel {
   require(window > 0, "window must be positive")
   require(maskBits >= 0 && maskBits < 63,
@@ -323,56 +165,27 @@ case class CdcChunkHashes(window: Int, maskBits: Int, seed: Long) extends Kernel
     StructField("chunk_len", IntegerType, nullable = false))),
     containsNull = false)
 
-  private def hex(b: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(b.length * 2)
-    var i = 0
-    while (i < b.length) {
-      sb.append(java.lang.Character.forDigit((b(i) >> 4) & 0xF, 16))
-      sb.append(java.lang.Character.forDigit(b(i) & 0xF, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
   override def eval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val len = s.length
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val cuts = scala.collection.mutable.ArrayBuffer(0)
-    if (maskBits == 0) {
+    val bytes = input.asInstanceOf[UTF8String].getBytes
+    val at = Fingerprint.starts(bytes)
+    val len = at.length - 1
+    val cuts = if (maskBits > 0) Fingerprint.cuts(bytes, at, window, maskBits, seed) else {
+      val md5Cuts = new Array[Int](math.max(len - window + 1, 0))
+      var n = 0
       var i = window
       while (i <= len) {
-        val d = md.digest(s.substring(i - window, i)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if ((d(0) & 0xF0) == 0) cuts += i
+        if (Fingerprint.md5Prefix(bytes, at(i - window), at(i)) >>> 60 == 0) { md5Cuts(n) = i; n += 1 }
         i += 1
       }
-    } else if (len >= window) {
-      val mask = (1L << maskBits) - 1
-      val target = seed & mask
-      val B = 1000003L
-      var pow = 1L
-      var i = 0
-      while (i < window - 1) { pow *= B; i += 1 }
-      var h = 0L
-      i = 0
-      while (i < window) { h = h * B + s.charAt(i); i += 1 }
-      if ((h & mask) == target) cuts += i
-      while (i < len) {
-        h = (h - s.charAt(i - window) * pow) * B + s.charAt(i)
-        i += 1
-        if ((h & mask) == target) cuts += i
-      }
+      java.util.Arrays.copyOf(md5Cuts, n)
     }
-    if (cuts.last != len) cuts += len
-    val out = new Array[Any](math.max(cuts.length - 1, 0))
+    val ends = if (cuts.lastOption.getOrElse(0) == len) cuts else cuts :+ len
+    val out = new Array[Any](ends.length)
+    var from = 0
     var j = 0
-    while (j < out.length) {
-      val chunk = s.substring(cuts(j), cuts(j + 1))
-      out(j) = InternalRow(
-        UTF8String.fromString(hex(md.digest(
-          chunk.getBytes(java.nio.charset.StandardCharsets.UTF_8)))),
-        chunk.length)
+    while (j < ends.length) {
+      out(j) = InternalRow(Fingerprint.md5Hex(bytes, at(from), at(ends(j))), ends(j) - from)
+      from = ends(j)
       j += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)

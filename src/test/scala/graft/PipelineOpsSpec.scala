@@ -1650,8 +1650,12 @@ class PipelineOpsSpec extends SparkSpec {
     // texts >= window chars only: below that the HOF spelling's
     // sequence(window, len) descends (undefined walk) while native and
     // the DuckDB oracle agree on one whole-text chunk
+    // plus one text with supplementary characters, which count as one
+    // character each in Spark's length and substr
     val base = docs.where($"text".isNotNull && length($"text") >= 8)
       .select($"doc_id", $"text")
+      .unionByName(Seq("a 😀 header, then 🎉 the quick brown fox 𝄞 jumps over the lazy dog 😀 twice")
+        .toDF("text").select(lit(-1L).as("doc_id"), $"text"))
     val modes: Seq[(Int, org.apache.spark.sql.Column => org.apache.spark.sql.Column)] =
       Seq((0, CdcChunking.boundariesMd5(_, 8)),
         (4, CdcChunking.boundariesRolling(_, 8, 4)))

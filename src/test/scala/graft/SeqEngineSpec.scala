@@ -388,6 +388,47 @@ class SeqEngineSpec extends SparkSpec {
     }
   }
 
+  test("openTable starts no Spark job and gives the schema spark.read.parquet infers") {
+    import java.nio.file.Files
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_open_table").toString
+    val table = SeqTableGen.generate(spark, 2000)
+    SeqTableGen.writePartitioned(table, s"$dir/seq", 4)
+    table.write.parquet(s"$dir/flat")
+    // jobs started while `body` runs; the listener has seen them all once
+    // it sees the marker job that follows
+    def jobs(body: => Unit): Int = {
+      val (n, marker) = (new AtomicInteger, new CountDownLatch(1))
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+          else n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        body
+        spark.sparkContext.setJobDescription("marker")
+        spark.range(1).collect()
+        assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+        n.get
+      } finally {
+        spark.sparkContext.setJobDescription(null)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    }
+    for (t <- Seq(s"$dir/seq", s"$dir/flat")) {
+      assert(jobs(spark.read.parquet(t)) === 1, t)
+      assert(jobs(graft.cli.Main.openTable(spark, t)) === 0, t)
+      assert(graft.cli.Main.openTable(spark, t).schema === spark.read.parquet(t).schema, t)
+    }
+    val empty = Files.createTempDirectory("graft_no_data").toString
+    Files.createFile(java.nio.file.Paths.get(s"$empty/_SUCCESS"))
+    val e = intercept[IllegalArgumentException](graft.cli.Main.openTable(spark, empty))
+    assert(e.getMessage.contains(empty), e.getMessage)
+  }
+
   test("uniqueness violations equal the join to the duplicate set they replace, as a multiset") {
     def oldForm(d: org.apache.spark.sql.DataFrame) =
       d.join(Uniqueness.duplicatesSimple(d, "doc_id"), "doc_id")
