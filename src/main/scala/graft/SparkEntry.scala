@@ -2293,12 +2293,12 @@ object SparkEntry {
         .orderBy("source", "doc_id")),
 
     // incremental dedup: new batch vs an already-ingested corpus —
-    // bloom prefilter (no false negatives) + exact anti-join confirm;
+    // one left-anti join on the 64-bit content hash;
     // oracle is the plain NOT EXISTS text anti-join
     "q_incremental_dedup" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val seen = docs.where(col("doc_id") < 250)
-      Dedup.dropSeenDuplicates(docs, seen, "text", expectedSeen = 250)
+      Dedup.dropSeenDuplicates(docs, seen, "text")
         .select("doc_id").orderBy("doc_id")
     }),
 

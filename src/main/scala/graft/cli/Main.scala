@@ -124,7 +124,7 @@ object Main {
         // counted bins) unless explicit lo hi args pin it — a hardcoded
         // range would dump out-of-range mass into one overflow bin and
         // blind the KS statistic.
-        val df = spark.read.parquet(path)
+        val df = openTable(spark, path)
         val (lo, hi) = rest match {
           case l :: h :: Nil => (l.toDouble, h.toDouble)
           case Nil =>
@@ -145,7 +145,7 @@ object Main {
         println(JsonLine("mode" -> "drift-baseline", "path" -> path, "out" -> out,
           "lo" -> JsonLine.Num(lo.toString), "hi" -> JsonLine.Num(hi.toString)))
       case "drift-check" :: path :: baseline :: Nil =>
-        val df = spark.read.parquet(path)
+        val df = openTable(spark, path)
         // an empty snapshot would give ks_critical = Infinity (invalid
         // JSON) and ks_drifted=false — a dead pipeline reported healthy
         if (df.isEmpty) {
@@ -582,8 +582,7 @@ object Main {
           col("doc_id"), lit("?utm_source=crawl&ref=x"))).as("url"))
       .distinct().count()
     val seen = docs.where(col("doc_id") % 2 === 0)
-    val fresh = Dedup.dropSeenDuplicates(docs, seen, "text",
-      expectedSeen = seen.count()).cache()
+    val fresh = Dedup.dropSeenDuplicates(docs, seen, "text").cache()
     val freshCnt = fresh.count() // materialize ONCE; packing reuses it
     val packs = graft.operators.Packing.greedyPack(
         fresh, "source", "doc_id", "n_chars", budget = 1000)

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * same [[Registry]] table as the other graft expressions, rather than
   * reimplementing a sketch the engine already codegens.
   *
-  * The intended shape (see [[graft.operators.Dedup.dropSeenDuplicates]]):
-  * aggregate the filter on the driver once (bytes ≈ 1.2 GB per 10^9 keys
-  * at 1% fpp — sized by [[optimalNumBits]]), then inline it as a literal
-  * so every task probes locally — the manual analogue of Spark's own
-  * InjectRuntimeFilter, available across jobs instead of within one.
+  * The intended shape (see
+  * [[graft.operators.Decontamination.contaminationPredicate]]):
+  * aggregate the filters on the driver once (bytes ≈ 1.2 GB per 10^9
+  * keys at 1% fpp — sized by [[optimalNumBits]]), then inline them as
+  * literals so every task probes locally — the manual analogue of
+  * Spark's own InjectRuntimeFilter, available across jobs instead of
+  * within one.
   */
 object BloomFunctions {
 
@@ -31,7 +33,8 @@ object BloomFunctions {
       lit(optimalNumBits(expectedItems, fpp)))
 
   /** Driver-side build: ONE aggregate job over `df`, returns the filter
-    * bytes (or None when `df` is empty — probe nothing, match nothing).
+    * bytes of each of `longCols`, in order (or None when `df` is empty —
+    * probe nothing, match nothing). Every filter has the same size.
     *
     * `BloomFilterAggregate` SILENTLY caps its inputs at
     * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` / `maxNumBits`
@@ -40,8 +43,8 @@ object BloomFunctions {
     * fpp explodes and the prefilter silently degrades to "everything
     * hits". Raise both confs to the requested size first, so the
     * documented ~1.2 GB-per-10^9-keys sizing actually materializes. */
-  def buildBloom(df: DataFrame, longCol: Column, expectedItems: Long,
-                 fpp: Double): Option[Array[Byte]] = {
+  def buildBloom(df: DataFrame, longCols: Seq[Column], expectedItems: Long,
+                 fpp: Double): Option[Seq[Array[Byte]]] = {
     val conf = df.sparkSession.conf
     val bits = optimalNumBits(expectedItems, fpp)
     def raise(key: String, atLeast: Long): Unit =
@@ -49,8 +52,9 @@ object BloomFunctions {
         conf.set(key, atLeast.toString)
     raise("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", expectedItems)
     raise("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits)
-    Option(df.agg(bloomAgg(longCol, expectedItems, fpp).as("bf"))
-      .head().getAs[Array[Byte]]("bf"))
+    val aggs = longCols.map(bloomAgg(_, expectedItems, fpp))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    Option.when(!row.anyNull)(longCols.indices.map(row.getAs[Array[Byte]]))
   }
 
   /** Per-row probe of inlined filter bytes; false negatives impossible. */

@@ -9,14 +9,14 @@ import org.apache.spark.sql.functions._
   * decontamination predicate.
   *
   * Every gate is either a stateless projection/predicate or a
-  * stream-static operation (the bloom filters and blocklist literals
-  * are built from STATIC frames on the driver; the dedup confirm is a
-  * stream-static left-anti join), so the SAME function curates a batch
-  * frame and a `readStream` micro-batch stream bit-identically —
+  * stream-static operation (the decontamination blooms and blocklist
+  * literals are built from STATIC frames on the driver; the seen dedup
+  * is a stream-static left-anti join), so the SAME function curates a
+  * batch frame and a `readStream` micro-batch stream bit-identically —
   * streaming parity is pinned by StreamingSpec and surfaced by the
   * `stream-curate` CLI mode. At 100 TB this is the shape that matters:
-  * the gates run inside the scan (zero exchanges until the dedup
-  * confirm join, which moves only bloom-suspected rows). */
+  * the gates run inside the scan, once per document, and the seen
+  * dedup join moves 8-byte hashes, never text. */
 object CurationGates {
 
   /** Word tokens in the repo's oracle-mirror spelling —
@@ -27,8 +27,9 @@ object CurationGates {
 
   /** Apply the gate sequence to `docs` (doc_id, source, text, n_chars).
     *
-    *  - `seen`: static already-ingested corpus — exact text dedup via
-    *    bloom prefilter + anti-join confirm ([[Dedup.dropSeenDuplicates]]).
+    *  - `seen`: static already-ingested corpus — exact text dedup as
+    *    one left-anti join on the content hash
+    *    ([[Dedup.dropSeenDuplicates]]).
     *  - `blockedHosts`: domain blocklist (suffix semantics,
     *    [[WebFilter.filterBlockedHosts]]); the synthetic URL derives
     *    from doc_id exactly like q_domain_filter.
@@ -43,8 +44,7 @@ object CurationGates {
     * and [[funneled]] (each stage observed via CollectMetrics; batch). */
   private def gateSeq(docs: DataFrame, seen: DataFrame,
                       blockedHosts: Seq[String], bench: Option[DataFrame],
-                      minChars: Int, expectedSeen: Long,
-                      contamN: Int, badWords: Seq[String],
+                      minChars: Int, contamN: Int, badWords: Seq[String],
                       maxBadRatio: Double): Seq[(String, DataFrame => DataFrame)] = {
     // ingest: synthesized crawl page (planted nav/footer boilerplate —
     // the q_main_content fixture shape) → readability-class extraction.
@@ -89,10 +89,10 @@ object CurationGates {
       "blocklist" -> (df =>
         if (blockedHosts.isEmpty) df
         else WebFilter.filterBlockedHosts(df, "url", blockedHosts)),
-      // dedup against the SAME extraction of the seen corpus — bloom
-      // from the static side, stream-safe anti-join confirm
+      // dedup against the SAME extraction of the seen corpus —
+      // stream-static anti-join on the content hash
       "seen_dedup" -> (df => Dedup.dropSeenDuplicates(df,
-        extract(seen).select("text"), "text", expectedSeen)),
+        extract(seen).select("text"), "text")),
       "decontam" -> (df => contamPred match {
         case Some(pred) => df.where(!pred(wordsOf(col("text"))))
         case None       => df
@@ -106,12 +106,11 @@ object CurationGates {
             blockedHosts: Seq[String] = Nil,
             bench: Option[DataFrame] = None,
             minChars: Int = 100,
-            expectedSeen: Long = 1000L,
             contamN: Int = 5,
             badWords: Seq[String] = Nil,
             maxBadRatio: Double = 0.1): DataFrame =
-    gateSeq(docs, seen, blockedHosts, bench, minChars, expectedSeen,
-      contamN, badWords, maxBadRatio)
+    gateSeq(docs, seen, blockedHosts, bench, minChars, contamN, badWords,
+      maxBadRatio)
       .foldLeft(docs) { case (df, (_, gate)) => gate(df) }
 
   /** The same sequence with per-stage [[Funnel]] observability (rows +
@@ -122,12 +121,11 @@ object CurationGates {
                blockedHosts: Seq[String] = Nil,
                bench: Option[DataFrame] = None,
                minChars: Int = 100,
-               expectedSeen: Long = 1000L,
                contamN: Int = 5,
                badWords: Seq[String] = Nil,
                maxBadRatio: Double = 0.1): Funnel =
-    gateSeq(docs, seen, blockedHosts, bench, minChars, expectedSeen,
-      contamN, badWords, maxBadRatio)
+    gateSeq(docs, seen, blockedHosts, bench, minChars, contamN, badWords,
+      maxBadRatio)
       .foldLeft(Funnel(docs, massCol = Some("n_chars"))) {
         case (f, (name, gate)) => f.stage(name, gate)
       }

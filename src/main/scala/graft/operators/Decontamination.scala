@@ -113,8 +113,8 @@ object Decontamination {
     * independent blooms — the second built over a remixed
     * (xxhash64-of-hash) gram key — and flags only when BOTH hit:
     * effective per-gram fpp ≈ floor² ≈ 4e-11, i.e. ~4e-8 per 1k-gram
-    * doc, at twice the (small) bloom cost. No false negatives either
-    * way.
+    * doc, at twice the (small) bloom bytes; both blooms come from one
+    * aggregate job. No false negatives either way.
     *
     * Returns None when the benchmark has no grams (nothing to flag). */
   def contaminationPredicate(bench: DataFrame, benchTokCol: String, n: Int,
@@ -123,14 +123,13 @@ object Decontamination {
     val bg = benchmarkGrams(bench, benchTokCol, n).persist()
     try {
       val items = math.max(bg.count(), 1L)
-      for {
-        bloomA <- BloomFunctions.buildBloom(bg, col("gram_hash"), items, fpp)
-        bloomB <- BloomFunctions.buildBloom(
-          bg, xxhash64(col("gram_hash")), items, fpp)
-      } yield (tokens: Column) =>
-        exists(gramHashes(tokens, n), h =>
-          BloomFunctions.mightContain(bloomA, h) &&
-          BloomFunctions.mightContain(bloomB, xxhash64(h)))
+      BloomFunctions.buildBloom(bg,
+          Seq(col("gram_hash"), xxhash64(col("gram_hash"))), items, fpp).map {
+        case Seq(bloomA, bloomB) => (tokens: Column) =>
+          exists(gramHashes(tokens, n), h =>
+            BloomFunctions.mightContain(bloomA, h) &&
+            BloomFunctions.mightContain(bloomB, xxhash64(h)))
+      }
     } finally bg.unpersist()
   }
 

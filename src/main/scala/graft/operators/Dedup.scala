@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BloomFunctions, TextExpressions, VectorExpressions}
+import graft.functions.{TextExpressions, VectorExpressions}
 
 /** Deduplication suite for large-scale training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup.
@@ -309,39 +309,28 @@ object Dedup {
     * magnitude larger than the batch and re-deduping the union from
     * scratch every ingest would be quadratic over the pipeline's life.
     *
-    * Two-phase, built on Spark's own bloom kernel
-    * ([[graft.functions.BloomFunctions]]):
-    *
-    *   1. ONE aggregate pass over `seen` builds a bloom filter of its
-    *      64-bit content hashes (bytes ≈ 1.2 GB per 10^9 seen docs at
-    *      1% fpp), inlined into the plan like a broadcast var;
-    *   2. batch rows whose hash the filter rejects are DEFINITELY unseen
-    *      (no false negatives) and pass through with no shuffle at all;
-    *      only the ≈ (true dups + fpp·|batch|) bloom hits enter a
-    *      left-anti join against the seen hashes to discard the false
-    *      positives exactly.
-    *
-    * Shuffle volume: 8-byte hashes of `seen` plus only the bloom-hit
-    * slice of `batch` — vs a plain anti-join shuffling the entire batch.
-    * The batch scans twice (clean + candidate branch); scans are the
-    * cheap currency here, shuffles the expensive one. Same 64-bit-hash
-    * equality trade as [[exactDuplicates]] (collision ⇒ a distinct doc
-    * wrongly dropped, ≈ 2.7×10^-8 relative loss at 10^12 docs). */
+    * ONE left-anti join of the batch against the seen side's 64-bit
+    * content hashes. The batch is computed once, whatever it costs (in
+    * [[CurationGates]] it is the whole extraction and quality chain),
+    * and only 8-byte hashes cross the join, never the text. Whether to
+    * broadcast the seen hashes or shuffle both sides on the hash is the
+    * planner's choice from the seen side's size, as for any join ("To
+    * Partition, or Not to Partition", SIGMOD 2021). An empty `seen`
+    * passes the batch through. With `batch` a stream and `seen` static
+    * it is a stream-static left-anti join, so the same call dedups a
+    * `readStream` micro-batch. Same 64-bit-hash equality trade as
+    * [[exactDuplicates]] (collision ⇒ a distinct doc wrongly dropped,
+    * ≈ 2.7×10^-8 relative loss at 10^12 docs). */
+  def dropSeenDuplicates(batch: DataFrame, seen: DataFrame, textCol: String): DataFrame =
+    batch.join(seen.select(xxhash64(col(textCol)).as("__seen_hash")),
+      xxhash64(col(textCol)) === col("__seen_hash"), "left_anti")
+
+  /** Ignores `expectedSeen`. Exists only for the frozen perfbench
+    * curate workload, which still passes it. */
+  @deprecated("the seen side needs no size estimate", "0.1.0")
   def dropSeenDuplicates(batch: DataFrame, seen: DataFrame, textCol: String,
-                         expectedSeen: Long, fpp: Double = 0.01): DataFrame = {
-    val seenHashes = seen.select(xxhash64(col(textCol)).as("__seen_hash"))
-    val withH = batch.withColumn("__batch_hash", xxhash64(col(textCol)))
-    BloomFunctions.buildBloom(seenHashes, col("__seen_hash"),
-        math.max(expectedSeen, 1L), fpp) match {
-      case None => batch // nothing seen yet: keep the whole batch
-      case Some(bloom) =>
-        val hit = BloomFunctions.mightContain(bloom, col("__batch_hash"))
-        val definitelyNew = withH.where(!hit)
-        val confirmedNew = withH.where(hit)
-          .join(seenHashes, col("__batch_hash") === col("__seen_hash"), "left_anti")
-        definitelyNew.unionByName(confirmedNew).drop("__batch_hash")
-    }
-  }
+                         expectedSeen: Long): DataFrame =
+    dropSeenDuplicates(batch, seen, textCol)
 
   // ---------- MinHash + LSH ----------
 

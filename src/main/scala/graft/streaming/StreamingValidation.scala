@@ -164,7 +164,7 @@ object StreamingValidation {
     * after which the text would be emitted again; i.e. dedup within a
     * retention window, the standard trade for infinite streams. The
     * alternative at 10^12 scale is periodic compaction into the batch
-    * bloom/anti-join path ([[graft.operators.Dedup.dropSeenDuplicates]]).
+    * hash anti-join path ([[graft.operators.Dedup.dropSeenDuplicates]]).
     * Operational note: pending processing-time timers keep a
     * `Trigger.AvailableNow` run scheduling empty timer batches instead
     * of terminating — drive TTL'd queries with a continuous trigger

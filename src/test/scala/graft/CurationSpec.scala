@@ -392,6 +392,25 @@ class CurationSpec extends SparkSpec {
       blockedHosts = Seq("h3.example.com"), bench = Some(bench))
       .select("doc_id").as[Long].collect().sorted
     assert(funnelIds === applyIds)
+    // one pass: the gate chain runs once per document. The plan reads
+    // the documents twice, once for the batch and once for the seen
+    // side; only the batch's scan reads n_chars (the funnel's mass). A
+    // scan is a parquet scan, or an in-memory one where another test
+    // cached the same file.
+    val plan = f.df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collectLeaves()
+    assert(scans.size === 2, s"documents scanned ${scans.size} times:\n$plan")
+    assert(scans.count(_.output.exists(_.name == "n_chars")) === 1,
+      s"the batch must be scanned once:\n$plan")
+    val observed = plan.collect {
+      case c: org.apache.spark.sql.execution.CollectMetricsExec => c.name
+    }
+    assert(observed.sorted === Seq("input", "extract", "len_gate", "quality_gate",
+      "badwords", "blocklist", "seen_dedup", "decontam").map("funnel_" + _).sorted,
+      s"each funnel stage observed once:\n$plan")
     val rep = f.report() // blocks until the collect above completed
     assert(rep.head._1 === "input" && rep.head._2 === 500L)
     // every gate only removes rows and mass, never adds

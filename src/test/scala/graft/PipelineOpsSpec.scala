@@ -166,14 +166,13 @@ class PipelineOpsSpec extends SparkSpec {
   test("incremental dedup: seen texts dropped (no false negatives), unseen kept") {
     val seen = docs.where($"doc_id" < 25)
     val batch = docs // 25 seen texts + the rest unseen
-    val kept = Dedup.dropSeenDuplicates(batch, seen, "text",
-      expectedSeen = 25, fpp = 0.5) // coarse filter: correctness can't depend on fpp
+    val kept = Dedup.dropSeenDuplicates(batch, seen, "text")
     assert(kept.columns === batch.columns)
     val ids = kept.select("doc_id").as[Long].collect().sorted
     assert(ids === (25L until docs.count()).toArray,
       "exactly the unseen suffix must survive")
     // empty seen side: batch passes through untouched
-    assert(Dedup.dropSeenDuplicates(batch, seen.limit(0), "text", 1).count()
+    assert(Dedup.dropSeenDuplicates(batch, seen.limit(0), "text").count()
       === batch.count())
   }
 
@@ -403,20 +402,52 @@ class PipelineOpsSpec extends SparkSpec {
     // default cap; if the caps were still in force the serialized
     // filter would come back capped at ≤ 8 MB
     val bytes = BloomFunctions.buildBloom(
-      spark.range(1000).toDF("v"), col("v"), expectedItems = 10000000L,
-      fpp = 0.01).get
+      spark.range(1000).toDF("v"), Seq(col("v")), expectedItems = 10000000L,
+      fpp = 0.01).get.head
     assert(bytes.length > 8 * 1024 * 1024,
       s"filter was capped: ${bytes.length} bytes")
   }
 
-  test("incremental dedup plan: bloom probe present, anti-join keyed by hash not text") {
-    val seen = docs.where($"doc_id" < 25)
-    val out = Dedup.dropSeenDuplicates(docs, seen, "text", expectedSeen = 25)
-    val plan = out.queryExecution.optimizedPlan.toString
-    assert(plan.contains("might_contain"), s"bloom probe missing:\n$plan")
-    val exec = out.queryExecution.executedPlan.toString
-    assert(!exec.contains("hashpartitioning(text"),
-      "anti-join must shuffle 8-byte hashes, never the text")
+  test("incremental dedup plan: one batch scan, no Union, keyed by hash not text") {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // a local seen side, so every in-memory scan in the plan is the batch's
+    val seen = docs.where($"doc_id" < 25).select("text").collect().toSeq
+      .map(_.getString(0)).toDF("text")
+    def check(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      assert(p.collect { case s: InMemoryTableScanExec => s }.size === 1,
+        s"the batch must be scanned once:\n$p")
+      assert(p.collect { case u: UnionExec => u }.isEmpty, s"no Union:\n$p")
+      assert(!p.toString.contains("hashpartitioning(text"),
+        "anti-join must shuffle 8-byte hashes, never the text")
+      p
+    }
+    val out = Dedup.dropSeenDuplicates(docs, seen, "text")
+    // a 25-row seen side is small: the planner broadcasts it
+    assert(check(out).collect { case j: BroadcastHashJoinExec => j }.nonEmpty)
+    val ids = out.select("doc_id").as[Long].collect().sorted
+    // with broadcasts off the planner shuffles both sides on the hash
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try {
+      val shuffled = Dedup.dropSeenDuplicates(docs, seen, "text")
+      val p = check(shuffled)
+      assert(p.collect { case j: BroadcastHashJoinExec => j }.isEmpty, s"broadcast:\n$p")
+      assert(p.toString.contains("hashpartitioning(xxhash64(text"),
+        s"exchange must be keyed by the content hash:\n$p")
+      assert(shuffled.select("doc_id").as[Long].collect().sorted === ids)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("connected components: chain a~b~c keeps exactly one representative") {
