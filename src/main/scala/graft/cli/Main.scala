@@ -2,6 +2,7 @@ package graft.cli
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -19,13 +20,15 @@ import graft.sources.SeqTableGen
   * Modes:
   *   gen      <path> <nRows> [nBuckets]     — write a deterministic
   *            partitioned tokenized-sequence table (Iceberg stand-in)
-  *   validate <path> <reportOut> [manifest] — run the full check suite
-  *            over a partitioned sequence table; emits violations
-  *            parquet + markdown report; resumes from <manifest> if
-  *            given (see [[graft.checkpoint.Manifest]])
-  *   validate-batch <path> <out> [manifest] — same checks, ONE job for
-  *            all pending partitions (scales past 10^4 partitions where
-  *            the per-partition loop is driver-bound; coarser resume)
+  *   validate <path> <out> [manifest]       — run the full check suite
+  *            over a stored sequence table, one job per 2 pending
+  *            partitions, each committed after its job's write; emits
+  *            violations parquet; resumes from <manifest> if given (see
+  *            [[graft.checkpoint.Manifest]]), and a crash leaves at most
+  *            2 partitions written but not committed
+  *   validate-batch <path> <out> [manifest] — the same checks in ONE job
+  *            for all pending partitions (one job at 10^4 partitions;
+  *            a crash before its write commits no partition)
   *   stream-validate <path> <out>           — constraint pass as a file
   *            stream with exactly-once checkpoint resume
   *   drift-baseline <path> <out> [lo hi]    — store n_tok/source
@@ -63,8 +66,19 @@ object Main {
       .appName("graft-validate")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val code = try run(spark, args.toList) finally spark.stop()
+    if (code != 0) sys.exit(code)
+  }
 
-    args.toList match {
+  /** Ends a mode with exit code 2 and `msg` on stderr: a usage error, or
+    * an input with nothing to judge. */
+  private final class Refused(msg: String) extends RuntimeException(msg)
+  private def refuse(msg: String): Nothing = throw new Refused(msg)
+
+  /** Runs the mode `args` names; returns the process exit code: 0, or 2
+    * when the mode refused. */
+  private[graft] def run(spark: SparkSession, args: List[String]): Int = try {
+    args match {
       case "gen" :: path :: n :: rest =>
         val buckets = rest.headOption.map(_.toInt).getOrElse(16)
         SeqTableGen.writePartitioned(SeqTableGen.generate(spark, n.toLong), path, buckets)
@@ -124,7 +138,7 @@ object Main {
         // counted bins) unless explicit lo hi args pin it — a hardcoded
         // range would dump out-of-range mass into one overflow bin and
         // blind the KS statistic.
-        val df = openTable(spark, path)
+        val df = snapshot(spark, path, "drift-baseline")
         val (lo, hi) = rest match {
           case l :: h :: Nil => (l.toDouble, h.toDouble)
           case Nil =>
@@ -136,8 +150,7 @@ object Main {
           case other =>
             // a lone lo (or a stray token) silently falling back to the
             // data-derived range would pin the WRONG baseline
-            System.err.println(s"drift-baseline: give BOTH lo and hi or neither, got: $other")
-            sys.exit(2)
+            refuse(s"drift-baseline: give BOTH lo and hi or neither, got: $other")
         }
         Drift.saveHistogram(spark, out,
           Drift.numericHistogram(df, "n_tok", lo, hi, 64))
@@ -145,14 +158,7 @@ object Main {
         println(JsonLine("mode" -> "drift-baseline", "path" -> path, "out" -> out,
           "lo" -> JsonLine.Num(lo.toString), "hi" -> JsonLine.Num(hi.toString)))
       case "drift-check" :: path :: baseline :: Nil =>
-        val df = openTable(spark, path)
-        // an empty snapshot would give ks_critical = Infinity (invalid
-        // JSON) and ks_drifted=false — a dead pipeline reported healthy
-        if (df.isEmpty) {
-          System.err.println(s"drift-check: empty snapshot at $path — nothing to judge")
-          sys.exit(2)
-        }
-        val v = Drift.check(df,
+        val v = Drift.check(snapshot(spark, path, "drift-check"),
           "n_tok", Drift.loadHistogram(spark, baseline),
           "source", Drift.loadFreq(spark, baseline))
         println(JsonLine("mode" -> "drift-check", "path" -> path, "ks" -> v.ksStatistic,
@@ -162,11 +168,10 @@ object Main {
         val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
         health(spark, dir)
       case other =>
-        System.err.println(s"unknown args: $other — see Scaladoc")
-        sys.exit(2)
+        refuse(s"unknown args: $other — see Scaladoc")
     }
-    spark.stop()
-  }
+    0
+  } catch { case e: Refused => Console.err.println(e.getMessage); 2 }
 
   /** Physical-design advisor battery over the documents table: one
     * JSON line per signal — per-column encoding recommendation,
@@ -180,11 +185,8 @@ object Main {
     import graft.sources.Bucketing
     val path = s"$dir/documents.parquet"
     val docs = spark.read.parquet(path)
-    if (docs.where(col("doc_id").isNotNull).isEmpty) {
-      System.err.println(s"layout: no usable documents at $dir — " +
-        "an empty table is a finding, not a report")
-      sys.exit(2)
-    }
+    if (docs.where(col("doc_id").isNotNull).isEmpty)
+      refuse(s"layout: no usable documents at $dir — an empty table is a finding, not a report")
     StorageAudit.encodingAudit(docs, "doc_id", Seq("lang", "source"))
       .collect().foreach { r =>
         println(JsonLine("signal" -> "encoding", "column" -> r.get(0), "n_rows" -> r.get(1),
@@ -235,12 +237,8 @@ object Main {
     val ev = spark.read.parquet(s"$dir/events.parquet")
     // a dead feed must FAIL LOUDLY, not stack-trace on an empty
     // collect — the drift-check empty-snapshot guard, applied here
-    if (ev.where(col("ts").isNotNull && col("user_id").isNotNull)
-        .isEmpty) {
-      System.err.println(s"health: no usable events at $dir — " +
-        "a dead feed is a finding, not a report")
-      sys.exit(2)
-    }
+    if (ev.where(col("ts").isNotNull && col("user_id").isNotNull).isEmpty)
+      refuse(s"health: no usable events at $dir — a dead feed is a finding, not a report")
     val ga = Sessionize.growthAccounting(ev, "user_id", "ts")
       .orderBy(desc("day")).limit(1).collect()(0)
     println(JsonLine("signal" -> "growth", "day" -> String.valueOf(ga.getDate(0)),
@@ -296,37 +294,53 @@ object Main {
     println(JsonLine("mode" -> "stream-validate", "path" -> path, "violations" -> n))
   }
 
+  /** The data files of the stored table at `path`: those the scan reads,
+    * where no name on the way down starts with `.`, or with `_` unless it
+    * holds `=`. */
+  private def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: the local file system's listFiles reads
+    // each file's owner and permissions by starting a process per file
+    def under(dir: Path): Iterator[FileStatus] = fs.listStatus(dir).iterator
+      .filterNot { f =>
+        val name = f.getPath.getName
+        name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+      }
+      .flatMap(f => if (f.isDirectory) under(f.getPath) else Iterator(f))
+    under(new Path(path)).toSeq
+  }
+
   /** The stored table at `path`, opened without a Spark job.
     * `spark.read.parquet` infers the schema in a job that reads one
-    * footer, its first data file's in path order; here the same footer
-    * is read directly, and `part_bucket` is still found from the
-    * directories. Data files are those the scan reads: no name on the
-    * way down starts with `.`, or with `_` unless it holds `=`. Fails,
-    * naming the path, when the table has no data file. */
+    * footer, its first [[dataFiles]] entry in path order; here the same
+    * footer is read directly, and `part_bucket` is still found from the
+    * directories. Fails, naming the path, when the table has no data
+    * file. */
   private[graft] def openTable(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.Footer
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
       ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    // listStatus, not listFiles: the local file system's listFiles reads
-    // each file's owner and permissions by starting a process per file
-    def dataFiles(dir: Path): Iterator[FileStatus] = fs.listStatus(dir).iterator
-      .filterNot { f =>
-        val name = f.getPath.getName
-        name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-      }
-      .flatMap(f => if (f.isDirectory) dataFiles(f.getPath) else Iterator(f))
-    val first = dataFiles(new Path(path)).minByOption(_.getPath.toString)
+    val first = dataFiles(spark, path).minByOption(_.getPath.toString)
     require(first.isDefined, s"no parquet data file under $path")
     val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(first.get, conf), ParquetMetadataConverter.NO_FILTER)
+      HadoopInputFile.fromStatus(first.get, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER)
     val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.get.getPath, footer),
       new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
     spark.read.schema(schema).parquet(path)
+  }
+
+  /** The stored table at `path` for a drift mode, refused when it holds
+    * no row: a partitioned table of no rows has no data file, an
+    * unpartitioned one a 0-row file. An empty snapshot would give
+    * ks_critical = Infinity (invalid JSON) and ks_drifted=false — a dead
+    * pipeline reported healthy. */
+  private def snapshot(spark: SparkSession, path: String, mode: String): DataFrame = {
+    val df = if (dataFiles(spark, path).isEmpty) None else Some(openTable(spark, path))
+    if (df.forall(_.isEmpty)) refuse(s"$mode: empty snapshot at $path — nothing to judge")
+    df.get
   }
 
   /** Resume step of both validate modes: the table's partitions (`all`
@@ -379,110 +393,81 @@ object Main {
     println(JsonLine("partition" -> p, "rows" -> nRows, "violations" -> nViol, "pass" -> (nViol == 0)))
   }
 
-  /** Partitions [[validatePath]] checks at once. Two overlap one
-    * partition's driver work (planning, job launch, commit) with the
-    * other's execution. Four put the slowest verdicts behind 4-way driver
-    * contention: on a 4-core host their p90 rose by about 45%, for a
-    * throughput gain within run-to-run spread. */
-  private val InFlight = 2
+  /** Pending partitions [[validatePath]] checks in one job: a crash
+    * leaves at most this many written but not committed, and each job's
+    * planning, launch and sink write serve this many verdicts. */
+  private val Slice = 2
 
-  /** Full check suite over a stored partitioned table, one
-    * [[runChecks]] job per pending partition, [[InFlight]] partitions
-    * in flight. A fixed pool, made per call, runs the checks. The
-    * calling thread commits each partition and prints its verdict as its
-    * write finishes, in completion order, and only then starts the next
-    * partition: the manifest keeps one writer, the lines go to the
-    * caller's `Console.out`, and a crash leaves at most [[InFlight]]
-    * partitions written but not committed, which the resume redoes. If
-    * one partition's checks throw, no further partition starts, the one
-    * still running finishes its write uncommitted, and the exception
-    * reaches the caller. */
-  def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
-    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-    val df = openTable(spark, path)
-    val todo = pending(df, "validate", manifest).toVector
-    val pool = Executors.newFixedThreadPool(InFlight)
-    // each task checks one partition and hands back its commit
-    val done = new ExecutorCompletionService[() => Unit](pool)
-    def start(i: Int): Unit = if (i < todo.size) {
-      val (p, files) = todo(i)
-      done.submit { () =>
-        val slice = if (p == "all") df else df.where(col("part_bucket") === p.toInt)
-        // same directory layout as validate-batch (part_bucket=N), so one
-        // out dir can be shared across modes without ambiguity
-        val (_, nViol, nRows) = runChecks(spark, slice, s"$out/violations/part_bucket=$p")
-        val snapshotId = s"scan-${System.currentTimeMillis()}"
-        () => commit(manifest, p, files, nRows, nViol, snapshotId)
-      }
-    }
-    try {
-      (0 until InFlight).foreach(start)
-      todo.indices.foreach { i =>
-        try done.take().get().apply() catch { case e: ExecutionException => throw e.getCause }
-        start(i + InFlight)
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-    }
-  }
+  /** Full check suite over a stored table, [[checkSlice]] over each run
+    * of [[Slice]] pending partitions in turn: a slice's partitions
+    * commit and print their verdicts after its write, before the next
+    * slice starts. A crash leaves at most [[Slice]] partitions written
+    * but not committed, which the resume redoes. If a slice's checks
+    * throw, none of its partitions commits, no further slice starts, and
+    * the exception reaches the caller. */
+  def validatePath(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit =
+    validate(spark, path, out, manifest, "validate", Some(Slice))
 
-  /** Batch flavor of [[validatePath]]: ONE Spark job computes every
-    * pending partition's violations and verdicts, with the violations
-    * written `partitionBy(part_bucket)` and the manifest marked per
-    * partition afterwards. The rows and violations per partition are
-    * counted on that job, by two [[BucketCounts]] Observations: over
-    * the rows the checks scan, and over the violations written. So the
-    * counts come from THIS run's rows, never from the sink: a pending
-    * partition with zero violations writes no directory, and stale files
-    * from an earlier run into the same out dir would be counted and the
-    * partition wrongly failed (ADVICE round 2).
-    *
-    * Trade vs the per-partition loop: the loop gives fine-grained resume
-    * (each partition commits independently) but runs one driver-
-    * scheduled job per partition — at 10^4+ partitions the driver loop,
-    * not the cluster, is the bottleneck. Batch mode scales to any
-    * partition count at the cost of coarser resume: a crash before the
-    * write commits marks nothing, and the rerun redoes all still-pending
+  /** [[validatePath]] with every pending partition in one slice, so ONE
+    * Spark job whatever the partition count. A crash before its write
+    * commits no partition, and the rerun redoes all still-pending
     * partitions. Completed partitions from EITHER mode are skipped by
     * both. */
-  def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit = {
+  def validateBatch(spark: SparkSession, path: String, out: String, manifest: Option[String]): Unit =
+    validate(spark, path, out, manifest, "validate-batch", None)
+
+  private def validate(spark: SparkSession, path: String, out: String, manifest: Option[String],
+                       mode: String, perJob: Option[Int]): Unit = {
     val df = openTable(spark, path)
-    require(df.columns.contains("part_bucket"),
-      "validate-batch needs a part_bucket-partitioned table (gen mode writes one)")
-    val todo = pending(df, "validate-batch", manifest)
-    if (todo.isEmpty) return
-    val slice = df.where(col("part_bucket").isin(todo.map(_._1.toInt): _*))
+    val todo = pending(df, mode, manifest)
+    todo.grouped(perJob.getOrElse(todo.size).max(1)).foreach(checkSlice(spark, df, out, manifest, _))
+  }
+
+  /** The check body of both validate modes: ONE Spark job computes the
+    * violations and verdicts of `slice`, a run of [[pending]]
+    * partitions, writes the violations `partitionBy(part_bucket)`, and
+    * then commits each partition. The rows of an unpartitioned table are
+    * partition `all`. The rows and violations per partition are counted
+    * on that job, by two [[BucketCounts]] Observations: over the rows the
+    * checks scan, and over the violations written. So the counts come
+    * from THIS run's rows, never from the sink: a pending partition with
+    * zero violations writes no directory, and stale files from an earlier
+    * run into the same out dir would be counted and the partition wrongly
+    * failed (ADVICE round 2). Uniqueness is scoped to the partition, so a
+    * slice gives each partition the verdict it gets alone. */
+  private def checkSlice(spark: SparkSession, df: DataFrame, out: String, manifest: Option[String],
+                         slice: Seq[(String, Seq[String])]): Unit = {
+    val rows =
+      if (df.columns.contains("part_bucket")) df.where(col("part_bucket").isin(slice.map(_._1.toInt): _*))
+      else df.withColumn("part_bucket", lit("all"))
+    val bucket = col("part_bucket").cast("string") // a verdict's partition name
     val (rowsObs, violObs) = (Observation(), Observation())
-    // global uniqueness in one shuffle (the bucketing co-locates equal
-    // keys, so per-bucket == global; computed over the whole slice here)
-    val all = suiteViolations(slice, Seq("part_bucket"),
-      Some(rowsObs -> countPerBucket(col("part_bucket")).as("n")))
+    val all = suiteViolations(rows, Seq("part_bucket"), Some(rowsObs -> countPerBucket(bucket).as("n")))
     // dynamic overwrite replaces only partitions PRESENT in this run's
     // output — a pending partition whose violations are now ZERO writes
     // nothing and would keep stale files from an earlier run, so the
-    // todo partitions' directories are deleted first (the sink must
-    // agree with the manifest verdict, not just the counts)
-    val sinkRoot = new org.apache.hadoop.fs.Path(s"$out/violations")
+    // slice's directories are deleted first (the sink must agree with
+    // the manifest verdict, not just the counts)
+    val sinkRoot = new Path(s"$out/violations")
     val fs = sinkRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    todo.foreach { case (p, _) =>
-      fs.delete(new org.apache.hadoop.fs.Path(sinkRoot, s"part_bucket=$p"), true)
-    }
-    // dynamic overwrite: only the buckets in this run are replaced
+    slice.foreach { case (p, _) => fs.delete(new Path(sinkRoot, s"part_bucket=$p"), true) }
+    // dynamic overwrite: only the slice's buckets are replaced
     // (writer-scoped option — do not mutate session config); one write
-    // task per bucket, so one sink file per bucket, not one per task
-    all.observe(violObs, countPerBucket(col("part_bucket")).as("n"))
-      .repartition(col("part_bucket")).write.mode("overwrite")
+    // task per bucket, so one sink file per bucket, not one per task.
+    // The violations are observed above that exchange: when it holds no
+    // row, the adaptive plan replaces what sits on it by an empty
+    // relation, and an Observation under it would go with it
+    all.repartition(col("part_bucket")).observe(violObs, countPerBucket(bucket).as("n"))
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("part_bucket")
       .parquet(s"$out/violations")
-    def byBucket(obs: Observation): collection.Map[Int, Long] =
-      obs.get("n").asInstanceOf[collection.Map[Int, Long]]
+    def byBucket(obs: Observation): collection.Map[String, Long] =
+      obs.get("n").asInstanceOf[collection.Map[String, Long]]
     val (rowsByPart, violByPart) = (byBucket(rowsObs), byBucket(violObs))
     val snapshot = s"scan-${System.currentTimeMillis()}"
-    todo.foreach { case (p, files) =>
-      commit(manifest, p, files, rowsByPart.getOrElse(p.toInt, 0L), violByPart.getOrElse(p.toInt, 0L),
-        snapshot)
+    slice.foreach { case (p, files) =>
+      commit(manifest, p, files, rowsByPart.getOrElse(p, 0L), violByPart.getOrElse(p, 0L), snapshot)
     }
   }
 
@@ -490,21 +475,21 @@ object Main {
     * Observation: each task counts into a map of the buckets it sees, so
     * what reaches the driver grows with those buckets, not with the
     * range of their values. */
-  private object BucketCounts extends Aggregator[Int, mutable.HashMap[Int, Long], Map[Int, Long]] {
-    def zero: mutable.HashMap[Int, Long] = mutable.HashMap.empty
-    def reduce(n: mutable.HashMap[Int, Long], bucket: Int): mutable.HashMap[Int, Long] = {
+  private object BucketCounts extends Aggregator[String, mutable.HashMap[String, Long], Map[String, Long]] {
+    def zero: mutable.HashMap[String, Long] = mutable.HashMap.empty
+    def reduce(n: mutable.HashMap[String, Long], bucket: String): mutable.HashMap[String, Long] = {
       n(bucket) = n.getOrElse(bucket, 0L) + 1
       n
     }
-    def merge(a: mutable.HashMap[Int, Long], b: mutable.HashMap[Int, Long]): mutable.HashMap[Int, Long] = {
+    def merge(a: mutable.HashMap[String, Long], b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
       b.foreach { case (k, v) => a(k) = a.getOrElse(k, 0L) + v }
       a
     }
-    def finish(n: mutable.HashMap[Int, Long]): Map[Int, Long] = n.toMap
-    def bufferEncoder: Encoder[mutable.HashMap[Int, Long]] = Encoders.javaSerialization
-    def outputEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
+    def finish(n: mutable.HashMap[String, Long]): Map[String, Long] = n.toMap
+    def bufferEncoder: Encoder[mutable.HashMap[String, Long]] = Encoders.javaSerialization
+    def outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
   }
-  private val countPerBucket = udaf(BucketCounts, Encoders.scalaInt)
+  private val countPerBucket = udaf(BucketCounts, Encoders.STRING)
 
   /** The stored-table suite's violations, (carryCols…, doc_id, rule_id,
     * offending_value): [[checkSuite]] fused into ONE scan — its
@@ -520,8 +505,9 @@ object Main {
         checkSuite, carryCols)
       .unionByName(Uniqueness.violations(df, "doc_id", carryCols = carryCols))
 
-  /** [[suiteViolations]] of one partition, written to `violOut`;
-    * returns (pass, nViolations, nRows). */
+  /** [[suiteViolations]] of the frame `df` as one partition, written to
+    * `violOut`; returns (pass, nViolations, nRows). The benchmark's layer
+    * breakdown times it per partition. */
   def runChecks(spark: SparkSession, df: DataFrame, violOut: String): (Boolean, Long, Long) = {
     // both counts ride the write job via CollectMetrics — no second read
     // of the violations parquet (round-1 VERDICT "What's wrong" #6) and

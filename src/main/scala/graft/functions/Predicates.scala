@@ -101,14 +101,16 @@ object Predicates {
       if (vocab.isEmpty) lit(false) else c.isin(vocab: _*)
 
     case RuleType.RegexT =>
-      // fullmatch semantics → anchor as ^(?:pat)$ (validate_core.py:324).
+      // fullmatch semantics → anchor as ^(?:pat)\z (validate_core.py:324):
+      // Java's `$` also matches before a final line terminator, `\z` only
+      // at the end of the text.
       // Invalid pattern ⇒ every non-special cell invalid (:325-327); the
       // compile check happens once here on the driver, never per row.
       val compiles =
         try { java.util.regex.Pattern.compile(rule.pattern); true }
         catch { case _: java.util.regex.PatternSyntaxException => false }
       if (compiles)
-        isSpecial(c, rule) || c.rlike("^(?:" + rule.pattern + ")$")
+        isSpecial(c, rule) || c.rlike("^(?:" + rule.pattern + ")\\z")
       else isSpecial(c, rule)
 
     case RuleType.StringT => lit(true) // unconstrained (validate_core.py:341)

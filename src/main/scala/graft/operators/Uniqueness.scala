@@ -62,13 +62,18 @@ object Uniqueness {
   /** Violation rows (carryCols…, doc_id, rule_id, offending_value) for
     * duplicated keys, shaped like [[ValidationPass.seqViolations]] with the
     * same `carryCols` so the two union by name into one check suite: one
-    * row per occurrence of a key that occurs more than once, with
+    * row per occurrence of a key that occurs more than once among the
+    * rows with the same `carryCols` values, with
     * `offending_value = "n_occurrences=N"`. A NULL key never violates.
+    * So the carried columns scope the key: carrying `part_bucket` makes it
+    * unique per partition (an embedded uniqueness constraint), and a
+    * partition's verdict does not depend on the other partitions checked
+    * with it; with no carried column the key is unique over the frame.
     *
     * One narrow exchange and no join: the rows with a key are projected
-    * to (carryCols…, key), and `count(1) over (partition by key)` counts
-    * each key's occurrences, so the shuffle moves those columns, never
-    * whole rows.
+    * to (carryCols…, key), and `count(1) over (partition by carryCols…,
+    * key)` counts each key's occurrences, so the shuffle moves those
+    * columns, never whole rows.
     *
     * The object's scale notes are [[duplicates]]'s and do not hold here:
     * this exchange moves one narrow row per occurrence, O(rows) and not
@@ -81,7 +86,8 @@ object Uniqueness {
                  carryCols: Seq[String] = Nil): DataFrame =
     df.where(col(keyCol).isNotNull)
       .select((carryCols :+ keyCol).map(col): _*)
-      .withColumn("n_occurrences", count(lit(1)).over(Window.partitionBy(col(keyCol))))
+      .withColumn("n_occurrences",
+        count(lit(1)).over(Window.partitionBy((carryCols :+ keyCol).map(col): _*)))
       .where(col("n_occurrences") > 1)
       .select(carryCols.map(col) ++ Seq(col(keyCol).as("doc_id"), lit(ruleId).as("rule_id"),
         concat(lit("n_occurrences="), col("n_occurrences").cast("string"))

@@ -263,7 +263,7 @@ object ValidationPass {
       !Normalize.missingMask(col("doc_id")),
       coalesce(col("doc_id"), lit("<null>"))),
     SeqConstraint("R_REGEX_DOCID",
-      col("doc_id").rlike("^(?:doc_[0-9]{12})$"),
+      col("doc_id").rlike("^(?:doc_[0-9]{12})\\z"),
       coalesce(col("doc_id"), lit("<null>"))),
     SeqConstraint("R_NTOK_EQ_SIZE",
       col("n_tok") === size(col("tokens")),

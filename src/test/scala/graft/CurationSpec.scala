@@ -394,14 +394,12 @@ class CurationSpec extends SparkSpec {
     assert(funnelIds === applyIds)
     // one pass: the gate chain runs once per document. The plan reads
     // the documents twice, once for the batch and once for the seen
-    // side; only the batch's scan reads n_chars (the funnel's mass). A
-    // scan is a parquet scan, or an in-memory one where another test
-    // cached the same file.
+    // side; only the batch's scan reads n_chars (the funnel's mass).
     val plan = f.df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    val scans = plan.collectLeaves()
+    val scans = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
     assert(scans.size === 2, s"documents scanned ${scans.size} times:\n$plan")
     assert(scans.count(_.output.exists(_.name == "n_chars")) === 1,
       s"the batch must be scanned once:\n$plan")

@@ -55,6 +55,41 @@ class PredicatesSpec extends SparkSpec {
     assert(evalRule(bad, Seq("anything", "NA")) === Seq(false, true))
   }
 
+  /** (pattern, cell, Python `re.fullmatch(pattern, cell) is not None`). */
+  private val fullmatchCases = Seq(
+    ("doc_[0-9]{12}", "doc_000000000001", true),
+    ("doc_[0-9]{12}", "doc_000000000001\n", false),
+    ("doc_[0-9]{12}", "doc_000000000001\r\n", false),
+    ("doc_[0-9]{12}", "\ndoc_000000000001", false),
+    ("doc_[0-9]{12}", "doc_0000000000012", false),
+    ("abc", "abc", true),
+    ("abc", "abc\n", false),
+    ("abc", "ab", false),
+    ("[0-9]+", "12", true),
+    ("[0-9]+", "12\r\n", false),
+    ("[0-9]+", "12\n", false),
+    ("[0-9]+", "", false),
+    ("a|b", "b", true),
+    ("a|b", "ab", false),
+    ("a|b", "b\n", false),
+    ("x.*", "x\ny", false),
+    ("x.*", "x\n", false),
+    ("x.*", "xyz", true),
+    ("x\\s*", "x\n", true),
+    ("x\\s*", "x \r\n", true))
+
+  test("Regex rule and R_REGEX_DOCID agree with Python fullmatch, line terminators included") {
+    fullmatchCases.groupBy(_._1).foreach { case (pattern, cases) =>
+      val r = Rule("T", "f", RuleType.RegexT, Requirement.Required, pattern = pattern)
+      assert(evalRule(r, cases.map(_._2)) === cases.map(_._3), pattern)
+    }
+    val docIds = fullmatchCases.filter(_._1 == "doc_[0-9]{12}")
+    val rule = graft.operators.ValidationPass.seqConstraints(1, Nil)
+      .find(_.ruleId == "R_REGEX_DOCID").get
+    assert(docIds.map(_._2).toDF("doc_id").select(rule.valid).as[Boolean].collect().toSeq ===
+      docIds.map(_._3))
+  }
+
   test("String is unconstrained") {
     val r = Rule("T", "f", RuleType.StringT, Requirement.Required)
     assert(evalRule(r, Seq("whatever", "NA")) === Seq(true, true))

@@ -430,8 +430,10 @@ class SeqEngineSpec extends SparkSpec {
   }
 
   test("uniqueness violations equal the join to the duplicate set they replace, as a multiset") {
-    def oldForm(d: org.apache.spark.sql.DataFrame) =
-      d.join(Uniqueness.duplicatesSimple(d, "doc_id"), "doc_id")
+    // the carried part_bucket scopes the key: duplicates per (part_bucket, doc_id)
+    def oracle(d: org.apache.spark.sql.DataFrame) =
+      d.join(d.groupBy("part_bucket", "doc_id").agg(count(lit(1)).as("n_occurrences"))
+          .where(col("n_occurrences") > 1), Seq("part_bucket", "doc_id"))
         .select(col("part_bucket"), col("doc_id"), lit("R_UNIQUE_DOCID").as("rule_id"),
           concat(lit("n_occurrences="), col("n_occurrences").cast("string")).as("offending_value"))
     def multiset(d: org.apache.spark.sql.DataFrame) =
@@ -442,10 +444,131 @@ class SeqEngineSpec extends SparkSpec {
     Seq(small, seq).foreach { d =>
       val got = Uniqueness.violations(d, "doc_id", carryCols = Seq("part_bucket"))
       assert(got.columns.toSeq === Seq("part_bucket", "doc_id", "rule_id", "offending_value"))
-      assert(multiset(got) === multiset(oldForm(d)))
+      assert(multiset(got) === multiset(oracle(d)))
     }
-    // a: 3 occurrences, c: 2; b is unique and NULL keys never violate
+    // per partition: a twice in bucket 1 (once in 0), c twice in bucket 1
+    assert(Uniqueness.violations(small, "doc_id", carryCols = Seq("part_bucket")).count() === 4)
+    // over the frame: a 3 occurrences, c 2; b is unique and NULL keys never violate
     assert(Uniqueness.violations(small, "doc_id").count() === 5)
     assert(Uniqueness.violations(seq, "doc_id").count() > 0)
+  }
+
+  test("drift modes refuse an empty snapshot with exit code 2, partitioned or not") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_drift_empty").toString
+    val none = SeqTableGen.generate(spark, 0)
+    SeqTableGen.writePartitioned(none, s"$dir/partitioned", 2)
+    none.write.parquet(s"$dir/flat")
+    def dataFiles(t: String) = Files.walk(java.nio.file.Paths.get(t)).toArray
+      .count(_.toString.endsWith(".parquet"))
+    // a partitioned write of no rows leaves no data file, a flat one a 0-row file
+    assert(dataFiles(s"$dir/partitioned") === 0 && dataFiles(s"$dir/flat") === 1)
+    for (t <- Seq("partitioned", "flat");
+         args <- Seq(List("drift-baseline", s"$dir/$t", s"$dir/base-$t"),
+                     List("drift-check", s"$dir/$t", s"$dir/base-$t"))) {
+      val err = new java.io.ByteArrayOutputStream()
+      val code = Console.withErr(new java.io.PrintStream(err, true, "UTF-8"))(
+        graft.cli.Main.run(spark, args))
+      assert(code === 2, args)
+      assert(err.toString("UTF-8").contains(s"${args.head}: empty snapshot at $dir/$t"), args)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$dir/base-$t")), args)
+    }
+  }
+
+  test("validate and validate-batch agree when a doc_id repeats across partitions") {
+    import java.nio.file.Files
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_cross_part").toString
+    // bucketed by n_tok, not doc_id: the seeded duplicates spread across
+    // buckets, and one otherwise unique key is copied into a second bucket
+    val table = SeqTableGen.generate(spark, 20000).withColumn("part_bucket", pmod(col("n_tok"), lit(5)))
+    val key = "doc_000000000777"
+    val copy = table.where(col("doc_id") === key).withColumn("part_bucket", pmod(col("part_bucket") + 1, lit(5)))
+    assert(copy.count() === 1)
+    table.unionByName(copy).write.partitionBy("part_bucket").parquet(s"$dir/seq")
+    val lines = verdictLines(
+      graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out1", Some(s"$dir/m1.jsonl")))
+    val linesB = verdictLines(
+      graft.cli.Main.validateBatch(spark, s"$dir/seq", s"$dir/out2", Some(s"$dir/m2.jsonl")))
+    assert(lines.size === 5 && lines.toSet === linesB.toSet)
+    val m1 = Manifest.load(s"$dir/m1.jsonl").entries
+    val m2 = Manifest.load(s"$dir/m2.jsonl").entries
+    assert(m1.keySet === (0 until 5).map(_.toString).toSet && m1.keySet === m2.keySet)
+    m1.keySet.foreach { p =>
+      assert((m1(p).rows, m1(p).violations, m1(p).pass, m1(p).files) ===
+        (m2(p).rows, m2(p).violations, m2(p).pass, m2(p).files), p)
+    }
+    assert(perBucketRule(s"$dir/out1/violations") === perBucketRule(s"$dir/out2/violations"))
+    Seq("out1", "out2").foreach { out =>
+      val unique = spark.read.parquet(s"$dir/$out/violations").where(col("rule_id") === "R_UNIQUE_DOCID")
+      assert(unique.where(col("doc_id") === key).count() === 0, out)
+      // each flagged key repeats within its own bucket
+      val perBucket = spark.read.parquet(s"$dir/seq").groupBy("part_bucket", "doc_id").count()
+      assert(unique.join(perBucket, Seq("part_bucket", "doc_id")).where(col("count") < 2).count() === 0, out)
+    }
+  }
+
+  test("validate on an unpartitioned table: one `all` verdict, sink under part_bucket=all") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_flat").toString
+    SeqTableGen.generate(spark, 5000).write.parquet(s"$dir/seq")
+    Seq[(String, (String, String) => Unit)](
+      "validate" -> ((out, mf) => graft.cli.Main.validatePath(spark, s"$dir/seq", out, Some(mf))),
+      "validate-batch" -> ((out, mf) => graft.cli.Main.validateBatch(spark, s"$dir/seq", out, Some(mf))))
+      .foreach { case (mode, run) =>
+        val (out, mf) = (s"$dir/out-$mode", s"$dir/$mode.jsonl")
+        val lines = verdictLines(run(out, mf))
+        assert(Files.isDirectory(Paths.get(s"$out/violations/part_bucket=all")), mode)
+        val sink = spark.read.parquet(s"$out/violations")
+        assert(sink.select("part_bucket").distinct().as[String].collect().toSeq === Seq("all"), mode)
+        val v = sink.count()
+        assert(v > 0 && sink.where(col("rule_id") === "R_UNIQUE_DOCID").count() > 0, mode)
+        assert(lines === Seq(s"""{"partition":"all","rows":5000,"violations":$v,"pass":false}"""), mode)
+        val m = Manifest.load(mf).entries
+        assert(m.keySet === Set("all"), mode)
+        assert((m("all").rows, m("all").violations, m("all").pass) === ((5000L, v, false)), mode)
+        assert(m("all").files.nonEmpty && m("all").files.forall(_.contains(s"$dir/seq/")), mode)
+        // resume: nothing left to do
+        assert(verdictLines(run(out, mf)).isEmpty, mode)
+      }
+  }
+
+  test("a clean table passes every partition with its row count in both modes") {
+    import java.nio.file.Files
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_clean").toString
+    // no seeded violation, and only sources on the referential allowlist
+    val clean = SeqTableGen.generate(spark, 4000, withViolations = false)
+      .where(col("source").isin(SeqTableGen.RefAllowlist: _*))
+    SeqTableGen.writePartitioned(clean, s"$dir/seq", 4)
+    val rows = spark.read.parquet(s"$dir/seq").groupBy("part_bucket").count().collect()
+      .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    assert(rows.size === 4)
+    Seq[(String, (String, String) => Unit)](
+      "validate" -> ((out, mf) => graft.cli.Main.validatePath(spark, s"$dir/seq", out, Some(mf))),
+      "validate-batch" -> ((out, mf) => graft.cli.Main.validateBatch(spark, s"$dir/seq", out, Some(mf))))
+      .foreach { case (mode, run) =>
+        run(s"$dir/out-$mode", s"$dir/$mode.jsonl")
+        val m = Manifest.load(s"$dir/$mode.jsonl").entries
+        assert(m.map { case (p, e) => p -> (e.rows, e.violations, e.pass) } ===
+          rows.map { case (p, n) => p -> ((n, 0L, true)) }, mode)
+      }
+  }
+
+  test("validate commits slice by slice: a failing slice commits none of its partitions") {
+    import java.nio.file.{Files, Paths}
+    import graft.checkpoint.Manifest
+    val dir = Files.createTempDirectory("graft_slice_fail").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 8000), s"$dir/seq", 8)
+    // partition 3 holds a file that is not parquet: its slice, 2 and 3, throws
+    Files.writeString(Paths.get(s"$dir/seq/part_bucket=3/zz-not-parquet.parquet"), "not parquet")
+    val mf = s"$dir/m.jsonl"
+    val buf = new java.io.ByteArrayOutputStream()
+    intercept[org.apache.spark.SparkException](Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(
+      graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out", Some(mf))))
+    assert(Manifest.load(mf).entries.keySet === Set("0", "1"))
+    val printed = buf.toString("UTF-8").split('\n').filter(_.startsWith("{\"partition\""))
+    assert(printed.map(l => l.split('"')(3)).toSeq === Seq("0", "1"))
   }
 }
