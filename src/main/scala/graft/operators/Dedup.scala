@@ -158,7 +158,7 @@ object Dedup {
                         srcCol: String): DataFrame = {
     val h = df.where(col(textCol).isNotNull)
       .select(xxhash64(col(textCol)).as("__h"),
-        coalesce(col(srcCol).cast("string"), lit("<null>")).as("__s"))
+        Categorical.key(col(srcCol)).as("__s"))
       .distinct()
     h.as("a").join(h.as("b"),
         col("a.__h") === col("b.__h") && col("a.__s") < col("b.__s"))
@@ -261,7 +261,7 @@ object Dedup {
       labelCol: String,
       hash: Column => Column = md5(_)): DataFrame = {
     val pairs = df.select(hash(col(textCol)).as("content_hash"),
-      coalesce(col(labelCol).cast("string"), lit("<null>")).as("__l"))
+      Categorical.key(col(labelCol)).as("__l"))
     val byHash = pairs.groupBy(col("content_hash"), col("__l"))
       .agg(count(lit(1)).as("__n"))
     byHash.groupBy(col("content_hash"))
@@ -991,7 +991,7 @@ object Dedup {
                         srcCol: String): DataFrame = {
     val d = df.where(col(keyCol).isNotNull)
       .select(col(keyCol).as("__k"),
-        coalesce(col(srcCol).cast("string"), lit("<null>")).as("__s"))
+        Categorical.key(col(srcCol)).as("__s"))
       .distinct()
     d.select(col("__k"), col("__s").as("src_a"))
       .join(d.select(col("__k"), col("__s").as("src_b")), Seq("__k"))

@@ -60,7 +60,7 @@ object Drift {
                 baseline: HistogramProfile, alpha: Double = 0.01): DataFrame = {
     val spark = df.sparkSession
     val nBins = baseline.counts.length - 2
-    val perGroup = df.groupBy(col(groupCol).cast("string").as("g"))
+    val perGroup = df.groupBy(Categorical.key(col(groupCol)).as("g"))
       .agg(HistogramAgg.histogram(col(field), baseline.lo, baseline.hi, nBins).as("h"))
       .collect()
     import spark.implicits._
@@ -69,7 +69,7 @@ object Drift {
         r.getAs[scala.collection.Seq[Long]]("h").toArray)
       val stat = ksStatistic(p, baseline)
       val crit = ksCritical(p.total, baseline.total, alpha)
-      (Option(r.getString(0)).getOrElse("<null>"), p.total,
+      (r.getString(0), p.total,
         round6(stat),
         round6(crit),
         stat > crit)
@@ -105,7 +105,7 @@ object Drift {
     }
     val bm = folded(baseline.counts)
     val bTot = math.max(bm.sum, 1L).toDouble
-    val perGroup = df.groupBy(col(groupCol).cast("string").as("g"))
+    val perGroup = df.groupBy(Categorical.key(col(groupCol)).as("g"))
       .agg(HistogramAgg.histogram(col(field), baseline.lo, baseline.hi,
         nBins).as("h"))
       .collect()
@@ -119,7 +119,7 @@ object Drift {
         acc += math.abs(cgL / gTot - cbL / bTot)
         j += 1
       }
-      (Option(r.getString(0)).getOrElse("<null>"), gm.sum,
+      (r.getString(0), gm.sum,
         round6(acc * w))
     }.toDF(groupCol, "n", "w1")
   }
@@ -242,8 +242,7 @@ object Drift {
     * Returns (group, n, n_success, rate, z). */
   def twoProportionZ(df: DataFrame, groupCol: String,
                      success: Column): DataFrame = {
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("k"))
     val tot = per.agg(sum(col("n")).as("__N"), sum(col("k")).as("__K"))
@@ -291,8 +290,7 @@ object Drift {
                     zAlpha: Double = 1.9599639845400545,
                     zBeta: Double = 0.8416212335729143): DataFrame = {
     require(relLift != 0.0, "relLift must be nonzero")
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("k"))
     val p1 = col("k").cast("double") / col("n")
@@ -376,8 +374,7 @@ object Drift {
                relLift: Double = 0.05, alpha: Double = 0.05,
                beta: Double = 0.2): DataFrame =
     sprtGateFromCounts(
-      df.groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
-          .as(groupCol))
+      df.groupBy(Categorical.key(col(groupCol)).as(groupCol))
         .agg(count(lit(1)).as("n"),
           sum(when(success, 1L).otherwise(0L)).as("k")),
       groupCol, relLift, alpha, beta)
@@ -436,7 +433,7 @@ object Drift {
                     halfLifeDays: Double = 7.0): DataFrame = {
     require(halfLifeDays > 0, "halfLifeDays must be positive")
     val base = df.where(col(tsCol).isNotNull)
-      .select(coalesce(col(groupCol).cast("string"), lit("<null>"))
+      .select(Categorical.key(col(groupCol))
         .as("__g"), to_date(col(tsCol)).as("__d"))
     val ref = base.agg(max(col("__d")).as("__ref"))
     base.crossJoin(broadcast(ref))
@@ -465,8 +462,7 @@ object Drift {
                       success: Column): DataFrame = {
     val ln95 = math.log(2.0 / 0.05)
     val ln99 = math.log(2.0 / 0.01)
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("__k"))
     per.select(col("__g").as(groupCol), col("n"),
@@ -495,8 +491,7 @@ object Drift {
     require(delta > 0 && delta < 1, "delta must be in (0,1)")
     val ln2 = math.log(2.0 / delta)
     val ln3 = math.log(3.0 / delta)
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("__k"))
     val n = col("n").cast("double")
@@ -554,11 +549,12 @@ object Drift {
           .as("se_jackknife"))
   }
 
-  /** Categorical frequency profile (tiny shuffle: O(categories)). */
+  /** Categorical frequency profile of the [[Categorical.key]]s of
+    * `field` (tiny shuffle: O(categories)). */
   def categoricalFreq(df: DataFrame, field: String): CategoricalProfile = {
-    val rows: Array[Row] = df.groupBy(col(field).cast("string").as("k"))
+    val rows: Array[Row] = df.groupBy(Categorical.key(col(field)).as("k"))
       .agg(count(lit(1)).as("n")).collect()
-    CategoricalProfile(rows.map(r => Option(r.getString(0)).getOrElse("<null>") -> r.getLong(1)).toMap)
+    CategoricalProfile(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
   /** Two-sample KS statistic on aligned histogram sketches.
@@ -576,40 +572,33 @@ object Drift {
     c * math.sqrt((n1 + n2).toDouble / (n1.toDouble * n2.toDouble))
   }
 
-  /** Pearson chi-square of observed vs expected proportions.
+  /** Pearson chi-square of observed counts vs the counts the baseline
+    * proportions expect, over the [[Categorical.aligned]] walk. The
+    * expectation scales by the observed total as it is (no floor).
     * Categories absent from the baseline get a pseudo-expected 0.5 count
     * (standard continuity floor) so novel categories register as drift. */
   def chiSquare(observed: CategoricalProfile, baseline: CategoricalProfile): (Double, Int) = {
     val n = observed.total.toDouble
     val bTotal = baseline.total.toDouble.max(1.0)
-    val keys = (observed.freq.keySet ++ baseline.freq.keySet).toSeq.sorted
-    var stat = 0.0
-    keys.foreach { k =>
-      val obs = observed.freq.getOrElse(k, 0L).toDouble
-      val expP = baseline.freq.getOrElse(k, 0L).toDouble / bTotal
-      val exp = math.max(expP * n, 0.5)
-      stat += (obs - exp) * (obs - exp) / exp
-    }
-    (stat, math.max(keys.size - 1, 1))
+    val cells = Categorical.aligned(observed, baseline)
+    val stat = cells.iterator.map { case (_, obs, base) =>
+      val exp = math.max(base.toDouble / bTotal * n, 0.5)
+      (obs - exp) * (obs - exp) / exp
+    }.sum
+    (stat, math.max(cells.size - 1, 1))
   }
 
   /** Population stability index of observed vs baseline category
-    * proportions: Σ (p_obs − p_base)·ln(p_obs / p_base), with a floor of
-    * `eps` on each proportion so categories empty on one side contribute
-    * a large-but-finite term instead of ∞. Industry reading: < 0.1
-    * stable, 0.1–0.25 moderate shift, > 0.25 drifted. Driver-side over
-    * the merged metadata-sized profiles, like [[chiSquare]]. */
+    * proportions: Σ (p_obs − p_base)·ln(p_obs / p_base) over the
+    * [[Categorical.shares]], with a floor of `eps` on each proportion
+    * so categories empty on one side contribute a large-but-finite term
+    * instead of ∞. Industry reading: < 0.1 stable, 0.1–0.25 moderate
+    * shift, > 0.25 drifted. */
   def psi(observed: CategoricalProfile, baseline: CategoricalProfile,
-          eps: Double = 1e-4): Double = {
-    val no = observed.total.toDouble.max(1.0)
-    val nb = baseline.total.toDouble.max(1.0)
-    val keys = (observed.freq.keySet ++ baseline.freq.keySet).toSeq.sorted
-    keys.map { k =>
-      val po = math.max(observed.freq.getOrElse(k, 0L) / no, eps)
-      val pb = math.max(baseline.freq.getOrElse(k, 0L) / nb, eps)
+          eps: Double = 1e-4): Double =
+    Categorical.shares(observed, baseline, eps).map { case (_, po, pb) =>
       (po - pb) * math.log(po / pb)
     }.sum
-  }
 
   /** Per-category PSI contribution breakdown — the ACTIONABLE
     * companion to [[psi]]'s single number: which categories carry the
@@ -617,9 +606,8 @@ object Drift {
     * is ≥ 0 (the factors share a sign), so `share` = term / Σterms is
     * a clean attribution: "0.81 of the drift is the collapse of
     * src_7". The triage step between "PSI > 0.25 fired" and knowing
-    * what to do about it. Driver arithmetic over the metadata-sized
-    * merged profiles, like [[psi]] itself; rows ordered by
-    * contribution (rounded term desc, then category — deterministic).
+    * what to do about it. Rows ordered by contribution (rounded term
+    * desc, then category — deterministic).
     * Returns (category, p_obs, p_base, psi_term, share); share NULL
     * when total PSI is 0 (identical distributions). */
   def psiBreakdown(spark: org.apache.spark.sql.SparkSession,
@@ -627,13 +615,8 @@ object Drift {
                    baseline: CategoricalProfile,
                    eps: Double = 1e-4): DataFrame = {
     import spark.implicits._
-    val no = observed.total.toDouble.max(1.0)
-    val nb = baseline.total.toDouble.max(1.0)
-    val keys = (observed.freq.keySet ++ baseline.freq.keySet).toSeq.sorted
-    val terms = keys.map { k =>
-      val po = math.max(observed.freq.getOrElse(k, 0L) / no, eps)
-      val pb = math.max(baseline.freq.getOrElse(k, 0L) / nb, eps)
-      (k, po, pb, (po - pb) * math.log(po / pb))
+    val terms = Categorical.shares(observed, baseline, eps).map {
+      case (k, po, pb) => (k, po, pb, (po - pb) * math.log(po / pb))
     }
     val total = terms.map(_._4).sum
     terms.map { case (k, po, pb, t) =>
@@ -643,42 +626,32 @@ object Drift {
       .toDF("category", "p_obs", "p_base", "psi_term", "share")
   }
 
-  /** Jensen–Shannon divergence between two categorical profiles
-    * (natural log; bounded [0, ln 2], symmetric, defined without a
-    * proportion floor because the mixture m is nonzero wherever either
-    * side is — the property that makes JSD the robust companion to
-    * [[psi]], whose eps floor dominates when a category exists on only
-    * one side). Zero-on-both-sides categories contribute 0. */
-  def jsd(a: CategoricalProfile, b: CategoricalProfile): Double = {
-    val na = a.total.toDouble.max(1.0)
-    val nb = b.total.toDouble.max(1.0)
-    val keys = (a.freq.keySet ++ b.freq.keySet).toSeq.sorted // stable fp sum order
-    keys.iterator.map { k =>
-      val pa = a.freq.getOrElse(k, 0L) / na
-      val pb = b.freq.getOrElse(k, 0L) / nb
+  /** Jensen–Shannon divergence between two categorical profiles over
+    * their [[Categorical.shares]] (natural log; bounded [0, ln 2],
+    * symmetric, defined without a proportion floor because the mixture
+    * m is nonzero wherever either side is — the property that makes JSD
+    * the robust companion to [[psi]], whose eps floor dominates when a
+    * category exists on only one side). A zero share contributes 0
+    * (the p·ln p → 0 limit). */
+  def jsd(a: CategoricalProfile, b: CategoricalProfile): Double =
+    Categorical.shares(a, b).iterator.map { case (_, pa, pb) =>
       val m = (pa + pb) / 2.0
       def term(p: Double) = if (p > 0.0) p * math.log(p / m) else 0.0
       (term(pa) + term(pb)) / 2.0
     }.sum
-  }
 
-  /** Total variation distance — ½·Σ|p_k − q_k| over the category
-    * union: the TIGHT drift bound the PSI/JSD pair lacks an
-    * interpretation for (TV is exactly the largest possible difference
-    * in probability either distribution assigns to ANY event — "no
-    * downstream rate can move by more than TV"), and the metric that
-    * stays finite and floor-free on novel/vanished categories. Same
-    * metadata-sized [[CategoricalProfile]] inputs as [[psi]]/[[jsd]];
-    * sorted key order keeps the fp sum stable. */
+  /** Total variation distance — ½·Σ|p_k − q_k| over the
+    * [[Categorical.shares]]: the TIGHT drift bound the PSI/JSD pair
+    * lacks an interpretation for (TV is exactly the largest possible
+    * difference in probability either distribution assigns to ANY
+    * event — "no downstream rate can move by more than TV"), and the
+    * metric that stays finite and floor-free on novel/vanished
+    * categories. */
   def totalVariation(a: CategoricalProfile,
-                     b: CategoricalProfile): Double = {
-    val na = a.total.toDouble.max(1.0)
-    val nb = b.total.toDouble.max(1.0)
-    val keys = (a.freq.keySet ++ b.freq.keySet).toSeq.sorted
-    keys.iterator.map { k =>
-      math.abs(a.freq.getOrElse(k, 0L) / na - b.freq.getOrElse(k, 0L) / nb)
+                     b: CategoricalProfile): Double =
+    Categorical.shares(a, b).iterator.map { case (_, pa, pb) =>
+      math.abs(pa - pb)
     }.sum / 2.0
-  }
 
   /** PSI over aligned histogram sketches (numeric flavor: bins are the
     * categories). Same proportion floor as the categorical form. */
@@ -863,7 +836,7 @@ object Drift {
                eps: Double = 1e-4): DataFrame = {
     val counts = df.where(col(tsCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"),
-        coalesce(col(catCol).cast("string"), lit("<null>")).as("__c"))
+        Categorical.key(col(catCol)).as("__c"))
       .agg(count(lit(1)).as("__n"))
     val days = counts.select(col("day")).distinct()
     val cats = counts.select(col("__c")).distinct()
@@ -891,42 +864,16 @@ object Drift {
     * marginal source and language frequencies can both be stable while
     * their joint distribution drifts (a source silently switching
     * language), which is exactly what per-column drift checks miss.
-    * NULLs group as the '<null>' category (a column going null-heavy
-    * in one source is drift, not noise to drop).
-    *
-    * Fully in-plan (no driver-side stats): one (a, b) count aggregate
-    * (map-side combined, exchange ≤ |A|×|B| rows), margins re-
-    * aggregated from those counts, expected = rowTotal·colTotal/N in
-    * DOUBLE (overflow-safe at any scale), one final 1-row reduce.
-    * Returns (n, dof, chi_square) — compare against
-    * [[chiSquareCritical]](dof) for the verdict. */
+    * Fully in-plan: the [[Categorical.chiSquare]] of the
+    * [[Categorical.table]]. Returns (n, dof, chi_square) — compare
+    * against [[chiSquareCritical]](dof) for the verdict; NULL n and dof
+    * on an empty input. */
   def contingencyChiSquare(df: DataFrame, colA: String,
-                           colB: String): DataFrame = {
-    val cnt = df
-      .select(coalesce(col(colA).cast("string"), lit("<null>")).as("__a"),
-        coalesce(col(colB).cast("string"), lit("<null>")).as("__b"))
-      .groupBy(col("__a"), col("__b"))
-      .agg(count(lit(1)).as("__n"))
-    val ra = cnt.groupBy(col("__a")).agg(sum(col("__n")).as("__na"))
-    val cb = cnt.groupBy(col("__b")).agg(sum(col("__n")).as("__nb"))
-    val tot = cnt.agg(sum(col("__n")).as("__t"),
-      countDistinct(col("__a")).as("__ka"),
-      countDistinct(col("__b")).as("__kb"))
-    // full margin grid, not just observed cells: an EMPTY cell (o = 0)
-    // contributes its whole expectation e to the statistic — dropping
-    // zero cells biases chi-square toward independence exactly when
-    // the dependence is strongest
-    val o = coalesce(col("__n"), lit(0L)).cast("double")
-    val e = col("__na").cast("double") * col("__nb").cast("double") /
-      col("__t").cast("double")
-    ra.crossJoin(cb)
-      .join(cnt, Seq("__a", "__b"), "left")
-      .crossJoin(broadcast(tot))
-      .agg(
-        sum(coalesce(col("__n"), lit(0L))).as("n"),
-        ((max(col("__ka")) - 1) * (max(col("__kb")) - 1)).as("dof"),
-        round(sum((o - e) * (o - e) / e), 6).as("chi_square"))
-  }
+                           colB: String): DataFrame =
+    Categorical.chiSquare(Categorical.table(df, colA, colB))
+      .select(col("n"),
+        when(col("r") > 0, (col("r") - 1) * (col("c") - 1)).as("dof"),
+        round(col("chi"), 6).as("chi_square"))
 
   /** Cohen's kappa between two categorical label columns — the
     * inter-annotator-agreement gate for labeled / preference / SFT
@@ -938,22 +885,14 @@ object Drift {
     * substantial, > 0.8 near-perfect — a labeling pipeline gating on
     * raw p_o instead of kappa ships skew as quality.
     *
-    * Same plan shape as [[contingencyChiSquare]]: one (a, b) count
-    * aggregate (exchange ≤ |A|×|B| rows), margins re-aggregated from
-    * the cell counts, one final 1-row reduce. NULL labels group as
-    * '<null>' — "annotator declined" agreeing with "annotator
-    * declined" is real agreement, not discarded rows. Degenerate
+    * Over the [[Categorical.table]], one final 1-row reduce. A NULL
+    * label is a category — "annotator declined" agreeing with
+    * "annotator declined" is real agreement, not discarded rows. Degenerate
     * p_e = 1 (both columns constant and equal) returns kappa 1.0 when
     * agreement is total, 0.0 otherwise (the 0/0 convention, pinned by
     * test). Returns (n, p_o, p_e, kappa), each rounded 6. */
   def cohenKappa(df: DataFrame, colA: String, colB: String): DataFrame = {
-    val cnt = df
-      .select(coalesce(col(colA).cast("string"), lit("<null>")).as("__a"),
-        coalesce(col(colB).cast("string"), lit("<null>")).as("__b"))
-      .groupBy(col("__a"), col("__b"))
-      .agg(count(lit(1)).as("__n"))
-    val ra = cnt.groupBy(col("__a")).agg(sum(col("__n")).as("__na"))
-    val cb = cnt.groupBy(col("__b")).agg(sum(col("__n")).as("__nb"))
+    val Categorical.Table(cnt, ra, cb) = Categorical.table(df, colA, colB)
     // chance agreement pairs category c of A with category c of B —
     // an inner join of the margins on the label VALUE
     val pe = ra.join(cb, col("__a") === col("__b"))
@@ -993,8 +932,7 @@ object Drift {
     * events_per_hour round 6). */
   def freshness(df: DataFrame, keyCol: String, tsCol: String): DataFrame = {
     val perKey = df.where(col(tsCol).isNotNull)
-      .groupBy(coalesce(col(keyCol).cast("string"), lit("<null>"))
-        .as(keyCol))
+      .groupBy(Categorical.key(col(keyCol)).as(keyCol))
       .agg(count(lit(1)).as("n_events"),
         min(col(tsCol)).as("first_ts"),
         max(col(tsCol)).as("last_ts"))
@@ -1423,61 +1361,32 @@ object Drift {
   /** Cramér's V association between two categorical columns — the
     * "are these two labels redundant" check (lang ⇄ source, split ⇄
     * quality-band) that chi-square alone can't answer because its
-    * magnitude scales with n: V = √(χ²/(n·(min(r,c)−1))) ∈ [0, 1].
-    * One contingency aggregate (map-side combined), margins
-    * re-aggregated from the cells, χ² over the FULL r×c grid
-    * (zero-observed cells contribute their expected mass — skipping
-    * them understates the statistic). NULL categories are the
-    * '<null>' bucket. Returns one row (n, r, c, chi_square,
-    * cramers_v); V is NULL for a degenerate 1×c / r×1 table. */
+    * magnitude scales with n: V = √(χ²/(n·(min(r,c)−1))) ∈ [0, 1],
+    * from the [[Categorical.chiSquare]] of the [[Categorical.table]].
+    * Returns one row (n, r, c, chi_square, cramers_v); V is NULL for a
+    * degenerate 1×c / r×1 table. */
   def cramersV(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.select(
-        coalesce(col(aCol).cast("string"), lit("<null>")).as("__a"),
-        coalesce(col(bCol).cast("string"), lit("<null>")).as("__b"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__o"))
-    val ra = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__ra"))
-    val cb = cells.groupBy(col("__b")).agg(sum(col("__o")).as("__cb"))
-    val n = cells.agg(sum(col("__o")).as("__n"),
-      count_distinct(col("__a")).as("__r"),
-      count_distinct(col("__b")).as("__c"))
-    val grid = ra.crossJoin(cb)
-      .join(cells, Seq("__a", "__b"), "left")
-      .withColumn("__obs", coalesce(col("__o"), lit(0L)))
-      .crossJoin(broadcast(n))
-    val e = col("__ra").cast("double") * col("__cb").cast("double") /
-      col("__n").cast("double")
-    val chi = grid.agg(sum(
-      (col("__obs").cast("double") - e) *
-        (col("__obs").cast("double") - e) / e).as("__chi"))
-    chi.crossJoin(broadcast(n)).select(
-      col("__n").as("n"), col("__r").as("r"), col("__c").as("c"),
-      round(col("__chi"), 6).as("chi_square"),
-      when(least(col("__r"), col("__c")) > 1,
-        round(sqrt(col("__chi") /
-          (col("__n").cast("double") *
-            (least(col("__r"), col("__c")) - 1).cast("double"))), 6))
+    val k = least(col("r"), col("c"))
+    Categorical.chiSquare(Categorical.table(df, aCol, bCol)).select(
+      col("n"), col("r"), col("c"),
+      round(col("chi"), 6).as("chi_square"),
+      when(k > 1, round(sqrt(col("chi") /
+        (col("n").cast("double") * (k - 1).cast("double"))), 6))
         .as("cramers_v"))
   }
 
   /** Kullback–Leibler divergence KL(observed ‖ baseline) between two
-    * categorical profiles, with the same eps proportion floor as
-    * [[psi]] so categories on only one side stay finite. The
-    * DIRECTIONAL companion to [[psi]]/[[jsd]]: KL is what importance
-    * weighting (DSIR) and cross-entropy monitoring actually bound, so
-    * drift dashboards report it alongside the symmetric stats.
-    * Driver-side arithmetic over the merged O(categories) profiles;
-    * key order fixed (sorted) for bit-stable sums. */
+    * categorical profiles over their [[Categorical.shares]], with the
+    * same eps proportion floor as [[psi]] so categories on only one
+    * side stay finite. The DIRECTIONAL companion to [[psi]]/[[jsd]]: KL
+    * is what importance weighting (DSIR) and cross-entropy monitoring
+    * actually bound, so drift dashboards report it alongside the
+    * symmetric stats. */
   def kl(observed: CategoricalProfile, baseline: CategoricalProfile,
-         eps: Double = 1e-4): Double = {
-    val no = observed.total.toDouble.max(1.0)
-    val nb = baseline.total.toDouble.max(1.0)
-    val keys = (observed.freq.keySet ++ baseline.freq.keySet).toSeq.sorted
-    keys.map { k =>
-      val po = math.max(observed.freq.getOrElse(k, 0L) / no, eps)
-      val pb = math.max(baseline.freq.getOrElse(k, 0L) / nb, eps)
+         eps: Double = 1e-4): Double =
+    Categorical.shares(observed, baseline, eps).map { case (_, po, pb) =>
       po * math.log(po / pb)
     }.sum
-  }
 
   /** Welch's unequal-variance t-test of each group's numeric
     * distribution against its complement (all other rows) — the
@@ -1506,7 +1415,7 @@ object Drift {
       valueCol: String): Array[(String, Long, Double, Double)] = {
     val v = col(valueCol).cast("double")
     df.where(col(valueCol).isNotNull)
-      .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>")).as("g"))
+      .groupBy(Categorical.key(col(groupCol)).as("g"))
       .agg(count(lit(1)).as("n"), sum(v).as("s"), sum(v * v).as("ss"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -1653,7 +1562,7 @@ object Drift {
   def brownForsythe(df: DataFrame, groupCol: String, valueCol: String,
                     exact: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    val g = coalesce(col(groupCol).cast("string"), lit("<null>"))
+    val g = Categorical.key(col(groupCol))
     val v = col(valueCol).cast("double")
     val base = df.where(col(valueCol).isNotNull)
     val centers = base.groupBy(g.as("__bf_g")).agg(

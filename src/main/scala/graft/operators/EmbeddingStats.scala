@@ -286,7 +286,7 @@ object EmbeddingStats {
   def groupCentroids(df: DataFrame, groupCol: String,
                      vecCol: String): DataFrame = {
     val rows = df.where(col(vecCol).isNotNull)
-      .select(coalesce(col(groupCol).cast("string"), lit("<null>"))
+      .select(Categorical.key(col(groupCol))
         .as("__g"), posexplode(col(vecCol)).as(Seq("__p", "__x")))
       .groupBy(col("__g"), col("__p"))
       .agg(sum(col("__x").cast("double")).as("__s"),

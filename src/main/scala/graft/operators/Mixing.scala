@@ -779,18 +779,15 @@ object Mixing {
 
   /** [[rake]] as a frame operator with uniform targets over the
     * OBSERVED labels of each axis: one map-side-combined count
-    * aggregate, driver IPF on the O(cells) table, and a small result
-    * frame (row label, col label, n_rows, weight). The weight column
-    * is the raked cell PROPORTION; weight/(n/N) is the per-row
-    * resampling factor. NULL labels rake under their own '<null>'
-    * bucket — no volume silently vanishes. */
+    * aggregate (the [[Categorical.table]] cells), driver IPF on the
+    * O(cells) table, and a small result frame (row label, col label,
+    * n_rows, weight). The weight column is the raked cell PROPORTION;
+    * weight/(n/N) is the per-row resampling factor. NULL labels rake
+    * under their own category — no volume silently vanishes. */
   def rakeWeights(df: DataFrame, rowCol: String, colCol: String,
                   iters: Int = 3): DataFrame = {
     val spark = df.sparkSession
-    def lbl(c: String): Column =
-      coalesce(col(c).cast("string"), lit("<null>"))
-    val rows = df.groupBy(lbl(rowCol).as("__r"), lbl(colCol).as("__c"))
-      .agg(count(lit(1)).as("n")).collect()
+    val rows = Categorical.table(df, rowCol, colCol).cells.collect()
     val cells = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
     val rowLabels = cells.keys.map(_._1).toSeq.distinct
@@ -858,8 +855,7 @@ object Mixing {
     val spark = df.sparkSession
     val x = col(valueCol).cast("decimal(38,0)")
     val rows = df.where(col(valueCol).isNotNull)
-      .groupBy(coalesce(col(stratumCol).cast("string"), lit("<null>"))
-        .as("stratum"))
+      .groupBy(Categorical.key(col(stratumCol)).as("stratum"))
       .agg(count(lit(1)).as("n"), sum(x).as("sx"), sum(x * x).as("sxx"))
       .collect()
       .map { r =>
@@ -924,7 +920,7 @@ object Mixing {
         fractions.map(_._2) == fractions.map(_._2).sorted &&
         fractions.forall(f => f._2 > 0 && f._2 <= 100),
       "fractions must be ascending cumulative percents ending at 100")
-    val key = md5(coalesce(col(contentCol).cast("string"), lit("<null>")))
+    val key = md5(Categorical.key(col(contentCol)))
     val bucket = conv(substring(key, 1, 15), 16, 10).cast("long") % 100
     val split = fractions.init.foldRight(
         lit(fractions.last._1): Column) { case ((name, hi), rest) =>
@@ -1019,7 +1015,7 @@ object Mixing {
         lit(((seed % m) + m) % m), lit(m))
     }, lit(nBatches.toLong))
     val base = df.select(batch.as("__b"),
-      coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g"))
+      Categorical.key(col(groupCol)).as("__g"))
     val perBG = base.groupBy(col("__b"), col("__g"))
       .agg(count(lit(1)).as("__n"))
     val stats = perBG.agg(
@@ -1161,8 +1157,7 @@ object Mixing {
     * DESC (the allocation order), NULLs last. */
   def ucbAllocation(df: DataFrame, groupCol: String,
                     rewardCol: String): DataFrame = {
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(col(rewardCol)).as("n"),
         sum(col(rewardCol).cast("double")).as("__s"))
     val tot = per.agg(sum(col("n")).as("__N"))

@@ -534,8 +534,7 @@ object Packing {
     require(window >= 1, "window must be >= 1")
     val n = col(nTokCol).cast("long")
     df.where(n.isNotNull)
-      .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
-        .as("__g"))
+      .groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n_seqs"),
         sum(when(n > window, 1L).otherwise(0L)).as("n_truncated"),
         sum(n).as("tokens_total"),

@@ -299,7 +299,7 @@ object Profile {
     val c = col(field).cast("double")
     def med(x: Column): Column =
       if (exact) median(x) else percentile_approx(x, lit(0.5), lit(10000))
-    val g = coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g")
+    val g = Categorical.key(col(groupCol)).as("__g")
     val base = df.select(g, c.as("__v"))
     val meds = base.groupBy(col("__g")).agg(med(col("__v")).as("__m"))
     val mads = base.join(broadcast(meds), Seq("__g"))
@@ -407,38 +407,25 @@ object Profile {
     * which is the point: U(lang|source) ≈ 1 with U(source|lang) ≈ 0.3
     * means source determines lang but not back — a redundancy you can
     * drop a column over). MI = Σ p(x,y)·ln(p(x,y)/(p(x)p(y))), exact
-    * from integer counts; NULLs fold to "<null>" (missingness is
-    * jointly informative). One (x, y) count aggregate (map-side
-    * combined, O(|X|·|Y|) rows — dimension-like by contract), marginals
-    * and the sums driver-side in sorted key order (the [[Drift.jsd]]
-    * fp discipline). Returns one row (n, mi, h_x, h_y, u_x_given_y,
-    * u_y_given_x); degenerate entropies yield NULL coefficients. */
+    * from integer counts, over the cells of the [[Categorical.table]]
+    * (O(|X|·|Y|) rows — dimension-like by contract) collected into a
+    * [[Categorical.Joint]]. Returns one row (n, mi, h_x, h_y,
+    * u_x_given_y, u_y_given_x); degenerate entropies yield NULL
+    * coefficients. */
   def mutualInformation(df: DataFrame, xCol: String,
                         yCol: String): DataFrame = {
-    val rows = df.groupBy(
-        coalesce(col(xCol).cast("string"), lit("<null>")).as("__x"),
-        coalesce(col(yCol).cast("string"), lit("<null>")).as("__y"))
-      .agg(count(lit(1)).as("__n")).collect()
-    val joint = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-    val n = joint.values.sum.toDouble.max(1.0)
-    val px = joint.toSeq.groupBy(_._1._1).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    val py = joint.toSeq.groupBy(_._1._2).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    def entropy(m: Map[String, Long]): Double =
-      m.toSeq.sortBy(_._1).iterator.map { case (_, c) =>
-        val p = c / n; if (p > 0.0) -p * math.log(p) else 0.0
-      }.sum
-    val hx = entropy(px); val hy = entropy(py)
-    val mi = joint.toSeq.sortBy(_._1).iterator.map { case ((x, y), c) =>
+    val joint = new Categorical.Joint[String](Categorical.table(df, xCol, yCol).cells
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+    import joint.{first => px, second => py, n}
+    val hx = joint.entropy(px); val hy = joint.entropy(py)
+    val mi = joint.fold { case ((x, y), c) =>
       val pxy = c / n
       val d = (px(x) / n) * (py(y) / n)
       if (pxy > 0.0 && d > 0.0) pxy * math.log(pxy / d) else 0.0
-    }.sum
+    }
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((joint.values.sum, round6(mi), round6(hx), round6(hy),
+    Seq((joint.total, round6(mi), round6(hx), round6(hy),
       if (hx > 0.0) Option(round6(mi / hx)) else None,
       if (hy > 0.0) Option(round6(mi / hy)) else None))
       .toDF("n", "mi", "h_x", "h_y", "u_x_given_y", "u_y_given_x")
@@ -493,8 +480,7 @@ object Profile {
               weightCol: String): DataFrame = {
     val w = col(weightCol).cast("double")
     val valid = w.isNotNull && w > 0.0
-    val per = df.groupBy(coalesce(col(groupCol).cast("string"),
-        lit("<null>")).as("__g"))
+    val per = df.groupBy(Categorical.key(col(groupCol)).as("__g"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(!valid, 1L).otherwise(0L)).as("n_invalid"),
         sum(when(valid, w)).as("__sw"),
@@ -525,8 +511,7 @@ object Profile {
                     yCol: String): DataFrame = {
     val x = col(xCol).cast("double"); val y = col(yCol).cast("double")
     val per = df.where(x.isNotNull && y.isNotNull)
-      .groupBy(coalesce(col(strataCol).cast("string"), lit("<null>"))
-        .as("__g"))
+      .groupBy(Categorical.key(col(strataCol)).as("__g"))
       .agg(count(lit(1)).as("n"), sum(x).as("__sx"), sum(y).as("__sy"),
         sum(x * y).as("__sxy"), sum(x * x).as("__sxx"))
     val tot = per.agg(sum(col("n")).as("__tn"), sum(col("__sx")).as("__tsx"),
@@ -556,28 +541,23 @@ object Profile {
     * with lift ≪ 1 on a globally-common value is a routing/labeling
     * bug (the Spanish docs that ended up in the German feed), which
     * plain [[rareCategories]] can't see because the value is not rare
-    * anywhere it looks. One (group, value) count aggregate
-    * (dimension-like by contract), marginals from the same frame,
-    * flagged below `maxLift` with a `minGlobalShare` floor so
+    * anywhere it looks. Over the (group, value)
+    * [[Categorical.table]] (dimension-like by contract), flagged below
+    * `maxLift` with a `minGlobalShare` floor so
     * genuinely-rare values don't alarm. Returns every (group, value)
     * cell: (group, value, n, within_share, global_share, lift,
     * flagged). */
   def contextualRare(df: DataFrame, groupCol: String, valueCol: String,
                      maxLift: Double = 0.25,
                      minGlobalShare: Double = 0.05): DataFrame = {
-    val cells = df.groupBy(
-        coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g"),
-        coalesce(col(valueCol).cast("string"), lit("<null>")).as("__v"))
-      .agg(count(lit(1)).as("n"))
-    val gTot = cells.groupBy(col("__g")).agg(sum(col("n")).as("__gn"))
-    val vTot = cells.groupBy(col("__v")).agg(sum(col("n")).as("__vn"))
-    val tot = cells.agg(sum(col("n")).as("__t"))
-    val within = col("n").cast("double") / col("__gn")
-    val global = col("__vn").cast("double") / col("__t")
-    cells.join(broadcast(gTot), Seq("__g"))
-      .join(broadcast(vTot), Seq("__v"))
+    val Categorical.Table(cells, gTot, vTot) = Categorical.table(df, groupCol, valueCol)
+    val tot = cells.agg(sum(col("__n")).as("__t"))
+    val within = col("__n").cast("double") / col("__na")
+    val global = col("__nb").cast("double") / col("__t")
+    cells.join(broadcast(gTot), Seq("__a"))
+      .join(broadcast(vTot), Seq("__b"))
       .crossJoin(broadcast(tot))
-      .select(col("__g").as(groupCol), col("__v").as(valueCol), col("n"),
+      .select(col("__a").as(groupCol), col("__b").as(valueCol), col("__n").as("n"),
         round(within, 6).as("within_share"),
         round(global, 6).as("global_share"),
         round(within / global, 6).as("lift"),
@@ -601,7 +581,7 @@ object Profile {
                   alpha: Double = 0.1): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, "alpha must be in (0, 1)")
     val v = col(valueCol).cast("double")
-    val g = coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g")
+    val g = Categorical.key(col(groupCol)).as("__g")
     val base = df.where(v.isNotNull).select(g, v.as("__v"))
     val qs = base.groupBy(col("__g"))
       .agg(count(lit(1)).as("n"),
@@ -689,7 +669,7 @@ object Profile {
     * max_by. No window, no sort, no driver-side per-key loop. */
   def keySkew(df: DataFrame, keyCol: String): DataFrame = {
     val perKey = df
-      .groupBy(coalesce(col(keyCol).cast("string"), lit("<null>")).as("__k"))
+      .groupBy(Categorical.key(col(keyCol)).as("__k"))
       .agg(count(lit(1)).as("__n"))
     perKey
       .agg(sum(col("__n")).as("__total"),
@@ -1120,7 +1100,7 @@ object Profile {
       "conformalQuantileByGroup: need 0 < alphaNum/alphaDen < 1")
     val keep = (alphaDen - alphaNum).toLong
     val base = cal.where(col(scoreCol).isNotNull)
-      .select(coalesce(col(groupCol).cast("string"), lit("<null>"))
+      .select(Categorical.key(col(groupCol))
         .as("__g"), col(scoreCol).cast("long").as("__s"))
     val ranked = base.withColumn("__rn",
       row_number().over(Window.partitionBy(col("__g"))
@@ -1214,7 +1194,7 @@ object Profile {
     }
     val nd =
       if (depIsFloat)
-        countDistinct(coalesce(col(depCol).cast("string"), lit("<null>")))
+        countDistinct(Categorical.key(col(depCol)))
       else
         countDistinct(col(depCol)) +
           max(when(col(depCol).isNull, 1L).otherwise(0L))
@@ -1614,8 +1594,7 @@ object Profile {
                      minShare: Double): DataFrame = {
     require(minShare > 0 && minShare < 1, "minShare in (0, 1)")
     val counts = df
-      .groupBy(coalesce(col(catCol).cast("string"), lit("<null>"))
-        .as("category"))
+      .groupBy(Categorical.key(col(catCol)).as("category"))
       .agg(count(lit(1)).as("n"))
     val total = counts.agg(sum(col("n")).as("__t"))
     counts.crossJoin(broadcast(total))
@@ -1740,7 +1719,7 @@ object Profile {
     require(cols.nonEmpty, "at least one column")
     val frames = cols.map { c =>
       val cnt = df
-        .groupBy(coalesce(col(c).cast("string"), lit("<null>")).as("k"))
+        .groupBy(Categorical.key(col(c)).as("k"))
         .agg(count(lit(1)).as("n"))
       val nd = col("__n").cast("double")
       cnt.agg(sum(col("n")).as("__n"),
@@ -1936,31 +1915,23 @@ object Profile {
   /** One-hop association rules a → b between two categorical columns:
     * support P(a∧b), confidence P(b|a), lift P(a∧b)/(P(a)P(b)) — the
     * "is this pairing real or just two big marginals" read that raw
-    * co-occurrence counts (q_rule_cooccur) can't give. Pair counts are
-    * ONE map-side-combined aggregate; both margins and the total are
-    * re-aggregated from the collapsed O(|a|·|b|) pairs frame, never a
-    * second scan; margins broadcast back onto the pairs. NULLs bucket
-    * to '<null>'; rules below `minSupport` are pruned AFTER the
-    * margins are built so the denominators stay exact. */
+    * co-occurrence counts (q_rule_cooccur) can't give. The pairs and
+    * both margins are the [[Categorical.table]], the total is summed
+    * from its pairs, and the margins broadcast back onto the pairs.
+    * Rules below `minSupport` are pruned AFTER the margins are built
+    * so the denominators stay exact. */
   def associationRules(df: DataFrame, aCol: String, bCol: String,
                        minSupport: Double = 0.0): DataFrame = {
-    val pairs = df.select(
-        coalesce(col(aCol).cast("string"), lit("<null>")).as("a"),
-        coalesce(col(bCol).cast("string"), lit("<null>")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-    val na = pairs.groupBy("a").agg(sum("n_ab").as("n_a"))
-    val nb = pairs.groupBy("b").agg(sum("n_ab").as("n_b"))
-    val tot = pairs.agg(sum("n_ab").as("n"))
+    val Categorical.Table(pairs, na, nb) = Categorical.table(df, aCol, bCol)
+    val nab = col("__n").cast("double")
     pairs
-      .join(broadcast(na), "a").join(broadcast(nb), "b")
-      .crossJoin(broadcast(tot))
-      .select(col("a"), col("b"), col("n_ab"),
-        round(col("n_ab").cast("double") / col("n").cast("double"), 6)
-          .as("support"),
-        round(col("n_ab").cast("double") / col("n_a").cast("double"), 6)
-          .as("confidence"),
-        round(col("n_ab").cast("double") * col("n").cast("double") /
-          (col("n_a").cast("double") * col("n_b").cast("double")), 6)
+      .join(broadcast(na), "__a").join(broadcast(nb), "__b")
+      .crossJoin(broadcast(pairs.agg(sum("__n").as("n"))))
+      .select(col("__a").as("a"), col("__b").as("b"), col("__n").as("n_ab"),
+        round(nab / col("n").cast("double"), 6).as("support"),
+        round(nab / col("__na").cast("double"), 6).as("confidence"),
+        round(nab * col("n").cast("double") /
+          (col("__na").cast("double") * col("__nb").cast("double")), 6)
           .as("lift"))
       .where(col("support") >= minSupport)
       .orderBy("a", "b")

@@ -169,11 +169,10 @@ object Sessionize {
     * (identical event MIX, totally different ORDER). Pairs form per
     * key in (ts, ord) order; the first event of each key has no
     * predecessor and contributes no pair. Counts aggregate to
-    * O(types²) rows; entropies evaluate driver-side in sorted key
-    * order (the [[graft.operators.Profile.mutualInformation]] fp
-    * discipline). Returns one row (n_transitions, h_conditional,
-    * h_marginal, predictability); degenerate marginals (one type)
-    * yield NULL predictability. */
+    * O(types²) rows; the entropies are those of their
+    * [[Categorical.Joint]]. Returns one row (n_transitions,
+    * h_conditional, h_marginal, predictability); degenerate marginals
+    * (one type) yield NULL predictability. */
   def transitionEntropy(df: DataFrame, keyCol: String, tsCol: String,
                         typeCol: String, ordCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -188,24 +187,13 @@ object Sessionize {
       .where(col("__x").isNotNull)
     val rows = pairs.groupBy(col("__x"), col("__y"))
       .agg(count(lit(1)).as("__n")).collect()
-    val joint = rows.map(r => (r.getString(0), r.getString(1)) ->
-      r.getLong(2)).toMap
-    val n = joint.values.sum.toDouble.max(1.0)
-    val cx = joint.toSeq.groupBy(_._1._1).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    val cy = joint.toSeq.groupBy(_._1._2).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    val hCond = joint.toSeq.sortBy(_._1).iterator.map { case ((x, _), c) =>
-      val p = c / n
-      if (p > 0.0) -p * math.log(c.toDouble / cx(x)) else 0.0
-    }.sum
-    val hMarg = cy.toSeq.sortBy(_._1).iterator.map { case (_, c) =>
-      val p = c / n
-      if (p > 0.0) -p * math.log(p) else 0.0
-    }.sum
+    val joint = new Categorical.Joint[String](rows.map(r =>
+      (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+    val hCond = joint.conditional
+    val hMarg = joint.entropy(joint.second)
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((joint.values.sum, round6(hCond), round6(hMarg),
+    Seq((joint.total, round6(hCond), round6(hMarg),
       if (hMarg > 0.0) Option(round6(1.0 - hCond / hMarg)) else None))
       .toDF("n_transitions", "h_conditional", "h_marginal",
         "predictability")
@@ -497,7 +485,7 @@ object Sessionize {
   def trendByGroup(df: DataFrame, tsCol: String,
                    groupCol: String): DataFrame = {
     val daily = df.where(col(tsCol).isNotNull)
-      .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
+      .groupBy(Categorical.key(col(groupCol))
         .as("__g"), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__n")).collect()
     val spark = df.sparkSession
@@ -538,7 +526,7 @@ object Sessionize {
   def dispersionIndex(df: DataFrame, tsCol: String, groupCol: String,
                       threshold: Double = 1.5): DataFrame = {
     val daily = df.where(col(tsCol).isNotNull)
-      .groupBy(coalesce(col(groupCol).cast("string"), lit("<null>"))
+      .groupBy(Categorical.key(col(groupCol))
         .as("__g"), to_date(col(tsCol)).as("__d"))
       .agg(count(lit(1)).as("__n")).collect()
     val spark = df.sparkSession

@@ -787,7 +787,7 @@ object Similarity {
       "the quadratic audit-sample path; sample first or use the IVF probe")
     import org.apache.spark.sql.expressions.Window
     val pts = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-      coalesce(col(labelCol).cast("string"), lit("<null>")).as("__l"))
+      Categorical.key(col(labelCol)).as("__l"))
     val pairs = pts.as("a").join(pts.as("b"),
         col("a.__id") =!= col("b.__id"))
       .select(col("a.__id").as("id"), col("a.__l").as("label"),

@@ -664,7 +664,7 @@ object TextAnalysis {
   def crossSourceXent(df: DataFrame, groupCol: String,
                       textCol: String): DataFrame = {
     val tok = df.select(
-      coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g"),
+      Categorical.key(col(groupCol)).as("__g"),
       explode(words(col(textCol))).as("__w"))
     val counts = tok.groupBy(col("__g"), col("__w"))
       .agg(count(lit(1)).as("__c"))
@@ -756,7 +756,7 @@ object TextAnalysis {
   def sourceExclusivity(df: DataFrame, groupCol: String,
                         textCol: String): DataFrame = {
     val counts = df.select(
-        coalesce(col(groupCol).cast("string"), lit("<null>")).as("__g"),
+        Categorical.key(col(groupCol)).as("__g"),
         explode(words(col(textCol))).as("__w"))
       .groupBy(col("__g"), col("__w")).agg(count(lit(1)).as("__c"))
     val spread = counts.groupBy(col("__w"))
@@ -1556,7 +1556,7 @@ object TextAnalysis {
   def hapaxStats(df: DataFrame, classCol: String,
                  textCol: String): DataFrame =
     df.select(
-        coalesce(col(classCol).cast("string"), lit("<null>")).as("cls"),
+        Categorical.key(col(classCol)).as("cls"),
         explode(words(col(textCol))).as("word"))
       .groupBy(col("cls"), col("word")).agg(count(lit(1)).as("__c"))
       .groupBy(col("cls"))
@@ -1835,10 +1835,8 @@ object TextAnalysis {
     require(minShare > 0 && minShare <= 1, "minShare in (0, 1]")
     import org.apache.spark.sql.expressions.Window
     val counts = df
-      .groupBy(coalesce(col(srcCol).cast("string"), lit("<null>"))
-          .as("source"),
-        coalesce(substring(col(textCol), 1, k), lit("<null>"))
-          .as("prefix"))
+      .groupBy(Categorical.key(col(srcCol)).as("source"),
+        Categorical.key(substring(col(textCol), 1, k)).as("prefix"))
       .agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("source"))
       .orderBy(col("n_docs").desc, col("prefix").asc)

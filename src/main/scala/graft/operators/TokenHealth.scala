@@ -272,10 +272,9 @@ object TokenHealth {
     * which is precisely what unigram drift checks CANNOT see). Pairs
     * are built IN-ROW (`arrays_zip` of two slices — token arrays never
     * explode positionally before pairing, never shuffle); pair counts
-    * combine map-side to O(observed bigrams) int-pair rows; entropies
-    * evaluate driver-side in sorted order (the
-    * [[graft.operators.Sessionize.transitionEntropy]] fp discipline on
-    * the actual token payload). Returns one row (n_pairs,
+    * combine map-side to O(observed bigrams) int-pair rows; the
+    * entropies are those of their [[Categorical.Joint]], keyed by the
+    * token ids in numeric order. Returns one row (n_pairs,
     * h_conditional, h_marginal, predictability). */
   def tokenTransitionEntropy(df: DataFrame,
                              tokensCol: String): DataFrame = {
@@ -290,22 +289,11 @@ object TokenHealth {
       .collect()
     val spark = df.sparkSession
     import spark.implicits._
-    val joint = pairs.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
-      .toMap
-    val n = joint.values.sum.toDouble.max(1.0)
-    val cx = joint.toSeq.groupBy(_._1._1).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    val cy = joint.toSeq.groupBy(_._1._2).map { case (k, v) =>
-      k -> v.map(_._2).sum }
-    val hCond = joint.toSeq.sortBy(_._1).iterator.map { case ((x, _), c) =>
-      val p = c / n
-      if (p > 0.0) -p * math.log(c.toDouble / cx(x)) else 0.0
-    }.sum
-    val hMarg = cy.toSeq.sortBy(_._1).iterator.map { case (_, c) =>
-      val p = c / n
-      if (p > 0.0) -p * math.log(p) else 0.0
-    }.sum
-    Seq((joint.values.sum, round6(hCond), round6(hMarg),
+    val joint = new Categorical.Joint[Int](pairs.map(r =>
+      (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap)
+    val hCond = joint.conditional
+    val hMarg = joint.entropy(joint.second)
+    Seq((joint.total, round6(hCond), round6(hMarg),
       if (hMarg > 0.0) Option(round6(1.0 - hCond / hMarg)) else None))
       .toDF("n_pairs", "h_conditional", "h_marginal", "predictability")
   }

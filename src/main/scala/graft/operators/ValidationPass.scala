@@ -187,14 +187,22 @@ object ValidationPass {
     val observed = keyed.observe(obs, statExprs.head, statExprs.tail: _*)
 
     val vio = violationsFor(observed, present, RowKey)
-    val byRule: Map[String, Row] = offenderSummary(vio, RowKey, maxOffendersPerRule)
-      .collect() // one row per rule, ≤ cap values each
-      .map(r => r.getString(0) -> r).toMap
+    // With no violation the exchanges would be empty, and adaptive
+    // execution would swap the plan for an empty relation, the stats'
+    // CollectMetrics with it. One NULL-rule row keeps them non-empty;
+    // its group of its own is looked up by no rule id.
+    val keepAlive = vio.sparkSession.range(1).select(lit(null).cast("long").as(RowKey),
+      lit(null).cast("string").as("rule_id"), lit(null).cast("string").as("offending_value"))
+    val byRule: Map[String, Row] =
+      offenderSummary(vio.unionByName(keepAlive), RowKey, maxOffendersPerRule)
+        .collect() // one row per rule, ≤ cap values each
+        .map(r => r.getString(0) -> r).toMap
 
     // The optimizer can collapse the plan to a LocalRelation and drop the
     // CollectMetrics node — an empty input (limit(0) fixtures), or a
     // violation filter that folds to false (only unconstrained String
-    // rules) — fall back to a direct aggregate in that case.
+    // rules) — fall back to a direct aggregate in that case; it is then
+    // the only scan of the table.
     val observedStats = obs.get
     val stats: Map[String, Any] =
       if (observedStats.nonEmpty) observedStats.toMap

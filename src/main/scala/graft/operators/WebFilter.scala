@@ -282,7 +282,7 @@ object WebFilter {
                  minPages: Long = 100L): DataFrame = {
     require(depth >= 1, "depth must be >= 1")
     require(minPages >= 1, "minPages must be >= 1")
-    val host = coalesce(hostOf(col(urlCol)), lit("<null>"))
+    val host = Categorical.key(hostOf(col(urlCol)))
     val path = pathOf(col(urlCol))
     val segs = filter(split(path, "/"), s => s =!= "")
     val prefix = concat(lit("/"), concat_ws("/", slice(segs, 1, depth)))

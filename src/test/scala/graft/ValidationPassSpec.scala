@@ -178,6 +178,51 @@ class ValidationPassSpec extends SparkSpec {
     assert(r.violations.count() === 0L)
   }
 
+  test("a table with no violation is read once, and its stats stay exact") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val dir = java.nio.file.Files.createTempDirectory("graft_clean_table").toString
+    val n = 20000
+    // every age is a valid integer; every 7th note is the NA sentinel
+    (0 until n).map(i => (i.toString, if (i % 7 == 0) "NA" else s"note $i"))
+      .toDF("age", "notes").repartition(4).write.parquet(s"$dir/t")
+    val tableRules = Seq(
+      Rule("T", "age", RuleType.IntegerT, Requirement.Required),
+      Rule("T", "notes", RuleType.StringT, Requirement.Optional))
+    // records read from files by the tasks of `body`'s jobs (a range
+    // counts its rows as records read, but no bytes); the listener has
+    // seen them all once it sees the marker job that follows
+    def recordsRead[T](body: => T): (T, Long) = {
+      val (read, marker) = (new AtomicLong, new CountDownLatch(1))
+      val l = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).map(_.inputMetrics).filter(_.bytesRead > 0)
+            .foreach(m => read.addAndGet(m.recordsRead))
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val out = body
+        spark.sparkContext.setJobDescription("marker")
+        spark.range(1).collect()
+        assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+        (out, read.get)
+      } finally {
+        spark.sparkContext.setJobDescription(null)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    }
+    val (r, read) = recordsRead(ValidationPass.evalTable(
+      Normalize.normalizeDf(spark.read.parquet(s"$dir/t")), "T", tableRules))
+    assert(read === n.toLong)
+    assert(r.nRows === n.toLong)
+    assert(r.columns.map(c => c.rule.field -> c.nNull) ===
+      Seq("age" -> 0L, "notes" -> ((n + 6) / 7).toLong))
+    assert(r.columns.forall(c => c.failingValues.isEmpty && c.nInvalidCells == 0L))
+  }
+
   test("all-null required column detected") {
     val df = Seq(("S1", "NA"), ("S2", "")).toDF("sample_id", "condition_id")
     val r = ValidationPass.evalTable(Normalize.normalizeDf(df), "SAMPLE",
