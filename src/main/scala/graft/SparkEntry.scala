@@ -3476,9 +3476,7 @@ object SparkEntry {
     }),
 
     // ---- percentile ranks without the percent_rank() trap (an
-    // unpartitioned window = one task sorts the table): distinct-value
-    // counts collapse map-side, the ordered window runs over the
-    // O(distinct) frame only
+    // unpartitioned window = one task sorts the table)
     "q_pct_rank" -> ((s, d) =>
       Profile.percentileRanks(
         t(s, d, "lineitem")
@@ -3578,20 +3576,17 @@ object SparkEntry {
     }),
 
     // ---- rank-biased overlap between two top-50 quality rankings
-    // (3/4 shared scores → high but non-1 RBO): rankings built with
-    // TakeOrdered + a window over the 50-row frame, never the corpus
+    // (3/4 shared scores → high but non-1 RBO)
     "q_rbo" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
       val id = col("doc_id").cast("long")
       val s1 = (id * 2654435761L + 7L) % 1000000007L
       val s2 = when(id % 4 === 0,
         (id * 1099511627L + 13L) % 1000000007L).otherwise(s1)
       def rank(score: Column): DataFrame =
-        docs.select(col("doc_id"), score.as("__s"))
-          .orderBy(desc("__s"), col("doc_id")).limit(50)
-          .withColumn("rank", row_number().over(
-            Window.orderBy(desc("__s"), col("doc_id"))))
+        OrderedFrame.bounded(docs.select(col("doc_id"), score.as("__s"))
+          .orderBy(desc("__s"), col("doc_id")).limit(50), 50, OrderedFrame.TopK,
+          "q_rbo")(desc("__s"), col("doc_id")).numbered("rank")
       Drift.rankBiasedOverlap(rank(s1), rank(s2), "doc_id", "rank",
         k = 50, p = 0.9)
     }),
@@ -3616,8 +3611,7 @@ object SparkEntry {
       Profile.cubeCounts(t(s, d, "documents"), "lang", "source")),
 
     // ---- mass-weighted length percentiles: where the TOKEN MASS
-    // sits, not where the median document sits — cumulative window
-    // over the O(distinct) frame only, integer masses exact
+    // sits, not where the median document sits; integer masses exact
     "q_mass_percentiles" -> ((s, d) =>
       Profile.massWeightedPercentiles(t(s, d, "documents"),
         "n_chars", "n_chars", Seq(0.5, 0.9, 0.99))),

@@ -58,8 +58,7 @@ object Continuity {
     * absent (and which is not the global max) — i.e. the last key
     * before a hole. Pairing starts with ends into (start, end, width)
     * ranges needs an ordered zip, which IS a sort — but only over the
-    * gap boundaries (O(islands), not O(rows)), so the window here runs
-    * on the tiny boundary frame, never the table. */
+    * gap boundaries, in one task ([[OrderedFrame.Gaps]]). */
   def gaps(df: DataFrame, idCol: String): DataFrame = {
     val k = keys(df, idCol)
     val mx = k.agg(max(col("__id")).as("__mx"))
@@ -74,13 +73,11 @@ object Continuity {
         k.select((col("__id") + 1).as("__id")), Seq("__id"), "left_anti")
       .crossJoin(mn).where(col("__id") =!= col("__mn"))
       .select(col("__id").as("next_present"))
-    // zip the two tiny boundary frames in order: k-th gap start pairs
+    // zip the two boundary frames in order: k-th gap start pairs
     // with k-th island resumption (both strictly increasing)
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy("gap_start")
-    val w2 = Window.orderBy("next_present")
-    ends.withColumn("__k", row_number().over(w))
-      .join(starts.withColumn("__k", row_number().over(w2)), Seq("__k"))
+    def numbered(f: DataFrame, c: String): DataFrame =
+      OrderedFrame(f, OrderedFrame.Gaps, "Continuity.gaps")(col(c)).numbered("__k")
+    numbered(ends, "gap_start").join(numbered(starts, "next_present"), Seq("__k"))
       .select(col("gap_start"), (col("next_present") - 1).as("gap_end"),
         (col("next_present") - col("gap_start")).as("gap_len"))
       .orderBy("gap_start")

@@ -925,7 +925,7 @@ object Dedup {
     * order and never generate candidates.
     *
     * Stages, all narrow: (token_hash df) counts collapse map-side; the
-    * rarest-first rank window runs over the O(vocab) frame only;
+    * rarest-first rank window sorts the shingles ([[OrderedFrame.Vocabulary]]);
     * per-doc sorted rank arrays build in one keyed aggregate;
     * prefix postings (rank, id) self-join + a min ≥ t·max size
     * prefilter; candidates dedup as 16-byte id pairs; exact
@@ -937,14 +937,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    import org.apache.spark.sql.expressions.Window
     val sets = df.select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), n)).as("sh"))
     val tok = sets.select(col("id"), explode(col("sh")).as("tok"))
-    // global rarest-first total order; the window input is O(vocab)
-    val ranked = tok.groupBy(col("tok")).agg(count(lit(1)).as("__df"))
-      .withColumn("__rank",
-        row_number().over(Window.orderBy(col("__df"), col("tok"))))
+    // global rarest-first total order
+    val ranked = OrderedFrame(tok.groupBy(col("tok")).agg(count(lit(1)).as("__df")),
+      OrderedFrame.Vocabulary, "Dedup.prefixFilterJaccardPairs")(col("__df"), col("tok"))
+      .numbered("__rank")
     val docRanks = tok.join(ranked.select(col("tok"), col("__rank")),
         Seq("tok"))
       .groupBy(col("id"))
@@ -1013,12 +1012,11 @@ object Dedup {
     * Scale shape: text is hashed IN THE SCAN (md5 → 16-byte keys;
     * content never enters an exchange), first-seen ids come from one
     * map-side-combined min aggregate, the flag join moves (id, hash)
-    * pairs only, and the cumulative window runs over the O(buckets)
-    * frame — never the corpus. `idCol` must be a numeric ingest
+    * pairs only, and the cumulative window sorts the buckets
+    * ([[OrderedFrame.IdBuckets]]). `idCol` must be a numeric ingest
     * order. */
   def duplicateSaturation(df: DataFrame, idCol: String, textCol: String,
                           bucketWidth: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(bucketWidth > 0, "bucketWidth must be positive")
     val h = df.select(col(idCol).cast("long").as("__id"),
       md5(col(textCol)).as("__h"))
@@ -1029,11 +1027,11 @@ object Dedup {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("__dup"), 1L).otherwise(0L)).as("n_dups"))
-    val w = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perBucket
-      .withColumn("cum_docs", sum(col("n_docs")).over(w))
-      .withColumn("cum_dups", sum(col("n_dups")).over(w))
+    val byBucket = OrderedFrame(perBucket, OrderedFrame.IdBuckets,
+      "Dedup.duplicateSaturation")(col("bucket"))
+    byBucket.rows
+      .withColumn("cum_docs", byBucket.sumThrough(col("n_docs")))
+      .withColumn("cum_dups", byBucket.sumThrough(col("n_dups")))
       .select(col("bucket"), col("n_docs"), col("n_dups"),
         round(col("n_dups").cast("double") /
           col("n_docs").cast("double"), 6).as("dup_rate"),

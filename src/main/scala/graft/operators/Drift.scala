@@ -193,26 +193,19 @@ object Drift {
     * carry a NULL verdict (an unscored check is not evidence either
     * way). Returns (key, p, rank, bh_threshold, reject).
     *
-    * Scale shape: the battery frame is O(#checks) — metadata-sized by
-    * construction (one row per rule/slice, never per data row), so the
-    * unpartitioned rank window is the [[graft.operators.TextAnalysis.zipfFit]]
-    * convention: a total sort of a tiny frame, plus one 1-row k* agg
-    * broadcast back. */
+    * Scale shape: the rank window is under the [[OrderedFrame.Checks]]
+    * budget, plus one 1-row k* agg broadcast back. */
   def benjaminiHochberg(df: DataFrame, keyCol: String, pCol: String,
                         q: Double = 0.05): DataFrame = {
     require(q > 0.0 && q < 1.0, "q must be in (0, 1)")
-    import org.apache.spark.sql.expressions.Window
     val scored = df.where(col(pCol).isNotNull)
       .select(col(keyCol), col(pCol).cast("double").as("p"))
-    // m rides the plan as a broadcast 1-row scalar — a driver count()
-    // was a SECOND full derivation of the battery frame (exchange reuse
-    // never crosses a job boundary); same IEEE arithmetic: (rank·q)/m
     val mAgg = scored.agg(count(lit(1)).cast("double").as("__m"))
-    val w = Window.orderBy(col("p"), col(keyCol))
-    val ranked = scored.crossJoin(broadcast(mAgg))
-      .withColumn("rank", row_number().over(w))
-      .withColumn("bh_threshold",
-        round(col("rank") * q / col("__m"), 6))
+    val byP = OrderedFrame(scored.crossJoin(broadcast(mAgg)), OrderedFrame.Checks,
+      "Drift.benjaminiHochberg")(col("p"), col(keyCol))
+    val ranked = byP.rows.where(byP.within(col("__m")))
+      .withColumn("rank", row_number().over(byP.window))
+      .withColumn("bh_threshold", round(col("rank") * q / col("__m"), 6))
       .withColumn("__hit", col("p") <= col("rank") * q / col("__m"))
     val kStar = ranked.agg(
       max(when(col("__hit"), col("rank")).otherwise(lit(0))).as("__k"))
@@ -1013,16 +1006,14 @@ object Drift {
     * can't give (rank 1↔2 swaps barely matter, head↔tail swaps
     * dominate). Truncated form (no residual extrapolation): ∈ [0,
     * 1−p^k... 1], 1 = identical prefixes. Inputs are two (id, rank)
-    * frames with ranks 1..k — O(k) by construction (rank with
-    * TakeOrdered + a window over the k-frame, never the corpus); the
-    * whole computation is one O(k) join + cumsum window + weighted
-    * sum. An element in only one ranking contributes to no X_d. */
+    * frames with ranks 1..k; the whole computation is one O(k) join + a
+    * cumsum window ([[OrderedFrame.TopK]] budget) + a weighted sum. An
+    * element in only one ranking contributes to no X_d. */
   def rankBiasedOverlap(a: DataFrame, b: DataFrame, idCol: String,
                         rankCol: String, k: Int,
                         p: Double = 0.9): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(p > 0 && p < 1, "p in (0, 1)")
-    import org.apache.spark.sql.expressions.Window
     val ra = a.select(col(idCol).as("__id"), col(rankCol).as("__ra"))
       .where(col("__ra") <= k)
     val rb = b.select(col(idCol).as("__id"), col(rankCol).as("__rb"))
@@ -1033,11 +1024,11 @@ object Drift {
       .groupBy(col("__m")).agg(count(lit(1)).as("__c"))
     val spark = a.sparkSession
     import spark.implicits._
-    val depths = (1 to k).map(_.toLong).toDF("__d")
-    val w = Window.orderBy(col("__d"))
-      .rowsBetween(Window.unboundedPreceding, 0) // O(k) frame only
-    depths.join(joint, col("__d") === col("__m"), "left")
-      .withColumn("__x", sum(coalesce(col("__c"), lit(0L))).over(w))
+    val depths = OrderedFrame.bounded((1 to k).map(_.toLong).toDF("__d")
+      .join(joint, col("__d") === col("__m"), "left"), k, OrderedFrame.TopK,
+      "Drift.rankBiasedOverlap")(col("__d"))
+    depths.rows
+      .withColumn("__x", depths.sumThrough(coalesce(col("__c"), lit(0L))))
       .select(sum(
         lit(1.0 - p) * pow(lit(p), col("__d") - 1) *
           (col("__x").cast("double") / col("__d").cast("double")))
@@ -1324,24 +1315,19 @@ object Drift {
     * cumulative (exact), one multiply, one subtract — never a
     * sequential double accumulation, so both engines produce
     * bit-identical doubles and the argmax can't flip. The ordered
-    * window runs over the O(buckets) frame, never the corpus. */
+    * window is under the [[OrderedFrame.Buckets]] budget. */
   def cusum(df: DataFrame, timeCol: String,
             bucketSecs: Long = 86400L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(bucketSecs > 0, "bucketSecs must be positive")
     val counts = df.where(col(timeCol).isNotNull)
       .select((col(timeCol).cast("timestamp").cast("long") /
         lit(bucketSecs)).cast("long").as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_events"))
-    val tot = counts.agg(sum(col("n_events")).as("__t"),
-      count(lit(1)).as("__d"))
-    val w = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wr = Window.orderBy(col("bucket"))
-    val scored = counts
-      .withColumn("__cum", sum(col("n_events")).over(w))
-      .withColumn("__rn", row_number().over(wr))
-      .crossJoin(broadcast(tot))
+    val tot = counts.agg(sum(col("n_events")).as("__t"), count(lit(1)).as("__d"))
+    val byBucket = OrderedFrame(counts, OrderedFrame.Buckets, "Drift.cusum")(col("bucket"))
+    val scored = byBucket.numbered("__rn")
+      .withColumn("__cum", byBucket.sumThrough(col("n_events")))
+      .crossJoin(broadcast(tot)).where(byBucket.within(col("__d")))
       .select(col("bucket"), col("n_events"),
         (col("__cum").cast("double") -
           col("__rn").cast("double") *

@@ -461,9 +461,8 @@ object Mixing {
     * that is the operator's scale story (RRF is a candidate-fusion
     * step; beyond the head the contribution is ≤ 1/(k+topN) ≈ noise).
     * The prune is a TakeOrderedAndProject (per-partition top-N, no
-    * global sort); only the ≤ topN survivors meet the single-partition
-    * rank window, so the window is bounded by the candidate budget,
-    * never by the corpus. Ties break on the id (total order, both
+    * global sort); only the ≤ topN survivors meet the rank window, under
+    * the [[OrderedFrame.TopK]] budget. Ties break on the id (total order, both
     * engines agree). NULL scores are dropped from that list (absence
     * from a candidate list is the semantics, not worst-rank). */
   def rrfFuse(rankings: Seq[DataFrame], idCol: String, scoreCol: String,
@@ -471,14 +470,11 @@ object Mixing {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
     require(topN > 0, "topN must be positive")
     require(k >= 0, "k must be non-negative")
-    import org.apache.spark.sql.expressions.Window
     val ranked = rankings.map { r =>
-      r.select(col(idCol), col(scoreCol).cast("double").as("__sc"))
-        .where(col("__sc").isNotNull)
-        .orderBy(col("__sc").desc, col(idCol)).limit(topN)
-        .withColumn("__r", row_number().over(
-          Window.orderBy(col("__sc").desc, col(idCol))))
-        .select(col(idCol), col("__r"))
+      OrderedFrame.bounded(r.select(col(idCol), col(scoreCol).cast("double").as("__sc"))
+          .where(col("__sc").isNotNull).orderBy(col("__sc").desc, col(idCol)).limit(topN), topN,
+        OrderedFrame.TopK, "Mixing.rrfFuse")(col("__sc").desc, col(idCol))
+        .numbered("__r").select(col(idCol), col("__r"))
     }
     ranked.reduce(_ unionByName _)
       .groupBy(col(idCol))
@@ -1054,28 +1050,12 @@ object Mixing {
     * sits near 0 at n^(−1/2) scale. Cost class: two rank assignments
     * = two range-partitioned sorts of narrow (id, key) rows — the
     * [[epochOrder]] exchange, run as an offline audit once per epoch
-    * pair. Returns one row (n, sum_d2, rho). */
+    * pair ([[epochRanks]]). Returns one row (n, sum_d2, rho). */
   def shuffleIndependence(df: DataFrame, idCol: String,
                           seed1: Long, seed2: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = 4294967296L
-    def key(seed: Long): Column = moduloLong(df, idCol, "shuffleIndependence") {
-      c =>
-        val k0 = pmod(pmod(c, lit(2147483648L)) * 4096L +
-          lit(java.lang.Math.floorMod(seed, m)) * 81L, lit(m))
-        def xs(h: Column, s: Int): Column = h.bitwiseXOR(shiftright(h, s))
-        val h1 = pmod(xs(k0, 16) * lit(569557677L), lit(m))
-        val h2 = pmod(xs(h1, 15) * lit(1935933847L), lit(m))
-        xs(h2, 15)
-    }
-    val ranked = df.select(col(idCol))
-      .withColumn("__r1",
-        row_number().over(Window.orderBy(key(seed1), col(idCol))))
-      .withColumn("__r2",
-        row_number().over(Window.orderBy(key(seed2), col(idCol))))
     val d = (col("__r1") - col("__r2")).cast("long")
-    val st = ranked.agg(count(lit(1)).as("n"),
-      sum(d * d).as("sum_d2")).head()
+    val st = epochRanks(df, idCol, seed1, seed2)(
+      _.agg(count(lit(1)).as("n"), sum(d * d).as("sum_d2")).head())
     val n = st.getLong(0); val d2 = st.getLong(1)
     val spark = df.sparkSession
     import spark.implicits._
@@ -1084,6 +1064,34 @@ object Mixing {
       else Option(round6(1.0 - 6.0 * d2.toDouble / (n.toDouble *
         (n.toDouble * n.toDouble - 1.0))))
     Seq((n, d2, rho)).toDF("n", "sum_d2", "rho")
+  }
+
+  /** The [[shuffleIndependence]] sort key of an id under `seed`. */
+  private[graft] def epochKey(df: DataFrame, idCol: String, seed: Long): Column =
+    moduloLong(df, idCol, "shuffleIndependence") { c =>
+      val m = 4294967296L
+      val k0 = pmod(pmod(c, lit(2147483648L)) * 4096L +
+        lit(java.lang.Math.floorMod(seed, m)) * 81L, lit(m))
+      def xs(h: Column, s: Int): Column = h.bitwiseXOR(shiftright(h, s))
+      val h1 = pmod(xs(k0, 16) * lit(569557677L), lit(m))
+      val h2 = pmod(xs(h1, 15) * lit(1935933847L), lit(m))
+      xs(h2, 15)
+    }
+
+  /** (idCol, __r1, __r2): each row's rank under the [[shuffleIndependence]]
+    * keys of `seed1` and `seed2`, handed to `use`. A rank is the offset + 1
+    * of [[Packing.globalOffsets]] at a cost of 1 per row; the second
+    * ranking's id is (id, __r1), unique even where ids repeat. */
+  private[graft] def epochRanks[T](df: DataFrame, idCol: String, seed1: Long,
+                                   seed2: Long)(use: DataFrame => T): T = {
+    val first = Packing.globalOffsets(df.select(col(idCol), lit(1L).as("__one")),
+      idCol, "__one", Seq(epochKey(df, idCol, seed1), col(idCol)))
+    val second = Packing.globalOffsets(
+      first.select(col(idCol), col("__one"),
+        struct(col(idCol), (col("offset") + 1).as("__r1")).as("__row")),
+      "__row", "__one", Seq(epochKey(df, idCol, seed2), col(idCol), col("__row.__r1")))
+    try use(second.select(col("__row.*"), (col("offset") + 1).as("__r2")))
+    finally { Packing.releaseOffsets(second); Packing.releaseOffsets(first) }
   }
 
   /** Distribution-matching plan: per-bin keep fractions that reshape a

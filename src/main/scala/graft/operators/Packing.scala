@@ -108,8 +108,8 @@ object Packing {
     * the complement of [[greedyPack]]: greedy never splits a document,
     * concat-chunk always fills every window).
     *
-    * A naive `sum().over(Window.orderBy(id))` is a SinglePartition
-    * exchange — one task folds the corpus. This is the two-level
+    * A naive running sum over one unpartitioned window is a
+    * SinglePartition exchange — one task folds the corpus. This is the two-level
     * spelling that stays parallel at any size:
     *   1. range-partition + sort the NARROW (id, cost) projection
     *      (~16 bytes/row leaves the scan — column pruning does the rest),

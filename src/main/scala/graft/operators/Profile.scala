@@ -340,22 +340,20 @@ object Profile {
     * keeps coupon mode to ~24k distinct keys/window (measured: exact
     * at 20k, and a 7-sketch union of 3344 keys stays exact) while a
     * coupon-mode sketch still costs only ~4 B/key — beyond that the
-    * estimate carries the ~0.4 % HLL error of lgK 18. Returns
-    * (day, n_events, day_distinct, rolling_distinct). */
+    * estimate carries the ~0.4 % HLL error of lgK 18 ([[OrderedFrame.Days]]
+    * budget). Returns (day, n_events, day_distinct, rolling_distinct). */
   def rollingDistinct(df: DataFrame, tsCol: String, keyCol: String,
                       windowDays: Int = 7,
                       lgConfigK: Int = 18): DataFrame = {
     require(windowDays >= 1, "windowDays must be >= 1")
-    import org.apache.spark.sql.expressions.Window
-    val daily = df.where(col(tsCol).isNotNull && col(keyCol).isNotNull)
+    val daily = OrderedFrame.bounded(df.where(col(tsCol).isNotNull && col(keyCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"))
       .agg(hll_sketch_agg(col(keyCol), lgConfigK).as("__sk"),
         count(lit(1)).as("n_events"))
-      .withColumn("__dn", datediff(col("day"), lit("1970-01-01")))
-    val w = Window.orderBy(col("__dn"))
-      .rangeBetween(-(windowDays - 1).toLong, Window.currentRow)
-    daily
-      .withColumn("day_distinct", hll_sketch_estimate(col("__sk")))
+      .withColumn("__dn", datediff(col("day"), lit("1970-01-01"))),
+      OrderedFrame.DateDays, OrderedFrame.Days, "Profile.rollingDistinct")(col("__dn"))
+    val w = daily.window.rangeBetween(-(windowDays - 1).toLong, 0L)
+    daily.rows.withColumn("day_distinct", hll_sketch_estimate(col("__sk")))
       .withColumn("rolling_distinct",
         hll_sketch_estimate(hll_union_agg(col("__sk")).over(w)))
       .select(col("day"), col("n_events"), col("day_distinct"),
@@ -714,19 +712,18 @@ object Profile {
     * mass, →1 = one source dominates): G = 2·Σᵢ i·mᵢ / (k·Σm) − (k+1)/k
     * over ascending-sorted group masses (ties broken by group name so
     * both engines rank identically). Returns one row
-    * (n_groups, total_weight, gini 6dp). The rank window runs on the
-    * GROUP-count-sized frame (k rows), never the corpus. */
+    * (n_groups, total_weight, gini 6dp). The rank window sorts the
+    * groups ([[OrderedFrame.Groups]]). */
   def giniConcentration(df: DataFrame, groupCol: String,
                         weightCol: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // a group whose weights are all NULL has no mass to rank — dropped
     // on BOTH sides (Spark orders NULLS FIRST, DuckDB LAST: keeping
     // them would silently shift every rank and break oracle parity)
-    val mass = df.groupBy(col(groupCol).as("__g"))
+    val mass = OrderedFrame(df.groupBy(col(groupCol).as("__g"))
       .agg(sum(weightCol).as("__m"))
-      .where(col("__m").isNotNull)
-    val w = Window.orderBy(col("__m"), col("__g"))
-    mass.select(row_number().over(w).cast("long").as("__i"), col("__m"))
+      .where(col("__m").isNotNull), OrderedFrame.Groups,
+      "Profile.giniConcentration")(col("__m"), col("__g"))
+    mass.numbered("__i").select(col("__i").cast("long").as("__i"), col("__m"))
       .agg(sum(col("__i") * col("__m")).as("__sim"),
         sum(col("__m")).as("__sm"), count(lit(1)).as("n_groups"))
       .select(col("n_groups"), col("__sm").as("total_weight"),
@@ -837,17 +834,15 @@ object Profile {
     * Returns one row (k, dcg, idcg, ndcg — 6dp).
     *
     * Scale shape: both rankings are TakeOrderedAndProject folds (each
-    * task keeps a local top-k; no global sort, no SinglePartition
-    * window over the corpus — the position window runs on the k
-    * survivors only), and the DCG sums are k-row folds. */
+    * task keeps a local top-k; no global sort), the position window is
+    * under the [[OrderedFrame.TopK]] budget, and the DCG sums are k-row folds. */
   def ndcgAtK(df: DataFrame, idCol: String, scoreCol: String,
               relCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "ndcgAtK: k must be positive")
     def dcgOf(by: Seq[Column], alias: String) =
-      df.select(col(idCol), col(scoreCol), col(relCol))
-        .orderBy(by: _*).limit(k)
-        .withColumn("__pos", row_number().over(Window.orderBy(by: _*)))
+      OrderedFrame.bounded(df.select(col(idCol), col(scoreCol), col(relCol))
+        .orderBy(by: _*).limit(k), k, OrderedFrame.TopK, "Profile.ndcgAtK")(by: _*)
+        .numbered("__pos")
         .agg(coalesce(sum(
           (pow(lit(2.0), col(relCol).cast("double")) - 1.0) /
             log2(col("__pos").cast("double") + 1.0)), lit(0.0)).as(alias))
@@ -1255,8 +1250,9 @@ object Profile {
     * nothing about where the token mass sits when lengths are
     * heavy-tailed, and web corpora always are). Same scale shape as
     * [[percentileRanks]]: per-distinct-value (count, mass) collapses
-    * map-side, the cumulative window runs over the O(distinct) frame,
-    * and the threshold pick is a tiny probs × distinct filter-agg.
+    * map-side, the cumulative window is under the
+    * [[OrderedFrame.CardinalityContract]] budget with `maxDistinct` as its
+    * limit, and the threshold pick is a tiny probs × distinct filter-agg.
     * Integer cumulative masses keep both engines exact; the p·total
     * comparison point is one double multiply, identical cross-engine.
     * Returns (p, threshold, n_le, mass_le, mass_frac) per
@@ -1267,38 +1263,22 @@ object Profile {
                               maxDistinct: Long = 1L << 22): DataFrame = {
     require(probs.nonEmpty, "at least one probability")
     require(probs.forall(p => p > 0 && p <= 1), "probs in (0, 1]")
-    import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     val perValue = df
       .where(col(valueCol).isNotNull && col(massCol).isNotNull)
       .groupBy(col(valueCol).as("value"))
       .agg(count(lit(1)).as("__n"), sum(col(massCol)).as("__m"))
-    val w = Window.orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, 0) // O(distinct) frame
-    val cum = perValue
-      .withColumn("__cn", sum(col("__n")).over(w))
-      .withColumn("__cm", sum(col("__m")).over(w))
-    // totals from the PRE-window frame: max(cum mass) == sum(mass), so
-    // the unpartitioned window is no longer re-evaluated under the
-    // totals subtree — and the distinct-value count rides the same
-    // 1-row aggregate as the CARDINALITY CONTRACT (round-5 VERDICT
-    // perf-weak item): the cumulative window is bounded and safe for
-    // discrete domains (lengths, counts, bucketed scores) but a
-    // continuous value column makes distinct ≈ n and one task would
-    // sort the corpus — that now fails LOUDLY (assert_true in the
-    // plan, zero extra jobs) instead of silently degrading; pre-bin
-    // continuous columns (fixed-width) before calling, or raise
-    // `maxDistinct` deliberately.
-    val total = perValue.agg(sum(col("__m")).as("__t"),
-      count(lit(1)).as("__d"))
+    val byValue = OrderedFrame(perValue, OrderedFrame.CardinalityContract.copy(
+      maxRows = maxDistinct), s"Profile.massWeightedPercentiles($valueCol)")(col("value"))
+    val cum = byValue.rows
+      .withColumn("__cn", byValue.sumThrough(col("__n")))
+      .withColumn("__cm", byValue.sumThrough(col("__m")))
+    // totals (and the distinct-value count) from the PRE-window frame:
+    // the unpartitioned window is not re-evaluated under them
+    val total = perValue.agg(sum(col("__m")).as("__t"), count(lit(1)).as("__d"))
     import spark.implicits._
     val ps = probs.toDF("p")
-    ps.crossJoin(broadcast(total))
-      .where(coalesce(
-        assert_true(col("__d") <= lit(maxDistinct),
-          lit(s"massWeightedPercentiles: distinct($valueCol) exceeds " +
-            s"the $maxDistinct cardinality contract — pre-bin the " +
-            "column or raise maxDistinct")).cast("boolean"), lit(true)))
+    ps.crossJoin(broadcast(total)).where(byValue.within(col("__d")))
       .join(cum,
         col("__cm").cast("double") >= col("p") * col("__t").cast("double"))
       .groupBy(col("p"))
@@ -1334,21 +1314,18 @@ object Profile {
     * `percent_rank()` window over the raw table is an unpartitioned
     * ORDER BY — one task sorts 10^12 rows. Here the table collapses to
     * (value, count) with map-side combine first, and the only ordered
-    * window runs over the O(distinct) frame; rows re-join the rank by
-    * value (broadcastable for bounded-cardinality scores). Matches SQL
+    * window sorts the values ([[OrderedFrame.DistinctValues]]); rows re-join
+    * the rank by value (broadcastable for bounded-cardinality scores). Matches SQL
     * `percent_rank` exactly: rank(v) = #{x < v} / (n − 1), n = 1 → 0.
     * NULL values are excluded (no rank on an unscored row). */
   def percentileRanks(df: DataFrame, valueCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val counts = df.where(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("value")).agg(count(lit(1)).as("n"))
-    // O(distinct) frame: this ordered window is the POINT — it never
-    // sees the raw table
-    val w = Window.orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val byValue = OrderedFrame(counts, OrderedFrame.DistinctValues,
+      "Profile.percentileRanks")(col("value"))
     val total = counts.agg(sum(col("n")).as("__t"))
-    counts
-      .withColumn("__less", coalesce(sum(col("n")).over(w), lit(0L)))
+    byValue.rows
+      .withColumn("__less", byValue.sumBefore(col("n")))
       .crossJoin(broadcast(total))
       .select(col("value"), col("n"),
         when(col("__t") > 1,
@@ -1414,8 +1391,8 @@ object Profile {
     * ranks, robust to any monotone rescaling and to heavy tails.
     *
     * Rank discipline (the [[percentileRanks]] lesson): ranks come from
-    * per-VALUE counts — the only ordered window runs over the
-    * O(distinct) frame, never the corpus, so there is no
+    * per-VALUE counts — the only ordered window sorts the values
+    * ([[OrderedFrame.DistinctValues]]), so there is no
     * SinglePartition sort of 10¹² rows. Ties get textbook average
     * ranks, kept EXACT by doubling: r2(v) = 2·|{x < v}| + n_v + 1
     * (twice the average rank — an integer even when the average rank
@@ -1425,24 +1402,17 @@ object Profile {
     * deterministic where FP streaming corr is merge-order-dependent —
     * and the final ρ derives through one fixed IEEE expression order
     * (bit-exact in SQL). Rows with a NULL on either side are excluded
-    * (n is surfaced). ρ is NULL when either side is constant.
-    *
-    * Contract: meaningful rank frames need BOUNDED distinct values
-    * (lengths, scores, bucketed signals); for a unique-per-row column
-    * the O(distinct) frame IS the corpus — rank or bucket it upstream
-    * first. */
+    * (n is surfaced). ρ is NULL when either side is constant. Bucket a
+    * unique-per-row column upstream: its value frame IS the corpus. */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = df.select(col(xCol).as("__x"), col(yCol).as("__y"))
       .where(col("__x").isNotNull && col("__y").isNotNull)
     def rankFrame(c: String): DataFrame = {
-      val counts = base.groupBy(col(c).as("value"))
-        .agg(count(lit(1)).as("__n"))
-      val w = Window.orderBy(col("value"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      counts.select(col("value"),
-        (lit(2L) * coalesce(sum(col("__n")).over(w), lit(0L)) +
-          col("__n") + lit(1L)).as("r2"))
+      val byValue = OrderedFrame(base.groupBy(col(c).as("value"))
+        .agg(count(lit(1)).as("__n")), OrderedFrame.DistinctValues,
+        "Profile.spearman")(col("value"))
+      byValue.rows.select(col("value"),
+        (lit(2L) * byValue.sumBefore(col("__n")) + col("__n") + 1L).as("r2"))
     }
     val rx = rankFrame("__x").withColumnRenamed("r2", "__rx")
     val ry = rankFrame("__y").withColumnRenamed("r2", "__ry")

@@ -135,20 +135,16 @@ object Selection {
     * the frontier rows (idCol, xCol, yCol) ordered x DESC, y DESC, id.
     *
     * Scale shape: the corpus aggregates to O(distinct x) group maxes;
-    * the running-max window runs on THAT frame only (the zipfFit
-    * bound — at web scale distinct doc lengths are bounded by the max
-    * doc length, never by corpus size), and the verdict re-attaches by
-    * broadcast join, so the corpus itself never total-sorts. NULL x or
+    * the running-max window sorts them ([[OrderedFrame.DistinctValues]]),
+    * and the verdict re-attaches by broadcast join. NULL x or
     * y rows cannot be compared and are excluded (not silently kept). */
   def paretoFrontier(df: DataFrame, idCol: String, xCol: String,
                      yCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = df.where(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(idCol), col(xCol), col(yCol))
-    val grp = base.groupBy(col(xCol)).agg(max(col(yCol)).as("__gy"))
-    val w = Window.orderBy(col(xCol).desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pref = grp.withColumn("__strict", max(col("__gy")).over(w))
+    val grp = OrderedFrame(base.groupBy(col(xCol)).agg(max(col(yCol)).as("__gy")),
+      OrderedFrame.DistinctValues, "Selection.paretoFrontier")(col(xCol).desc)
+    val pref = grp.rows.withColumn("__strict", grp.before(max(col("__gy"))))
     base.join(broadcast(pref), Seq(xCol))
       .where((col("__strict").isNull || col("__strict") < col(yCol)) &&
         col(yCol) === col("__gy"))

@@ -121,9 +121,9 @@ object Sessionize {
     * Scale shape: distinct (user, day) first (map-side combine crushes
     * event fan-in — the [[retentionCohorts]] discipline), one narrow
     * per-user lag window over (user, day) pairs, then a day-keyed
-    * count rollup; the churn join is a lag over the O(days) daily
-    * frame. Returns (day, n_active, n_new, n_retained, n_resurrected,
-    * n_churned). */
+    * count rollup; the churn join is a lag under the
+    * [[OrderedFrame.Days]] budget. Returns (day, n_active, n_new,
+    * n_retained, n_resurrected, n_churned). */
   def growthAccounting(df: DataFrame, userCol: String,
                        tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -144,11 +144,12 @@ object Sessionize {
           .as("n_retained"),
         sum(when(col("__class") === "resurrected", 1L).otherwise(0L))
           .as("n_resurrected"))
-    val wd = Window.orderBy(col("__dn"))
-    daily
-      .withColumn("__dn", datediff(col("day"), lit("1970-01-01")))
-      .withColumn("__prev_active", lag(col("n_active"), 1).over(wd))
-      .withColumn("__prev_dn", lag(col("__dn"), 1).over(wd))
+    val byDay = OrderedFrame.bounded(daily.withColumn("__dn", datediff(col("day"),
+      lit("1970-01-01"))), OrderedFrame.DateDays, OrderedFrame.Days,
+      "Sessionize.growthAccounting")(col("__dn"))
+    byDay.rows
+      .withColumn("__prev_active", lag(col("n_active"), 1).over(byDay.window))
+      .withColumn("__prev_dn", lag(col("__dn"), 1).over(byDay.window))
       .withColumn("n_churned",
         when(col("__prev_dn").isNull, lit(null: java.lang.Long))
           .when(col("__dn") - col("__prev_dn") === 1,
@@ -432,14 +433,13 @@ object Sessionize {
     * product-limit estimator: S(t) = Π_{tᵢ ≤ t} (1 − dᵢ/nᵢ) with dᵢ
     * the churn events at lifetime tᵢ and nᵢ the at-risk count
     * (computed BEFORE removing tᵢ's events and censorings). The
-    * per-user reduction is two narrow aggregates; the KM table runs
-    * on the O(distinct lifetimes) frame with an ORDERED running
-    * product (exp∘Σln over an ordered window — left-to-right in both
+    * per-user reduction is two narrow aggregates; the KM table is an
+    * ORDERED running product (exp∘Σln over an ordered window of one row
+    * per lifetime day, the [[OrderedFrame.Days]] budget — left-to-right in both
     * engines, so bit-compatible). Returns (lifetime_days, n_at_risk,
     * n_churned, n_censored, survival). */
   def survivalCurve(df: DataFrame, userCol: String,
                     tsCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val perUser = df.where(col(userCol).isNotNull && col(tsCol).isNotNull)
       .groupBy(col(userCol).as("__u"))
       .agg(min(to_date(col(tsCol))).as("__first"),
@@ -448,25 +448,19 @@ object Sessionize {
     val lives = perUser.crossJoin(broadcast(maxDay))
       .select(datediff(col("__last"), col("__first")).as("__t"),
         (col("__last") === col("__ref")).as("__censored"))
-    val byT = lives.groupBy(col("__t"))
+    val byT = OrderedFrame.bounded(lives.groupBy(col("__t"))
       .agg(sum(when(!col("__censored"), 1L).otherwise(0L)).as("n_churned"),
-        sum(when(col("__censored"), 1L).otherwise(0L)).as("n_censored"))
-    val wOrd = Window.orderBy(col("__t"))
-    val wPrev = wOrd.rowsBetween(Window.unboundedPreceding, -1)
-    // user total rides the plan as a broadcast 1-row scalar — a driver
-    // count() was a SECOND run of the per-user aggregate (exchange
-    // reuse never crosses a job boundary)
+        sum(when(col("__censored"), 1L).otherwise(0L)).as("n_censored")),
+      OrderedFrame.DateDays, OrderedFrame.Days, "Sessionize.survivalCurve")(col("__t"))
+    // user total: a broadcast 1-row scalar, not a driver count()
     val totalAgg = lives.agg(count(lit(1)).as("__total"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding,
-      Window.currentRow)
-    byT
+    byT.rows
       .crossJoin(broadcast(totalAgg))
       .withColumn("n_at_risk", col("__total") -
-        coalesce(sum(col("n_churned") + col("n_censored")).over(wPrev),
-          lit(0L)))
-      .withColumn("survival", round(exp(sum(
+        byT.sumBefore(col("n_churned") + col("n_censored")))
+      .withColumn("survival", round(exp(byT.sumThrough(
         log(lit(1.0) - col("n_churned").cast("double")
-          / col("n_at_risk"))).over(wRun)), 6))
+          / col("n_at_risk")))), 6))
       .select(col("__t").cast("long").as("lifetime_days"),
         col("n_at_risk"), col("n_churned"), col("n_censored"),
         col("survival"))

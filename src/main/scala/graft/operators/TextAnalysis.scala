@@ -593,14 +593,12 @@ object TextAnalysis {
     * and R² of ln(freq) on ln(rank) (rank by freq desc, word asc) plus
     * vocab size — the one-line corpus-health signal (natural text sits
     * near slope −1; template spam and dedup failures bend it). The
-    * rank window is unpartitioned but runs on the VOCAB-sized frequency
-    * frame (the [[buildVocab]] bound), not the corpus. */
+    * rank window sorts the vocabulary ([[OrderedFrame.Vocabulary]]). */
   def zipfFit(df: DataFrame, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val freq = df.select(explode(words(col(textCol))).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
-    val ranked = freq.withColumn("__r",
-      row_number().over(Window.orderBy(col("__n").desc, col("__w"))))
+    val ranked = OrderedFrame(df.select(explode(words(col(textCol))).as("__w"))
+      .groupBy(col("__w")).agg(count(lit(1)).as("__n")),
+      OrderedFrame.Vocabulary, "TextAnalysis.zipfFit")(col("__n").desc, col("__w"))
+      .numbered("__r")
     ranked.agg(
       round(regr_slope(log(col("__n")), log(col("__r"))), 6)
         .as("zipf_slope"),
@@ -703,26 +701,22 @@ object TextAnalysis {
     * template spam took over; k(0.99) ≈ vocab_size means a healthy
     * heavy tail. Returns (p, k_words, mass_covered, vocab_size) per
     * threshold, with mass_covered the EXACT integer-ratio mass of
-    * those k words. The cumsum window is unpartitioned but runs on the
-    * VOCAB-bounded frequency frame (the [[zipfFit]] convention), never
-    * the corpus. */
+    * those k words. The cumsum window sorts the vocabulary
+    * ([[OrderedFrame.Vocabulary]]). */
   def nucleusVocab(df: DataFrame, textCol: String,
                    ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0),
       "thresholds must be in (0, 1]")
-    import org.apache.spark.sql.expressions.Window
     val freq = df.select(explode(words(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
-    val w = Window.orderBy(col("__n").desc, col("__w"))
-    val ranked = freq
-      .withColumn("__cum", sum(col("__n")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__k", row_number().over(w))
+    val byFreq = OrderedFrame(freq, OrderedFrame.Vocabulary,
+      "TextAnalysis.nucleusVocab")(col("__n").desc, col("__w"))
+    val ranked = byFreq.numbered("__k")
+      .withColumn("__cum", byFreq.sumThrough(col("__n")))
     val spark = df.sparkSession
     import spark.implicits._
     val thresholds = ps.toDF("p")
-    val totals = freq.agg(sum(col("__n")).as("__tot"),
-      count(lit(1)).as("vocab_size"))
+    val totals = freq.agg(sum(col("__n")).as("__tot"), count(lit(1)).as("vocab_size"))
     // first rank whose cumulative mass clears p·total: min-aggregate
     // over the vocab-sized frame per threshold (thresholds broadcast)
     ranked.crossJoin(broadcast(totals)).crossJoin(broadcast(thresholds))

@@ -6,14 +6,11 @@ import graft.sources.{AppSchema, CsvIngest, RuleTable}
   * with a byte-exact report log, plus AppSchema config bootstrap. */
 class EngineSpec extends SparkSpec {
 
-  private def res(name: String): String =
-    getClass.getResource(s"/tester_files/$name").getPath
-
-  lazy val rules = RuleTable.loadCsv(spark, res("mini_cde.csv"))
+  lazy val rules = RuleTable.loadCsv(spark, fixture("tester_files/mini_cde.csv"))
 
   test("multi-table run: DATA + PROTOCOL, gate on errors, exact log bytes") {
-    val data = CsvIngest.ingest(spark, res("DATA.csv"))._3.get
-    val protocol = CsvIngest.ingest(spark, res("PROTOCOL.csv"))._3.get
+    val data = CsvIngest.ingest(spark, fixture("tester_files/DATA.csv"))._3.get
+    val protocol = CsvIngest.ingest(spark, fixture("tester_files/PROTOCOL.csv"))._3.get
     val out = Engine.run(Seq("DATA" -> data, "PROTOCOL" -> protocol), rules)
 
     assert(out.perTable.map(_.table) === Seq("DATA", "PROTOCOL"))

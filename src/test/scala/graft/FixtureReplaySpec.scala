@@ -10,10 +10,7 @@ import graft.sources.{CsvIngest, RuleTable}
   * through the full ingest → normalize → validate → report pipeline. */
 class FixtureReplaySpec extends SparkSpec {
 
-  private def res(name: String): String =
-    getClass.getResource(s"/tester_files/$name").getPath
-
-  lazy val rules = RuleTable.loadCsv(spark, res("mini_cde.csv"))
+  lazy val rules = RuleTable.loadCsv(spark, fixture("tester_files/mini_cde.csv"))
 
   test("rule table loads and parses list literals") {
     assert(rules.size === 25) // 26 rows - 0 alias
@@ -25,7 +22,7 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("DATA.csv: ';' detected; adjustment invalid 'corrected and normalized'; gcp_bucket extra") {
-    val (det, struct, dfOpt) = CsvIngest.ingest(spark, res("DATA.csv"))
+    val (det, struct, dfOpt) = CsvIngest.ingest(spark, fixture("tester_files/DATA.csv"))
     assert(det.delimiter === ';')
     assert(struct.ok, struct.errors.map(_.message("DATA")).mkString("; "))
     val df = dfOpt.get
@@ -50,7 +47,7 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("SAMPLE.csv: condition_id has 2 distinct invalid values; multi-enum region valid") {
-    val (det, struct, dfOpt) = CsvIngest.ingest(spark, res("SAMPLE.csv"))
+    val (det, struct, dfOpt) = CsvIngest.ingest(spark, fixture("tester_files/SAMPLE.csv"))
     assert(det.delimiter === ',')
     assert(struct.ok)
     val df = dfOpt.get
@@ -72,7 +69,7 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("PROTOCOL.csv: zero errors") {
-    val (det, struct, dfOpt) = CsvIngest.ingest(spark, res("PROTOCOL.csv"))
+    val (det, struct, dfOpt) = CsvIngest.ingest(spark, fixture("tester_files/PROTOCOL.csv"))
     assert(struct.ok)
     val result = ValidationPass.evalTable(
       Normalize.normalizeDf(dfOpt.get), "PROTOCOL", RuleTable.forTable(rules, "PROTOCOL"))
@@ -82,13 +79,13 @@ class FixtureReplaySpec extends SparkSpec {
   }
 
   test("SUBJECT.csv: header-only → zero rows, skipped from all-null accounting") {
-    val (_, struct, dfOpt) = CsvIngest.ingest(spark, res("SUBJECT.csv"))
+    val (_, struct, dfOpt) = CsvIngest.ingest(spark, fixture("tester_files/SUBJECT.csv"))
     assert(struct.ok) // structurally fine, just empty
     assert(dfOpt.get.count() === 0)
   }
 
   test("CLINPATH.csv: structural error — 30 fields in row 4, 29 in header") {
-    val (det, struct, dfOpt) = CsvIngest.ingest(spark, res("CLINPATH.csv"))
+    val (det, struct, dfOpt) = CsvIngest.ingest(spark, fixture("tester_files/CLINPATH.csv"))
     assert(det.delimiter === ',')
     assert(!struct.ok)
     assert(dfOpt.isEmpty) // rejected before CDE validation

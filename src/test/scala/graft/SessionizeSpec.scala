@@ -269,8 +269,10 @@ class SessionizeSpec extends SparkSpec {
     // a×5 b×3 c×1 d×1: k(0.5)=1 (mass .5), k(0.9)=3 (mass .9),
     // k(0.99)=4 (mass 1.0), vocab 4
     val df = Seq(Tuple1("a a a a a b b b c d")).toDF("text")
-    val out = graft.operators.TextAnalysis.nucleusVocab(df, "text")
-      .collect().map(r => r.getDouble(0) ->
+    val frame = graft.operators.TextAnalysis.nucleusVocab(df, "text")
+    // a count: never NULL
+    assert(!frame.schema("vocab_size").nullable)
+    val out = frame.collect().map(r => r.getDouble(0) ->
         (r.getInt(1), r.getDouble(2), r.getLong(3))).toMap
     assert(out(0.5) === ((1, 0.5, 4L)))
     assert(out(0.9) === ((3, 0.9, 4L)))

@@ -179,4 +179,35 @@ class TokenHealthSpec extends SparkSpec {
       .shuffleIndependence(df.repartition(7), "id", 1L, 2L).collect()(0)
     assert(again.getLong(1) === diff.getLong(1))
   }
+
+  test("shuffleIndependence ranks equal one global row_number per seed, row for row") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    import graft.operators.Mixing
+    import spark.implicits._
+    val df = (1L to 400L).map(Tuple1(_)).toDF("id").repartition(5)
+    assert(df.rdd.getNumPartitions >= 3)
+    // without partition coalescing the 400 rows keep several range partitions
+    val coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.getOption(coalescing)
+    spark.conf.set(coalescing, "false")
+    try for ((seed1, seed2) <- Seq((1L, 2L), (5L, 5L), (-9L, 4242L))) {
+      // the reference: the spelling the two-level rank replaced
+      def rank(seed: Long) = row_number().over(
+        Window.orderBy(Mixing.epochKey(df, "id", seed), col("id"))).cast("long")
+      val want = df.select(col("id"), rank(seed1), rank(seed2))
+        .as[(Long, Long, Long)].collect().sorted.toSeq
+      val (got, rangeParts) = Mixing.epochRanks(df, "id", seed1, seed2) { r =>
+        (r.as[(Long, Long, Long)].collect().sorted.toSeq,
+          r.queryExecution.analyzed.collect { case l: LogicalRDD =>
+            l.rdd.getNumPartitions }.head)
+      }
+      assert(rangeParts >= 3)
+      assert(got === want, s"seeds $seed1, $seed2")
+    } finally was.fold(spark.conf.unset(coalescing))(spark.conf.set(coalescing, _))
+    // a repeated id still ranks every row once
+    val twice = Mixing.shuffleIndependence(df.union(df), "id", 1L, 2L).collect()(0)
+    assert(twice.getLong(0) === 800L)
+  }
 }
