@@ -70,6 +70,12 @@ object Uniqueness {
     * partition's verdict does not depend on the other partitions checked
     * with it; with no carried column the key is unique over the frame.
     *
+    * The validate modes and `runChecks` do not call it: they check
+    * uniqueness inside [[ValidationPass.seqViolationsUnique]], which
+    * shares one exchange with the other checks. This stand-alone form is
+    * that builder's differential oracle in the tests, and serves callers
+    * that want the duplicates alone (the `pipeline` demo).
+    *
     * One narrow exchange and no join: the rows with a key are projected
     * to (carryCols…, key), and `count(1) over (partition by carryCols…,
     * key)` counts each key's occurrences, so the shuffle moves those

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{CollectMinK, Predicates}
@@ -133,15 +134,18 @@ object ValidationPass {
     * by itself — never guard with size()>0, CollapseProject would then
     * evaluate the whole cell array twice. */
   private[graft] def sparseViolations(df: DataFrame, keep: Seq[Column],
-                                      cells: Seq[(String, Column, Column)]): DataFrame = {
-    val tagged = cells.map { case (ruleId, invalid, value) =>
+                                      cells: Seq[(String, Column, Column)]): DataFrame =
+    df.where(cells.map(_._2).reduce(_ || _))
+      .select(keep :+ explode(failedCells(cells)).as("v"): _*)
+      .select(keep :+ col("v.rule_id") :+ col("v.offending_value"): _*)
+
+  /** A row's (rule_id, offending_value) structs, one per cell whose
+    * predicate is true. */
+  private def failedCells(cells: Seq[(String, Column, Column)]): Column =
+    filter(array(cells.map { case (ruleId, invalid, value) =>
       when(invalid,
         struct(lit(ruleId).as("rule_id"), value.cast("string").as("offending_value")))
-    }
-    df.where(cells.map(_._2).reduce(_ || _))
-      .select(keep :+ explode(filter(array(tagged: _*), x => x.isNotNull)).as("v"): _*)
-      .select(keep :+ col("v.rule_id") :+ col("v.offending_value"): _*)
-  }
+    }: _*), x => x.isNotNull)
 
   /** Full table evaluation in a single scan.
     *
@@ -190,8 +194,9 @@ object ValidationPass {
     // With no violation the exchanges would be empty, and adaptive
     // execution would swap the plan for an empty relation, the stats'
     // CollectMetrics with it. One NULL-rule row keeps them non-empty;
-    // its group of its own is looked up by no rule id.
-    val keepAlive = vio.sparkSession.range(1).select(lit(null).cast("long").as(RowKey),
+    // its group of its own is looked up by no rule id. A range of one
+    // split: each further (empty) split would write shuffle files too.
+    val keepAlive = vio.sparkSession.range(0, 1, 1, 1).select(lit(null).cast("long").as(RowKey),
       lit(null).cast("string").as("rule_id"), lit(null).cast("string").as("offending_value"))
     val byRule: Map[String, Row] =
       offenderSummary(vio.unionByName(keepAlive), RowKey, maxOffendersPerRule)
@@ -343,6 +348,49 @@ object ValidationPass {
   def seqViolations(df: DataFrame, constraints: Seq[SeqConstraint],
                     carryCols: Seq[String] = Nil): DataFrame =
     sparseViolations(df, carryCols.map(col) :+ col("doc_id"), constraints.map(_.cell))
+
+  /** [[seqViolations]] plus the uniqueness of `doc_id`, in ONE scan and
+    * ONE exchange: the same (carryCols…, doc_id, rule_id,
+    * offending_value) rows as `seqViolations(df, constraints, carryCols)`
+    * unioned with [[Uniqueness.violations]]`(df, "doc_id", carryCols =
+    * carryCols)` (its differential oracle). The key is unique among the
+    * rows with the same `carryCols` values (an embedded uniqueness
+    * constraint: carrying `part_bucket` makes it unique per partition),
+    * and a NULL key never violates.
+    *
+    * Each row is projected once to (carryCols…, doc_id, its check
+    * violations as an array, built only where some check fails, else
+    * NULL), and the exchange hashes by `carryCols` alone (by `doc_id`
+    * when none is carried). That partitioning already clusters `count(1)
+    * over (partition by carryCols…, doc_id)`, so the window adds no
+    * exchange, and one `explode` after it emits the check violations
+    * plus one uniqueness violation per occurrence of a repeated key.
+    * Hashed by `part_bucket`, each bucket's rows reach one task, which
+    * writes the bucket's one sink file when the output is written
+    * `partitionBy(part_bucket)`.
+    *
+    * Scale: every row of a bucket, narrowed to (bucket, key, a mostly
+    * NULL array), reaches that one task and is sorted there for the
+    * window. The sort spills to disk rather than failing for memory,
+    * but AQE cannot split the task, so the largest bucket bounds its
+    * time. Clean rows now cross the exchange too, where
+    * [[seqViolations]] alone moves none. */
+  def seqViolationsUnique(df: DataFrame, constraints: Seq[SeqConstraint],
+                          carryCols: Seq[String] = Nil): DataFrame = {
+    val (key, scope) = (col("doc_id"), (carryCols :+ "doc_id").map(col))
+    val cells = constraints.map(_.cell)
+    val found = when(cells.map(_._2).reduce(_ || _), failedCells(cells))
+    val (checks, n) = (col("__checks"), col("__n"))
+    val dup = array(struct(lit("R_UNIQUE_DOCID").as("rule_id"),
+      concat(lit("n_occurrences="), n.cast("string")).as("offending_value")))
+    df.select(scope :+ found.as("__checks"): _*)
+      .repartition((if (carryCols.isEmpty) scope else carryCols.map(col)): _*)
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(scope: _*)))
+      .select(carryCols.map(col) ++ Seq(key,
+        explode(when(key.isNull || n <= 1, checks)
+          .when(checks.isNull, dup).otherwise(concat(checks, dup))).as("v")): _*)
+      .select(carryCols.map(col) ++ Seq(col("doc_id"), col("v.rule_id"), col("v.offending_value")): _*)
+  }
 
   /** Conditional CROSS-FIELD constraints — "when P(row) holds, Q(row)
     * must hold" — the validation tier one level above the reference's

@@ -325,8 +325,8 @@ class SeqEngineSpec extends SparkSpec {
   test("validate-batch leaves one sink file per bucket, whichever tasks found its violations") {
     import java.nio.file.{Files, Path, Paths}
     import graft.checkpoint.Manifest
-    // each bucket's check violations come from its scan task and its
-    // uniqueness violations from the exchange's tasks
+    // each bucket's rows are scanned by several tasks and meet in one
+    // task after the exchange
     val dir = Files.createTempDirectory("graft_vb_files").toString
     SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 20000), s"$dir/seq", 4)
     graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out1", Some(s"$dir/m1.jsonl"))
@@ -388,36 +388,37 @@ class SeqEngineSpec extends SparkSpec {
     }
   }
 
-  test("openTable starts no Spark job and gives the schema spark.read.parquet infers") {
-    import java.nio.file.Files
+  /** The Spark jobs started while `body` runs; the listener has seen
+    * them all once it sees the marker job that follows. */
+  private def jobs(body: => Unit): Int = {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (n, marker) = (new AtomicInteger, new CountDownLatch(1))
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+        else n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription("marker")
+      spark.range(1).collect()
+      assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+      n.get
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  test("openTable starts no Spark job and gives the schema spark.read.parquet infers") {
+    import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_open_table").toString
     val table = SeqTableGen.generate(spark, 2000)
     SeqTableGen.writePartitioned(table, s"$dir/seq", 4)
     table.write.parquet(s"$dir/flat")
-    // jobs started while `body` runs; the listener has seen them all once
-    // it sees the marker job that follows
-    def jobs(body: => Unit): Int = {
-      val (n, marker) = (new AtomicInteger, new CountDownLatch(1))
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
-          else n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        spark.sparkContext.setJobDescription("marker")
-        spark.range(1).collect()
-        assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
-        n.get
-      } finally {
-        spark.sparkContext.setJobDescription(null)
-        spark.sparkContext.removeSparkListener(l)
-      }
-    }
     for (t <- Seq(s"$dir/seq", s"$dir/flat")) {
       assert(jobs(spark.read.parquet(t)) === 1, t)
       assert(jobs(graft.cli.Main.openTable(spark, t)) === 0, t)
@@ -570,5 +571,86 @@ class SeqEngineSpec extends SparkSpec {
     assert(Manifest.load(mf).entries.keySet === Set("0", "1"))
     val printed = buf.toString("UTF-8").split('\n').filter(_.startsWith("{\"partition\""))
     assert(printed.map(l => l.split('"')(3)).toSeq === Seq("0", "1"))
+  }
+
+  /** The rows of `d` as a multiset, columns in the order given. */
+  private def multiset(d: org.apache.spark.sql.DataFrame, cols: Seq[String]): Map[Seq[Any], Int] =
+    d.select(cols.map(col): _*).collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
+  test("a validate slice is one exchange and one write: 3 slices, 6 jobs, the window on the exchange") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_slice_jobs").toString
+    SeqTableGen.writePartitioned(SeqTableGen.generate(spark, 6000), s"$dir/seq", 6)
+    // the final adaptive plans, query stages included
+    object Plans extends AdaptiveSparkPlanHelper
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      assert(jobs(graft.cli.Main.validatePath(spark, s"$dir/seq", s"$dir/out", None)) === 6)
+      val deadline = System.nanoTime + 60e9.toLong
+      while (writes.size < 3 && System.nanoTime < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(l)
+    assert(writes.size === 3)
+    writes.forEach { w =>
+      def shuffles(p: SparkPlan) = Plans.collect(p) { case e: ShuffleExchangeExec => e }
+      assert(shuffles(w).size === 1, w)
+      val windows = Plans.collect(w) { case x: WindowExec => x }
+      assert(windows.size === 1 && shuffles(windows.head).size === 1, w)
+    }
+  }
+
+  test("both validate modes write exactly the check violations plus the per-bucket uniqueness oracle") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_unique_sink").toString
+    // a duplicate within a bucket, the same id across buckets, NULL ids;
+    // bucket 1's source is off the referential allowlist
+    val small = Seq[(String, Int)](("a", 0), ("a", 1), ("a", 1), ("b", 0), ("c", 1), ("c", 1),
+      (null, 0), (null, 1), (null, 1)).toDF("doc_id", "part_bucket")
+      .select(col("doc_id"), array(lit(1), lit(2)).as("tokens"), lit(2).as("n_tok"),
+        when(col("part_bucket") === 1, "wiki").otherwise("web").as("source"), col("part_bucket"))
+    small.write.partitionBy("part_bucket").parquet(s"$dir/small")
+    // bucketed by n_tok, so the seeded duplicates spread across buckets
+    SeqTableGen.generate(spark, 6000).withColumn("part_bucket", pmod(col("n_tok"), lit(5)))
+      .write.partitionBy("part_bucket").parquet(s"$dir/seeded")
+    val cols = Seq("part_bucket", "doc_id", "rule_id", "offending_value")
+    for (t <- Seq("small", "seeded")) {
+      val table = spark.read.parquet(s"$dir/$t")
+      val oracle = ValidationPass.seqViolations(table, graft.cli.Main.checkSuite, Seq("part_bucket"))
+        .unionByName(Uniqueness.violations(table, "doc_id", carryCols = Seq("part_bucket")))
+      val want = multiset(oracle, cols)
+      assert(want.keys.exists(_(2) == "R_UNIQUE_DOCID") && want.keys.exists(_(2) != "R_UNIQUE_DOCID"), t)
+      graft.cli.Main.validatePath(spark, s"$dir/$t", s"$dir/out-$t", None)
+      graft.cli.Main.validateBatch(spark, s"$dir/$t", s"$dir/outb-$t", None)
+      for (out <- Seq(s"$dir/out-$t", s"$dir/outb-$t"))
+        assert(multiset(spark.read.parquet(s"$out/violations"), cols) === want, out)
+    }
+  }
+
+  test("runChecks writes the check violations plus the frame-wide uniqueness oracle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_run_checks").toString
+    val seeded = SeqTableGen.generate(spark, 6000)
+    val oracle = ValidationPass.seqViolations(seeded, graft.cli.Main.checkSuite)
+      .unionByName(Uniqueness.violations(seeded, "doc_id"))
+    val cols = Seq("doc_id", "rule_id", "offending_value")
+    val want = multiset(oracle, cols)
+    assert(want.keys.exists(_(1) == "R_UNIQUE_DOCID"))
+    val (pass, nViol, nRows) = graft.cli.Main.runChecks(spark, seeded, s"$dir/v")
+    assert((pass, nViol, nRows) === ((false, want.values.sum.toLong, 6000L)))
+    assert(multiset(spark.read.parquet(s"$dir/v"), cols) === want)
+    val clean = SeqTableGen.generate(spark, 500, withViolations = false)
+      .where(col("source").isin(SeqTableGen.RefAllowlist: _*))
+    assert(graft.cli.Main.runChecks(spark, clean, s"$dir/clean") === ((true, 0L, clean.count())))
   }
 }
